@@ -85,13 +85,14 @@ object Bench {
   val CpuSecStallFactor = 1.35
   val MaxAttempts = 3
 
-  /** Soft wall-clock budget for the scaling phase: once exceeded, stall
-    * retries are skipped (pairs still complete, the exclusion logic still
-    * applies) — bounds total bench time on a badly contended host, where
-    * each retry of a stalled run can cost minutes.
+  /** Soft wall-clock retry budget of ONE scaling window (2→8 or 8→32),
+    * counted from the window's start: once exceeded, stall retries and
+    * contended-window pairs are skipped (pairs still complete, the
+    * exclusion logic still applies) — bounds total bench time on a badly
+    * contended host, where each retry of a stalled run can cost minutes.
     */
-  val retryDeadline: Long =
-    System.nanoTime() + sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC", "2400").toLong * 1000000000L
+  val retryBudgetNs: Long =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC", "2400").toLong * 1000000000L
 
   private def session(cores: Int): SparkSession = {
     // shuffle spill on tmpfs when available: disk I/O variance at high
@@ -196,7 +197,8 @@ object Bench {
     * (≤ [[MaxAttempts]] total) and the fastest attempt stands.
     * Returns (docs, best run, all attempts).
     */
-  private def extractAtCores(cores: Int, sfDir: String, replicate: Int): (Long, Run, Vector[Run]) = {
+  private def extractAtCores(cores: Int, sfDir: String, replicate: Int,
+                             retryDeadline: Long): (Long, Run, Vector[Run]) = {
     val spark = session(cores)
     try {
       // warmup: a full (smaller) pass through the identical pipeline —
@@ -292,17 +294,15 @@ object Bench {
     val cooldownSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_COOLDOWN_SEC", "20").toInt
     case class Pair(docs: Long, runN: Run, runN4: Run, probe: Double, stealPct: Double)
     val allRuns = Vector.newBuilder[Run]
-    def runPair(nn: Int): Pair = {
+    def runPair(nn: Int, deadline: Long): Pair = {
       val pairStat = procStat()
       val probeN = cpuProbe(nn)
-      val (d, bestN, runsN) = extractAtCores(nn, sfDir, replicate)
+      val (d, bestN, runsN) = extractAtCores(nn, sfDir, replicate, deadline)
       val probeN4 = cpuProbe(4 * nn)
-      val (_, bestN4, runsN4) = extractAtCores(4 * nn, sfDir, replicate)
+      val (_, bestN4, runsN4) = extractAtCores(4 * nn, sfDir, replicate, deadline)
       allRuns ++= runsN; allRuns ++= runsN4
       Pair(d, bestN, bestN4, probeN4 / (4.0 * probeN), stealSince(pairStat))
     }
-    var pairs = (1 to numPairs).map(_ => runPair(n)).toVector
-    val docs = pairs.head.docs
     // true median: even-length input averages the two middles — taking the
     // upper-middle would systematically pick the better sample when the
     // steal filter leaves an even number of clean pairs
@@ -327,12 +327,21 @@ object Bench {
     def pairContended(p: Pair): Boolean =
       p.runN.stealPct > StealCutPct || p.runN4.stealPct > StealCutPct ||
         cpuInflated(p.runN) || cpuInflated(p.runN4)
-    // fewer than 2 clean base pairs → cooldown and measure more (see above)
-    while (pairs.count(!pairContended(_)) < 2 && pairs.size < maxPairs
-        && System.nanoTime() < retryDeadline) {
-      Thread.sleep(cooldownSec * 1000L)
-      pairs :+= runPair(n)
+    // one scaling window at level pair nn→4nn: `base` pairs, then while
+    // fewer than 2 are clean, cooldown and measure more (see above) up to
+    // `cap` pairs. The window starts its OWN retry deadline, so a long 2→8
+    // window cannot starve the 8→32 one of retries.
+    def measureWindow(nn: Int, base: Int, cap: Int): Vector[Pair] = {
+      val deadline = System.nanoTime() + retryBudgetNs
+      var ps = (1 to base).map(_ => runPair(nn, deadline)).toVector
+      while (ps.count(!pairContended(_)) < 2 && ps.size < cap && System.nanoTime() < deadline) {
+        Thread.sleep(cooldownSec * 1000L)
+        ps :+= runPair(nn, deadline)
+      }
+      ps
     }
+    val pairs = measureWindow(n, numPairs, maxPairs)
+    val docs = pairs.head.docs
     // HIGH-CORE scaling pairs (default 8→32): the committed 2→8 pairs
     // mirror per-executor memory headroom; 8→32 is the harder claim —
     // memory-bandwidth and GC contention appear at high occupancy, which
@@ -342,14 +351,8 @@ object Bench {
     // hw-normalized bracket the silicon penalty, ~×1.5 at 8→32).
     val nHi = sys.env.getOrElse("SPARK_GRAFT_BENCH_N_HI", "8").toInt // 0 disables
     val numPairsHi = sys.env.getOrElse("SPARK_GRAFT_BENCH_PAIRS_HI", "2").toInt
-    var hiPairs =
-      if (nHi > 0) (1 to numPairsHi).map(_ => runPair(nHi)).toVector
-      else Vector.empty[Pair]
-    while (nHi > 0 && hiPairs.count(!pairContended(_)) < 2
-        && hiPairs.size < numPairsHi + 2 && System.nanoTime() < retryDeadline) {
-      Thread.sleep(cooldownSec * 1000L)
-      hiPairs :+= runPair(nHi)
-    }
+    val hiPairs =
+      if (nHi > 0) measureWindow(nHi, numPairsHi, numPairsHi + 2) else Vector.empty[Pair]
     val stealPct = stealSince(stealBefore) // whole scaling-phase window
     // Per-level-pair statistics, shared by the committed 2→8 pairs and
     // the high-core 8→32 pairs:
@@ -428,36 +431,37 @@ object Bench {
     }
     // approximation quality at this sf (VERDICT r01 §missing-3: a user must
     // know what the ANN approximation costs)
+    import graft.sim.Similarity
     val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val recallQ = embs.filter(col("vec_id") < 10)
+    // exact top-5 under each scoring the approximations rank by: quantized
+    // cosine (LSH, IVF) and the quantized dot (PQ ADC and its composites)
+    val exactCos = Similarity.bruteForceTopK(embs, recallQ, 5, Similarity.cosineQ(embs))
+    val exactDot = Similarity.bruteForceTopK(embs, recallQ, 5)
     // the GATED configuration: planes from planesFor(count), 4 tables,
     // Hamming-2 probes — recall is measured at the sf the bench publishes
-    val annPlanes = graft.sim.Similarity.planesFor(embs.count())
-    val annRecall = graft.sim.Similarity.annRecallAtK(
-      embs, embs.filter(col("vec_id") < 10), 5,
-      numPlanes = annPlanes, probeHamming = 2, numTables = 4)
+    val annPlanes = Similarity.planesFor(embs.count())
+    val annRecall = Similarity.recallAtK(exactCos, Similarity.annTopK(
+      embs, recallQ, 5, numPlanes = annPlanes, probeHamming = 2, numTables = 4))
     // IVF twin of the same measurement (gated config: √n cells, 4 probes,
     // one Lloyd refinement round)
-    val ivfCells = graft.sim.Similarity.cellsFor(embs.count())
-    val ivfRecall = graft.sim.Similarity.ivfRecallAtK(
-      embs, embs.filter(col("vec_id") < 10), 5, numCells = ivfCells, nProbe = 4,
-      lloydRounds = 1)
+    val ivfCells = Similarity.cellsFor(embs.count())
+    val ivfRecall = Similarity.recallAtK(exactCos, Similarity.ivfTopK(
+      embs, recallQ, 5, numCells = ivfCells, nProbe = 4, lloydRounds = 1))
     val ndCorpus = embs.filter(col("vec_id") < 1000)
-    val ndExact = graft.sim.Similarity.nearDupPairs(ndCorpus, 400000L).count()
-    val ndLsh = graft.sim.Similarity.nearDupPairsLsh(ndCorpus, 400000L).count()
+    val ndExact = Similarity.nearDupPairs(ndCorpus, 400000L).count()
+    val ndLsh = Similarity.nearDupPairsLsh(ndCorpus, 400000L).count()
     val ndRecall = if (ndExact == 0) 1.0 else ndLsh.toDouble / ndExact
     // PQ ADC recall at the gated (m, ks) — the memory-resident scan's
     // distortion is a per-run quality number, like the other two ANN paths
-    val pqRecall = graft.sim.Similarity.pqRecallAtK(
-      embs, embs.filter(col("vec_id") < 10), 5, m = 16, ks = 64)
+    val pqRecall = Similarity.recallAtK(exactDot, Similarity.pqTopK(embs, recallQ, 5, m = 16, ks = 64))
     // IVF-PQ composite at BOTH gated configs — the residual-encoding
     // baseline and the refine-stage (exact-rerank) config that holds
     // ≥ 0.9 — published next to flat PQ so the trade is visible
-    val ivfPqRecall = graft.sim.Similarity.ivfPqRecallAtK(
-      embs, embs.filter(col("vec_id") < 10), 5,
-      numCells = ivfCells, nProbe = 4, m = 16, ks = 64)
-    val ivfPqRerankRecall = graft.sim.Similarity.ivfPqRerankRecallAtK(
-      embs, embs.filter(col("vec_id") < 10), 5,
-      numCells = ivfCells, nProbe = 8, m = 16, ks = 64, shortlist = 50)
+    val ivfPqRecall = Similarity.recallAtK(exactDot, Similarity.ivfPqTopK(
+      embs, recallQ, 5, numCells = ivfCells, nProbe = 4, m = 16, ks = 64))
+    val ivfPqRerankRecall = Similarity.recallAtK(exactDot, Similarity.ivfPqRerankTopK(
+      embs, recallQ, 5, numCells = ivfCells, nProbe = 8, m = 16, ks = 64, shortlist = 50))
     spark.stop()
 
     import graft.util.JsonFmt.d

@@ -193,8 +193,7 @@ object ExtractJob {
     */
   def commitMetrics(spark: SparkSession, tableRoot: String, commitId: String): Unit = {
     import spark.implicits._
-    val committedInc = spark.read.parquet(s"$tableRoot/results/data/$commitId")
-    val m = committedInc
+    val m = resultsTable(tableRoot).readCommit(spark, commitId)
       .groupBy($"partition_id")
       .agg(
         count("*").as("rows_in"),
@@ -208,6 +207,18 @@ object ExtractJob {
       .select(lit(commitId).as("commit_id"), $"partition_id", $"rows_in", $"rows_ok",
         $"rows_error", $"bytes_in", $"kernel_us", $"min_url", $"max_url")
     metricsTable(tableRoot).append(m, commitId)
+  }
+
+  /** The commit step batch runs and streaming epochs share: kernel →
+    * results commit → metrics commit (derived from the committed
+    * increment's per-row lineage columns — one kernel pass total,
+    * [[extractAll]] stamped them on the result rows). Returns the results
+    * version.
+    */
+  def commit(todo: Dataset[PageRow], tableRoot: String, rules: Seq[FieldRule], commitId: String): Int = {
+    val version = resultsTable(tableRoot).append(extractAll(todo, rules, commitId).toDF(), commitId)
+    commitMetrics(todo.sparkSession, tableRoot, commitId)
+    version
   }
 
   /** Full resumable run: anti-join → partition → kernel → atomic commit.
@@ -230,18 +241,11 @@ object ExtractJob {
     // same key upstream of the binary column (PagesGen.pages(_, _, parts))
     // and the resume filter preserved it (broadcast anti-join / bloom pass)
     val todo = if (alreadyPartitioned) pend else partitionForExtraction(pend, parts)
-    val results = extractAll(todo, rules, commitId)
-
-    val rt = resultsTable(tableRoot)
-    val version = rt.append(results.toDF(), commitId)
-
-    // metrics derive from the committed increment's per-row lineage columns
-    // (one kernel pass total — extractAll stamped them on the result rows)
-    commitMetrics(spark, tableRoot, commitId)
+    val version = commit(todo, tableRoot, rules, commitId)
 
     // job stats roll up from the committed METRICS increment (a handful of
     // rows) — the wide results increment is never re-read
-    val agg = spark.read.parquet(s"$tableRoot/metrics/data/$commitId")
+    val agg = metricsTable(tableRoot).readCommit(spark, commitId)
       .agg(sum($"rows_in"), sum($"rows_ok"), sum($"rows_error"))
       .collect()(0)
     def l(i: Int): Long = Option(agg.get(i)).map(_.asInstanceOf[Long]).getOrElse(0L)

@@ -125,6 +125,18 @@ object Similarity {
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
+  /** Recall@k of an approximate top-k (`approx`) against the exact one
+    * (`exact`, [[bruteForceTopK]] under the scoring the approximation
+    * ranks by): the share of exact (qid, vid) pairs `approx` also returns.
+    * Driver-side sizes only (k × #queries pairs).
+    */
+  def recallAtK(exact: DataFrame, approx: DataFrame): Double = {
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val truth = pairs(exact)
+    if (truth.isEmpty) 1.0 else (pairs(approx) & truth).size.toDouble / truth.size
+  }
+
   // ---------------------------------------------------------------- near-dup
 
   /** Embedding near-duplicate pairs (the embedding-cosine dedup op): all
@@ -246,7 +258,7 @@ object Similarity {
     * ≈ nProbe/numCells): measured recall@5 0.90–0.98 at nProbe=4 on the
     * test corpora (SimilaritySpec floor 0.6; BENCH reports it per run).
     *
-    * Measured refinement behavior ([[graft.tools.IvfRecallProbe]], sf0.1
+    * Measured refinement behavior (BASELINE.md, IVF recall, sf0.1
     * synthetic embeddings): recall@5 at nProbe=4 is 0.98 / 0.94 / 0.86 at
     * 0 / 1 / 2 Lloyd rounds, while cell balance is IDENTICAL across
     * rounds (top-4-cell mass 0.112/0.111/0.110) and probing by float
@@ -334,21 +346,6 @@ object Similarity {
       .select(col("qid"), col("vid"), cq(col("qe"), col("ve")).as("score"))
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vid"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-  }
-
-  /** Recall@k of [[ivfTopK]] against [[bruteForceTopK]] (same scoring).
-    * Driver-side sizes only (k × #queries pairs).
-    */
-  def ivfRecallAtK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      numCells: Int, nProbe: Int = 4, lloydRounds: Int = 0
-  ): Double = {
-    val cq = cosineQ(corpus) _
-    val brute = bruteForceTopK(corpus, queries, k, cq)
-      .select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = ivfTopK(corpus, queries, k, numCells, nProbe, lloydRounds)
-      .select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    if (brute.isEmpty) 1.0 else (ivf & brute).size.toDouble / brute.size
   }
 
   // ---------------------------------------------------------------------- PQ
@@ -494,11 +491,12 @@ object Similarity {
     * survivors). Encoding happens once and persists next to the corpus
     * in a real deployment; the scan cost is the 8-byte codes, not the
     * embeddings. Recall is bounded by quantization distortion — measured
-    * recall@5 on the near-uniform test corpus: 0.64 at the GATED m=16,
-    * ks=64, but only 0.30 at this method's m=8, ks=16 defaults (finer
-    * subspaces beat more codewords there — 8-dim random cells quantize
-    * poorly at any ks; full sweep in SimilaritySpec). Size m/ks to the
-    * corpus; ks=256 is the faiss-conventional production knob.
+    * recall@5 on the near-uniform test corpus: 0.36 at the GATED m=16,
+    * ks=64 (sf0.1, BENCH_r05), but only 0.30 at this method's m=8, ks=16
+    * defaults (sf0.01; finer subspaces beat more codewords there — 8-dim
+    * random cells quantize poorly at any ks; full sweep in SimilaritySpec).
+    * Size m/ks to the corpus; ks=256 is the faiss-conventional production
+    * knob.
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              m: Int = 8, ks: Int = 16, dim: Int = 64): DataFrame = {
@@ -564,8 +562,8 @@ object Similarity {
     * the vector's and quantizes no finer): recall@5 at (m=16, ks=64,
     * nProbe=4) is 0.34 residual vs 0.38 raw — residual encoding buys
     * nothing here, exactly as the repo's earlier Lloyd-refinement
-    * finding (IvfRecallProbe) predicts for unclustered data. The
-    * recall path at production knobs is therefore the REFINE stage
+    * finding (BASELINE.md) predicts for unclustered data. The recall
+    * path at production knobs is therefore the REFINE stage
     * ([[ivfPqRerankTopK]], faiss IndexRefineFlat): ADC shortlist +
     * exact rerank holds 0.94-0.98 at sf0.1 (gated `s_ivfpq_rerank`;
     * Bench reports it per run next to the flat-PQ and composite
@@ -649,36 +647,6 @@ object Similarity {
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
-  /** Recall@k of [[ivfPqRerankTopK]] against [[bruteForceTopK]] (same
-    * metric). Driver-side sizes only.
-    */
-  def ivfPqRerankRecallAtK(corpus: DataFrame, queries: DataFrame, k: Int,
-                           numCells: Int, nProbe: Int = 8,
-                           m: Int = 16, ks: Int = 64,
-                           shortlist: Int = 25): Double = {
-    val brute = bruteForceTopK(corpus, queries, k)
-      .select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = ivfPqRerankTopK(corpus, queries, k, numCells, nProbe, m, ks,
-        shortlist = shortlist)
-      .select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    if (brute.isEmpty) 1.0 else (got & brute).size.toDouble / brute.size
-  }
-
-  /** Recall@k of [[ivfPqTopK]] against [[bruteForceTopK]] on the
-    * quantized dot. Driver-side sizes only (k × #queries pairs).
-    */
-  def ivfPqRecallAtK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     numCells: Int, nProbe: Int = 4,
-                     m: Int = 16, ks: Int = 64,
-                     residual: Boolean = true): Double = {
-    val brute = bruteForceTopK(corpus, queries, k)
-      .select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = ivfPqTopK(corpus, queries, k, numCells, nProbe, m, ks,
-        residual = residual)
-      .select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    if (brute.isEmpty) 1.0 else (got & brute).size.toDouble / brute.size
-  }
-
   /** SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the
     * embeddings with the coarse quantizer, then find near-duplicate
     * PAIRS only WITHIN each cluster (quantized dot ≥ `minQDot`) and keep
@@ -712,18 +680,6 @@ object Similarity {
     val drops = graft.dedup.Dedup.connectedComponents(pairs)
       .filter(col("id") =!= col("label")).select(col("id").as("vec_id"))
     corpus.join(drops, Seq("vec_id"), "left_anti").select(col("vec_id"))
-  }
-
-  /** Recall@k of [[pqTopK]] against [[bruteForceTopK]] on the quantized
-    * dot (the metric ADC approximates). Driver-side sizes only.
-    */
-  def pqRecallAtK(corpus: DataFrame, queries: DataFrame, k: Int,
-                  m: Int = 8, ks: Int = 16): Double = {
-    val brute = bruteForceTopK(corpus, queries, k)
-      .select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pq = pqTopK(corpus, queries, k, m, ks)
-      .select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    if (brute.isEmpty) 1.0 else (pq & brute).size.toDouble / brute.size
   }
 
   // --------------------------------------------------------------------- ANN
@@ -903,17 +859,5 @@ object Similarity {
         floor(cq(col("se"), col("te")) * lit(1e9)).cast("long").as("sq"))
       .groupBy("sid", "tid").agg(max(col("sq")).as("sq"))
     marginPairs(scored, k, minMarginPpm)
-  }
-
-  def annRecallAtK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      numPlanes: Int = 8, probeHamming: Int = 1, numTables: Int = 4
-  ): Double = {
-    val cq = cosineQ(corpus) _
-    val brute = bruteForceTopK(corpus, queries, k, cq)
-      .select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ann = annTopK(corpus, queries, k, numPlanes, probeHamming, numTables)
-      .select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    if (brute.isEmpty) 1.0 else (ann & brute).size.toDouble / brute.size
   }
 }

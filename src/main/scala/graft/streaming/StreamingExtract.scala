@@ -153,21 +153,14 @@ object StreamingExtract {
           .digest(s"${fp.get(0)}|${fp.get(1)}|${fp.get(2)}|${fp.get(3)}|${fp.get(4)}".getBytes("UTF-8"))
           .take(6).map(b => f"${b & 0xff}%02x").mkString
         val commitId = s"epoch-$batchId-$digest"
-        val rt = ExtractJob.resultsTable(tableRoot)
         // commit-id HISTORY, not the dir list: compaction merges epoch dirs
-        // out of the manifest, but a replayed epoch must still be skipped
-        val alreadyCommitted = rt.hasCommit(commitId)
-        if (!alreadyCommitted) {
-          // per-url exactly-once ACROSS batches too: a re-crawled url that
-          // arrives in a later micro-batch anti-joins against the committed
-          // snapshot exactly like the batch job's resume path
-          val todo = ExtractJob.pending(session, batch, tableRoot)
-          val res = ExtractJob.extractAll(todo, rules, commitId)
-          rt.append(res.toDF(), commitId)
-          // per-epoch lineage parity with the batch job: partition metrics
-          // derived from the committed increment's per-row lineage columns
-          ExtractJob.commitMetrics(session, tableRoot, commitId)
-        }
+        // out of the manifest, but a replayed epoch must still be skipped.
+        // Per-url exactly-once ACROSS batches too: a re-crawled url that
+        // arrives in a later micro-batch anti-joins against the committed
+        // snapshot exactly like the batch job's resume path, and the epoch
+        // commits results + metrics through the batch job's own step
+        if (!ExtractJob.resultsTable(tableRoot).hasCommit(commitId))
+          ExtractJob.commit(ExtractJob.pending(session, batch, tableRoot), tableRoot, rules, commitId)
         ()
       }
       .option("checkpointLocation", checkpoint)

@@ -10,6 +10,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-style committed-snapshot table on a plain filesystem.
@@ -46,10 +47,10 @@ import scala.jdk.CollectionConverters._
   *    hidden metadata), LSM-style: dir count stays ≤
   *    fanIn · log_fanIn(commits) (~15 dirs at 10^5 epochs) and each row is
   *    rewritten only O(log_fanIn(commits)) times. Merged source dirs stay
-  *    on disk — older manifests still reference them and `commitMetrics`
-  *    reads fresh increments by path — they just leave the current
-  *    manifest. Compaction runs BEFORE the manifest move, so a crash
-  *    mid-compact leaves the previous snapshot intact;
+  *    on disk — older manifests still reference them and [[readCommit]]
+  *    reads a fresh increment from its own dir — they just leave the
+  *    current manifest. Compaction runs BEFORE the manifest move, so a
+  *    crash mid-compact leaves the previous snapshot intact;
   *  - FILE STATISTICS / DATA SKIPPING (Iceberg manifest `lower_bound`/
   *    `upper_bound` analog): when `statsCol` names a STRING column, every
   *    published data dir carries its min/max of that column in the
@@ -57,8 +58,8 @@ import scala.jdk.CollectionConverters._
   *    intersect the predicate — a point lookup on a 10^12-row table whose
   *    writer clusters by url touches only the dirs whose url range covers
   *    it, WITHOUT opening a single parquet footer. Dirs with no recorded
-  *    stats (legacy manifests, empty increments, missing column) are never
-  *    pruned — skipping is an optimization, absence is always safe. Each
+  *    stats (empty increments, missing column) are never pruned —
+  *    skipping is an optimization, absence is always safe. Each
   *    stat-tracked dir additionally carries a BLOOM SIDECAR
   *    (`_graft.bloom`, the Iceberg-puffin analog — sketches live next to
   *    the data, never in the manifest) so [[readPoint]] also skips dirs
@@ -81,10 +82,10 @@ import scala.jdk.CollectionConverters._
   *    compacted table pays zero read-time delete cost. Delete parquet
   *    files stay on disk forever — older manifests reference them, which
   *    keeps TIME TRAVEL exact across upserts;
-  *  - SCHEMA EVOLUTION (additive, Iceberg model): every manifest records
-  *    the unified table schema, merged at commit time ([[mergeSchemas]]:
-  *    new columns append nullable, dropped columns stay, type changes are
-  *    rejected). Readers pin the scan to the RECORDED schema, so dirs
+  *  - SCHEMA EVOLUTION (additive, Iceberg model): every manifest that
+  *    lists data records the unified table schema, merged at commit time
+  *    ([[mergeSchemas]]: new columns append nullable, dropped columns
+  *    stay, type changes are rejected). Readers pin the scan to the RECORDED schema, so dirs
   *    written before a column existed read null for it without any
   *    footer-merging pass, and [[readAt]] returns each version under the
   *    schema it was published with. Compaction materializes evolution —
@@ -98,14 +99,13 @@ final class SnapshotTable(
   private val delDir: Path = Paths.get(root, "deletes")
   private val snapDir: Path = Paths.get(root, "_snapshots")
 
-  /** A committed data dir: `seq` is the snapshot version that published it
-    * (0 for legacy manifests); `statMin`/`statMax` bound `statsCol` within
-    * the dir when recorded; `rows` is the dir's exact row count when
-    * recorded (post any delete-applying compaction — legacy manifests
-    * lack it).
+  /** A committed data dir: `seq` is the snapshot version that published it;
+    * `statMin`/`statMax` bound `statsCol` within the dir when recorded;
+    * `rows` is the dir's exact row count (post any delete-applying
+    * compaction).
     */
   final case class Entry(dir: String, seq: Int, statMin: Option[String],
-                         statMax: Option[String], rows: Option[Long] = None)
+                         statMax: Option[String], rows: Long)
 
   /** A committed equality-delete file: parquet of key columns; applies to
     * rows in entries with a strictly smaller `seq`.
@@ -117,64 +117,82 @@ final class SnapshotTable(
       rowCount: Long, commitIds: Vector[String],
       schemaJson: Option[String] = None) {
     def dataDirs: Vector[String] = entries.map(_.dir)
-    /** The unified table schema recorded at this version, when the manifest
-      * carries one (SCHEMA EVOLUTION — see [[mergeSchemas]]).
+    /** The unified table schema recorded at this version (SCHEMA
+      * EVOLUTION — see [[mergeSchemas]]); recorded whenever the snapshot
+      * lists data.
       */
     def schema: Option[StructType] =
       schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
   }
 
-  /** Line-3 prefix marking the commit-id history line; its absence marks a
-    * first-generation manifest whose body is bare data dirs from line 3 on.
+  /** The snapshot before the first commit: what every commit derives from
+    * on an empty table.
     */
+  private val Empty = Snapshot(0, Vector.empty, Vector.empty, 0L, Vector.empty)
+
+  /** Line-3 prefix of the commit-id history line. */
   private val IdsMarker = "ids:"
 
-  /** Optional line-4 prefix carrying the unified table schema (b64 of the
-    * StructType JSON). Manifests written before schema tracking lack it —
-    * readers then fall back to footer-derived schemas, exactly the old
-    * behavior, so legacy tables keep reading.
+  /** Line-4 prefix carrying the unified table schema (b64 of the
+    * StructType JSON). Absent only while the table has never held data
+    * (a delete-only commit on an empty table records no schema).
     */
   private val SchemaMarker = "schema:"
 
   private def b64(s: String): String = Base64.getEncoder.encodeToString(s.getBytes(UTF_8))
   private def unb64(s: String): String = new String(Base64.getDecoder.decode(s), UTF_8)
 
-  private def parseManifest(p: Path): Snapshot = {
-    // manifest: line 1 version, line 2 rowCount, line 3 "ids:" + comma-joined
-    // commit-id history, rest one entry per line:
-    //   data dir:  dir [\t seq [\t b64(min) \t b64(max)]]   (legacy: bare dir)
-    //   delete:    D \t dir \t seq
-    // The "ids:" marker makes the format self-identifying: a first-generation
-    // manifest (version \n rowCount \n bare data dirs) has a path on line 3,
-    // never "ids:", so its dirs parse as entries instead of being consumed
-    // as commit-id history (which silently dropped the first commit's rows).
-    val lines = Files.readAllLines(p, UTF_8).asScala.toVector
-    val hasIds = lines.length > 2 && lines(2).startsWith(IdsMarker)
-    val ids =
-      if (hasIds) lines(2).stripPrefix(IdsMarker).split(",", -1).toVector.filter(_.nonEmpty)
-      else Vector.empty[String]
-    val hasSchema = hasIds && lines.length > 3 && lines(3).startsWith(SchemaMarker)
-    val schemaJson =
-      if (hasSchema) Some(unb64(lines(3).stripPrefix(SchemaMarker))) else None
+  /** The manifest text of `s` — line 1 version, line 2 rowCount, line 3
+    * "ids:" + comma-joined commit-id history, optional line 4 "schema:" +
+    * b64(schema JSON), then one line per entry:
+    *   data dir:  dir \t seq [\t b64(min) \t b64(max)] \t rows
+    *   delete:    D \t dir \t seq
+    * [[parseManifest]] is its exact inverse.
+    */
+  private[graft] def render(s: Snapshot): String =
+    (Vector(s.version.toString, s.rowCount.toString, IdsMarker + s.commitIds.mkString(",")) ++
+      s.schemaJson.map(j => SchemaMarker + b64(j)) ++
+      s.entries.map { e =>
+        val stats = (e.statMin, e.statMax) match {
+          case (Some(mn), Some(mx)) => s"\t${b64(mn)}\t${b64(mx)}"
+          case _ => ""
+        }
+        s"${e.dir}\t${e.seq}$stats\t${e.rows}"
+      } ++
+      s.deletes.map(d => s"D\t${d.dir}\t${d.seq}")).mkString("\n")
+
+  /** Parse a manifest [[render]] wrote; any other line is rejected. */
+  private[graft] def parseManifest(text: String): Snapshot = {
+    val lines = text.split("\n").toVector
+    require(lines.length >= 3 && lines(2).startsWith(IdsMarker),
+      "line 3 must carry the \"ids:\" commit-id history")
+    val ids = lines(2).stripPrefix(IdsMarker).split(",", -1).toVector.filter(_.nonEmpty)
+    val schemaJson = lines.lift(3).filter(_.startsWith(SchemaMarker))
+      .map(l => unb64(l.stripPrefix(SchemaMarker)))
     val entries = Vector.newBuilder[Entry]
     val dels = Vector.newBuilder[Del]
-    lines.drop(if (hasSchema) 4 else if (hasIds) 3 else 2).foreach { line =>
-      val f = line.split("\t", -1)
-      if (f.head == "D") dels += Del(f(1), f(2).toInt)
-      // row counts append as the LAST field, keeping every older layout
-      // parseable: 5 = stats+rows, 4 = legacy stats, 3 = statless+rows,
-      // 2 = legacy statless, 1 = first-generation bare dir
-      else if (f.length >= 5)
-        entries += Entry(f(0), f(1).toInt, Some(unb64(f(2))), Some(unb64(f(3))), Some(f(4).toLong))
-      else if (f.length == 4)
-        entries += Entry(f(0), f(1).toInt, Some(unb64(f(2))), Some(unb64(f(3))))
-      else if (f.length == 3)
-        entries += Entry(f(0), f(1).toInt, None, None, Some(f(2).toLong))
-      else if (f.length == 2) entries += Entry(f(0), f(1).toInt, None, None)
-      else entries += Entry(f(0), 0, None, None)
+    val first = if (schemaJson.isDefined) 4 else 3
+    lines.drop(first).zipWithIndex.foreach { case (line, i) =>
+      line.split("\t", -1) match {
+        case Array("D", dir, seq) => dels += Del(dir, seq.toInt)
+        case Array(dir, seq, rows) => entries += Entry(dir, seq.toInt, None, None, rows.toLong)
+        case Array(dir, seq, mn, mx, rows) =>
+          entries += Entry(dir, seq.toInt, Some(unb64(mn)), Some(unb64(mx)), rows.toLong)
+        case _ => throw new IllegalArgumentException(s"malformed line ${first + i + 1}: '$line'")
+      }
     }
-    Snapshot(lines.head.toInt, entries.result(), dels.result(), lines(1).toLong, ids, schemaJson)
+    val s = Snapshot(lines(0).toInt, entries.result(), dels.result(), lines(1).toLong, ids, schemaJson)
+    require(s.entries.isEmpty || schemaJson.isDefined, "data entries without a schema line")
+    s
   }
+
+  /** Read and parse one manifest file; a malformed one fails naming it. */
+  private def load(p: Path): Snapshot =
+    try parseManifest(new String(Files.readAllBytes(p), UTF_8))
+    catch {
+      case e: IllegalArgumentException => // NumberFormatException included
+        throw new IllegalStateException(s"malformed manifest $p: ${e.getMessage}", e)
+    }
 
   private def manifestPath(v: Int): Path = snapDir.resolve(f"v$v%08d.manifest")
 
@@ -182,22 +200,23 @@ final class SnapshotTable(
     * and compaction never touches them, so the full history stays
     * listable until [[expireBefore]] explicitly drops a prefix of it.
     */
-  def versions(): Vector[Int] = {
-    if (!Files.isDirectory(snapDir)) return Vector.empty
-    // Files.list holds an open directory fd until closed — streaming polls
-    // this per micro-batch, so an unclosed stream leaks fds
-    val stream = Files.list(snapDir)
-    try stream.iterator().asScala
-      .map(_.getFileName.toString)
+  def versions(): Vector[Int] =
+    list(snapDir).map(_.getFileName.toString)
       .collect { case n if n.startsWith("v") && n.endsWith(".manifest") => n.substring(1, 9).toInt }
-      .toVector.sorted
-    finally stream.close()
-  }
+      .sorted
 
-  def latest(): Option[Snapshot] = {
-    val vs = versions()
-    if (vs.isEmpty) None else Some(parseManifest(manifestPath(vs.max)))
-  }
+  /** Children of `dir` (empty when it does not exist). Files.list holds an
+    * open directory fd until closed — streaming polls [[versions]] per
+    * micro-batch, so an unclosed stream leaks fds.
+    */
+  private def list(dir: Path): Vector[Path] =
+    if (!Files.isDirectory(dir)) Vector.empty
+    else {
+      val stream = Files.list(dir)
+      try stream.iterator().asScala.toVector finally stream.close()
+    }
+
+  def latest(): Option[Snapshot] = versions().lastOption.map(v => load(manifestPath(v)))
 
   def isEmpty: Boolean = latest().isEmpty
 
@@ -210,33 +229,20 @@ final class SnapshotTable(
   def hasCommit(commitId: String): Boolean =
     latest().exists(_.commitIds.contains(commitId))
 
-  /** Merge-on-read: live rows of `entries` under `deletes`. A row from an
-    * entry with sequence s is dropped iff a delete with sequence > s holds
-    * its key. One slim join — the delete side is key columns only, tiny
-    * next to the corpus, so AQE broadcasts it; when no deletes remain
+  /** Merge-on-read: live rows of `entries` under `s`'s deletes. A row from
+    * an entry with sequence q is dropped iff a delete with sequence > q
+    * holds its key. One slim join — the delete side is key columns only,
+    * tiny next to the corpus, so AQE broadcasts it; when no deletes remain
     * (fresh tables, post-compaction) this is a plain multi-dir parquet
     * scan with zero overhead.
     */
-  private def readEntries(
-      spark: SparkSession, entries: Vector[Entry], deletes: Vector[Del],
-      schemaJson: Option[String]): DataFrame = {
-    // SCHEMA EVOLUTION read path: when the manifest recorded a unified
-    // schema, the scan is pinned to it — Spark's parquet reader fills
-    // columns a file predates with null, so dirs written before an
-    // added column read correctly WITHOUT opening any footer for schema
-    // discovery (Iceberg's schema-from-metadata model, not mergeSchema's
-    // schema-from-every-footer). Legacy manifests (no schema line) keep
-    // the footer-derived behavior.
-    def scan = schemaJson match {
-      case Some(j) => spark.read.schema(DataType.fromJson(j).asInstanceOf[StructType])
-      case None => spark.read
-    }
-    if (deletes.isEmpty) return scan.parquet(entries.map(_.dir): _*)
-    val keyCols = spark.read.parquet(deletes.head.dir).columns.toSeq
+  private def readEntries(spark: SparkSession, s: Snapshot, entries: Vector[Entry]): DataFrame = {
+    if (s.deletes.isEmpty) return scan(spark, s, entries.map(_.dir))
+    val keyCols = spark.read.parquet(s.deletes.head.dir).columns.toSeq
     val data = entries
-      .map(e => scan.parquet(e.dir).withColumn("_graft_seq", lit(e.seq)))
+      .map(e => scan(spark, s, Seq(e.dir)).withColumn("_graft_seq", lit(e.seq)))
       .reduce(_ unionByName _)
-    val dels = deletes
+    val dels = s.deletes
       .map(d => spark.read.parquet(d.dir).withColumn("_graft_del_seq", lit(d.seq)))
       .reduce(_ unionByName _)
       .groupBy(keyCols.map(col): _*)
@@ -246,26 +252,36 @@ final class SnapshotTable(
       .drop("_graft_seq", "_graft_del_seq")
   }
 
+  /** SCHEMA EVOLUTION read path: a scan of `dirs` pinned to the schema `s`
+    * recorded. Spark's parquet reader fills columns a file predates with
+    * null, so dirs written before an added column read correctly WITHOUT
+    * opening any footer for schema discovery (Iceberg's
+    * schema-from-metadata model, not mergeSchema's schema-from-every-footer).
+    */
+  private def scan(spark: SparkSession, s: Snapshot, dirs: Seq[String]): DataFrame =
+    spark.read.schema(schemaOf(s)).parquet(dirs: _*)
+
+  /** The schema `s` records — present whenever `s` lists data (the parser
+    * rejects a manifest that lists data without one).
+    */
+  private def schemaOf(s: Snapshot): StructType = s.schema.getOrElse(
+    throw new IllegalStateException(s"$root v${s.version} records no schema"))
+
   /** Read the committed table (all live rows). */
   def read(spark: SparkSession): Option[DataFrame] =
-    latest().filter(_.entries.nonEmpty)
-      .map(s => readEntries(spark, s.entries, s.deletes, s.schemaJson))
+    latest().filter(_.entries.nonEmpty).map(s => readEntries(spark, s, s.entries))
 
   /** METADATA-ONLY live row count (Iceberg's `count(*)`-from-manifests
     * analog): the sum of per-entry recorded counts — answered without
     * touching a single data file, the way `SELECT count(*)` on a
-    * 10^12-row table should be. Defined only when it is EXACT: every
-    * entry must carry a recorded count (legacy manifests don't) and no
+    * 10^12-row table should be. Defined only when it is EXACT: no
     * un-applied equality deletes may be outstanding (their effect is
     * unknown without a scan; compaction applies them, after which the
     * merged entry's recorded count is correct again). None ⇒ fall back
     * to `read(spark).count()`.
     */
   def fastCount: Option[Long] =
-    latest().flatMap { s =>
-      if (s.deletes.nonEmpty || s.entries.exists(_.rows.isEmpty)) None
-      else Some(s.entries.flatMap(_.rows).sum)
-    }
+    latest().filter(_.deletes.isEmpty).map(_.entries.map(_.rows).sum)
 
   /** Entries of the latest snapshot whose `[statMin, statMax]` could hold a
     * `statsCol` value in `[lo, hi]` (inclusive, string order), plus the
@@ -295,7 +311,7 @@ final class SnapshotTable(
     latest().flatMap { s =>
       val (kept, _) = pruneRange(lo, hi)
       if (kept.isEmpty) None
-      else Some(readEntries(spark, kept, s.deletes, s.schemaJson).where(col(c).between(lo, hi)))
+      else Some(readEntries(spark, s, kept).where(col(c).between(lo, hi)))
     }
   }
 
@@ -309,15 +325,14 @@ final class SnapshotTable(
     */
   def snapshotAt(version: Int): Option[Snapshot] = {
     val p = manifestPath(version)
-    if (Files.isRegularFile(p)) Some(parseManifest(p)) else None
+    if (Files.isRegularFile(p)) Some(load(p)) else None
   }
 
   /** Read the table as of `version` (see [[snapshotAt]]), with that
     * version's deletes applied.
     */
   def readAt(spark: SparkSession, version: Int): Option[DataFrame] =
-    snapshotAt(version).filter(_.entries.nonEmpty)
-      .map(s => readEntries(spark, s.entries, s.deletes, s.schemaJson))
+    snapshotAt(version).filter(_.entries.nonEmpty).map(s => readEntries(spark, s, s.entries))
 
   /** INCREMENTAL APPEND READ (Iceberg incremental-scan analog): exactly
     * the rows appended by commits AFTER `sinceVersion`, read straight
@@ -345,20 +360,28 @@ final class SnapshotTable(
   def readAppendsSince(spark: SparkSession, sinceVersion: Int,
                        untilVersion: Int = Int.MaxValue): Option[DataFrame] =
     latest().flatMap { cur =>
-      val dirs = versions().filter(v => v > sinceVersion && v <= untilVersion)
-        .flatMap(v => snapshotAt(v).flatMap(_.commitIds.lastOption))
-        .map(cid => dataDir.resolve(cid))
-        .filter(Files.isDirectory(_))
-        .map(_.toString)
-      if (dirs.isEmpty) None
+      val appends = versions().filter(v => v > sinceVersion && v <= untilVersion)
+        .flatMap(snapshotAt)
+        .flatMap(s => s.commitIds.lastOption.map(dataDir.resolve(_))
+          .filter(Files.isDirectory(_)).map(d => (s, d.toString)))
+      if (appends.isEmpty) None
       else {
-        val scan = cur.schema match {
-          case Some(st) => spark.read.schema(st)
-          case None => spark.read
-        }
-        Some(scan.parquet(dirs: _*))
+        // a table rolled back to before its first append records no schema;
+        // the newest append's own schema then stands in for the current one
+        val pin = if (cur.schemaJson.isDefined) cur else appends.last._1
+        Some(scan(spark, pin, appends.map(_._2)))
       }
     }
+
+  /** The rows commit `commitId` appended, read from its own data dir
+    * (which stays on disk after compaction merges it out of the manifest),
+    * pinned to the current schema. The commit must be published.
+    */
+  def readCommit(spark: SparkSession, commitId: String): DataFrame = {
+    val cur = latest().filter(_.commitIds.contains(commitId)).getOrElse(
+      throw new IllegalArgumentException(s"commit '$commitId' is not published in $root"))
+    scan(spark, cur, Seq(dataDir.resolve(commitId).toString))
+  }
 
   /** SNAPSHOT DIFF (the lineage-audit read: "what changed between the
     * corpus version training run A pinned and the one run B pinned?"):
@@ -391,15 +414,15 @@ final class SnapshotTable(
             snap.schema match {
               case Some(st) => project(spark.createDataFrame(
                 spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st))
-              case None => spark.emptyDataFrame // legacy schema-less manifest
+              case None => spark.emptyDataFrame // never held data: no schema recorded
             }
         }
       }
     (slim(fromVersion, "_graft_fp_a"), slim(toVersion, "_graft_fp_b")) match {
       case (Some(a0), Some(b0)) =>
         require(a0.columns.nonEmpty || b0.columns.nonEmpty,
-          s"diffVersions($fromVersion, $toVersion): both versions are legacy " +
-            "schema-less empty snapshots — no column types to diff under")
+          s"diffVersions($fromVersion, $toVersion): neither version ever held data " +
+            "— no column types to diff under")
         def orEmpty(df: DataFrame, like: DataFrame, fpName: String): DataFrame =
           if (df.columns.nonEmpty) df
           else like.limit(0).withColumnRenamed(like.columns.last, fpName)
@@ -431,33 +454,13 @@ final class SnapshotTable(
   def expireBefore(keepFrom: Int): (Int, Int) = {
     val (drop, keep) = versions().partition(_ < keepFrom)
     if (drop.isEmpty || keep.isEmpty) return (0, 0)
-    val kept = keep.flatMap(snapshotAt(_))
-    val referenced: Set[String] =
-      kept.flatMap(s => s.entries.map(_.dir) ++ s.deletes.map(_.dir)).toSet ++
-        kept.flatMap(_.commitIds.lastOption).map(cid => dataDir.resolve(cid).toString).toSet
-    def children(p: Path): Vector[Path] =
-      if (!Files.isDirectory(p)) Vector.empty
-      else {
-        val st = Files.list(p)
-        try st.iterator().asScala.filter(Files.isDirectory(_)).toVector
-        finally st.close()
-      }
-    def deleteRecursively(p: Path): Unit = {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally st.close()
-    }
+    val referenced = referencedBy(keep.flatMap(snapshotAt), _.commitIds.lastOption.toSeq)
     // manifests go FIRST: once they are gone no reader can resolve an
     // expired version, so a crash between the two phases leaves only
     // harmless orphan dirs (cleaned by the next expiry), never a live
     // manifest pointing at deleted data
     drop.foreach(v => Files.delete(manifestPath(v)))
-    var removed = 0
-    (children(dataDir) ++ children(delDir)).foreach { d =>
-      if (!referenced.contains(d.toString)) { deleteRecursively(d); removed += 1 }
-    }
-    (drop.size, removed)
+    (drop.size, sweep(referenced, _ => true))
   }
 
   /** Orphan vacuum — the maintenance pass [[expireBefore]] cannot cover:
@@ -481,45 +484,40 @@ final class SnapshotTable(
     */
   def vacuumOrphans(graceMs: Long = 3600000L): (Int, Int) = {
     val now = System.currentTimeMillis()
-    val snaps = versions().flatMap(snapshotAt(_))
-    val referenced: Set[String] =
-      snaps.flatMap(s => s.entries.map(_.dir) ++ s.deletes.map(_.dir)).toSet ++
-        snaps.flatMap(_.commitIds).map(cid => dataDir.resolve(cid).toString).toSet
-    def children(p: Path): Vector[Path] =
-      if (!Files.isDirectory(p)) Vector.empty
-      else {
-        val st = Files.list(p)
-        try st.iterator().asScala.filter(Files.isDirectory(_)).toVector
-        finally st.close()
-      }
-    def deleteRecursively(p: Path): Unit = {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally st.close()
-    }
     def aged(p: Path): Boolean =
       now - Files.getLastModifiedTime(p).toMillis >= graceMs
-    var dirs = 0
-    (children(dataDir) ++ children(delDir)).foreach { d =>
-      if (!referenced.contains(d.toString) && aged(d)) { deleteRecursively(d); dirs += 1 }
-    }
-    var tmps = 0
-    if (Files.isDirectory(snapDir)) {
-      val st = Files.list(snapDir)
-      try st.iterator().asScala.foreach { p =>
-        if (p.getFileName.toString.startsWith(".tmp-") && aged(p)) {
-          Files.delete(p); tmps += 1
-        }
-      } finally st.close()
-    }
-    (dirs, tmps)
+    val dirs = sweep(referencedBy(versions().flatMap(snapshotAt), _.commitIds), aged)
+    val tmps = list(snapDir).filter(p => p.getFileName.toString.startsWith(".tmp-") && aged(p))
+    tmps.foreach(Files.delete)
+    (dirs, tmps.size)
   }
 
-  /** One pass over a freshly written dir: row count plus min/max of
-    * `statsCol` when it is a string column with at least one non-null
-    * value. (Numeric columns are deliberately not stat-tracked — the
-    * manifest stores strings and string order would mis-prune numbers.)
+  /** Every dir `snaps` reference: their entry and delete dirs plus the data
+    * dirs of the commit ids `ids` picks from each.
+    */
+  private def referencedBy(snaps: Seq[Snapshot], ids: Snapshot => Seq[String]): Set[String] =
+    snaps.flatMap(s => s.entries.map(_.dir) ++ s.deletes.map(_.dir) ++
+      ids(s).map(dataDir.resolve(_).toString)).toSet
+
+  /** Recursively delete every data/delete dir outside `referenced` that
+    * `eligible` admits; returns how many went.
+    */
+  private def sweep(referenced: Set[String], eligible: Path => Boolean): Int = {
+    val doomed = (list(dataDir) ++ list(delDir))
+      .filter(d => Files.isDirectory(d) && !referenced.contains(d.toString) && eligible(d))
+    doomed.foreach { d =>
+      val st = Files.walk(d)
+      try st.sorted(java.util.Comparator.reverseOrder[Path]()).iterator().asScala.foreach(Files.delete)
+      finally st.close()
+    }
+    doomed.size
+  }
+
+  /** One pass over a freshly written dir: its entry at sequence `seq` (row
+    * count plus min/max of `statsCol` when it is a string column with at
+    * least one non-null value) and its written schema. (Numeric columns
+    * are deliberately not stat-tracked — the manifest stores strings and
+    * string order would mis-prune numbers.)
     *
     * When stats are recorded, a BLOOM SIDECAR is also written into the dir
     * (`_graft.bloom` — underscore-prefixed, so every parquet listing
@@ -532,9 +530,9 @@ final class SnapshotTable(
     * instead of the sidecar growing unbounded, same discipline as the
     * resume bloom's numBits cap.
     */
-  private def statsOf(spark: SparkSession, dir: String): (Long, Option[(String, String)]) = {
+  private def entryOf(spark: SparkSession, dir: String, seq: Int): (Entry, StructType) = {
     val df = spark.read.parquet(dir)
-    statsCol.filter(c =>
+    val (rows, stats) = statsCol.filter(c =>
       df.schema.fields.exists(f => f.name == c && f.dataType == StringType)) match {
       case None => (df.count(), None)
       case Some(c) =>
@@ -573,6 +571,7 @@ final class SnapshotTable(
         }
         (total, stats)
     }
+    (Entry(dir, seq, stats.map(_._1), stats.map(_._2), rows), df.schema)
   }
 
   /** Name of the per-dir bloom sidecar ('_'-prefixed: hidden from scans). */
@@ -634,7 +633,7 @@ final class SnapshotTable(
     latest().flatMap { s =>
       val (kept, _) = prunePoint(v)
       if (kept.isEmpty) None
-      else Some(readEntries(spark, kept, s.deletes, s.schemaJson).where(col(c) === v))
+      else Some(readEntries(spark, s, kept).where(col(c) === v))
     }
   }
 
@@ -677,24 +676,15 @@ final class SnapshotTable(
     * `readAppendsSince` yields an EMPTY delta for it — restoring removed
     * visibility is a table-level event, not an append-stream event.
     */
-  def rollbackTo(toVersion: Int, commitId: String): Int = {
-    var attempt = 0
-    while (true) {
+  def rollbackTo(toVersion: Int, commitId: String): Int =
+    commitLoop(s"rollback '$commitId'") { prev =>
       val target = snapshotAt(toVersion).getOrElse(throw new IllegalArgumentException(
         s"rollback target version $toVersion does not exist"))
-      val prev = latest().getOrElse(throw new IllegalStateException(
-        "rollback on an empty table"))
-      require(toVersion <= prev.version,
-        s"rollback target $toVersion is ahead of latest ${prev.version}")
-      if (tryCommit(prev.version + 1, target.entries, target.deletes, target.rowCount,
-          prev.commitIds :+ s"rollback-to-$toVersion:$commitId", target.schemaJson))
-        return prev.version + 1
-      attempt += 1
-      require(attempt < MaxCommitAttempts,
-        s"rollback '$commitId' lost the manifest CAS $MaxCommitAttempts times")
+      val p = prev.getOrElse(throw new IllegalStateException("rollback on an empty table"))
+      require(toVersion <= p.version, s"rollback target $toVersion is ahead of latest ${p.version}")
+      target.copy(version = p.version + 1,
+        commitIds = p.commitIds :+ s"rollback-to-$toVersion:$commitId")
     }
-    -1 // unreachable
-  }
 
   /** Delete-only commit: every live row whose key appears in `keys`
     * (parquet of exactly the key columns) stops being visible — the
@@ -703,26 +693,13 @@ final class SnapshotTable(
   def deleteKeys(keys: DataFrame, commitId: String): Int = {
     val dd = delDir.resolve(commitId).toString
     keys.dropDuplicates().write.mode("overwrite").parquet(dd)
-    var attempt = 0
-    while (true) {
-      // same CAS loop as [[publish]] — see the concurrency note there
-      val prev = latest()
-      val newVersion = prev.map(_.version + 1).getOrElse(1)
-      val entries0 = prev.map(_.entries).getOrElse(Vector.empty)
-      val deletes0 = prev.map(_.deletes).getOrElse(Vector.empty) :+ Del(dd, newVersion)
-      val schemaJson = prev.flatMap(_.schemaJson) // delete-only: schema unchanged
-      val (entries, deletes) =
-        compact(keys.sparkSession, entries0, deletes0, newVersion, commitId, schemaJson)
-      if (tryCommit(newVersion, entries, deletes,
-          prev.map(_.rowCount).getOrElse(0L),
-          prev.map(_.commitIds).getOrElse(Vector.empty) :+ commitId,
-          schemaJson))
-        return newVersion
-      attempt += 1
-      require(attempt < MaxCommitAttempts,
-        s"delete commit '$commitId' lost the manifest CAS $MaxCommitAttempts times")
+    commitLoop(s"delete commit '$commitId'") { prev =>
+      // delete-only: row count and schema unchanged
+      val p = prev.getOrElse(Empty)
+      val v = p.version + 1
+      compact(keys.sparkSession, commitId,
+        p.copy(version = v, deletes = p.deletes :+ Del(dd, v), commitIds = p.commitIds :+ commitId))
     }
-    -1 // unreachable
   }
 
   /** SCHEMA EVOLUTION merge (additive, the Iceberg model): columns match
@@ -756,61 +733,47 @@ final class SnapshotTable(
     */
   val MaxCommitAttempts = 10
 
+  /** The OPTIMISTIC-CONCURRENCY loop every commit rides (Iceberg's commit
+    * model): derive the new snapshot with `next` against the CURRENT
+    * latest, then publish it with an atomic create-if-absent of the
+    * versioned manifest ([[tryCommit]]). A concurrent writer that took the
+    * version makes the publish fail cleanly; `next` re-runs against the
+    * winner's snapshot. Returns the published version.
+    */
+  private def commitLoop(what: String)(next: Option[Snapshot] => Snapshot): Int =
+    Iterator.fill(MaxCommitAttempts)(next(latest())).find(tryCommit).map(_.version).getOrElse(
+      throw new IllegalStateException(s"$what lost the manifest CAS $MaxCommitAttempts times — " +
+        "writer contention is pathological; retry with backoff at the caller"))
+
   private def publish(df: DataFrame, commitId: String, deleteKeyCols: Seq[String]): Int = {
     val spark = df.sparkSession
     // the data dir is commit-private (keyed by commitId) and written ONCE;
-    // only the manifest derivation below re-runs when the CAS loses
+    // only the snapshot derivation below re-runs when the CAS loses
     val outDir = dataDir.resolve(commitId).toString
     df.write.mode("overwrite").parquet(outDir)
-    val (rows, stats) = statsOf(spark, outDir)
-    val written = spark.read.parquet(outDir).schema
-    var attempt = 0
-    while (true) {
-      // OPTIMISTIC CONCURRENCY (Iceberg's commit model): derive the new
-      // snapshot against the CURRENT latest, then publish with an atomic
-      // create-if-absent of the versioned manifest. A concurrent writer
-      // that took our version makes the publish fail cleanly; we re-read
-      // the winner's snapshot and re-derive — including re-merging the
-      // schema (a conflicting type change surfaces as mergeSchemas'
-      // loud rejection, never a silent overwrite) and re-running due
-      // compactions against the winner's entry list.
-      val prev = latest()
-      val newVersion = prev.map(_.version + 1).getOrElse(1)
-      val entries0 = prev.map(_.entries).getOrElse(Vector.empty) :+
-        Entry(outDir, newVersion, stats.map(_._1), stats.map(_._2), Some(rows))
-      val deletes0 = {
-        val base = prev.map(_.deletes).getOrElse(Vector.empty)
+    val (entry, written) = entryOf(spark, outDir, 0)
+    commitLoop(s"commit '$commitId'") { prev =>
+      // re-derived per attempt against the winner's snapshot — including
+      // re-merging the schema (a conflicting type change surfaces as
+      // mergeSchemas' loud rejection, never a silent overwrite) and
+      // re-running due compactions against the winner's entry list
+      val p = prev.getOrElse(Empty)
+      val v = p.version + 1
+      val deletes =
         // a delete is pointless when nothing older exists to delete from
-        if (deleteKeyCols.isEmpty || prev.forall(_.entries.isEmpty)) base
+        if (deleteKeyCols.isEmpty || p.entries.isEmpty) p.deletes
         else {
           val dd = delDir.resolve(commitId).toString
           spark.read.parquet(outDir).select(deleteKeyCols.map(col): _*)
             .dropDuplicates().write.mode("overwrite").parquet(dd)
-          base :+ Del(dd, newVersion)
+          p.deletes :+ Del(dd, v)
         }
-      }
-      // unified schema for the new snapshot: the just-written dir's on-disk
-      // schema merged into the previous one (legacy tables without a
-      // recorded schema derive theirs from footers once, here at write time)
-      val unified = prev match {
-        case Some(s) if s.entries.nonEmpty =>
-          val prevSchema = s.schema.getOrElse(spark.read.parquet(s.dataDirs: _*).schema)
-          mergeSchemas(prevSchema, written)
-        case _ => written
-      }
-      val schemaJson = Some(unified.json)
-      val (entries, deletes) = compact(spark, entries0, deletes0, newVersion, commitId, schemaJson)
-      if (tryCommit(newVersion, entries, deletes,
-          prev.map(_.rowCount).getOrElse(0L) + rows,
-          prev.map(_.commitIds).getOrElse(Vector.empty) :+ commitId,
-          schemaJson))
-        return newVersion
-      attempt += 1
-      require(attempt < MaxCommitAttempts,
-        s"commit '$commitId' lost the manifest CAS $MaxCommitAttempts times — " +
-          "writer contention is pathological; retry with backoff at the caller")
+      // unified schema: the just-written dir's schema merged into the
+      // recorded one
+      val unified = if (p.entries.isEmpty) written else mergeSchemas(schemaOf(p), written)
+      compact(spark, commitId, Snapshot(v, p.entries :+ entry.copy(seq = v), deletes,
+        p.rowCount + entry.rows, p.commitIds :+ commitId, Some(unified.json)))
     }
-    -1 // unreachable
   }
 
   /** Dir-name prefix for merged generations. NOT underscore-prefixed:
@@ -838,40 +801,30 @@ final class SnapshotTable(
     * deletes that no remaining entry is strictly older than are dropped
     * from the manifest — a fully compacted table reads delete-free.
     */
-  private def compact(
-      spark: SparkSession, entries0: Vector[Entry], deletes0: Vector[Del],
-      newVersion: Int, commitId: String,
-      schemaJson: Option[String]): (Vector[Entry], Vector[Del]) = {
-    var entries = entries0
-    var seq = 0
-    var more = true
-    while (more) {
-      val over = entries.groupBy(e => levelOf(e.dir)).collect {
+  private def compact(spark: SparkSession, commitId: String, s: Snapshot): Snapshot = {
+    @tailrec def merge(entries: Vector[Entry], seq: Int): Vector[Entry] =
+      entries.groupBy(e => levelOf(e.dir)).collect {
         case (l, g) if g.size >= compactFanIn => l
+      }.minOption match {
+        case None => entries
+        case Some(l) =>
+          val (group, rest) = entries.partition(e => levelOf(e.dir) == l)
+          // the commitId suffix keeps concurrent writers' merge targets
+          // disjoint: two writers racing the same version would otherwise
+          // both write compacted-<L>-<v>-0 and the CAS loser could clobber
+          // the winner's published bytes (levelOf only parses the level
+          // between the first two dashes, so the suffix is inert)
+          val target = dataDir.resolve(s"$CompactPrefix${l + 1}-${s.version}-$seq-$commitId").toString
+          // rewriting under the unified schema also MATERIALIZES evolution:
+          // the merged dir physically carries every column, nulls filled
+          readEntries(spark, s, group).write.mode("overwrite").parquet(target)
+          merge(rest :+ entryOf(spark, target, s.version)._1, seq + 1)
       }
-      if (over.isEmpty) more = false
-      else {
-        val l = over.min
-        val (group, rest) = entries.partition(e => levelOf(e.dir) == l)
-        // the commitId suffix keeps concurrent writers' merge targets
-        // disjoint: two writers racing the same version would otherwise
-        // both write compacted-<L>-<v>-0 and the CAS loser could clobber
-        // the winner's published bytes (levelOf only parses the level
-        // between the first two dashes, so the suffix is inert)
-        val target = dataDir.resolve(s"$CompactPrefix${l + 1}-$newVersion-$seq-$commitId").toString
-        seq += 1
-        // rewriting under the unified schema also MATERIALIZES evolution:
-        // the merged dir physically carries every column, nulls filled
-        readEntries(spark, group, deletes0, schemaJson).write.mode("overwrite").parquet(target)
-        val (mergedRows, stats) = statsOf(spark, target)
-        entries = rest :+ Entry(target, newVersion, stats.map(_._1), stats.map(_._2), Some(mergedRows))
-      }
-    }
-    val deletes = deletes0.filter(d => entries.exists(_.seq < d.seq))
-    (entries, deletes)
+    val entries = merge(s.entries, 0)
+    s.copy(entries = entries, deletes = s.deletes.filter(d => entries.exists(_.seq < d.seq)))
   }
 
-  /** Publish the manifest for `newVersion` iff nobody else has: the CAS
+  /** Publish the manifest for `s.version` iff nobody else has: the CAS
     * primitive of the optimistic-concurrency loop. `Files.createLink`
     * (hard link) is the POSIX atomic create-if-absent — unlike
     * `ATOMIC_MOVE`, which REPLACES an existing target and was exactly the
@@ -881,29 +834,14 @@ final class SnapshotTable(
     * Returns false when the version already exists (a concurrent writer
     * won); the caller re-derives against the winner and retries.
     */
-  private def tryCommit(
-      newVersion: Int, entries: Vector[Entry], deletes: Vector[Del],
-      totalRows: Long, commitIds: Vector[String],
-      schemaJson: Option[String]): Boolean = {
+  private def tryCommit(s: Snapshot): Boolean = {
     Files.createDirectories(snapDir)
-    val entryLines = entries.map { e =>
-      val rowsSuffix = e.rows.map(r => s"\t$r").getOrElse("")
-      (e.statMin, e.statMax) match {
-        case (Some(mn), Some(mx)) => s"${e.dir}\t${e.seq}\t${b64(mn)}\t${b64(mx)}$rowsSuffix"
-        case _ => s"${e.dir}\t${e.seq}$rowsSuffix"
-      }
-    }
-    val delLines = deletes.map(d => s"D\t${d.dir}\t${d.seq}")
-    val body =
-      (Vector(newVersion.toString, totalRows.toString, IdsMarker + commitIds.mkString(",")) ++
-        schemaJson.map(j => SchemaMarker + b64(j)).toVector ++
-        entryLines ++ delLines).mkString("\n")
     // tmp name carries the last commit id (writer-unique), so two racers'
     // tmp files never collide either
-    val tmp = snapDir.resolve(s".tmp-$newVersion-${commitIds.lastOption.getOrElse("0")}")
-    Files.write(tmp, body.getBytes(UTF_8))
+    val tmp = snapDir.resolve(s".tmp-${s.version}-${s.commitIds.lastOption.getOrElse("0")}")
+    Files.write(tmp, render(s).getBytes(UTF_8))
     try {
-      Files.createLink(manifestPath(newVersion), tmp)
+      Files.createLink(manifestPath(s.version), tmp)
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false

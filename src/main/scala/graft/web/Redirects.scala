@@ -44,10 +44,13 @@ object Redirects {
     // distinct targets, and a conflicting src raises LOUDLY (raise_error)
     // when the plan first executes — same "a url redirects to ONE place"
     // contract, one fewer Spark job in the trace (the failure now
-    // surfaces at first action rather than at resolve() call time)
+    // surfaces at first action rather than at resolve() call time). A NULL
+    // dst counts as one more distinct target: count_distinct skips NULLs,
+    // so edges to both NULL and 'x' would otherwise resolve silently to 'x'
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .groupBy("src")
-      .agg(count_distinct(col("dst")).as("_n"), max(col("dst")).as("dst"))
+      .agg((count_distinct(col("dst")) + max(when(col("dst").isNull, 1L).otherwise(0L))).as("_n"),
+        max(col("dst")).as("dst"))
       .select(col("src"),
         when(col("_n") > 1, raise_error(concat(
             lit("conflicting redirect edges — a url redirects to one " +

@@ -8,6 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class SimilaritySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
+  /** Exact top-k the approximations are scored against: under quantized
+    * cosine (LSH, IVF) or the quantized dot (PQ ADC and its composites).
+    */
+  private def exactCos(e: DataFrame, q: DataFrame, k: Int): DataFrame =
+    Similarity.bruteForceTopK(e, q, k, Similarity.cosineQ(e))
+  private def exactDot(e: DataFrame, q: DataFrame, k: Int): DataFrame =
+    Similarity.bruteForceTopK(e, q, k)
+
   private def vecs(rows: (Long, Seq[Float])*): DataFrame = {
     import spark.implicits._
     rows.toDF("vec_id", "embedding")
@@ -111,8 +119,10 @@ class SimilaritySpec extends AnyFunSuite {
     // not the typical-corpus figure (at cosine ≥ 0.9 the same config
     // measures ≈ 1.0: see the duplicate-vector test above).
     val planes = Similarity.planesFor(e.count())
-    val recallFull = Similarity.annRecallAtK(e, q, 5, numPlanes = planes, probeHamming = 2, numTables = 4)
-    val recallOneTable = Similarity.annRecallAtK(e, q, 5, numPlanes = planes, probeHamming = 2, numTables = 1)
+    val recallFull = Similarity.recallAtK(exactCos(e, q, 5),
+      Similarity.annTopK(e, q, 5, numPlanes = planes, probeHamming = 2, numTables = 4))
+    val recallOneTable = Similarity.recallAtK(exactCos(e, q, 5),
+      Similarity.annTopK(e, q, 5, numPlanes = planes, probeHamming = 2, numTables = 1))
     info(s"recall@5 (planes=$planes): 4tables+probe2=$recallFull 1table+probe2=$recallOneTable")
     assert(recallFull >= recallOneTable) // extra tables never hurt
     assert(recallFull >= 0.5, s"recall@5 with 4 tables + probe 2 was $recallFull")
@@ -124,7 +134,8 @@ class SimilaritySpec extends AnyFunSuite {
     val e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     val q = e.filter(col("vec_id") < 10)
     val planes = Similarity.planesFor(e.count())
-    val recall = Similarity.annRecallAtK(e, q, 5, numPlanes = planes, probeHamming = 2, numTables = 4)
+    val recall = Similarity.recallAtK(exactCos(e, q, 5),
+      Similarity.annTopK(e, q, 5, numPlanes = planes, probeHamming = 2, numTables = 4))
     info(s"recall@5 at sf0.1 (planes=$planes): $recall")
     assert(recall >= 0.5, s"recall@5 at sf0.1 with the gated config was $recall")
   }
@@ -200,13 +211,14 @@ class SimilaritySpec extends AnyFunSuite {
       val e = spark.read.parquet(s"/root/testdata/$sf/embeddings.parquet")
       val q = e.filter(col("vec_id") < 10)
       val cells = Similarity.cellsFor(e.count())
-      val recall = Similarity.ivfRecallAtK(e, q, 5, numCells = cells, nProbe = 4)
+      val recall = Similarity.recallAtK(exactCos(e, q, 5),
+        Similarity.ivfTopK(e, q, 5, numCells = cells, nProbe = 4))
       info(s"IVF recall@5 at $sf (cells=$cells): $recall")
       assert(recall >= 0.6, s"IVF recall@5 at $sf (cells=$cells) was $recall")
       // one Lloyd round (the gated s_ivf_topk config) must hold the same
       // floor — refinement tightens cells, it must never wreck them
-      val refined = Similarity.ivfRecallAtK(e, q, 5, numCells = cells, nProbe = 4,
-        lloydRounds = 1)
+      val refined = Similarity.recallAtK(exactCos(e, q, 5),
+        Similarity.ivfTopK(e, q, 5, numCells = cells, nProbe = 4, lloydRounds = 1))
       info(s"IVF recall@5 at $sf with 1 Lloyd round: $refined")
       assert(refined >= 0.6, s"refined IVF recall@5 at $sf was $refined")
     }
@@ -251,9 +263,9 @@ class SimilaritySpec extends AnyFunSuite {
     // one that holds recall
     for ((m, ks) <- Seq((8, 16), (16, 16))) {
       info(s"PQ recall@5 at sf0.01 (m=$m, ks=$ks): " +
-        Similarity.pqRecallAtK(e, q, 5, m = m, ks = ks))
+        Similarity.recallAtK(exactDot(e, q, 5), Similarity.pqTopK(e, q, 5, m = m, ks = ks)))
     }
-    val gated = Similarity.pqRecallAtK(e, q, 5, m = 16, ks = 64)
+    val gated = Similarity.recallAtK(exactDot(e, q, 5), Similarity.pqTopK(e, q, 5, m = 16, ks = 64))
     info(s"PQ recall@5 at sf0.01 (m=16, ks=64, the gated config): $gated")
     assert(gated >= 0.5, s"gated PQ recall@5 was $gated")
   }
@@ -333,14 +345,15 @@ class SimilaritySpec extends AnyFunSuite {
     // centroid at cos ≈ 0.3-0.4 ⇒ residual norm exceeds vector norm):
     // measured 0.34 residual vs 0.38 raw at the gated knobs — recorded
     // as info, floored against collapse, NOT claimed as a residual win
-    val res = Similarity.ivfPqRecallAtK(e, q, 5, cells, 4, 16, 64, residual = true)
-    val raw = Similarity.ivfPqRecallAtK(e, q, 5, cells, 4, 16, 64, residual = false)
+    val exact = exactDot(e, q, 5)
+    val res = Similarity.recallAtK(exact, Similarity.ivfPqTopK(e, q, 5, cells, 4, 16, 64, residual = true))
+    val raw = Similarity.recallAtK(exact, Similarity.ivfPqTopK(e, q, 5, cells, 4, 16, 64, residual = false))
     info(s"sf0.1 IVF-PQ recall@5 (cells=$cells, nProbe=4, m=16, ks=64): residual=$res raw=$raw")
     assert(res >= 0.25 && raw >= 0.25, s"composite recall collapsed: res=$res raw=$raw")
     // the production-recall path (gated s_ivfpq_rerank): ADC shortlist
     // of 50 at nProbe=8 + exact integer rerank — measured 0.98
-    val rr = Similarity.ivfPqRerankRecallAtK(e, q, 5, cells, 8, 16, 64,
-      shortlist = 50)
+    val rr = Similarity.recallAtK(exact, Similarity.ivfPqRerankTopK(e, q, 5, cells, 8, 16, 64,
+      shortlist = 50))
     info(s"sf0.1 IVF-PQ rerank recall@5 (nProbe=8, shortlist=50): $rr")
     assert(rr >= 0.9, s"refine stage must hold >= 0.9, got $rr")
   }

@@ -92,33 +92,6 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(got == Set(("u1", "en", 2), ("u1", "de", 1)))
   }
 
-  test("first-generation manifest (bare data dirs from line 3) reads every commit") {
-    // Format upgrade path: tables committed before the ids/seq/stats manifest
-    // existed carry (version \n rowCount \n dir per line). The parser must
-    // treat line 3 as the FIRST DATA DIR, not commit-id history — consuming
-    // it as ids silently dropped that dir's rows.
-    val root = tmp()
-    val d1 = s"$root/data/c1"
-    val d2 = s"$root/data/c2"
-    Seq(("u1", 1)).toDF("url", "gen").write.parquet(d1)
-    Seq(("u2", 2)).toDF("url", "gen").write.parquet(d2)
-    val snapDir = java.nio.file.Paths.get(root, "_snapshots")
-    Files.createDirectories(snapDir)
-    Files.write(snapDir.resolve("v00000001.manifest"),
-      s"1\n2\n$d1\n$d2".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val t = new SnapshotTable(root)
-    assert(rows(t) == Map("u1" -> 1, "u2" -> 2))
-    // a single-commit legacy table must not read as empty
-    val root2 = tmp()
-    val d = s"$root2/data/only"
-    Seq(("u9", 9)).toDF("url", "gen").write.parquet(d)
-    val sd2 = java.nio.file.Paths.get(root2, "_snapshots")
-    Files.createDirectories(sd2)
-    Files.write(sd2.resolve("v00000001.manifest"),
-      s"1\n1\n$d".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    assert(rows(new SnapshotTable(root2)) == Map("u9" -> 9))
-  }
-
   test("deleteKeys: takedown commit hides rows without rewriting data") {
     val t = new SnapshotTable(tmp())
     t.append(Seq(("u1", 1), ("u2", 1)).toDF("url", "gen"), "c1")
@@ -389,14 +362,20 @@ class SnapshotTableSpec extends AnyFunSuite {
     // an existing target — two appenders deriving the same version meant
     // the second rename silently clobbered the first manifest (a durably
     // lost commit). The CAS publish (hard-link create-if-absent) + the
-    // re-derive-and-retry loop must make every commit land exactly once.
+    // re-derive-and-retry loop must make every commit land exactly once —
+    // appends and delete-only commits alike, since both ride one loop.
     val t = new SnapshotTable(tmp(), compactFanIn = 4) // low fan-in: compactions race too
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    // each writer: 9 appends with a takedown of its first url mid-stream
+    def commitIds(w: Int): Seq[String] =
+      (0 until 5).map(i => s"w$w-c$i") ++ Seq(s"w$w-d") ++ (5 until 9).map(i => s"w$w-c$i")
     val threads = (0 until 2).map { w =>
       new Thread(() => {
         try {
-          for (i <- 0 until 10)
-            t.append(Seq((s"w$w-c$i", w * 100 + i)).toDF("url", "gen"), s"w$w-c$i")
+          commitIds(w).zipWithIndex.foreach { case (id, i) =>
+            if (id.endsWith("-d")) t.deleteKeys(Seq(s"w$w-c0").toDF("url"), id)
+            else t.append(Seq((id, w * 100 + i)).toDF("url", "gen"), id)
+          }
         } catch { case e: Throwable => errs.add(e) }
       })
     }
@@ -406,11 +385,13 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.versions() == (1 to 20).toVector, s"versions: ${t.versions()}")
     // every commit visible in the history AND every row readable
     val latest = t.latest().get
-    val expectedIds = (for (w <- 0 until 2; i <- 0 until 10) yield s"w$w-c$i").toSet
-    assert(latest.commitIds.toSet == expectedIds, "all 20 commit ids recorded")
+    assert(latest.commitIds.toSet == (commitIds(0) ++ commitIds(1)).toSet, "all 20 commit ids recorded")
     assert(latest.commitIds.size == 20, "no duplicate commit ids")
-    assert(rows(t).size == 20, "all 20 rows live")
-    assert(t.fastCount.contains(20L), "metadata row count exact after racing compactions")
+    val live = (0 until 2).flatMap(w => commitIds(w).filterNot(id => id.endsWith("-d") || id.endsWith("-c0")))
+    assert(rows(t).keySet == live.toSet, "all 16 surviving rows live, both takedowns applied")
+    // exact after racing compactions; None only while a takedown is unapplied
+    assert(t.fastCount == (if (latest.deletes.isEmpty) Some(16L) else None),
+      s"metadata row count after racing compactions: ${t.fastCount}, deletes ${latest.deletes}")
     // commit-id order embeds version order: each manifest's id list is a
     // strict prefix of its successor's (linear history, no forks)
     val histories = t.versions().map(v => t.snapshotAt(v).get.commitIds)
@@ -448,18 +429,35 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.vacuumOrphans(graceMs = 0L) == ((0, 0)))
   }
 
-  test("legacy manifest without a schema line still reads and can evolve") {
+  test("manifest codec: render(parse(m)) is byte-identical for every manifest the writer emits") {
+    val root = tmp()
+    val t = new SnapshotTable(root, compactFanIn = 3, statsCol = Some("url"))
+    t.deleteKeys(Seq("u0").toDF("url"), "d0") // delete-only on an empty table: no schema line
+    t.append(Seq(("u1", 1), ("u2", 1)).toDF("url", "gen"), "c1")
+    t.append(Seq((7, 2)).toDF("other", "gen"), "c2") // no stats column: statless entry
+    t.upsert(Seq(("u1", 3)).toDF("url", "gen"), "c3", Seq("url")) // tips fanIn=3: compaction
+    t.deleteKeys(Seq("u2").toDF("url"), "d1")
+    t.append(Seq(("u4", 4)).toDF("url", "gen"), "c4")
+    t.rollbackTo(3, "rb")
+    val manifests = t.versions().map(v =>
+      new String(Files.readAllBytes(java.nio.file.Paths.get(root, "_snapshots", f"v$v%08d.manifest")), "UTF-8"))
+    manifests.foreach(m => assert(t.render(t.parseManifest(m)) == m, s"round trip changed:\n$m"))
+    // every layout the writer emits is covered
+    val lines = manifests.flatMap(_.split("\n").drop(3)).map(_.split("\t", -1))
+    assert(manifests.exists(!_.contains("\nschema:")), "a schema-less manifest")
+    assert(lines.exists(f => f.length == 5) && lines.exists(f => f.length == 3 && f(0) != "D") &&
+      lines.exists(_(0) == "D"), "stats, statless and delete lines")
+    assert(manifests.exists(_.contains("compacted-")), "a compacted entry")
+  }
+
+  test("a malformed manifest line fails loudly, naming the file") {
     val root = tmp()
     val t = new SnapshotTable(root)
     t.append(Seq(("u1", 1)).toDF("url", "gen"), "c1")
-    // strip the schema line, simulating a manifest from before evolution
     val p = java.nio.file.Paths.get(root, "_snapshots", "v00000001.manifest")
-    val kept = Files.readAllLines(p).asScala.filterNot(_.startsWith("schema:"))
-    Files.write(p, kept.mkString("\n").getBytes("UTF-8"))
-    assert(rows(t) == Map("u1" -> 1), "legacy read must fall back to footers")
-    t.append(Seq(("u2", 2, "en")).toDF("url", "gen", "lang"), "c2")
-    val got = t.read(spark).get.select("url", "gen", "lang")
-      .as[(String, Int, Option[String])].collect().toSet
-    assert(got == Set(("u1", 1, None), ("u2", 2, Some("en"))))
+    Files.write(p, (new String(Files.readAllBytes(p), "UTF-8") + "\nnot-an-entry").getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](t.latest())
+    assert(e.getMessage.contains("v00000001.manifest") && e.getMessage.contains("not-an-entry"),
+      e.getMessage)
   }
 }

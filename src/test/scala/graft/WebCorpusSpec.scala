@@ -1045,6 +1045,18 @@ class WebCorpusSpec extends AnyFunSuite {
     assert(gd("a") == (("c", 2L, true)), s"got $gd")
   }
 
+  test("redirects: a NULL dst is a distinct target, so NULL plus 'x' is a conflict") {
+    import spark.implicits._
+    val nullAndX = Seq(("a", null: String), ("a", "x")).toDF("src", "dst")
+    val ex = intercept[Exception] {
+      graft.web.Redirects.resolve(nullAndX, "src", "dst").collect()
+    }
+    assert(ex.getMessage.contains("conflicting redirect"))
+    // a lone NULL edge is one target, not a conflict
+    val onlyNull = Seq(("a", null: String), ("b", "c")).toDF("src", "dst")
+    assert(graft.web.Redirects.resolve(onlyNull, "src", "dst").count() == 2L)
+  }
+
   test("url features: depth counts non-empty segments, params split on &, fragment/query never leak into depth") {
     import spark.implicits._
     def f(u: String): (Long, Long) = {
