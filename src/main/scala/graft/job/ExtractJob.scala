@@ -3,8 +3,11 @@ package graft.job
 import graft.extract.SpanExtractor
 import graft.model._
 import graft.table.SnapshotTable
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.AccumulatorV2
 
 /** The batch extraction job — the reference's `/extract/batch` endpoint
   * (`/root/reference/src/main.py:473-627`) re-expressed as ONE Dataset
@@ -22,9 +25,12 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *  3. the kernel runs in `mapPartitions` — embarrassingly parallel, one
   *     document in flight per task at a time (streaming iterator, no
   *     materialized partition lists → bounded memory at any document size).
-  *  4. results + per-partition lineage/metrics are appended and published by
-  *     ONE atomic snapshot commit — a killed run resumes from the last
-  *     committed snapshot without reprocessing (north_rule).
+  *  4. results, then per-partition lineage/metrics, are published as TWO
+  *     atomic snapshot commits under one commit id, one per table — a
+  *     killed run resumes from the last committed results snapshot without
+  *     reprocessing (north_rule), and a kill between the two publishes is
+  *     repaired before the next run or epoch processes anything
+  *     ([[backfillMetrics]]).
   */
 object ExtractJob {
 
@@ -141,10 +147,11 @@ object ExtractJob {
     * handful of heavy partitions; tasks launch in partition order, so
     * heavy-first (longest-processing-time-first) overlaps the giant
     * partitions with the small-row waves instead of leaving them as a
-    * constant straggler TAIL. Measured on the bench corpus: the tail cost
-    * ~7-8 s wall at ANY core count (17 % of an 8-core run, 45 % of a
-    * 32-core run) — giants-last was the single largest scaling-efficiency
-    * loss.
+    * constant straggler TAIL. The ~7-8 s tail once measured for giants-last
+    * (17 % of an 8-core run, 45 % of a 32-core run) came from Bench's
+    * `PagesGen` pre-partitioning with its own `doc_id % 97` giant class,
+    * not from this partitioner: the 1 MiB size class never fires on the
+    * synthetic corpus, whose giants are ~25× a normal doc, far below it.
     */
   def partitionForExtraction(pages: Dataset[PageRow], numPartitions: Int): Dataset[PageRow] = {
     import pages.sparkSession.implicits._
@@ -166,6 +173,43 @@ object ExtractJob {
       pages: Dataset[PageRow],
       rules: Seq[FieldRule],
       commitId: String
+  ): Dataset[ExtractResult] = stamped(pages, rules, commitId, None)
+
+  /** A committed metrics row: one extraction task's lineage totals. */
+  final case class MetricsRow(commit_id: String, partition_id: Int, rows_in: Long,
+                              rows_ok: Long, rows_error: Long, bytes_in: Long,
+                              kernel_us: Long, min_url: String, max_url: String)
+
+  /** Driver-side lineage of one kernel pass, keyed by partition id. A merge
+    * REPLACES the entry for its key, so a re-run task (stage retry,
+    * speculation) cannot double-count.
+    */
+  private final class LineageAccumulator extends AccumulatorV2[MetricsRow, Map[Int, MetricsRow]] {
+    private var byPartition = Map.empty[Int, MetricsRow]
+    override def isZero: Boolean = byPartition.isEmpty
+    override def copy(): LineageAccumulator = {
+      val a = new LineageAccumulator
+      a.byPartition = byPartition
+      a
+    }
+    override def reset(): Unit = byPartition = Map.empty
+    override def add(m: MetricsRow): Unit = byPartition += m.partition_id -> m
+    override def merge(other: AccumulatorV2[MetricsRow, Map[Int, MetricsRow]]): Unit =
+      byPartition ++= other.value
+    override def value: Map[Int, MetricsRow] = byPartition
+  }
+
+  /** [[extractAll]]'s pass; with `lineage`, each non-empty task also adds
+    * its metrics row to it (kernel time summed in ns before the µs
+    * conversion, min/max url in UTF-8 byte order — both exactly as
+    * [[commitMetrics]] computes them), so a commit learns its metrics from
+    * the pass that writes the results.
+    */
+  private def stamped(
+      pages: Dataset[PageRow],
+      rules: Seq[FieldRule],
+      commitId: String,
+      lineage: Option[LineageAccumulator]
   ): Dataset[ExtractResult] = {
     val spark = pages.sparkSession
     import spark.implicits._
@@ -174,12 +218,29 @@ object ExtractJob {
 
     pages.mapPartitions { it =>
       val rs = rulesB.value
-      val pid = org.apache.spark.TaskContext.getPartitionId()
+      val pid = TaskContext.getPartitionId()
+      var rows, ok, error, bytesIn, kernelNs = 0L
+      var minUrl, maxUrl: UTF8String = null
+      for (acc <- lineage) TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+        if (rows > 0) acc.add(MetricsRow(commitId, pid, rows, ok, error, bytesIn,
+          (kernelNs.toDouble / 1000).toLong, Option(minUrl).map(_.toString).orNull,
+          Option(maxUrl).map(_.toString).orNull))
+      }
       it.map { row =>
         val bytes = if (row.html == null) 0L else row.html.length.toLong
         val t0 = System.nanoTime()
         val r = ExtractKernel.extract(row, rs, schemaHashHex)
-        r.copy(partition_id = pid, bytes_in = bytes, kernel_ns = System.nanoTime() - t0)
+        val out = r.copy(partition_id = pid, bytes_in = bytes, kernel_ns = System.nanoTime() - t0)
+        rows += 1
+        if (out.status == "ok") ok += 1 else if (out.status == "error") error += 1
+        bytesIn += bytes
+        kernelNs += out.kernel_ns
+        if (lineage.isDefined && out.url != null) {
+          val u = UTF8String.fromString(out.url)
+          if (minUrl == null || u.compareTo(minUrl) < 0) minUrl = u
+          if (maxUrl == null || u.compareTo(maxUrl) > 0) maxUrl = u
+        }
+        out
       }
     }
   }
@@ -187,9 +248,11 @@ object ExtractJob {
   /** Derive + commit the per-partition metrics increment from the COMMITTED
     * results increment's per-row lineage columns: real task partition ids,
     * real payload bytes, real kernel time — consistent with the data by
-    * construction (same rows, same single kernel pass) and cheap (groupBy
-    * over a handful of slim columns; parquet column pruning keeps
-    * `extracted_text` out of the scan).
+    * construction (same rows, same single kernel pass). [[commit]] gathers
+    * the same rows while it writes the results instead; this derivation
+    * stays as [[backfillMetrics]]' repair and as the oracle those rows
+    * must equal (a groupBy over a handful of slim columns; parquet column
+    * pruning keeps `extracted_text` out of the scan).
     */
   def commitMetrics(spark: SparkSession, tableRoot: String, commitId: String): Unit = {
     import spark.implicits._
@@ -210,18 +273,42 @@ object ExtractJob {
   }
 
   /** The commit step batch runs and streaming epochs share: kernel →
-    * results commit → metrics commit (derived from the committed
-    * increment's per-row lineage columns — one kernel pass total,
-    * [[extractAll]] stamped them on the result rows). Returns the results
-    * version.
+    * results commit → metrics commit. The metrics rows come from the
+    * kernel pass itself (each task's totals, gathered while the results
+    * are written — one kernel pass, no read-back of the results) and are
+    * written as one file; they equal what [[commitMetrics]] derives from
+    * the committed rows. Returns the results version and the increment's
+    * totals.
     */
-  def commit(todo: Dataset[PageRow], tableRoot: String, rules: Seq[FieldRule], commitId: String): Int = {
-    val version = resultsTable(tableRoot).append(extractAll(todo, rules, commitId).toDF(), commitId)
-    commitMetrics(todo.sparkSession, tableRoot, commitId)
-    version
+  def commit(todo: Dataset[PageRow], tableRoot: String, rules: Seq[FieldRule], commitId: String): JobStats = {
+    val spark = todo.sparkSession
+    import spark.implicits._
+    val lineage = new LineageAccumulator
+    spark.sparkContext.register(lineage)
+    val version = resultsTable(tableRoot).append(stamped(todo, rules, commitId, Some(lineage)).toDF(), commitId)
+    val rows = lineage.value.values.toVector.sortBy(_.partition_id)
+    metricsTable(tableRoot).append(rows.toDF().coalesce(1), commitId)
+    JobStats(version, rows.map(_.rows_in).sum, rows.map(_.rows_ok).sum, rows.map(_.rows_error).sum)
   }
 
-  /** Full resumable run: anti-join → partition → kernel → atomic commit.
+  /** Repair the lineage hole: a kill between the results publish and the
+    * metrics publish leaves a results commit without metrics, which
+    * neither a rerun (its rows anti-join away) nor a replayed epoch
+    * (skipped by `hasCommit`) would ever write. Derives, via
+    * [[commitMetrics]], every published results commit that appended a
+    * data dir but has no metrics commit. When nothing is missing this
+    * reads the two latest manifests and runs no Spark job.
+    */
+  private[graft] def backfillMetrics(spark: SparkSession, tableRoot: String): Unit = {
+    val rt = resultsTable(tableRoot)
+    for (r <- rt.latest()) {
+      val done = metricsTable(tableRoot).latest().fold(Set.empty[String])(_.commitIds.toSet)
+      r.commitIds.filterNot(done).filter(rt.appended).foreach(commitMetrics(spark, tableRoot, _))
+    }
+  }
+
+  /** Full resumable run: lineage backfill → anti-join → partition → kernel
+    * → results and metrics commits.
     * Returns stats of THIS run's increment (0 rows if everything was already
     * committed — the no-reprocessing guarantee).
     */
@@ -234,21 +321,13 @@ object ExtractJob {
       commitId: String = s"c${System.currentTimeMillis()}",
       alreadyPartitioned: Boolean = false
   ): JobStats = {
-    import spark.implicits._
     val parts = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
+    backfillMetrics(spark, tableRoot)
     val pend = pending(spark, pages, tableRoot)
     // skip the payload shuffle when the source was pre-partitioned on the
     // same key upstream of the binary column (PagesGen.pages(_, _, parts))
     // and the resume filter preserved it (broadcast anti-join / bloom pass)
     val todo = if (alreadyPartitioned) pend else partitionForExtraction(pend, parts)
-    val version = commit(todo, tableRoot, rules, commitId)
-
-    // job stats roll up from the committed METRICS increment (a handful of
-    // rows) — the wide results increment is never re-read
-    val agg = metricsTable(tableRoot).readCommit(spark, commitId)
-      .agg(sum($"rows_in"), sum($"rows_ok"), sum($"rows_error"))
-      .collect()(0)
-    def l(i: Int): Long = Option(agg.get(i)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    JobStats(version, l(0), l(1), l(2))
+    commit(todo, tableRoot, rules, commitId)
   }
 }

@@ -163,10 +163,13 @@ object MediaKernel {
 
   /** REAL pixel resize for decodable PNG/JPEG payloads: bilinear
     * `Graphics2D` scale to the [[resizeDims]] target, re-encoded as PNG.
-    * Returns None for payloads the JDK cannot decode (those keep the
-    * dims-only metadata path). Row-local, bounded by the decoded image —
-    * the mapPartitions consumer stays a streaming one-row-in-flight
-    * kernel.
+    * The output keeps the source's kind of pixel — alpha stays ARGB, one
+    * grey component stays grey, anything else is RGB — so [[decodeMeta]]
+    * reports the same channel count for the resized payload as for the
+    * source (grey + alpha, the one exception, comes out ARGB). Returns None
+    * for payloads the JDK cannot decode (those keep the dims-only metadata
+    * path). Row-local, bounded by the decoded image — the mapPartitions
+    * consumer stays a streaming one-row-in-flight kernel.
     */
   def resizePixels(bytes: Array[Byte], maxSide: Int = 256): Option[(Array[Byte], Int, Int)] =
     sniffImageFormat(if (bytes == null) Array.emptyByteArray else bytes).flatMap { _ =>
@@ -177,8 +180,13 @@ object MediaKernel {
         if (tw == img.getWidth && th == img.getHeight) {
           (bytes, img.getWidth, img.getHeight) // already within bounds: no-op
         } else {
-          val out = new java.awt.image.BufferedImage(
-            tw.toInt, th.toInt, java.awt.image.BufferedImage.TYPE_INT_RGB)
+          import java.awt.image.BufferedImage
+          val cm = img.getColorModel
+          val kind =
+            if (cm.hasAlpha) BufferedImage.TYPE_INT_ARGB
+            else if (cm.getNumComponents == 1) BufferedImage.TYPE_BYTE_GRAY
+            else BufferedImage.TYPE_INT_RGB
+          val out = new BufferedImage(tw.toInt, th.toInt, kind)
           val g = out.createGraphics()
           try {
             g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,

@@ -158,7 +158,10 @@ object StreamingExtract {
         // Per-url exactly-once ACROSS batches too: a re-crawled url that
         // arrives in a later micro-batch anti-joins against the committed
         // snapshot exactly like the batch job's resume path, and the epoch
-        // commits results + metrics through the batch job's own step
+        // commits results + metrics through the batch job's own step. The
+        // backfill comes first: a replay of an epoch killed between its two
+        // publishes is skipped here, so its metrics are derived now
+        ExtractJob.backfillMetrics(session, tableRoot)
         if (!ExtractJob.resultsTable(tableRoot).hasCommit(commitId))
           ExtractJob.commit(ExtractJob.pending(session, batch, tableRoot), tableRoot, rules, commitId)
         ()

@@ -4,10 +4,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.util.Base64
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 import scala.annotation.tailrec
@@ -228,6 +227,12 @@ final class SnapshotTable(
     */
   def hasCommit(commitId: String): Boolean =
     latest().exists(_.commitIds.contains(commitId))
+
+  /** Did commit `commitId` write a data dir that is still on disk? True
+    * for appends and upserts (empty ones included); false for delete-only
+    * and rollback commits, and once [[expireBefore]] removed the dir.
+    */
+  def appended(commitId: String): Boolean = Files.isDirectory(dataDir.resolve(commitId))
 
   /** Merge-on-read: live rows of `entries` under `s`'s deletes. A row from
     * an entry with sequence q is dropped iff a delete with sequence > q
@@ -513,11 +518,15 @@ final class SnapshotTable(
     doomed.size
   }
 
-  /** One pass over a freshly written dir: its entry at sequence `seq` (row
-    * count plus min/max of `statsCol` when it is a string column with at
-    * least one non-null value) and its written schema. (Numeric columns
-    * are deliberately not stat-tracked — the manifest stores strings and
-    * string order would mis-prune numbers.)
+  /** Write `df` into `dir` and return its entry at sequence `seq` plus its
+    * written schema, both gathered by the write itself: the write observes
+    * the row count and the min/max of `statsCol` (when it is a string
+    * column of `df`; numeric columns are deliberately not stat-tracked —
+    * the manifest stores strings and string order would mis-prune
+    * numbers), and the schema is `df`'s with every level made nullable,
+    * which is what a footer read of the dir returns. Spark's min()/max()
+    * compare in UTF8String binary order, which is what pruneRange's
+    * string comparisons assume for ASCII-clustered keys.
     *
     * When stats are recorded, a BLOOM SIDECAR is also written into the dir
     * (`_graft.bloom` — underscore-prefixed, so every parquet listing
@@ -526,52 +535,38 @@ final class SnapshotTable(
     * the case min/max pruning cannot help with when writers don't cluster
     * by the lookup column (Iceberg stores the same sketches in puffin
     * sidecars, never the manifest, and so does this: the manifest stays
-    * slim). Capacity is capped at [[BloomCapItems]] — past it fpp degrades
-    * instead of the sidecar growing unbounded, same discipline as the
-    * resume bloom's numBits cap.
+    * slim). It is filled by one scan of the written stats column, sized by
+    * the observed count and capped at [[BloomCapItems]] — past it fpp
+    * degrades instead of the sidecar growing unbounded, same discipline as
+    * the resume bloom's numBits cap.
     */
-  private def entryOf(spark: SparkSession, dir: String, seq: Int): (Entry, StructType) = {
-    val df = spark.read.parquet(dir)
-    val (rows, stats) = statsCol.filter(c =>
-      df.schema.fields.exists(f => f.name == c && f.dataType == StringType)) match {
-      case None => (df.count(), None)
-      case Some(c) =>
-        // row count first — parquet count pushdown answers it from footer
-        // metadata, no column scan — then ONE scan of the stats column
-        // computes min/max AND fills the bloom together (previously two
-        // scans: the agg pass plus df.stat.bloomFilter's own pass). The
-        // min/max comparison is UTF8String binary order, matching what
-        // Spark's min()/max() recorded before, and what pruneRange's
-        // string comparisons assume for ASCII-clustered keys.
-        val total = df.count()
-        val expected = math.min(math.max(total, 1L), BloomCapItems)
-        val zero: (UTF8String, UTF8String, BloomFilter) =
-          (null, null, BloomFilter.create(expected, BloomFpp))
-        val (mn, mx, bloom) = df.select(col(c)).queryExecution.toRdd
-          .treeAggregate(zero)(
-            seqOp = { case ((mn0, mx0, bf), row) =>
-              if (row.isNullAt(0)) (mn0, mx0, bf)
-              else {
-                val s = row.getUTF8String(0).clone() // unsafe rows are reused buffers
-                bf.putString(s.toString)
-                ((if (mn0 == null || s.compareTo(mn0) < 0) s else mn0),
-                  (if (mx0 == null || s.compareTo(mx0) > 0) s else mx0), bf)
-              }
-            },
-            combOp = { case ((mn1, mx1, b1), (mn2, mx2, b2)) =>
-              b1.mergeInPlace(b2)
-              ((if (mn1 == null) mn2 else if (mn2 == null || mn1.compareTo(mn2) <= 0) mn1 else mn2),
-                (if (mx1 == null) mx2 else if (mx2 == null || mx1.compareTo(mx2) >= 0) mx1 else mx2),
-                b1)
-            })
-        val stats = if (mn == null) None else Some((mn.toString, mx.toString))
-        if (stats.isDefined) {
-          val out = Files.newOutputStream(Paths.get(dir, BloomSidecar))
-          try bloom.writeTo(out) finally out.close()
-        }
-        (total, stats)
+  private def writeDir(df: DataFrame, dir: String, seq: Int): (Entry, StructType) = {
+    val statCol = statsCol.filter(c => df.schema.fields.exists(f => f.name == c && f.dataType == StringType))
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("rows"),
+        statCol.toSeq.flatMap(c => Seq(min(col(c)).as("min"), max(col(c)).as("max"))): _*)
+      .write.mode("overwrite").parquet(dir)
+    val r = obs.get
+    val rows = r("rows").asInstanceOf[Long]
+    val stats = r.get("min").collect { case mn: String => (mn, r("max").asInstanceOf[String]) }
+    val schema = nullable(df.schema).asInstanceOf[StructType]
+    for (c <- statCol if stats.isDefined) {
+      val bloom = df.sparkSession.read.schema(schema).parquet(dir)
+        .stat.bloomFilter(c, math.min(math.max(rows, 1L), BloomCapItems), BloomFpp)
+      val out = Files.newOutputStream(Paths.get(dir, BloomSidecar))
+      try bloom.writeTo(out) finally out.close()
     }
-    (Entry(dir, seq, stats.map(_._1), stats.map(_._2), rows), df.schema)
+    (Entry(dir, seq, stats.map(_._1), stats.map(_._2), rows), schema)
+  }
+
+  /** `t` with every field, array element and map value nullable — the
+    * schema Spark reports for a parquet dir it reads back.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** Name of the per-dir bloom sidecar ('_'-prefixed: hidden from scans). */
@@ -750,8 +745,7 @@ final class SnapshotTable(
     // the data dir is commit-private (keyed by commitId) and written ONCE;
     // only the snapshot derivation below re-runs when the CAS loses
     val outDir = dataDir.resolve(commitId).toString
-    df.write.mode("overwrite").parquet(outDir)
-    val (entry, written) = entryOf(spark, outDir, 0)
+    val (entry, written) = writeDir(df, outDir, 0)
     commitLoop(s"commit '$commitId'") { prev =>
       // re-derived per attempt against the winner's snapshot — including
       // re-merging the schema (a conflicting type change surfaces as
@@ -817,8 +811,7 @@ final class SnapshotTable(
           val target = dataDir.resolve(s"$CompactPrefix${l + 1}-${s.version}-$seq-$commitId").toString
           // rewriting under the unified schema also MATERIALIZES evolution:
           // the merged dir physically carries every column, nulls filled
-          readEntries(spark, s, group).write.mode("overwrite").parquet(target)
-          merge(rest :+ entryOf(spark, target, s.version)._1, seq + 1)
+          merge(rest :+ writeDir(readEntries(spark, s, group), target, s.version)._1, seq + 1)
       }
     val entries = merge(s.entries, 0)
     s.copy(entries = entries, deletes = s.deletes.filter(d => entries.exists(_.seq < d.seq)))

@@ -1,16 +1,76 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.job.{ExtractJob, ExtractKernel}
 import graft.model.PageRow
 import graft.pages.PagesGen
+import graft.streaming.StreamingExtract
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
+object ExtractJobSpec {
+  /** The metrics rows committed for `commitId` under `root`, by partition id. */
+  def metricsRows(spark: SparkSession, root: String, commitId: String): Vector[Seq[Any]] =
+    ExtractJob.metricsTable(root).readCommit(spark, commitId).collect()
+      .map(_.toSeq).toVector.sortBy(_(1).asInstanceOf[Int])
+
+  /** What [[ExtractJob.commitMetrics]] derives for `commitId` from the
+    * committed results of `root` — run on a copy of the results table, so
+    * `root` keeps only what the job itself wrote.
+    */
+  def derivedMetrics(spark: SparkSession, root: String, commitId: String): Vector[Seq[Any]] = {
+    val copy = Files.createTempDirectory("graft-lineage-oracle").toString
+    val src = Paths.get(root, "results")
+    val walk = Files.walk(src)
+    try walk.iterator().asScala.foreach { p =>
+      val to = Paths.get(copy, "results").resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    } finally walk.close()
+    ExtractJob.commitMetrics(spark, copy, commitId)
+    metricsRows(spark, copy, commitId)
+  }
+}
+
 class ExtractJobSpec extends AnyFunSuite {
+  import ExtractJobSpec._
   private lazy val spark = SparkTestBase.spark
   private val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs, other than the marker jobs that
+    * drain the listener bus before and after it.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "graft-job-count-marker"
+    val started = new AtomicInteger
+    @volatile var seen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker)) seen.countDown()
+        else started.incrementAndGet()
+    }
+    def drain(): Unit = {
+      seen = new CountDownLatch(1)
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain()
+      started.set(0)
+      body
+      drain()
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("end-to-end: pages → extraction → committed results, errors isolated") {
     import spark.implicits._
@@ -151,5 +211,73 @@ class ExtractJobSpec extends AnyFunSuite {
         .collect().sortBy(_._1).toVector
     }
     assert(runAt(1) == runAt(7))
+  }
+
+  test("lineage parity: commit writes, in one file, the metrics commitMetrics derives") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-lineage").toString
+    val base = PagesGen.pages(spark, sfDir).limit(60).collect().toVector
+    // U+FF21 sorts after U+1D11E in UTF-16 but before it in UTF-8 bytes;
+    // both urls sort after every synth.example url
+    val hi = "https://zz.example/\uD834\uDD1E"
+    val pages = (base.drop(2) ++ Vector(base(0).copy(url = "https://zz.example/\uFF21"),
+      base(1).copy(url = hi))).toDS()
+    val inv0 = ExtractKernel.invocations.sum()
+    val batch = ExtractJob.run(spark, pages, root, numPartitions = 1, commitId = "c1")
+    assert(ExtractKernel.invocations.sum() - inv0 == 60, "one kernel pass, nothing re-run")
+    // empty payloads only: every partition is all-error
+    val empties = (0 until 12).map(i =>
+      PageRow(s"https://empty.example/$i", base(0).warc_ts, Array.emptyByteArray, "", "en")).toDS()
+    val allError = ExtractJob.run(spark, empties, root, numPartitions = 3, commitId = "c2")
+    val rerun = ExtractJob.run(spark, pages, root, numPartitions = 3, commitId = "c3")
+    assert(rerun.rowsIn == 0)
+
+    for ((cid, stats) <- Seq("c1" -> batch, "c2" -> allError, "c3" -> rerun)) {
+      val written = metricsRows(spark, root, cid)
+      assert(written == derivedMetrics(spark, root, cid), s"$cid metrics")
+      def total(i: Int): Long = written.map(_(i).asInstanceOf[Long]).sum
+      assert(stats == ExtractJob.JobStats(stats.version, total(2), total(3), total(4)), cid)
+      val files = Files.list(Paths.get(root, "metrics", "data", cid))
+      try assert(files.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")) == 1, cid)
+      finally files.close()
+    }
+    val c1 = metricsRows(spark, root, "c1")
+    assert(c1.size == 1 && c1.head(2) == 60L && c1.head(8) == hi, s"UTF-8 byte order max: $c1")
+    val c2 = metricsRows(spark, root, "c2")
+    assert(c2.nonEmpty && c2.forall(r => r(3) == 0L && r(4) == r(2)), s"all-error partitions: $c2")
+    // the zero-pending rerun still publishes an empty metrics commit
+    val m = ExtractJob.metricsTable(root).latest().get
+    assert(m.commitIds == Vector("c1", "c2", "c3"))
+    assert(m.entries.exists(e => e.dir.endsWith("/metrics/data/c3") && e.rows == 0L))
+    assert(metricsRows(spark, root, "c3").isEmpty)
+  }
+
+  test("job-count gate: a fresh run and a streaming epoch gather their lineage without read-backs") {
+    import spark.implicits._
+    val pages = PagesGen.pages(spark, sfDir).limit(100).collect().toSeq
+    val root = Files.createTempDirectory("graft-jobs").toString
+    val runJobs = jobsDuring(ExtractJob.run(spark, pages.toDS(), root, numPartitions = 4, commitId = "c1"))
+    val inputDir = Files.createTempDirectory("graft-jobs-in").toString
+    spark.createDataset(pages).coalesce(1).write.mode("append").parquet(inputDir)
+    val streamRoot = Files.createTempDirectory("graft-jobs-stream").toString
+    val epochJobs = jobsDuring(StreamingExtract.start(spark, inputDir, streamRoot).awaitTermination())
+    assert(ExtractJob.resultsTable(streamRoot).latest().get.commitIds.size == 1, "one epoch")
+    assert((runJobs, epochJobs) == ((6, 6)), "Spark jobs per fresh run and per streaming epoch")
+  }
+
+  test("a run killed between the results and metrics publishes is backfilled before the rerun") {
+    val root = Files.createTempDirectory("graft-hole").toString
+    val pages = PagesGen.pages(spark, sfDir).limit(40)
+    // a file where the metrics table lives: its publish fails after the
+    // results publish succeeded
+    val blocker = Files.createFile(Paths.get(root, "metrics"))
+    intercept[Exception](ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "c1"))
+    assert(ExtractJob.resultsTable(root).hasCommit("c1"))
+    Files.delete(blocker)
+    assert(ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "c2").rowsIn == 0)
+    assert(ExtractJob.metricsTable(root).hasCommit("c1"), "c1's metrics backfilled")
+    val c1 = metricsRows(spark, root, "c1")
+    assert(c1.map(_(2).asInstanceOf[Long]).sum == 40L)
+    assert(c1 == derivedMetrics(spark, root, "c1"))
   }
 }

@@ -149,6 +149,32 @@ class MediaSpec extends AnyFunSuite {
     assert(MediaKernel.resizePixels("not an image".getBytes(UTF_8), 256).isEmpty)
   }
 
+  test("resizePixels keeps the source's pixel kind: RGBA stays RGBA, grey stays grey") {
+    import java.awt.image.BufferedImage
+    def png(kind: Int, paint: BufferedImage => Unit): Array[Byte] = {
+      val src = new BufferedImage(800, 300, kind)
+      paint(src)
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(src, "png", bos)
+      bos.toByteArray
+    }
+    val rgba = png(BufferedImage.TYPE_INT_ARGB, im =>
+      (0 until 400).foreach(x => (0 until 300).foreach(y => im.setRGB(x, y, 0xff336699))))
+    val grey = png(BufferedImage.TYPE_BYTE_GRAY, im =>
+      (0 until 800).foreach(x => im.getRaster.setSample(x, 0, 0, x % 256)))
+    for ((src, channels) <- Seq(rgba -> 4L, grey -> 1L)) {
+      val (out, w, h) = MediaKernel.resizePixels(src, 256).get
+      assert((w, h) == ((256, 96)))
+      val before = MediaKernel.decodeMeta(MediaRow("s", "image", src))
+      val after = MediaKernel.decodeMeta(MediaRow("o", "image", out))
+      assert(before.channels == channels && after.channels == channels, s"$before -> $after")
+    }
+    // the transparent right half stays transparent, the opaque left half opaque
+    val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(
+      MediaKernel.resizePixels(rgba, 256).get._1))
+    assert((back.getRGB(255, 50) >>> 24) == 0 && (back.getRGB(10, 50) >>> 24) == 0xff)
+  }
+
   test("decodeAll: mixed real-image + surrogate rows through the typed Dataset pass") {
     implicit val s = spark
     import s.implicits._

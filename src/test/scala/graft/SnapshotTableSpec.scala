@@ -450,6 +450,68 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(manifests.exists(_.contains("compacted-")), "a compacted entry")
   }
 
+  test("every written dir records what a footer read-back derives: rows, min/max, schema, bloom bytes") {
+    import org.apache.spark.sql.types.{StringType, StructType}
+    val root = tmp()
+    val t = new SnapshotTable(root, compactFanIn = 3, statsCol = Some("url"))
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 03:04:05")
+    t.deleteKeys(Seq("u0").toDF("url"), "d0")
+    t.append(Seq(("u1", 1), ("u2", 1)).toDF("url", "gen"), "c1")
+    t.append(Seq((7, 2)).toDF("other", "gen"), "c2")
+    t.upsert(Seq(("u1", 3)).toDF("url", "gen"), "c3", Seq("url"))
+    t.deleteKeys(Seq("u2").toDF("url"), "d1")
+    t.append(Seq(("u4", 4)).toDF("url", "gen"), "c4")
+    t.rollbackTo(3, "rb")
+    t.append(Seq(("u5", 5, "x")).toDF("url", "gen", "extra"), "c5") // schema evolution
+    t.append(Seq(("u6", Seq(("a", 1), ("b", 2)), Array[Byte](1, 2, 3), ts)).toDF("url", "items", "blob", "ts"), "c6")
+    // tips the level-0 fan-in: a compaction over the nested columns
+    t.append(Seq(("u7", Seq(("c", 3)), Array[Byte](4), ts), ("u\uD834\uDD1E", Seq.empty[(String, Int)],
+      Array.emptyByteArray, ts)).toDF("url", "items", "blob", "ts"), "c7")
+
+    def footer(dir: String): StructType = spark.read.parquet(dir).schema
+    def merged(prev: Option[StructType], next: StructType): StructType = prev match {
+      case None => next
+      case Some(p) => StructType(p.fields ++ next.fields.filterNot(f => p.fieldNames.contains(f.name)))
+    }
+    var expected = Option.empty[StructType]
+    var checkedDirs = Set.empty[String]
+    for (v <- t.versions()) {
+      val s = t.snapshotAt(v).get
+      val last = s.commitIds.last
+      expected =
+        if (last.startsWith("rollback-to-")) t.snapshotAt(last.stripPrefix("rollback-to-").takeWhile(_ != ':').toInt).get.schema
+        else if (t.appended(last)) Some(merged(expected, footer(s"$root/data/$last")))
+        else expected
+      assert(s.schemaJson == expected.map(_.json), s"schema at v$v")
+      for (e <- s.entries if !checkedDirs(e.dir)) {
+        checkedDirs += e.dir
+        val df = spark.read.parquet(e.dir)
+        val rows = df.count()
+        assert(e.rows == rows, e.dir)
+        val urls =
+          if (df.schema.exists(f => f.name == "url" && f.dataType == StringType))
+            df.select("url").as[String].collect().toVector.filter(_ != null)
+          else Vector.empty
+        val stats = df.schema.find(f => f.name == "url" && f.dataType == StringType)
+          .map(_ => df.agg(min("url"), max("url")).head())
+          .filterNot(_.isNullAt(0)).map(r => (r.getString(0), r.getString(1)))
+        assert((e.statMin, e.statMax) == ((stats.map(_._1), stats.map(_._2))), e.dir)
+        val sidecar = java.nio.file.Paths.get(e.dir, "_graft.bloom")
+        if (stats.isEmpty) assert(!Files.exists(sidecar), e.dir)
+        else {
+          val bf = org.apache.spark.util.sketch.BloomFilter.create(math.min(math.max(rows, 1L), 4000000L), 0.01)
+          urls.foreach(bf.putString)
+          val bos = new java.io.ByteArrayOutputStream()
+          bf.writeTo(bos)
+          assert(Files.readAllBytes(sidecar).sameElements(bos.toByteArray), e.dir)
+        }
+      }
+    }
+    assert(checkedDirs.count(_.contains("/compacted-")) == 2 && checkedDirs.exists(_.endsWith("/c6")))
+    val nested = t.latest().get.schema.get
+    assert(Seq("items", "blob", "ts").forall(nested.fieldNames.contains), nested.treeString)
+  }
+
   test("a malformed manifest line fails loudly, naming the file") {
     val root = tmp()
     val t = new SnapshotTable(root)

@@ -141,6 +141,47 @@ class StreamingExtractSpec extends AnyFunSuite {
     assert(rt.snapshotAt(vs.max + 1).isEmpty, "unpublished version reads as absent")
   }
 
+  test("streaming lineage parity: each epoch commits the metrics commitMetrics derives") {
+    import spark.implicits._
+    val inputDir = Files.createTempDirectory("graft-stream-lin-in").toString
+    val tableRoot = Files.createTempDirectory("graft-stream-lin-tbl").toString
+    val all = PagesGen.pages(spark, sfDir).limit(60).collect()
+    all.grouped(30).foreach(g =>
+      spark.createDataset(g.toSeq).coalesce(1).write.mode("append").parquet(inputDir))
+    StreamingExtract.start(spark, inputDir, tableRoot, maxFilesPerTrigger = 1).awaitTermination()
+    val epochs = ExtractJob.resultsTable(tableRoot).latest().get.commitIds
+    assert(epochs.size == 2)
+    for (cid <- epochs) {
+      val written = ExtractJobSpec.metricsRows(spark, tableRoot, cid)
+      assert(written.nonEmpty && written == ExtractJobSpec.derivedMetrics(spark, tableRoot, cid), cid)
+      assert(written.map(_(2).asInstanceOf[Long]).sum == 30L, cid)
+    }
+  }
+
+  test("an epoch killed between its results and metrics publishes gets its metrics on replay") {
+    import spark.implicits._
+    val inputDir = Files.createTempDirectory("graft-stream-hole-in").toString
+    val tableRoot = Files.createTempDirectory("graft-stream-hole-tbl").toString
+    spark.createDataset(PagesGen.pages(spark, sfDir).limit(30).collect().toSeq).coalesce(1)
+      .write.mode("append").parquet(inputDir)
+    // a file where the metrics table lives: the epoch's metrics publish
+    // fails after its results publish succeeded
+    val blocker = Files.createFile(java.nio.file.Paths.get(tableRoot, "metrics"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      StreamingExtract.start(spark, inputDir, tableRoot).awaitTermination())
+    val rt = ExtractJob.resultsTable(tableRoot)
+    val Vector(cid) = rt.latest().get.commitIds
+    Files.delete(blocker)
+    // the restart replays the same epoch: its results commit is skipped as
+    // done, and its metrics are derived before that
+    StreamingExtract.start(spark, inputDir, tableRoot).awaitTermination()
+    assert(rt.latest().get.commitIds == Vector(cid))
+    assert(ExtractJob.metricsTable(tableRoot).hasCommit(cid), "replayed epoch's metrics backfilled")
+    val written = ExtractJobSpec.metricsRows(spark, tableRoot, cid)
+    assert(written.map(_(2).asInstanceOf[Long]).sum == 30L)
+    assert(written == ExtractJobSpec.derivedMetrics(spark, tableRoot, cid))
+  }
+
   test("content dedup within watermark: identical payload under a new url is dropped") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
