@@ -176,8 +176,9 @@ object Bench {
     * extracted_text to materialize (sum of lengths — nothing short-circuits
     * the kernel). Partitions = 8× cores; giant documents (~25× kernel
     * cost, ~1% of rows) condense into the FIRST few heavy partitions
-    * (LPT order — see ExtractJob.partitionForExtraction), so their work
-    * overlaps the small-row waves instead of forming a straggler tail.
+    * (LPT order, by PagesGen's own `doc_id % 97` range layout, which
+    * `ExtractJob.run` also extracts in as it is), so their work overlaps
+    * the small-row waves instead of forming a straggler tail.
     */
   private def timedExtract(spark: SparkSession, sfDir: String, cores: Int, replicate: Int): (Long, Run) = {
     val pages = PagesGen.pages(spark, sfDir, cores * 8, replicate)

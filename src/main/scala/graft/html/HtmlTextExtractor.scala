@@ -73,11 +73,30 @@ object HtmlTextExtractor {
     sb.toString
   }
 
+  /** Index in `html` of the first `</name` at or after `from`, or -1.
+    * Matched in `html` itself, case-insensitively, one char at a time: an
+    * index found in a lowercased copy is no index into `html`, since
+    * lowercasing can lengthen the text (U+0130 `İ` becomes two chars).
+    * `name` is an ASCII lowercase tag name.
+    */
+  private def closeTag(html: String, name: String, from: Int): Int = {
+    // `c` lowercases to `t` as String.toLowerCase(Locale.ROOT) lowercases
+    // it: Character.toLowerCase agrees, except that it maps U+0130 to 'i'
+    // where the String rule yields "i\u0307"
+    def lowersTo(c: Char, t: Char) = c != '\u0130' && Character.toLowerCase(c) == t
+    val last = html.length - name.length - 2
+    var i = html.indexOf("</", from)
+    while (i >= 0 && i <= last) {
+      var k = 0
+      while (k < name.length && lowersTo(html.charAt(i + 2 + k), name.charAt(k))) k += 1
+      if (k == name.length) return i
+      i = html.indexOf("</", i + 1)
+    }
+    -1
+  }
+
   /** Tokenize + segment into blocks with link-density stats. */
   def blocks(html: String): Vector[Block] = {
-    // lowercased once: the raw-text skip below searches it per script/style
-    // element — lowercasing inside the loop would be O(n · elements)
-    lazy val lowerHtml = html.toLowerCase(java.util.Locale.ROOT)
     val out = ArrayBuffer.empty[Block]
     val text = new StringBuilder
     val linkText = new StringBuilder
@@ -125,7 +144,7 @@ object HtmlTextExtractor {
               if (closing) { if (skipDepth > 0) skipDepth -= 1 }
               else if (!selfClosing) {
                 // raw-text elements: jump straight to the matching close tag
-                val close = lowerHtml.indexOf(s"</$name", i)
+                val close = closeTag(html, name, i)
                 if (close >= 0) {
                   val gt = html.indexOf('>', close)
                   i = if (gt < 0) n else gt + 1

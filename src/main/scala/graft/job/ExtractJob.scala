@@ -4,6 +4,8 @@ import graft.extract.SpanExtractor
 import graft.model._
 import graft.table.SnapshotTable
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,10 +20,17 @@ import org.apache.spark.util.AccumulatorV2
   *     Redis cache-hit short-circuit, `/root/reference/src/core/pipeline.py:51-57`).
   *     The key scan projects ONLY `url` — column pruning keeps the multi-TB
   *     `html` column out of the join.
-  *  2. skew-aware layout: `repartitionByRange` on `xxhash64(url)` spreads
-  *     urls uniformly; rows with giant payloads are additionally salted into
-  *     their own partitions via a composite range key on payload size class,
-  *     so one 500 MB document cannot straggle a partition of small ones.
+  *  2. no payload exchange: the kernel runs in the pending rows' own
+  *     partitions — the source's scan splits, or the resume anti-join's
+  *     output. Spark sizes scan splits by bytes, not rows, so a split
+  *     holding giant payloads holds fewer rows, and the kernel's cost
+  *     follows payload bytes. The kernel pass is the only pass that reads
+  *     a payload. A source planned into fewer partitions than task slots
+  *     (one file or row group, the one partition a global `limit` leaves)
+  *     would leave slots idle, so [[run]] gives it
+  *     [[partitionForExtraction]]'s range layout over the slots instead,
+  *     at the price of one sampling pass and one shuffle of every payload;
+  *     a caller can ask for that layout with `numPartitions > 0`.
   *  3. the kernel runs in `mapPartitions` — embarrassingly parallel, one
   *     document in flight per task at a time (streaming iterator, no
   *     materialized partition lists → bounded memory at any document size).
@@ -139,19 +148,18 @@ object ExtractJob {
     }
   }
 
-  /** Skew-aware partitioning: range-partition on (sizeClass, xxhash64(url)).
-    * sizeClass isolates giant documents into their own key range so range
-    * boundaries keep them off the small-row partitions — and giants sort
-    * FIRST (sizeClass 0): the range partitioner allocates partitions by
-    * ROW count, so the giant class (few rows, many× cost) condenses into a
-    * handful of heavy partitions; tasks launch in partition order, so
-    * heavy-first (longest-processing-time-first) overlaps the giant
-    * partitions with the small-row waves instead of leaving them as a
-    * constant straggler TAIL. The ~7-8 s tail once measured for giants-last
-    * (17 % of an 8-core run, 45 % of a 32-core run) came from Bench's
-    * `PagesGen` pre-partitioning with its own `doc_id % 97` giant class,
-    * not from this partitioner: the 1 MiB size class never fires on the
-    * synthetic corpus, whose giants are ~25× a normal doc, far below it.
+  /** The range layout [[run]] uses for a source planned into fewer
+    * partitions than task slots, or when asked for `numPartitions > 0`:
+    * range-partition on (sizeClass, xxhash64(url)), giants (payload
+    * ≥ [[GiantPayloadBytes]], sizeClass 0) first. It costs a sampling
+    * pass over every payload for the range bounds and a shuffle of every
+    * payload. The range partitioner allocates partitions by ROW count, so
+    * at `numPartitions` = cores the giant class shares partition 0 with
+    * ~N/parts small rows: it is not isolated, only launched first. (The
+    * ~7-8 s giants-last tail once measured came from Bench's `PagesGen`
+    * pre-partitioning with its own `doc_id % 97` giant class; the 1 MiB
+    * class never fires on the synthetic corpus, whose giants are ~25× a
+    * normal doc.)
     */
   def partitionForExtraction(pages: Dataset[PageRow], numPartitions: Int): Dataset[PageRow] = {
     import pages.sparkSession.implicits._
@@ -307,8 +315,15 @@ object ExtractJob {
     }
   }
 
-  /** Full resumable run: lineage backfill → anti-join → partition → kernel
-    * → results and metrics commits.
+  /** Full resumable run: lineage backfill → anti-join → kernel → results
+    * and metrics commits. The kernel runs in the pending rows' own
+    * partitions (header item 2) when the source is planned into at least
+    * as many partitions as there are task slots; otherwise, or when
+    * `numPartitions > 0`, they are range-partitioned first
+    * ([[partitionForExtraction]]) into `numPartitions`, or the slots. The
+    * count is the source's, not the pending rows': the resume filter keeps
+    * the source's partitions (a broadcast anti-join, the bloom pre-pass),
+    * and only running its exchanges would tell the pending plan's.
     * Returns stats of THIS run's increment (0 rows if everything was already
     * committed — the no-reprocessing guarantee).
     */
@@ -318,16 +333,33 @@ object ExtractJob {
       tableRoot: String,
       rules: Seq[FieldRule] = ExtractKernel.DefaultRules,
       numPartitions: Int = 0,
-      commitId: String = s"c${System.currentTimeMillis()}",
-      alreadyPartitioned: Boolean = false
+      commitId: String = s"c${System.currentTimeMillis()}"
   ): JobStats = {
-    val parts = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
     backfillMetrics(spark, tableRoot)
     val pend = pending(spark, pages, tableRoot)
-    // skip the payload shuffle when the source was pre-partitioned on the
-    // same key upstream of the binary column (PagesGen.pages(_, _, parts))
-    // and the resume filter preserved it (broadcast anti-join / bloom pass)
-    val todo = if (alreadyPartitioned) pend else partitionForExtraction(pend, parts)
+    val slots = spark.sparkContext.defaultParallelism
+    val todo =
+      if (numPartitions > 0 || plannedPartitions(pages) < slots)
+        partitionForExtraction(pend, if (numPartitions > 0) numPartitions else slots)
+      else pend
     commit(todo, tableRoot, rules, commitId)
+  }
+
+  /** The partitions `ds` runs in, read off its physical plan without
+    * running a job: its static output partitioning (1 after a global
+    * `limit`, n after a `repartition(n)`); else, for a plan with no
+    * exchange or subquery, the partitions of its RDD, whose building only
+    * computes its splits (a file scan's, local rows'); else 0.
+    */
+  private[graft] def plannedPartitions(ds: Dataset[_]): Int = {
+    val plan = ds.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.outputPartitioning.numPartitions match {
+      case 0 if !plan.exists(p => p.isInstanceOf[Exchange] || p.subqueries.nonEmpty) =>
+        plan.execute().getNumPartitions
+      case n => n
+    }
   }
 }

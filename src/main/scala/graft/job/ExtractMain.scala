@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   *   sfDir         directory with documents.parquet (pages are synthesized
   *                 deterministically from it — sandbox stand-in for the crawl table)
   *   tableRoot     output root for the results/metrics snapshot tables
-  *   numPartitions extraction parallelism (default: spark.default.parallelism)
+  *   numPartitions partitions the pages are synthesized into (default:
+  *                 spark.default.parallelism; unused under a limit)
   *   limit         optional row cap (0 = all)
   */
 object ExtractMain {
@@ -35,15 +36,12 @@ object ExtractMain {
     spark.sparkContext.setLogLevel("WARN")
 
     val parts = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
-    // only claim the pre-partitioned layout on a FRESH run: on resume the
-    // anti-join may re-shuffle (sort-merge regime), so run() must restore
-    // the giant-doc range isolation itself
-    val fresh = ExtractJob.resultsTable(tableRoot).isEmpty
-    val pages0 = PagesGen.pages(spark, sfDir, if (limit > 0) 0 else parts)
-    val pages = if (limit > 0) pages0.limit(limit) else pages0
+    // a global limit funnels the pages into one partition, which the job
+    // spreads over its task slots itself: pre-partitioning them first
+    // would shuffle the whole corpus to keep `limit` rows
+    val pages = if (limit > 0) PagesGen.pages(spark, sfDir).limit(limit) else PagesGen.pages(spark, sfDir, parts)
     val t0 = System.nanoTime()
-    val stats = ExtractJob.run(spark, pages, tableRoot, numPartitions = parts,
-      alreadyPartitioned = limit <= 0 && fresh)
+    val stats = ExtractJob.run(spark, pages, tableRoot)
     val sec = (System.nanoTime() - t0) / 1e9
     import graft.util.JsonFmt.d
     println(

@@ -24,10 +24,11 @@ final case class DupState(firstUrl: String, firstTsMs: Long, n: Long)
   *
   * Exactly-once without a transactional sink: the file source's checkpoint
   * makes batch ids + contents replayable, and each micro-batch commits to
-  * [[graft.table.SnapshotTable]] under `epoch-<batchId>` — a restart that
-  * replays the last batch finds its commit id already in the manifest and
-  * skips it (same idempotent-recommit discipline the batch job uses, SURVEY
-  * §7.4.4). This mirrors the reference's SSE incremental visibility
+  * [[graft.table.SnapshotTable]] under `epoch-<batchId>-<queryId>` (the
+  * query id is kept in the checkpoint) — a restart that replays the last
+  * batch finds its commit id already in the manifest and skips it (same
+  * idempotent-recommit discipline the batch job uses, SURVEY §7.4.4).
+  * This mirrors the reference's SSE incremental visibility
   * (`/root/reference/src/main.py:630-672`): results become queryable per
   * committed epoch, not at job end.
   */
@@ -134,25 +135,15 @@ object StreamingExtract {
     pages.writeStream
       .foreachBatch { (batch: Dataset[PageRow], batchId: Long) =>
         val session = batch.sparkSession
-        // commit id = epoch + content digest: an exact replay of the same
-        // micro-batch (restart) maps to the same id and is skipped, while a
-        // DIFFERENT batch that reuses a batchId (checkpoint reset, second
-        // stream on the same tableRoot) gets a fresh id and is processed —
-        // never silently dropped. The digest covers the full url set AND
-        // the payload bytes (count + order-independent XOR of 64-bit
-        // url / (url, html) hashes + min/max — bit_xor cannot overflow
-        // under ANSI mode), so a same-url batch with different payloads
-        // also gets a fresh id.
-        val fp = batch.agg(
-          count(lit(1)),
-          coalesce(bit_xor(xxhash64(col("url"))), lit(0L)),
-          coalesce(bit_xor(xxhash64(col("url"), col("html"))), lit(0L)),
-          coalesce(min(col("url")), lit("")), coalesce(max(col("url")), lit(""))
-        ).collect()(0)
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"${fp.get(0)}|${fp.get(1)}|${fp.get(2)}|${fp.get(3)}|${fp.get(4)}".getBytes("UTF-8"))
-          .take(6).map(b => f"${b & 0xff}%02x").mkString
-        val commitId = s"epoch-$batchId-$digest"
+        // commit id = epoch + query id. Spark keeps the query id in the
+        // checkpoint's metadata file, so a restart from the same checkpoint
+        // replays the same ids and is skipped; a DIFFERENT batch that
+        // reuses a batchId (checkpoint reset, second stream on the same
+        // tableRoot) runs under a fresh query id and is processed — never
+        // silently dropped. Naming the epoch reads none of its rows.
+        val queryId = Option(session.sparkContext.getLocalProperty("sql.streaming.queryId")).getOrElse(
+          throw new IllegalStateException(s"epoch $batchId of $inputDir: no streaming query id on the foreachBatch thread"))
+        val commitId = s"epoch-$batchId-$queryId"
         // commit-id HISTORY, not the dir list: compaction merges epoch dirs
         // out of the manifest, but a replayed epoch must still be skipped.
         // Per-url exactly-once ACROSS batches too: a re-crawled url that

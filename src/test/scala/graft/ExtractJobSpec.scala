@@ -5,7 +5,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.job.{ExtractJob, ExtractKernel}
-import graft.model.PageRow
+import graft.model.{ExtractResult, PageRow}
 import graft.pages.PagesGen
 import graft.streaming.StreamingExtract
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -213,6 +213,56 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(runAt(1) == runAt(7))
   }
 
+  test("default run extracts in the source's scan splits and commits what the range layout commits") {
+    import spark.implicits._
+    val all = PagesGen.pages(spark, sfDir).limit(100).collect().toVector.sortBy(_.url)
+    // four small files: Spark gives each its own scan split, one per task slot
+    val files = Vector(all.take(10), all.slice(10, 40), all.slice(40, 65), all.drop(65))
+    val src = Files.createTempDirectory("graft-splits").toString
+    files.foreach(f => spark.createDataset(f).coalesce(1).write.mode("append").parquet(src))
+    val pages = spark.read.parquet(src).as[PageRow]
+    assert(pages.rdd.getNumPartitions == 4 && ExtractJob.plannedPartitions(pages) == 4)
+    val root = Files.createTempDirectory("graft-default").toString
+    val ranged = Files.createTempDirectory("graft-ranged").toString
+    val inv0 = ExtractKernel.invocations.sum()
+    val stats = ExtractJob.run(spark, pages, root, commitId = "c1")
+    assert(ExtractKernel.invocations.sum() - inv0 == 100, "one kernel pass")
+    ExtractJob.run(spark, pages, ranged, numPartitions = 4, commitId = "c1")
+    def committed(r: String) = ExtractJob.resultsTable(r).read(spark).get.as[ExtractResult].collect()
+      .map(_.copy(partition_id = -1, kernel_ns = 0L)).sortBy(_.url).toVector
+    assert(committed(root) == committed(ranged))
+    // lineage follows the splits: one metrics row per file, with its rows
+    // and url range
+    val written = metricsRows(spark, root, "c1")
+    assert(written == derivedMetrics(spark, root, "c1"))
+    assert(written.map(r => (r(2), r(7), r(8))).toSet ==
+      files.map(f => (f.size.toLong, f.head.url, f.last.url)).toSet, s"per-split lineage: $written")
+    def total(i: Int): Long = written.map(_(i).asInstanceOf[Long]).sum
+    assert(stats == ExtractJob.JobStats(stats.version, total(2), total(3), total(4)))
+  }
+
+  test("default run spreads a source planned into fewer partitions than task slots over the slots") {
+    import spark.implicits._
+    val slots = spark.sparkContext.defaultParallelism
+    val src = Files.createTempDirectory("graft-one-split").toString
+    PagesGen.pages(spark, sfDir).limit(100).coalesce(1).write.mode("overwrite").parquet(src)
+    val pages = spark.read.parquet(src).as[PageRow]
+    assert(pages.rdd.getNumPartitions == 1)
+    // the count comes off the plan: no job runs, not even a limit's or a
+    // repartition's exchange
+    val sources = Seq(pages, PagesGen.pages(spark, sfDir).limit(100), PagesGen.pages(spark, sfDir, 6))
+    var planned = Seq.empty[Int]
+    val planJobs = jobsDuring { planned = sources.map(ExtractJob.plannedPartitions) }
+    assert((planned, planJobs) == ((Seq(1, 1, 6), 0)))
+    val root = Files.createTempDirectory("graft-one-split-root").toString
+    val inv0 = ExtractKernel.invocations.sum()
+    val stats = ExtractJob.run(spark, pages, root, commitId = "c1")
+    assert(ExtractKernel.invocations.sum() - inv0 == 100 && stats.rowsIn == 100)
+    val written = metricsRows(spark, root, "c1")
+    assert(written == derivedMetrics(spark, root, "c1"))
+    assert(written.map(_(1)) == (0 until slots), s"one partition per task slot: $written")
+  }
+
   test("lineage parity: commit writes, in one file, the metrics commitMetrics derives") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-lineage").toString
@@ -257,12 +307,15 @@ class ExtractJobSpec extends AnyFunSuite {
     val pages = PagesGen.pages(spark, sfDir).limit(100).collect().toSeq
     val root = Files.createTempDirectory("graft-jobs").toString
     val runJobs = jobsDuring(ExtractJob.run(spark, pages.toDS(), root, numPartitions = 4, commitId = "c1"))
+    val defaultRoot = Files.createTempDirectory("graft-jobs-default").toString
+    val defaultJobs = jobsDuring(ExtractJob.run(spark, pages.toDS(), defaultRoot, commitId = "c1"))
     val inputDir = Files.createTempDirectory("graft-jobs-in").toString
     spark.createDataset(pages).coalesce(1).write.mode("append").parquet(inputDir)
     val streamRoot = Files.createTempDirectory("graft-jobs-stream").toString
     val epochJobs = jobsDuring(StreamingExtract.start(spark, inputDir, streamRoot).awaitTermination())
     assert(ExtractJob.resultsTable(streamRoot).latest().get.commitIds.size == 1, "one epoch")
-    assert((runJobs, epochJobs) == ((6, 6)), "Spark jobs per fresh run and per streaming epoch")
+    assert((runJobs, defaultJobs, epochJobs) == ((6, 4, 4)),
+      "Spark jobs per fresh range-layout run, fresh default run and streaming epoch")
   }
 
   test("a run killed between the results and metrics publishes is backfilled before the rerun") {

@@ -93,6 +93,19 @@ class PdfHtmlSpec extends AnyFunSuite {
     assert(!text.contains("color")) // style content
   }
 
+  test("HTML: a raw-text element after U+0130 (İ) text still ends at its own close tag") {
+    // İ lowercases to two chars under Locale.ROOT: an index found in a
+    // lowercased copy of the page lands one char late per İ before it
+    val turkish = "<p>" + ("İSTANBUL İZMİR " * 20) + "</p>"
+    val html = s"<html><body>$turkish<script>var x = 1;</script>" +
+      "<p>The paragraph after the script keeps every one of its words here.</p></body></html>"
+    val text = HtmlTextExtractor.extract(html)
+    assert(text.contains("The paragraph after the script keeps every one of its words here."), text)
+    assert(!text.contains("var x"))
+    // a close tag in any case still matches
+    assert(HtmlTextExtractor.extract("<STYLE>p{}</StYlE><p>" + ("word " * 9) + "</p>") == ("word " * 9).trim)
+  }
+
   test("HTML: title is kept as heading, extraction is deterministic") {
     val html = "<html><head><title>Doc Title</title></head><body><p>" +
       ("word " * 20) + "</p></body></html>"

@@ -3,9 +3,13 @@ package graft
 import java.nio.file.Files
 
 import graft.job.ExtractJob
+import graft.model.PageRow
 import graft.pages.PagesGen
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,6 +42,35 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
       s"expected broadcast anti-join, got:\n$plan")
     assert(!plan.contains("SortMergeJoin"), "committed key set must not force a pages shuffle")
+  }
+
+  test("default run: the results write reads the pages scan with no exchange before the kernel") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("graft-plan-src").toString
+    // one file per task slot, so the job keeps the scan's splits
+    PagesGen.pages(spark, sfDir).limit(100).repartition(spark.sparkContext.defaultParallelism)
+      .write.mode("overwrite").parquet(src)
+    val root = Files.createTempDirectory("graft-plan-default").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.collectFirst {
+          case c: InsertIntoHadoopFsRelationCommand if c.outputPath.toString.contains("/results/data/") =>
+            qe.executedPlan.toString
+        }.foreach(plans.add)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ExtractJob.run(spark, spark.read.parquet(src).as[PageRow], root, commitId = "c1")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, s"one results write, got ${plans.size}")
+    val plan = plans.peek()
+    assert(plan.contains("FileScan parquet") && plan.contains("MapPartitions"), s"scan → kernel → write:\n$plan")
+    assert(!plan.contains("Exchange") && !plan.contains("ShuffleQueryStage"),
+      s"no payload exchange between the pages scan and the write:\n$plan")
   }
 
   test("column pruning reaches the parquet scan (slim projection, no wide columns)") {

@@ -78,7 +78,7 @@ class StreamingExtractSpec extends AnyFunSuite {
     assert(res.groupBy($"url").count().filter($"count" > 1).count() == 0)
   }
 
-  test("checkpoint reset with NEW data is processed, not skipped (content-keyed commit ids)") {
+  test("checkpoint reset with NEW data is processed, not skipped (query-id-keyed commit ids)") {
     import spark.implicits._
     val inputDirA = Files.createTempDirectory("graft-stream-ckA").toString
     val inputDirB = Files.createTempDirectory("graft-stream-ckB").toString
@@ -98,6 +98,41 @@ class StreamingExtractSpec extends AnyFunSuite {
     val res = ExtractJob.resultsTable(tableRoot).read(spark).get
     assert(res.count() == 60)
     assert(res.groupBy($"url").count().filter($"count" > 1).count() == 0)
+  }
+
+  test("an epoch reads its batch once: the stream's input rows sum to the files' rows") {
+    import spark.implicits._
+    val inputDir = Files.createTempDirectory("graft-stream-once-in").toString
+    val tableRoot = Files.createTempDirectory("graft-stream-once-tbl").toString
+    val all = PagesGen.pages(spark, sfDir).limit(60).collect()
+    all.grouped(30).foreach(g =>
+      spark.createDataset(g.toSeq).coalesce(1).write.mode("append").parquet(inputDir))
+    val q = StreamingExtract.start(spark, inputDir, tableRoot, maxFilesPerTrigger = 1)
+    q.awaitTermination()
+    val progress = q.recentProgress.filter(_.numInputRows > 0)
+    assert(progress.length == 2, "one progress per non-empty epoch")
+    assert(progress.map(_.numInputRows).sum == 60L, progress.map(_.numInputRows).mkString(","))
+  }
+
+  test("the same files replayed under a fresh checkpoint: a zero-row commit, no kernel call") {
+    import spark.implicits._
+    val inputDir = Files.createTempDirectory("graft-stream-replay-in").toString
+    val tableRoot = Files.createTempDirectory("graft-stream-replay-tbl").toString
+    spark.createDataset(PagesGen.pages(spark, sfDir).limit(30).collect().toSeq).coalesce(1)
+      .write.mode("append").parquet(inputDir)
+    StreamingExtract.start(spark, inputDir, tableRoot, checkpointDir = s"$tableRoot/_ck_a").awaitTermination()
+    val inv0 = graft.job.ExtractKernel.invocations.sum()
+    StreamingExtract.start(spark, inputDir, tableRoot, checkpointDir = s"$tableRoot/_ck_b").awaitTermination()
+    assert(graft.job.ExtractKernel.invocations.sum() == inv0, "no page re-extracted")
+    val rt = ExtractJob.resultsTable(tableRoot)
+    val res = rt.read(spark).get
+    assert(res.count() == 30)
+    assert(res.groupBy($"url").count().filter($"count" > 1).count() == 0)
+    // each stream names its epoch 0 with its own query id
+    val ids = rt.latest().get.commitIds
+    assert(ids.size == 2 && ids.distinct.size == 2 && ids.forall(_.startsWith("epoch-0-")), ids)
+    assert(rt.latest().get.entries.exists(e => e.dir.endsWith(s"/results/data/${ids(1)}") && e.rows == 0L))
+    assert(ExtractJobSpec.metricsRows(spark, tableRoot, ids(1)).isEmpty)
   }
 
   test("100 streaming epochs: compaction bounds the reader dir list; rows intact") {
