@@ -465,18 +465,17 @@ object Bench {
       embs, recallQ, 5, numCells = ivfCells, nProbe = 8, m = 16, ks = 64, shortlist = 50))
     spark.stop()
 
-    import graft.util.JsonFmt.d
-    def js(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    import graft.util.JsonFmt.{d, str}
     def dOpt(o: Option[Double], dec: Int): String = o.map(d(_, dec)).getOrElse("null")
     val qs = queries.map { case (k, v, _) => s""""$k":${d(v, 3)}""" }.mkString("{", ",", "}")
-    val qErrs = queries.collect { case (k, _, Some(e)) => s"""{"query":${js(k)},"error":${js(e)}}""" }
+    val qErrs = queries.collect { case (k, _, Some(e)) => s"""{"query":${str(k)},"error":${str(e)}}""" }
       .mkString("[", ",", "]")
     val runsJson = allRuns.result().map(r =>
       s"""{"cores":${r.cores},"sec":${d(r.sec, 3)},"cpu_util":${d(r.cpuUtil, 3)},"gc_ms":${r.gcMs},"steal_pct":${d(r.stealPct, 2)}}"""
     ).mkString("[", ",", "]")
     val total = secN4 + queries.map(_._2).sum
     val slowest = queries.sortBy(-_._2).take(3)
-      .map { case (k, v, _) => s"""{"query":${js(k)},"sec":${d(v, 3)}}""" }.mkString("[", ",", "]")
+      .map { case (k, v, _) => s"""{"query":${str(k)},"sec":${d(v, 3)}}""" }.mkString("[", ",", "]")
 
     // per-run/per-pair telemetry AND the per-query timing map go to a
     // SIDECAR file: both grow with the suite (the runs array overran the
@@ -492,7 +491,7 @@ object Bench {
     java.nio.file.Files.write(detailFile.toPath, (detail + "\n").getBytes("UTF-8"))
 
     val scaling =
-      s""""cores_n":$n,"cores_4n":$n4,"sec_n":${d(secN, 3)},"sec_4n":${d(secN4, 3)},"docs_per_sec_n":${d(thrN, 1)},"docs_per_sec_4n":${d(thrN4, 1)},"pairs_total":${pairs.size},"clean_pairs":${st.clean},"contended":$contended,"cpu_occupancy_inflation":${dOpt(cpuInflation, 3)},"efficiency_hw_normalized":${dOpt(effHwNormalized, 3)},"efficiency_min_ratio":${dOpt(effMinRatio, 3)},"detail_file":${js(detailFile.toString)},"efficiency":${dOpt(eff, 3)}"""
+      s""""cores_n":$n,"cores_4n":$n4,"sec_n":${d(secN, 3)},"sec_4n":${d(secN4, 3)},"docs_per_sec_n":${d(thrN, 1)},"docs_per_sec_4n":${d(thrN4, 1)},"pairs_total":${pairs.size},"clean_pairs":${st.clean},"contended":$contended,"cpu_occupancy_inflation":${dOpt(cpuInflation, 3)},"efficiency_hw_normalized":${dOpt(effHwNormalized, 3)},"efficiency_min_ratio":${dOpt(effMinRatio, 3)},"detail_file":${str(detailFile.toString)},"efficiency":${dOpt(eff, 3)}"""
     val scalingHi =
       if (hiPairs.isEmpty) "null"
       else {

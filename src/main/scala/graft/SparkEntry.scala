@@ -1,436 +1,22 @@
 package graft
 
-import graft.dedup.{Decontaminate, Dedup}
-import graft.extract.SpanExtractor
-import graft.job.{ExtractJob, ExtractKernel}
-import graft.media.MediaKernel
+import graft.dedup.DedupQueries
+import graft.events.EventQueries
+import graft.job.{ExtractJob, ExtractKernel, ExtractQueries}
+import graft.media.MediaQueries
 import graft.pages.PagesGen
-import graft.sim.Similarity
-import graft.sniff.ContentSniffer
-import graft.text.{C4, Chunker, LangModel, Redactor, TextAnalytics}
-import graft.web.UrlOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.pipeline.PipelineQueries
+import graft.sim.SimilarityQueries
+import graft.text.TextQueries
+import graft.web.WebQueries
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract: `queries` (Spark) and `oracleSql` (DuckDB) pairs form
-  * the per-round correctness gate. Column names and value semantics are
-  * kept engine-portable by construction (integer arithmetic, md5/sha256
-  * hex, plain string replacement — see [[graft.text.TextAnalytics]]);
-  * oracle-free entries (kernel/xxhash64-based ops DuckDB cannot express)
-  * get the driver's rows-only check and are covered by ScalaTest goldens
-  * instead.
+/** The correctness contract: `entry` runs the flagship extraction, and every
+  * [[Gated]] query pairs its Spark side with its DuckDB oracle, if any.
+  * `queries` and `oracleSql` are both read off the one registry, so
+  * `Verify`, `Bench` and the specs see the same contract.
   */
 object SparkEntry {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-  private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
-
-  private val schemaHashHex: String = SpanExtractor.schemaHash(ExtractKernel.DefaultRules)
-
-  /** Deterministic messy-url synthesis from doc_id (mirrored verbatim in
-    * the oracle SQL): mixed-case scheme and host, explicit default ports,
-    * tracking query parameters, fragments — the url spellings a crawl
-    * actually sees, exercising every [[UrlOps.canonicalize]] rule.
-    */
-  private def synthUrl: Column = {
-    val id = col("doc_id")
-    val isHttps = id % 7 === 0 || id % 2 === 0
-    val scheme = when(id % 7 === 0, lit("HTTPS")).when(id % 2 === 0, lit("https")).otherwise(lit("http"))
-    val sub = when(id % 2 === 0, lit("WWW.")).otherwise(lit("cdn."))
-    val tld = when(id % 3 === 0, lit(".COM")).when(id % 3 === 1, lit(".ORG")).otherwise(lit(".NET"))
-    val hostPart = concat(sub, lit("Site"), (id % 13).cast("string"), tld)
-    val port = when(id % 5 === 0, when(isHttps, lit(":443")).otherwise(lit(":80"))).otherwise(lit(""))
-    val path = concat(lit("/Docs/Page"), (id % 50).cast("string"))
-    val query = when(id % 4 === 0, lit("?a=1&utm_source=feed&b=2"))
-      .when(id % 4 === 1, lit("?utm_campaign=x"))
-      .when(id % 4 === 2, concat(lit("?id="), id.cast("string")))
-      .otherwise(lit(""))
-    val frag = when(id % 3 === 0, lit("#Section-2")).otherwise(lit(""))
-    concat(scheme, lit("://"), hostPart, port, path, query, frag)
-  }
-
-  /** Text with deterministic multi-script suffixes (mirrored in the oracle
-    * SQL): prefix-substrings of constant Han/Cyrillic/Arabic blocks, so
-    * the script-detection operator sees every dominance combination.
-    */
-  private def multiScriptText: Column = {
-    val id = col("doc_id")
-    concat(col("text"), lit(" "),
-      lit("中文漢字中文漢字中文漢字").substr(lit(1), ((id % 4) * 4).cast("int")),
-      lit("приветпривет").substr(lit(1), ((id % 3) * 6).cast("int")),
-      lit("مرحبامرحبا").substr(lit(1), ((id % 2) * 5).cast("int")))
-  }
-
-  /** Blocklist for `w_blocklist_keep` (mirrored in the oracle SQL). */
-  private val BlockedDomains: Seq[String] =
-    Seq("site3.com", "site5.org", "site7.net", "site0.com")
-
-  /** Session gap for `e_sessionize`: 6 h in µs (the events table's median
-    * intra-user gap is ~7.3 h, so real sessions split). Mirrored in the
-    * oracle SQL. */
-  private val SessionGapUs: Long = 6L * 3600 * 1000000
-
-  /** As-of cutoff for `e_latest_asof`: 2024-01-16T00:00:00Z in µs — the
-    * midpoint of the events table's one-month span. Mirrored in the
-    * oracle SQL. */
-  private val AsOfCutoffUs: Long = 1705363200000000L
-
-  /** Synthetic outage windows for `e_range_join` (mirrored in the oracle
-    * SQL): 40 windows pacing the events table's Jan-2024 span — one every
-    * 18 h from 2024-01-01T00:00:00Z (µs 1704067200000000), lasting
-    * 2 + (w mod 4) hours. Durations straddle the 6 h join bucket, so both
-    * the single-bucket and the multi-bucket (canonical-bucket dedup)
-    * paths of [[graft.events.EventOps.rangeJoin]] are exercised.
-    */
-  private val RangeEpoch0Us: Long = 1704067200000000L
-  private val RangeSpacingUs: Long = 18L * 3600 * 1000000
-  private val RangeHourUs: Long = 3600L * 1000000
-  private val RangeBucketUs: Long = 6L * 3600 * 1000000
-  private val RangeNumWindows: Int = 40
-
-  /** Probe terms and k for the BM25 retrieval query (mirrored in the
-    * oracle SQL): drawn from the synthetic corpus vocabulary with spread
-    * document frequencies, so idf weights genuinely differ. */
-  private val Bm25Terms: Seq[String] =
-    Seq("spark", "vector", "customer", "window", "slow", "hash")
-  private val Bm25K: Int = 25
-
-  /** Probe phrase for the exact-phrase queries (mirrored in the oracle
-    * SQL): adjacent in ~34 fixture documents, so both the match and the
-    * no-match paths are exercised. */
-  private val PhraseTerms: Seq[String] = Seq("the", "group")
-
-  /** Document text with deterministic duplicate planting for the
-    * incremental-dedup query (mirrored in the oracle SQL): `% 7 == 0` docs
-    * collapse to one shared boilerplate (present in BOTH the committed
-    * index and the new batch), batch-only `% 3 == 0` docs collapse to a
-    * second (present only within the batch).
-    */
-  private def deltaText: Column = {
-    val id = col("doc_id")
-    when(id % 7 === 0, lit("Subscribe to our newsletter. (c) 2024 Synth Crawl Portal."))
-      .when(id % 10 >= 8 && id % 3 === 0, lit("Flash sale! Everything must go."))
-      .otherwise(col("text"))
-  }
-
-  /** 14-token syndicated passages for the substring-dedup operators
-    * (mirrored in the oracle SQL): passage A rides every doc_id % 5 == 0
-    * document and REPEATS WITHIN the doc_id % 11 == 0 ones (the self-copy
-    * case of first-occurrence-wins); passage B rides doc_id % 7 == 0. The
-    * duplicated content is thus a SUBSTRING of otherwise-distinct
-    * documents — exactly what line/document dedup cannot remove.
-    */
-  private val substrPassageA =
-    "the quick brown fox jumps over the lazy dog near the quiet river bank"
-  private val substrPassageB =
-    "breaking news wire copy syndicated across portals and mirrors every single day verbatim"
-
-  private def substrText: Column = {
-    val id = col("doc_id")
-    concat(col("text"),
-      when(id % 5 === 0, lit(" " + substrPassageA)).otherwise(lit("")),
-      when(id % 11 === 0, lit(" " + substrPassageA)).otherwise(lit("")),
-      when(id % 7 === 0, lit(" " + substrPassageB)).otherwise(lit("")))
-  }
-
-  /** Status/doctype profile of the synthesized pages corpus — the oracle
-    * for BOTH the direct extraction path (`q_status_counts`) and the
-    * WARC-framed one (`q_warc_extract`): byte-transparent framing means
-    * the two paths must produce the identical profile.
-    */
-  private val statusCountsSql: String =
-    """SELECT CASE WHEN doc_id % 53 = 0 OR doc_id % 41 = 0 THEN 'error' ELSE 'ok' END AS status,
-      |       CASE WHEN doc_id % 53 = 0 THEN 'unknown'
-      |            WHEN doc_id % 41 = 0 THEN 'pdf'
-      |            WHEN doc_id % 3 = 0 THEN 'pdf'
-      |            ELSE 'html' END AS doctype,
-      |       count(*) AS n
-      |FROM documents GROUP BY 1, 2""".stripMargin
-
-  /** SQL twin of [[substrText]]. */
-  private val substrSqlExpr: String =
-    s"text || (CASE WHEN doc_id % 5 = 0 THEN ' $substrPassageA' ELSE '' END)" +
-      s" || (CASE WHEN doc_id % 11 = 0 THEN ' $substrPassageA' ELSE '' END)" +
-      s" || (CASE WHEN doc_id % 7 = 0 THEN ' $substrPassageB' ELSE '' END)"
-
-  /** Deterministic sitemap XML per document (mirrored in the oracle SQL):
-    * 1–3 `<url>` blocks into the same site0–12 × {com,org,net} domain
-    * space the other web ops use; `<lastmod>` present only on alternating
-    * (doc_id + j) parities so the optional-field path is exercised both
-    * ways.
-    */
-  private def sitemapXml: Column = {
-    val id = col("doc_id")
-    def block(j: Int): Column = {
-      val site = (id * 3 + lit(j * 5 + 1)) % 13
-      val tld = when((id + lit(j)) % 3 === 0, lit(".com"))
-        .when((id + lit(j)) % 3 === 1, lit(".org")).otherwise(lit(".net"))
-      val lastmod = when((id + lit(j)) % 2 === 0,
-        concat(lit("<lastmod>2024-0"), ((id + lit(j)) % 9 + 1).cast("string"),
-          lit("-15</lastmod>"))).otherwise(lit(""))
-      val b = concat(lit("<url><loc>https://site"), site.cast("string"), tld,
-        lit(s"/sm$j</loc>"), lastmod, lit("</url>"))
-      if (j == 0) b else when(id % 3 >= j, b).otherwise(lit(""))
-    }
-    concat(lit("<?xml version=\"1.0\"?><urlset>"),
-      block(0), block(1), block(2), lit("</urlset>"))
-  }
-
-  /** SQL twin of [[sitemapXml]]. */
-  private def sitemapSqlExpr: String = {
-    def blk(j: Int): String = {
-      val site = s"CAST((doc_id * 3 + ${j * 5 + 1}) % 13 AS VARCHAR)"
-      val tld = s"(CASE WHEN (doc_id + $j) % 3 = 0 THEN '.com' " +
-        s"WHEN (doc_id + $j) % 3 = 1 THEN '.org' ELSE '.net' END)"
-      val lastmod = s"(CASE WHEN (doc_id + $j) % 2 = 0 THEN '<lastmod>2024-0' || " +
-        s"CAST((doc_id + $j) % 9 + 1 AS VARCHAR) || '-15</lastmod>' ELSE '' END)"
-      val b = s"'<url><loc>https://site' || $site || $tld || '/sm$j</loc>' || $lastmod || '</url>'"
-      if (j == 0) b else s"(CASE WHEN doc_id % 3 >= $j THEN $b ELSE '' END)"
-    }
-    s"""'<?xml version="1.0"?><urlset>' || ${blk(0)} || ${blk(1)} || ${blk(2)} || '</urlset>'"""
-  }
-
-  /** Synthetic page head for the metadata-extraction gate: every field
-    * varies by doc_id moduli so the oracle recomputes EXPECTED values from
-    * the moduli alone — the Spark side must actually parse the html to
-    * agree. Exercises: missing title (%5==4), messy title whitespace +
-    * `&amp;` entity, meta description in BOTH attribute orders and quote
-    * styles (%3), OpenGraph title (%4==0), canonical link in both orders
-    * (%2), charset as `<meta charset>` and as `http-equiv` content (%6),
-    * plus keyword/og:image/stylesheet DECOYS that anchored patterns must
-    * skip.
-    */
-  private def metaHtml: Column = {
-    val id = col("doc_id")
-    val title = when(id % 5 === 4, lit(""))
-      .otherwise(concat(lit("<TITLE>\n  Doc "), (id % 100).cast("string"),
-        lit("   &amp; co </TITLE>")))
-    val desc = when(id % 3 === 0,
-        concat(lit("<meta name=\"description\" content=\"Summary "),
-          (id % 17).cast("string"), lit(" &amp; more\">")))
-      .when(id % 3 === 1,
-        concat(lit("<meta content='Alt summary "), (id % 17).cast("string"),
-          lit("' name='description'>")))
-      .otherwise(lit(""))
-    val og = when(id % 4 === 0,
-        concat(lit("<meta property=\"og:title\" content=\"OG "),
-          (id % 13).cast("string"), lit("\">")))
-      .otherwise(lit(""))
-    val canon = when(id % 2 === 0,
-        concat(lit("<link rel=\"canonical\" href=\"https://site"),
-          (id % 13).cast("string"), lit(".com/c"), (id % 50).cast("string"), lit("\">")))
-      .otherwise(concat(lit("<LINK HREF='https://alt"), (id % 13).cast("string"),
-        lit(".org/c' REL='canonical'>")))
-    val cs = when(id % 6 === 0, lit("<meta charset=\"UTF-8\">"))
-      .when(id % 6 === 3,
-        lit("<meta http-equiv=\"Content-Type\" content=\"text/html; charset=ISO-8859-1\">"))
-      .otherwise(lit(""))
-    val decoys = lit("<meta name=\"keywords\" content=\"k1, k2\">" +
-      "<meta property=\"og:image\" content=\"https://img.example/i.png\">" +
-      "<link rel=\"stylesheet\" href=\"/s.css\">")
-    concat(lit("<html><head>"), cs, title, decoys, desc, og, canon,
-      lit("</head><body><p>body</p></body></html>"))
-  }
-
-  /** Text with deterministic synthetic outlinks appended (mirrored in the
-    * oracle SQL): 1–3 absolute urls per document into the same
-    * site0–12 × {com,org,net} domain space [[synthUrl]] draws page urls
-    * from, so the harvested link graph connects.
-    */
-  private def outlinkText: Column = {
-    val id = col("doc_id")
-    def link(j: Int): Column = {
-      val site = (id * 3 + lit(j * 5 + 1)) % 13
-      val tld = when((id + lit(j)) % 3 === 0, lit(".com"))
-        .when((id + lit(j)) % 3 === 1, lit(".org")).otherwise(lit(".net"))
-      concat(lit(" https://site"), site.cast("string"), tld, lit(s"/p$j"))
-    }
-    concat(col("text"), link(0),
-      when(id % 3 >= 1, link(1)).otherwise(lit("")),
-      when(id % 3 >= 2, link(2)).otherwise(lit("")))
-  }
-
-  /** Text with deterministic synthetic PII appended (mirrored in the oracle
-    * SQL) so the redaction operator has known e-mails/IPs/phones to find.
-    */
-  private def piiText: Column = {
-    val id = col("doc_id")
-    concat(col("text"),
-      when(id % 4 === 0, concat(lit(" Contact user"), id.cast("string"), lit("@Mail"),
-        (id % 10).cast("string"), lit(".example.com now."))).otherwise(lit("")),
-      when(id % 6 === 0, concat(lit(" Server at 10.0."), (id % 256).cast("string"), lit("."),
-        (id % 100).cast("string"), lit(" up."))).otherwise(lit("")),
-      when(id % 9 === 0, concat(lit(" Call +1555"),
-        (lit(1000000L) + id % 1000000).cast("string"), lit("."))).otherwise(lit("")))
-  }
-
-  /** Newline-structured document synthesis for the frequent-line dedup
-    * query (mirrored in the oracle SQL): a per-doc unique title or a
-    * shared nav line, the unique prose body, and two optional shared
-    * footer lines — the corpus-recurring lines are exactly what the
-    * CCNet-style cleanse must drop while the body survives verbatim.
-    */
-  private def multilineOf(body: Column): Column = {
-    val id = col("doc_id")
-    concat_ws("\n",
-      when(id % 5 === 0, lit("NAV: home news about contact"))
-        .otherwise(concat(lit("Title "), id.cast("string"))),
-      body,
-      when(id % 4 === 0, lit("Subscribe to our newsletter!")),
-      when(id % 2 === 0, lit("(c) 2024 Synth Crawl Portal - all rights reserved.")))
-  }
-
-  private def multilineText: Column = multilineOf(col("text"))
-
-  /** SQL twin of [[multilineOf]], parametrized by the body expression. */
-  private def multilineSql(bodyExpr: String): String =
-    s"""concat_ws(chr(10),
-       |    CASE WHEN doc_id % 5 = 0 THEN 'NAV: home news about contact'
-       |         ELSE 'Title ' || CAST(doc_id AS VARCHAR) END,
-       |    $bodyExpr,
-       |    CASE WHEN doc_id % 4 = 0 THEN 'Subscribe to our newsletter!' END,
-       |    CASE WHEN doc_id % 2 = 0 THEN '(c) 2024 Synth Crawl Portal - all rights reserved.' END)""".stripMargin
-
-  /** SQL twin of [[graft.dedup.LineDedup]]'s catalog + cleanse over a CTE
-    * `lt(doc_id, t)`: document-frequency line catalog (threshold 30,
-    * deterministic cap), then the order-preserving list_filter cleanse.
-    * Shared by `d_drop_freq_lines` and `q_web_ingest`.
-    */
-  private val lineCleanseCtes: String =
-    """lx AS (SELECT doc_id, unnest(string_split(t, chr(10))) AS line FROM lt),
-      |d AS (SELECT DISTINCT doc_id, md5(line) AS h FROM lx),
-      |cat AS (SELECT h FROM d GROUP BY h HAVING count(*) >= 30
-      |        ORDER BY count(*) DESC, h LIMIT 100000),
-      |arr AS (SELECT coalesce(list(h), CAST([] AS VARCHAR[])) AS boiler FROM cat)""".stripMargin
-
-  private val lineCleanseSelect: String =
-    """SELECT doc_id,
-      |  CAST(len(string_split(t, chr(10))) AS BIGINT) AS n_lines,
-      |  CAST(len(list_filter(string_split(t, chr(10)),
-      |    x -> NOT list_contains(boiler, md5(x)))) AS BIGINT) AS n_kept,
-      |  array_to_string(list_filter(string_split(t, chr(10)),
-      |    x -> NOT list_contains(boiler, md5(x))), chr(10)) AS clean_text
-      |FROM lt CROSS JOIN arr""".stripMargin
-
-  /** Text with deterministic in-content citation anchors appended
-    * (mirrored in the oracle SQL): every 5th document links
-    * `https://cite.example/p{id%17}`, every 10th repeats the same anchor
-    * — so the anchor harvest sees variable per-target inlink counts AND
-    * a mentions > inlinks case (same page citing a target twice). The
-    * moduli are deliberately coprime to the generator's `% 3 == 0` PDF
-    * route (a `% 6` citation would only ever land on PDF pages and the
-    * harvest branch would be dead).
-    */
-  private def citedText: Column = {
-    val id = col("doc_id")
-    def cite: Column = concat(
-      lit(" <a href=\"https://cite.example/p"), (id % 17).cast("string"),
-      lit("\">cite p"), (id % 17).cast("string"), lit("</a>"))
-    concat(col("text"),
-      when(id % 5 === 0, cite).otherwise(lit("")),
-      when(id % 10 === 0, cite).otherwise(lit("")))
-  }
-
-  /** Text with deterministic mixed-normalization suffixes appended
-    * (mirrored in the oracle SQL as chr() concatenations): decomposed
-    * `a`+U+0303, `e`+U+0301, `A`+U+030A sequences plus an
-    * already-precomposed `é` — so the NFC operator sees compositions to
-    * perform, a fixed point to leave alone, and pure-ASCII rows (the
-    * no-allocation fast path). BMP-only so char counts agree across
-    * engines.
-    */
-  private def denormSuffix: Column = {
-    val id = col("doc_id")
-    concat(
-      when(id % 3 === 0, lit(" Joa\u0303o")).otherwise(lit("")), // a + combining tilde
-      when(id % 4 === 0, lit(" cafe\u0301")).otherwise(lit("")), // e + combining acute
-      when(id % 5 === 0, lit(" \u00e9clair")).otherwise(lit("")), // precomposed: NFC fixed point
-      when(id % 7 === 0, lit(" A\u030Angstro\u0308m")).otherwise(lit(""))) // combining ring + diaeresis
-  }
-
-  private def denormText: Column = concat(col("text"), denormSuffix)
-
-  /** SQL twin of [[denormSuffix]] (chr(): 771 = U+0303, 769 = U+0301,
-    * 233 = precomposed \u00e9, 778 = U+030A, 776 = U+0308). */
-  private val denormSuffixSql: String =
-    """(CASE WHEN doc_id % 3 = 0 THEN ' Joa' || chr(771) || 'o' ELSE '' END) ||
-      |  (CASE WHEN doc_id % 4 = 0 THEN ' cafe' || chr(769) ELSE '' END) ||
-      |  (CASE WHEN doc_id % 5 = 0 THEN ' ' || chr(233) || 'clair' ELSE '' END) ||
-      |  (CASE WHEN doc_id % 7 = 0 THEN ' A' || chr(778) || 'ngstro' || chr(776) || 'm' ELSE '' END)""".stripMargin
-
-  /** Synthetic page markup for the robots gate (mirrored in the oracle
-    * SQL as modulus math): every 7th doc opts out via
-    * `<meta name="robots" content="noindex,nofollow">`, every 11th uses
-    * the ATTRIBUTE-SWAPPED spelling `<meta content="nofollow"
-    * name="robots">` — so the Spark-side regex must handle both orders
-    * while the oracle stays closed-form.
-    */
-  private def robotsHtml: Column = {
-    val id = col("doc_id")
-    concat(lit("<html><head>"),
-      when(id % 7 === 0, lit("<meta name=\"robots\" content=\"noindex,nofollow\">"))
-        .when(id % 11 === 0, lit("<meta content=\"nofollow\" name=\"robots\">"))
-        .otherwise(lit("")),
-      lit("<title>d</title></head><body>"), col("text"), lit("</body></html>"))
-  }
-
-  /** Synthetic CMS-style markup for the template-fingerprint query
-    * (mirrored in the oracle SQL): three page templates chosen by doc_id —
-    * an article whose repeated-paragraph count varies with `id % 3` (one
-    * logical template splits into three structural variants), a
-    * nav/listing page, and a bare table page. The visible text differs per
-    * page (a prefix of the document body rides inside the tags) while the
-    * tag skeleton is family-constant — exactly the share-structure /
-    * differ-text shape the text-level dedup family cannot group.
-    */
-  private def templHtml: Column = {
-    val id = col("doc_id")
-    val body = substring(col("text"), 1, 40)
-    val para = concat(lit("<p>"), body, lit("</p>"))
-    val article = concat(
-      lit("<html><head><title>t</title></head><body><article><h1>h</h1>"),
-      para,
-      when(id % 3 >= 1, para).otherwise(lit("")),
-      when(id % 3 === 2, para).otherwise(lit("")),
-      lit("</article></body></html>"))
-    val listing = concat(
-      lit("<html><head><title>t</title></head><body><nav><a>a</a><a>b</a></nav><ul><li>"),
-      body, lit("</li><li>x</li></ul><footer><p>c</p></footer></body></html>"))
-    val tablePage = concat(
-      lit("<html><body><table><tr><td>"), body,
-      lit("</td><td>y</td></tr></table></body></html>"))
-    when(id % 5 <= 2, article).when(id % 5 === 3, listing).otherwise(tablePage)
-  }
-
-  /** SQL twin of [[templHtml]]. NB interpolated into an oracle string that
-    * itself calls `.stripMargin` — no line here may start with `|`, or the
-    * outer strip eats one pipe of a `||` operator.
-    */
-  private val templHtmlSql: String =
-    """CASE WHEN doc_id % 5 <= 2 THEN
-      |    '<html><head><title>t</title></head><body><article><h1>h</h1>' ||
-      |    '<p>' || substr(text, 1, 40) || '</p>' ||
-      |    (CASE WHEN doc_id % 3 >= 1 THEN '<p>' || substr(text, 1, 40) || '</p>' ELSE '' END) ||
-      |    (CASE WHEN doc_id % 3 = 2 THEN '<p>' || substr(text, 1, 40) || '</p>' ELSE '' END) ||
-      |    '</article></body></html>'
-      |  WHEN doc_id % 5 = 3 THEN
-      |    '<html><head><title>t</title></head><body><nav><a>a</a><a>b</a></nav><ul><li>' ||
-      |    substr(text, 1, 40) || '</li><li>x</li></ul><footer><p>c</p></footer></body></html>'
-      |  ELSE '<html><body><table><tr><td>' || substr(text, 1, 40) ||
-      |    '</td><td>y</td></tr></table></body></html>' END""".stripMargin
-
-  /** Benchmark/eval set for the decontamination queries: 28-token excerpts
-    * of every 101st sufficiently long document (benchmarks quote web
-    * text). Shared by `q_decontaminate` and `q_training_export`; the
-    * oracle mirrors it as the `bw`/`bench` CTEs.
-    */
-  private def benchExcerpt(d: DataFrame): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    d.filter(col("doc_id") % 101 === 0 && size(toks) >= 33)
-      .select(array_join(slice(toks, 6, 28), " ").as("bench_text"))
-  }
 
   /** Flagship: the full extraction pipeline (sniff → PDF-layout | HTML
     * boilerplate-strip → spans) over pages synthesized from sf0.001.
@@ -441,4004 +27,20 @@ object SparkEntry {
     res.toDF()
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- extraction pipeline (kernel ops; SURVEY §2) ----
-    "q_sniff_route" -> ((s, dir) => {
-      import s.implicits._
-      PagesGen.pages(s, dir, s.sparkContext.defaultParallelism)
-        .map(r => ContentSniffer.sniff(r.html).name)
-        .toDF("doctype").groupBy($"doctype").agg(count(lit(1)).as("n"))
-    }),
-    "q_status_counts" -> ((s, dir) => {
-      import s.implicits._
-      val res = ExtractJob.extractAll(
-        PagesGen.pages(s, dir, s.sparkContext.defaultParallelism), ExtractKernel.DefaultRules, "verify")
-      res.groupBy($"status", $"doctype").agg(count(lit(1)).as("n"))
-    }),
-    // the flagship path THROUGH the container: pages → per-shard .warc.gz
-    // → parse → PageRow rebuild → the SAME extraction kernel. Grouped
-    // statuses must equal the direct-path q_status_counts exactly — the
-    // oracle is literally the same SQL — proving the WARC layer is
-    // payload-transparent to extraction end to end.
-    "q_warc_extract" -> ((s, dir) => {
-      import s.implicits._
-      val pages = PagesGen.pages(s, dir, s.sparkContext.defaultParallelism)
-      val base = pages.select(col("url"),
-        (unix_timestamp(col("warc_ts")) * 1000L).as("ts_ms"),
-        lit("application/octet-stream").as("ct"), col("html").as("payload"))
-      val archives = graft.warc.WarcShards.toArchives(
-        base, "url", "ts_ms", "ct", "payload", shards = 8, gzip = true)
-      val rebuilt = graft.warc.WarcShards.parse(archives, "warc")
-        .select(col("url"), timestamp_millis(col("warc_ts_ms")).as("warc_ts"),
-          col("payload").as("html"), lit("").as("text"), lit("").as("lang"))
-        .as[graft.model.PageRow]
-      ExtractJob.extractAll(rebuilt, ExtractKernel.DefaultRules, "verify-warc")
-        .groupBy($"status", $"doctype").agg(count(lit(1)).as("n"))
-    }),
-    // X2 streaming surface, relationally gated: the SAME windowedMetrics
-    // used by the streaming ingest, run over the batch Dataset (watermark
-    // is a no-op in batch). Event times are deterministic (BaseEpochMs +
-    // doc_id s), so the windowed counts are oracle-exact; payload_bytes is
-    // omitted (synthesized binary is not derivable in SQL).
-    "q_stream_window" -> ((s, dir) => {
-      val pages = PagesGen.pages(s, dir, s.sparkContext.defaultParallelism)
-      graft.streaming.StreamingExtract.windowedMetrics(pages)
-        .select(unix_timestamp(col("window.start")).cast("long").as("window_start_s"),
-          col("lang"), col("n_pages"))
-    }),
-    // S4+ snapshot-table upsert/takedown semantics, relationally gated:
-    // crawl-1 appends every doc, crawl-2 re-crawls the %3 slice (equality
-    // delete + append, latest wins), a takedown commit hides the %5 slice.
-    // The oracle replays the same latest-wins/visibility rules in SQL.
-    // Write-once bucketed tables, join-many without shuffle: documents
-    // and their embeddings bucketed by doc id, sort-merge joined with
-    // zero Exchange (plan gated in BucketingSpec). The 100-TB recurring
-    // join pattern — the result itself is an ordinary equi-join, which
-    // is exactly the point: bucketing changes the plan, not the answer.
-    // T7+ iterative BPE merge-table learning (tokenizer training): the
-    // corpus collapses to the pretoken vocab ONCE; each of the 20
-    // iterations aggregates pairs over the vocab only and applies the
-    // winning merge map-side. Rows-only by design (the argmax loop is
-    // not SQL-expressible); canonical semantics pinned in BpeTrainerSpec.
-    "t_bpe_merges" -> ((s, dir) =>
-      graft.text.BpeTrainer.learnMerges(docs(s, dir), "text", numMerges = 20)),
-    // T7++ tokenizer APPLY, end-to-end: learn a small merge table on the
-    // corpus (8 driver iterations over the Zipf-bounded vocab), then
-    // segment every document with it — the map-only, zero-shuffle pass a
-    // trainer feed runs over 100 TB. Rows-only by design (greedy
-    // lowest-rank merge replay is not SQL-expressible); apply semantics
-    // pinned in BpeTrainerSpec (hand fixture + determinism across
-    // parallelism).
-    "t_bpe_segment" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val merges = graft.text.BpeTrainer.learnMerges(d, "text", numMerges = 8)
-        .orderBy("rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      graft.text.BpeTrainer.segment(d, "text", merges, "doc_id")
-        .select(col("doc_id"),
-          size(col("symbols")).cast("long").as("n_symbols"),
-          array_join(slice(col("symbols"), 1, 12), "|").as("head_symbols"))
-    }),
-    // D6+ stateful streaming duplicate counter, gated in BATCH mode
-    // (flatMapGroupsWithState runs one invocation per group there, the
-    // cross-batch fold is spec-covered in StreamingExtractSpec): pages
-    // synthesized straight from documents (html = utf-8 text bytes, ts =
-    // the PagesGen epoch convention) so the oracle is a plain group-by.
-    "q_dup_counts" -> ((s, dir) => {
-      import s.implicits._
-      val pages = docs(s, dir).select(
-        concat(lit("doc://"), col("doc_id").cast("string")).as("url"),
-        timestamp_seconds(lit(1700000000L) + col("doc_id")).as("warc_ts"),
-        col("text").cast("binary").as("html"),
-        col("text"),
-        col("lang")).as[graft.model.PageRow]
-      graft.streaming.StreamingExtract.duplicateCounts(pages).toDF()
-    }),
-    "q_bucket_join" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-bucket").toString
-      graft.table.Bucketing.writeBucketed(
-        docs(s, dir).select(col("doc_id"), col("lang"), col("n_chars")),
-        "graft_docs_bkt", s"$root/docs", 8, "doc_id")
-      graft.table.Bucketing.writeBucketed(
-        embs(s, dir).select(col("vec_id"), col("label")),
-        "graft_embs_bkt", s"$root/embs", 8, "vec_id")
-      graft.table.Bucketing.cojoin(s, "graft_docs_bkt", "graft_embs_bkt", "doc_id", "vec_id")
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          col("label").cast("long").as("label"))
-    }),
-    "q_table_upsert" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-upsert").toString
-      val t = new graft.table.SnapshotTable(root)
-      val d = docs(s, dir).select(col("doc_id"))
-      t.append(d.withColumn("gen", lit(1L)), "crawl-1")
-      t.upsert(d.where(col("doc_id") % 3 === 0).withColumn("gen", lit(2L)), "crawl-2", Seq("doc_id"))
-      t.deleteKeys(d.where(col("doc_id") % 5 === 0), "takedown-1")
-      t.read(s).get.select(col("doc_id"), col("gen"))
-    }),
-    // SNAPSHOT DIFF (lineage audit between two pinned corpus versions):
-    // v1 = crawl-1; then an upsert re-generates %3 keys and lands new
-    // shifted %7 keys; a takedown deletes %5 keys. The diff v1 → latest
-    // must classify exactly: added (shifted %7), deleted (%5), updated
-    // (%3 survivors) — unchanged keys OMITTED (delta-sized output)
-    "q_table_diff" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-diff").toString
-      val t = new graft.table.SnapshotTable(root)
-      val d = docs(s, dir).select(col("doc_id"))
-      t.append(d.withColumn("gen", lit(1L)), "crawl-1")
-      val up = d.where(col("doc_id") % 3 === 0)
-        .unionByName(d.where(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + lit(1000000L)).as("doc_id")))
-        .withColumn("gen", lit(2L))
-      t.upsert(up, "crawl-2", Seq("doc_id"))
-      t.deleteKeys(d.where(col("doc_id") % 5 === 0), "takedown-1")
-      t.diffVersions(s, 1, t.latest().get.version, Seq("doc_id"), Seq("gen"))
-        .get.select(col("doc_id"), col("change"))
-    }),
-    // S4++ SCHEMA EVOLUTION: crawl-2 ships a quality column crawl-1
-    // predates. The manifest records the merged schema, the read pins the
-    // scan to it, pre-evolution rows surface quality = NULL — the oracle
-    // replays both crawls as a UNION with an explicit NULL.
-    "q_table_evolve" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-evolve").toString
-      val t = new graft.table.SnapshotTable(root)
-      val d = docs(s, dir)
-      t.append(d.select(col("doc_id"), col("lang")), "crawl-1")
-      t.append(d.where(col("doc_id") % 3 === 0)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("lang"),
-          (col("n_chars") % 100).cast("long").as("quality")), "crawl-2")
-      t.read(s).get.select(col("doc_id"), col("lang"), col("quality"))
-    }),
-    // S4+++ INCREMENTAL APPEND READ (resume primitive): three crawls land
-    // with compactFanIn=2 so crawl-2's dir is immediately compacted OUT of
-    // the manifest — the incremental scan must still surface exactly the
-    // rows appended after v1, read from the per-commit dirs, under the
-    // evolved schema (gen arrives with crawl-2). Deletes never apply: the
-    // append stream is not a diff.
-    "q_table_appends" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-appends").toString
-      val t = new graft.table.SnapshotTable(root, compactFanIn = 2)
-      val d = docs(s, dir)
-      t.append(d.select(col("doc_id"), col("lang")), "crawl-1")
-      t.append(d.where(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("lang"), lit(2L).as("gen")), "crawl-2")
-      t.append(d.where(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("lang"), lit(3L).as("gen")), "crawl-3")
-      t.readAppendsSince(s, 1).get.select(col("doc_id"), col("lang"), col("gen"))
-    }),
-    "x_extract_results" -> ((s, dir) => {
-      import s.implicits._
-      val res = ExtractJob.extractAll(
-        PagesGen.pages(s, dir, s.sparkContext.defaultParallelism), ExtractKernel.DefaultRules, "verify")
-      res.select($"url", $"status", $"doctype", md5($"extracted_text").as("text_md5"),
-        $"word_count".cast("long").as("word_count"), $"line_count".cast("long").as("line_count"))
-    }),
-    // P6 zone grid + P7 layout formatting, relationally exposed over
-    // synthetic integer bboxes derived from (doc_id, n_chars) — the
-    // oracle-checkable twin of the kernel's ZoneGrid/LayoutFormatter
-    "p6_layout_zone" -> ((s, dir) => {
-      val x0 = (col("doc_id") % 500).cast("long")
-      val y0 = ((col("doc_id") * 7) % 700).cast("long")
-      val x1 = x0 + lit(40L) + (col("n_chars") % 60).cast("long")
-      val y1 = y0 + lit(12L)
-      val xc = (x0 + x1) / lit(2.0)
-      val yc = (y0 + y1) / lit(2.0)
-      val hz = when(xc < lit(612.0) / 3, "LEFT").when(xc < lit(612.0) / 3 * 2, "CENTER").otherwise("RIGHT")
-      val vz = when(yc < lit(792.0) / 3, "TOP").when(yc < lit(792.0) / 3 * 2, "MIDDLE").otherwise("BOTTOM")
-      val zone = when(vz === "MIDDLE", hz).otherwise(concat(vz, lit("-"), hz))
-      docs(s, dir).select(col("doc_id"), zone.as("zone"),
-        concat(lit("["), zone, lit("] [x:"), x0.cast("string"), lit("-"), x1.cast("string"),
-          lit(", y:"), y0.cast("string"), lit("] "), substring(col("text"), 1, 20)).as("layout_line"))
-    }),
-    "p1_content_hash" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"), TextAnalytics.contentHash(col("text")).as("h"))),
-    "p3_cache_key" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        concat_ws(":", lit("extract"), col("lang"), sha2(col("text"), 256), lit(schemaHashHex)).as("cache_key"))),
-    // ---- text analysis ----
-    "t_token_count" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"), TextAnalytics.tokenCount(col("text")).cast("long").as("n_tokens"))),
-    // whitespace vs BPE-pretokenizer counts side by side — the ratio is
-    // the "subword inflation" a training pipeline budgets against
-    "t_token_bpe" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        TextAnalytics.tokenCount(col("text")).cast("long").as("n_ws"),
-        TextAnalytics.bpeTokenCount(col("text")).as("n_bpe"))),
-    // adjacent-pair statistics for BPE merge learning: the one-exchange
-    // vocab aggregate carries the corpus; the pair fan-out runs on the
-    // vocabulary only; deterministic top-K via TakeOrdered
-    "t_bpe_pairs" -> ((s, dir) =>
-      graft.stats.CorpusStats.bpePairStats(docs(s, dir), "text", topK = 50)),
-    // NFC normalization via the native codegen'd graft_nfc expression,
-    // over mixed-form synthesis: decomposed sequences compose, the
-    // precomposed fixed point and pure-ASCII rows pass through untouched
-    // mojibake round trip: corrupt (UTF-8 read as cp1252) then repair —
-    // md5 must land back on the ORIGINAL text's md5, which the oracle
-    // computes straight off the documents table; the noop column proves
-    // clean multi-script text passes the repairer untouched. The
-    // corrupted flag pins that the corruption genuinely fired (every doc
-    // with a non-ASCII suffix, i.e. doc_id % 12 != 0).
-    "t_mojibake" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), multiScriptText.as("st"))
-      val fix = TextAnalytics.fixMojibakeNative(d) _
-      val bad = TextAnalytics.mojibakeNative(d) _
-      d.select(col("doc_id"),
-        md5(fix(bad(col("st")))).as("roundtrip_md5"),
-        md5(fix(col("st"))).as("noop_md5"),
-        (bad(col("st")) =!= col("st")).as("corrupted"))
-    }),
-    "t_nfc" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), denormText.as("raw"))
-      d.select(col("doc_id"), col("raw"),
-          TextAnalytics.nfcNative(d)(col("raw")).as("nfc_text"))
-        .select(col("doc_id"), col("nfc_text"),
-          (col("raw") =!= col("nfc_text")).as("changed"),
-          length(col("raw")).cast("long").as("n_before"),
-          length(col("nfc_text")).cast("long").as("n_after"))
-    }),
-    // publisher opt-out gate: meta-robots directives detected in either
-    // attribute order, map-only — composable with the scan so opted-out
-    // payloads drop before they ever shuffle
-    "w_robots_gate" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), robotsHtml.as("html"))
-      d.select(col("doc_id"),
-        UrlOps.metaRobots(col("html"), "noindex").as("noindex"),
-        UrlOps.metaRobots(col("html"), "nofollow").as("nofollow"))
-    }),
-    // robots.txt scheduling directives: Crawl-delay per winning group
-    // (decimal seconds → ms, MAX over RFC-combined duplicate groups) and
-    // GLOBAL Sitemap lines. Synthesis exercises: '*' fallback when no
-    // graftbot group exists (www hosts → 2000 ms), a graftbot group with
-    // a fractional delay (cdn → 1.5 s), a duplicate graftbot group later
-    // in the file (.org → max(1500, 4000)), and 1 vs 2 sitemap lines.
-    "w_robots_directives" -> ((s, dir) => {
-      val hosts = docs(s, dir).select(UrlOps.host(synthUrl).as("host")).distinct()
-      val body = concat(
-        lit("Sitemap: https://"), col("host"), lit("/sitemap.xml\n"),
-        lit("User-agent: *\nDisallow: /private\nCrawl-delay: 2\n\n"),
-        when(col("host").startsWith("cdn."),
-          lit("User-agent: graftbot\nDisallow: /x\nCrawl-delay: 1.5\n"))
-          .otherwise(lit("")),
-        when(col("host").endsWith(".org"), concat(
-          lit("Sitemap: https://"), col("host"),
-          lit("/s2.xml\nUser-agent: graftbot\nCrawl-delay: 4\n")))
-          .otherwise(lit("")))
-      graft.web.RobotsTxt.directivesFrame(
-          hosts.withColumn("body", body), "host", "body", "graftbot/1.0")
-        .select(col("host"), col("crawl_delay_ms"),
-          array_join(col("sitemaps"), ",").as("sitemaps"))
-    }),
-    // charset-routed payload decode (the WHATWG prescan trick): bytes are
-    // sniffed via a lossless latin-1 view, the declared charset routes
-    // the real decode. Four branches exercised: declared utf-8 with
-    // multi-byte text, declared iso-8859-1 with latin-1 text, NO
-    // declaration (utf-8 default), and an UNKNOWN charset (ascii body,
-    // flagged known=false, latin-1 fallback). The md5 gate proves
-    // encode → sniff → route → decode is byte-identity per branch.
-    "q_charset_decode" -> ((s, dir) => {
-      val id = col("doc_id")
-      val meta = when(id % 4 === 0, lit("<meta charset=\"UTF-8\">"))
-        .when(id % 4 === 1,
-          lit("<meta http-equiv=\"Content-Type\" content=\"text/html; charset=ISO-8859-1\">"))
-        .when(id % 4 === 2, lit(""))
-        .otherwise(lit("<meta charset=\"Shift_JIS\">"))
-      val bodyTxt = when(id % 4 === 1, concat(col("text"), lit(" café résumé ±½")))
-        .when(id % 4 === 3, col("text"))
-        .otherwise(concat(col("text"), lit(" 中文 – fancy")))
-      val html = concat(lit("<html><head>"), meta, lit("</head><body>"),
-        bodyTxt, lit("</body></html>"))
-      val payload = when(id % 4 === 1, encode(html, "ISO-8859-1"))
-        .otherwise(encode(html, "UTF-8"))
-      docs(s, dir).select(id,
-          graft.html.CharsetDecode.sniffCharset(payload).as("charset"),
-          graft.html.CharsetDecode.charsetKnown(payload).as("known"),
-          md5(graft.html.CharsetDecode.decodeRouted(payload).cast("binary")).as("text_md5"),
-          md5(html.cast("binary")).as("want_md5"))
-    }),
-    // WAT-analog page metadata: the Spark side PARSES the synthesized
-    // head (both attribute orders, both quote styles, decoy tags, messy
-    // whitespace, entities); the oracle recomputes expected values from
-    // the synthesis moduli alone — agreement proves the parse, not the
-    // synthesis. Map-only codegen regexps; zero exchanges.
-    "w_meta_extract" -> ((s, dir) => {
-      val h = docs(s, dir).select(col("doc_id"), metaHtml.as("html"))
-      h.select(col("doc_id"),
-        graft.html.MetaExtract.title(col("html")).as("title"),
-        graft.html.MetaExtract.metaContent(col("html"), "description").as("description"),
-        graft.html.MetaExtract.ogContent(col("html"), "og:title").as("og_title"),
-        graft.html.MetaExtract.canonical(col("html")).as("canonical"),
-        graft.html.MetaExtract.charset(col("html")).as("charset"))
-    }),
-    // composed web-ingest chain: robots opt-out gate → NFC normalization
-    // → corpus line cleanse — the crawl-order composition of the three
-    // gates (the line catalog is computed over the post-gate,
-    // post-normalization corpus); everything up to the slim catalog
-    // aggregates is ONE map-side pass
-    "q_web_ingest" -> ((s, dir) => {
-      val gated = docs(s, dir)
-        .withColumn("html", robotsHtml)
-        .filter(!UrlOps.metaRobots(col("html"), "noindex"))
-      val lined = gated.withColumn("text", multilineOf(concat(col("text"), denormSuffix)))
-      val nfc = lined.withColumn("text", TextAnalytics.nfcNative(lined)(col("text")))
-      graft.dedup.LineDedup.dropFrequentLines(nfc, "doc_id", "text", minDf = 30L)
-    }),
-    // stopword-ratio quality signal (Gopher-style: ≥ 2 common function
-    // words); integer counts only, ratio left to the consumer
-    "t_stopword" -> ((s, dir) => {
-      // native single-pass signal kernels (the oracle replays the regex
-      // formulations; NativeSignalsSpec pins the field-level parity)
-      val d = docs(s, dir)
-      d.select(col("doc_id"),
-          TextAnalytics.textStatsNative(d)(col("text")).as("_ts"),
-          TextAnalytics.langSignalsNative(d)(col("text")).as("_ls"))
-        .select(col("doc_id"),
-          col("_ts").getField("words").as("n_tokens"),
-          col("_ls").getField("stop").as("stop_tokens"),
-          (col("_ls").getField("stop") >= 2).as("has_min_stop"))
-    }),
-    // tokenizer fertility per language: BPE-ish tokens per whitespace
-    // token in ppm — the "subword inflation" data-card row a multilingual
-    // mixture budget reads; one slim (lang) aggregate. The ×10^6 runs in
-    // DECIMAL(38,0): a language's token sum reaches ~10^14 at the design
-    // point and the BIGINT product would wrap silently (same envelope
-    // handling as w_domain_gini; the oracle widens to HUGEINT)
-    "t_fertility" -> ((s, dir) =>
-      docs(s, dir).groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextAnalytics.tokenCount(col("text")).cast("long")).as("ws_tokens"),
-          sum(TextAnalytics.bpeTokenCount(col("text"))).as("bpe_tokens"))
-        .select(col("lang"), col("n_docs"), col("ws_tokens"), col("bpe_tokens"),
-          expr("CAST((CAST(bpe_tokens AS DECIMAL(38,0)) * 1000000) DIV greatest(ws_tokens, 1L) AS BIGINT)")
-            .as("fertility_ppm"))),
-    // order-invariant corpus digest: XOR of 40-bit (id, fingerprint)
-    // hashes — the reproducibility-manifest row that pins a training
-    // run's exact input under any partitioning; one map-side-partial agg
-    "q_corpus_digest" -> ((s, dir) =>
-      graft.stats.CorpusStats.corpusDigest(docs(s, dir), "doc_id", "text")),
-    // per-document keyphrases: top-3 terms by the integer tf·10^6 DIV df
-    // surrogate (rank-equivalent to TF-IDF within a doc) — slim term
-    // aggregates, vocabulary-bounded df join, per-DOC top-k window
-    "t_keyphrases" -> ((s, dir) =>
-      TextAnalytics.keyphrases(docs(s, dir), "doc_id", "text", k = 3)
-        .withColumnRenamed("id", "doc_id")),
-    // OOV rate vs the corpus's own top-K vocabulary: one slim token
-    // agg into TakeOrdered, then a map-only broadcast-literal probe —
-    // documents never shuffle (the synthesis has 31 distinct tokens, so
-    // K=16 leaves real OOV mass at the gated scales)
-    "t_oov_rate" -> ((s, dir) =>
-      TextAnalytics.oovStats(docs(s, dir), "doc_id", "text", vocabSize = 16)),
-    // corpus vocabulary: term + document frequency, deterministic top-50
-    // (ties broken by token). TakeOrderedAndProject keeps the "top-k"
-    // driver-side cost at k rows; countDistinct is Spark's standard
-    // two-phase expand — the price of an exact df at any scale
-    "t_vocab_topk" -> ((s, dir) => {
-      val toks = when(length(trim(col("text"))) === 0, array().cast("array<string>"))
-        .otherwise(split(trim(lower(col("text"))), "\\s+"))
-      docs(s, dir).select(col("doc_id"), explode(toks).as("token"))
-        .groupBy(col("token"))
-        .agg(count(lit(1)).as("tf"), countDistinct(col("doc_id")).as("df"))
-        .orderBy(desc("tf"), asc("token"))
-        .limit(50)
-    }),
-    // BM25 keyword retrieval (fixed-point integer scoring): inverted-
-    // index shape — the probe-term prune runs map-side with the explode,
-    // df/corpus stats broadcast back, top-k via TakeOrderedAndProject
-    "t_bm25_topk" -> ((s, dir) =>
-      graft.text.Retrieval.bm25TopK(docs(s, dir), "doc_id", "text", Bm25Terms, Bm25K)),
-    // the write-once / query-many retrieval shape: persistent inverted
-    // index partitioned on a term hash bucket; the probe reads ONLY the
-    // partitions its terms hash into (directory pruning, PlanSpec-gated)
-    // and must return byte-identically what the corpus re-scan returns —
-    // both share one oracle
-    "t_bm25_indexed" -> ((s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-bm25-idx").toString
-      graft.text.Retrieval.buildIndex(docs(s, dir), "doc_id", "text", path, termBuckets = 16)
-      graft.text.Retrieval.bm25FromIndex(s, path, "doc_id", Bm25Terms, Bm25K, termBuckets = 16)
-    }),
-    // exact-phrase search, scan path: matched postings vote for their
-    // occurrence start (pos − slot); a start with all slots matched is an
-    // occurrence. Term prune rides the posexplode map-side.
-    "t_phrase" -> ((s, dir) =>
-      graft.text.Retrieval.phraseOccurrences(
-        docs(s, dir), "doc_id", "text", PhraseTerms)),
-    // the same phrase through the persistent positional index: reads only
-    // the phrase terms' hash-bucket partitions, explodes stored position
-    // lists, identical tail — SAME oracle as the scan path
-    "t_phrase_indexed" -> ((s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-phrase-idx").toString
-      graft.text.Retrieval.buildIndex(docs(s, dir), "doc_id", "text", path, termBuckets = 16)
-      graft.text.Retrieval.phraseFromIndex(s, path, "doc_id", PhraseTerms, termBuckets = 16)
-    }),
-    // Gopher-family repetition filter: duplicate-token mass + hottest
-    // adjacent bigram, HOF-free (slice/arrays_zip/explode + hash aggs)
-    "t_repetition" -> ((s, dir) =>
-      TextAnalytics.repetitionStats(docs(s, dir), "doc_id", "text")),
-    // CCNet-style LM fluency: bigram model trained on the en slice
-    // (pruned, broadcast), every doc scored by fixed-point mean
-    // conditional probability — integer-only so both engines agree
-    "t_lm_score" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val model = LangModel.bigramModel(d.where(col("lang") === "en"), "doc_id", "text", minCount = 2)
-      LangModel.lmScore(d, model, "doc_id", "text")
-    }),
-    // stupid-backoff trigram LM (Brants et al. 2007): trigram hit →
-    // p3; miss → 0.4 × bigram p2; miss → 0.16 × unigram p1; miss → 0 —
-    // all fixed-point ppm. Trained on the en slice like t_lm_score; all
-    // three pruned model tables broadcast, scoring probes map-side.
-    "t_lm_backoff" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val model = LangModel.stupidBackoffModel(
-        d.where(col("lang") === "en"), "doc_id", "text", minCount = 2)
-      LangModel.stupidBackoffScore(d, model, "doc_id", "text")
-    }),
-    // CCNet-style quality tiers over the LM fluency score: exact discrete
-    // tertile boundaries from a bounded score histogram (one slim agg +
-    // a histogram-sized window), then a broadcast map-only assignment —
-    // documents never shuffle, ties land low by score value
-    "t_quality_tiers" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val model = LangModel.bigramModel(d.where(col("lang") === "en"), "doc_id", "text", minCount = 2)
-      val scored = LangModel.lmScore(d, model, "doc_id", "text")
-        .select(col("doc_id"), col("avg_ppm"))
-      graft.sample.Tiering.assignTiers(scored, "avg_ppm", numTiers = 3)
-        .select(col("doc_id"), col("avg_ppm"),
-          when(col("tier") === 2, lit("head")).when(col("tier") === 1, lit("middle"))
-            .otherwise(lit("tail")).as("tier"))
-    }),
-    // tier mixture card: per-tier doc + token mass — the number a training
-    // recipe consumes ("how many head tokens exist"); slim (id, tokens)
-    // join against the tier assignment, documents still never shuffle
-    "q_tier_mix" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val model = LangModel.bigramModel(d.where(col("lang") === "en"), "doc_id", "text", minCount = 2)
-      val scored = LangModel.lmScore(d, model, "doc_id", "text")
-        .select(col("doc_id"), col("avg_ppm"))
-      val toks = d.select(col("doc_id"), TextAnalytics.tokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.sample.Tiering.assignTiers(scored, "avg_ppm", numTiers = 3)
-        .join(toks, "doc_id")
-        .groupBy(when(col("tier") === 2, lit("head")).when(col("tier") === 1, lit("middle"))
-          .otherwise(lit("tail")).as("tier"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-    }),
-    // the tier-extraction recipe end-to-end (CCNet downstream): score ->
-    // tier -> per-tier keep rates (head 100%, middle 50%, tail 10%) —
-    // tiering's broadcast bounds compose with the sampler's broadcast
-    // rates; the corpus still never shuffles after the score agg
-    "q_tier_sample" -> ((s, dir) => {
-      import s.implicits._
-      val d = docs(s, dir)
-      val model = LangModel.bigramModel(d.where(col("lang") === "en"), "doc_id", "text", minCount = 2)
-      val scored = LangModel.lmScore(d, model, "doc_id", "text")
-        .select(col("doc_id"), col("avg_ppm"))
-      val tiers = graft.sample.Tiering.assignTiers(scored, "avg_ppm", numTiers = 3)
-        .withColumn("tier",
-          when(col("tier") === 2, lit("head")).when(col("tier") === 1, lit("middle"))
-            .otherwise(lit("tail")))
-      val rates = Seq(("head", 10000), ("middle", 5000), ("tail", 1000)).toDF("tier", "rate_bp")
-      graft.sample.Sampler.sampleStratified(tiers, rates, "doc_id", Seq("tier"))
-        .select(col("doc_id"), col("avg_ppm"), col("tier"))
-    }),
-    // leakage-safe holdout split keyed by REGISTERED DOMAIN (near-dups
-    // and templated pages concentrate within a domain; an id-hash split
-    // would leak train content into val through its near-copies) —
-    // map-only md5-bucket decision, zero shuffle
-    "q_split_holdout" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), synthUrl.as("url"))
-        .withColumn("domain", UrlOps.registeredDomain(UrlOps.host(col("url"))))
-      graft.sample.Sampler.holdoutSplit(d, "domain", valBp = 1000)
-        .select(col("doc_id"), col("domain"), col("split"))
-    }),
-    // deterministic stratified downsampling: md5-bucket filter under
-    // broadcast per-(source,lang) rates — map-only over the corpus
-    // temperature sampling (τ=2): expected keep per language ∝ √n_lang,
-    // overall target 90% of the corpus — high enough that small strata
-    // CAP at keep-everything (rate 10000), exercising the cap branch,
-    // while the head language genuinely down-samples. All-BIGINT isqrt
-    // math, replayed exactly by the oracle (float-sqrt + Newton fix).
-    "q_sample_temperature" -> ((s, dir) =>
-      graft.sample.Sampler.sampleTemperature(
-          docs(s, dir), "doc_id", "lang", targetBp = 9000)
-        .select(col("doc_id"), col("lang"), col("rate_bp"))),
-    "q_sample_stratified" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val rates = d.select(col("source"), col("lang")).distinct()
-        .withColumn("rate_bp", when(col("lang") === "en", lit(7000)).otherwise(lit(3000)))
-      graft.sample.Sampler.sampleStratified(d, rates, "doc_id", Seq("source", "lang"))
-        .select(col("doc_id"), col("source"), col("lang"),
-          graft.sample.Sampler.bucket10k(col("doc_id")).cast("long").as("bucket_bp"))
-    }),
-    // mixture construction: sample each source down to a TOKEN budget
-    // (broadcast budgets; ONE (stratum, sub-stream) exchange — a
-    // mega-stratum never funnels through one sort)
-    "q_sample_budget" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("source"),
-        TextAnalytics.tokenCount(col("text")).cast("long").as("n_tokens"))
-      val budgets = d.select(col("source")).distinct()
-        .withColumn("budget",
-          when(length(col("source")) === 4, lit(601L)).otherwise(lit(350L)))
-      graft.sample.Sampler.sampleToTokenBudget(d, budgets, "doc_id",
-        "source", "n_tokens", subStreams = 4)
-        .select(col("doc_id"), col("source"), col("n_tokens"))
-    }),
-    // mixture construction, up direction: fractional-epoch repeats
-    // (broadcast epochs; map-only explode — ZERO shuffle)
-    "q_sample_epochs" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("source"))
-      val epochs = d.select(col("source")).distinct()
-        .withColumn("epochs_bp",
-          when(length(col("source")) === 4, lit(25000L)).otherwise(lit(5000L)))
-      graft.sample.Sampler.upsampleByEpochs(d, epochs, "doc_id", "source")
-        .select(col("doc_id"), col("source"), col("copy"))
-    }),
-    // DSIR-style importance weighting: hashed-bigram bucket models for the
-    // en slice (target) vs the whole corpus (raw), per-doc fixed-point
-    // likelihood-ratio score — broadcast <=512-row weight table, documents
-    // never shuffle (only slim (id, partial sum) rows)
-    "q_sample_dsir" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.sample.Importance.importanceWeights(
-        d, "doc_id", "text", d.where(col("lang") === "en"), "text",
-        buckets = 512, n = 2)
-    }),
-    "t_fingerprint" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"), TextAnalytics.fingerprint(col("text")).as("fp"))),
-    // Gopher quality rules (Rae et al. 2021): bullet/ellipsis line
-    // fractions, symbol-to-word ratio, mean word length, alpha-word
-    // invisible/bidi sanitization (Trojan Source class): zero-widths
-    // break byte equality of visually identical text (dedup evasion),
-    // bidi controls reorder rendering vs logical bytes (filter
-    // smuggling). Pollution synthesized by moduli; `restored` proves
-    // stripping recovers the original fingerprint except where VISIBLE
-    // residue was also injected — map-only codegen
-    "t_strip_invisible" -> ((s, dir) => {
-      val id = col("doc_id")
-      val polluted = concat(
-        substring(col("text"), 1, 10),
-        when(id % 5 === 0, lit("\u200B")).otherwise(lit("")),
-        substring(col("text"), 11, 1000000),
-        when(id % 11 === 0, lit(" \u202Edesrever\u202C")).otherwise(lit("")),
-        when(id % 7 === 0, lit("\u00AD\uFEFF")).otherwise(lit("")))
-      docs(s, dir).select(id, col("text"), polluted.as("t")).select(
-        id,
-        TextAnalytics.invisibleChars(col("t")).as("n_invisible"),
-        TextAnalytics.bidiChars(col("t")).as("n_bidi"),
-        (TextAnalytics.bidiChars(col("t")) > 0L).as("suspicious"),
-        TextAnalytics.fingerprint(TextAnalytics.stripInvisible(col("t"))).as("clean_fp"),
-        (TextAnalytics.fingerprint(TextAnalytics.stripInvisible(col("t"))) ===
-          TextAnalytics.fingerprint(col("text"))).as("restored"))
-    }),
-    // C4 cleaning recipe (Raffel et al. 2020): line-level keep rules +
-    // page gates; the corpus text is enriched with deterministic lines so
-    // every rule fires both ways (terminal punct, ≥5 words, javascript,
-    // <3 sentences, badword, lorem ipsum, curly brace) — map-only
-    "t_c4_clean" -> ((s, dir) => {
-      val id = col("doc_id")
-      val page = concat(
-        col("text"),
-        lit("\nThe quick study of "), substring(col("text"), 1, 20), lit(" now concludes properly."),
-        lit("\nShort line."),
-        lit("\nIs this layout really working fine today?"),
-        lit("\nNo terminal punctuation here at all"),
-        lit("\nThe javascript menu needs to be enabled fully."),
-        when(id % 3 === 0, lit("\nAn extra closing sentence appears right here!")).otherwise(lit("")),
-        when(id % 31 === 0, lit("\nthe casino bonus spins are waiting now.")).otherwise(lit("")),
-        when(id % 37 === 0, lit("\nlorem ipsum dolor sit amet sample.")).otherwise(lit("")),
-        when(id % 41 === 0, lit("\nthis page contains { a brace clearly.")).otherwise(lit("")))
-      C4.c4Stats(docs(s, dir).select(id, page.as("page")), "doc_id", "page", Seq("casino"))
-    }),
-    // share — map-only integer arithmetic, thresholds cross-multiplied;
-    // the corpus text is enriched with deterministic bullet / ellipsis /
-    // symbol lines (mirrored in the oracle) so every rule fires both ways
-    "t_gopher" -> ((s, dir) => {
-      val id = col("doc_id")
-      val gt = concat_ws("\n", multilineText,
-        when(id % 3 === 0, lit("- bullet one")),
-        when(id % 3 === 0, lit("* bullet two")),
-        when(id % 6 === 0, lit("to be continued...")),
-        when(id % 11 === 0, lit("# # # # # # # # # #")))
-      docs(s, dir).select(id.as("doc_id"), gt.as("gt"))
-        .select(col("doc_id"),
-          TextAnalytics.tokenCount(col("gt")).cast("long").as("n_words"),
-          TextAnalytics.tokenChars(col("gt")).cast("long").as("token_chars"),
-          size(split(col("gt"), "\n")).cast("long").as("n_lines"),
-          TextAnalytics.bulletLineCount(col("gt")).cast("long").as("bullet_lines"),
-          TextAnalytics.ellipsisLineCount(col("gt")).cast("long").as("ellipsis_lines"),
-          TextAnalytics.gopherSymbolCount(col("gt")).cast("long").as("symbols"),
-          TextAnalytics.alphaWordCount(col("gt")).cast("long").as("alpha_words"),
-          TextAnalytics.isGopherQuality(col("gt"), minWords = 10).as("gopher_ok"))
-    }),
-    // model-based quality gate: hashed unigram+bigram naive-Bayes
-    // classifier trained on the corpus itself (label: lang == 'en'),
-    // <=64-row posterior table broadcast, map-side probe — the
-    // fastText-shaped stage of CCNet-style pipelines. B=64 so every
-    // bucket trains at sf0.01.
-    "t_quality_nb" -> ((s, dir) =>
-      graft.text.QualityClassifier.trainAndScore(
-        docs(s, dir).withColumn("y", col("lang") === "en"),
-        "doc_id", "text", "y", buckets = 64)),
-    "t_quality" -> ((s, dir) => {
-      // native single-pass stats kernel; the quality flag recombines its
-      // integer fields exactly like TextAnalytics.isQuality (oracle-gated)
-      val d = docs(s, dir)
-      val ts = col("_ts")
-      val chars = ts.getField("chars"); val words = ts.getField("words")
-      d.select(col("doc_id"), TextAnalytics.textStatsNative(d)(col("text")).as("_ts"))
-        .select(col("doc_id"),
-          chars.as("chars"),
-          words.as("n_tokens"),
-          ts.getField("punct").as("punct_chars"),
-          ts.getField("upper").as("upper_chars"),
-          ts.getField("digits").as("digit_chars"),
-          ((words >= lit(5)) &&
-            (ts.getField("punct") * lit(100) <= chars * lit(20)) &&
-            (ts.getField("upper") * lit(100) <= chars * lit(30)) &&
-            (chars <= words * lit(20))).as("is_quality"))
-    }),
-    // per-paragraph language ID over a deliberately MIXED document: the
-    // body paragraph is the (en-marked) corpus soup; Spanish / German /
-    // French paragraphs attach by moduli, plus a marker-free line that
-    // must come back 'und'. Map-only split + native signal kernel.
-    "t_para_lang" -> ((s, dir) => {
-      val id = col("doc_id")
-      val mixed = concat_ws("\n",
-        col("text"),
-        when(id % 3 === 0, lit("el la los es dias de sol")).otherwise(lit(null)),
-        when(id % 2 === 0, lit("der die und das haus am see")).otherwise(lit(null)),
-        when(id % 4 === 1, lit("le les des et la rue")).otherwise(lit(null)),
-        when(id % 5 === 0, lit("12345 67890 !!!")).otherwise(lit(null)))
-      TextAnalytics.paragraphLangs(
-        docs(s, dir).select(id, mixed.as("text")), "doc_id", "text")
-    }),
-    "t_lang_id" -> ((s, dir) => {
-      // native language-signal kernel: 2 byte scans instead of 17 regex
-      // passes; the argmax consumes the struct fields
-      val d = docs(s, dir)
-      val ls = col("_ls")
-      d.select(col("doc_id"), TextAnalytics.langSignalsNative(d)(col("text")).as("_ls"))
-        .select(col("doc_id") +:
-          TextAnalytics.LangMarkers.map { case (lang, _) =>
-            ls.getField(s"m_$lang").as(s"m_$lang") } :+
-          TextAnalytics.langIdFromSignals(ls).as("lang_guess"): _*)
-    }),
-    // the composed "give me training data" call: quality gate + lang-ID +
-    // language-scoped stopword gate + repetition gate in ONE codegen'd
-    // filter pass, then exact dedup (min doc_id per content fingerprint).
-    // One scan, one slim (fp, id) shuffle — the E2E cleaning pipeline
-    "q_clean_corpus" -> ((s, dir) =>
-      // filterClean keeps the composed gate COMPILED: project-with-CSE +
-      // barrier + boolean filter (a bare .filter(isClean) blows janino's
-      // 64 KB method limit and drops the stage to interpreted)
-      TextAnalytics.filterClean(
-          docs(s, dir).select(col("doc_id"), col("text")), "text")
-        .groupBy(TextAnalytics.fingerprint(col("text")).as("fp"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))),
-    // ---- web-corpus operators (urls, PII, packing, decontamination) ----
-    // url canonicalization: the key-normalization step every url-keyed op
-    // (dedup, resume, frontier, domain stats) depends on — map-only
-    "w_url_canon" -> ((s, dir) => {
-      val withUrl = docs(s, dir).select(col("doc_id"), synthUrl.as("url"))
-      withUrl.select(col("doc_id"), col("url"),
-        UrlOps.canonicalize(col("url")).as("canon_url"),
-        UrlOps.host(col("url")).as("host"),
-        UrlOps.registeredDomain(UrlOps.host(col("url"))).as("domain"))
-    }),
-    // per-registered-domain curation stats: map-side partial agg, only
-    // (domain, counters) shuffle
-    "w_domain_stats" -> ((s, dir) =>
-      UrlOps.domainStats(
-        docs(s, dir).select(synthUrl.as("url"), TextAnalytics.isQuality(col("text")).as("q")),
-        "url", "q")),
-    // url-structure frontier features: depth / param count / root flag —
-    // the pre-fetch prioritization signals, map-only string expressions
-    // (%11 docs get a root url so depth 0 / is_root true really occur)
-    "w_url_features" -> ((s, dir) => {
-      val u = when(col("doc_id") % 11 === 0,
-        concat(lit("https://root"), (col("doc_id") % 5).cast("string"), lit(".com/")))
-        .otherwise(synthUrl)
-      docs(s, dir).select(col("doc_id"), u.as("url"))
-        .select(col("doc_id"),
-          UrlOps.pathDepth(col("url")).as("path_depth"),
-          UrlOps.queryParamCount(col("url")).as("n_params"),
-          (UrlOps.pathDepth(col("url")) === 0).as("is_root"))
-    }),
-    // domain-concentration data card: exact Gini + top share over the
-    // per-domain doc counts via the counts-of-counts closed form — the
-    // only ordered relation is distinct count VALUES (metadata-sized);
-    // DECIMAL(38,0) arithmetic, HUGEINT-replayed by the oracle
-    "w_domain_gini" -> ((s, dir) =>
-      graft.stats.CorpusStats.concentration(
-        docs(s, dir).select(
-          UrlOps.registeredDomain(UrlOps.host(synthUrl)).as("domain")), "domain")),
-    // smoothed per-domain quality prior: α pseudo-observations at the
-    // global rate, so thin domains regress to the corpus mean instead of
-    // outranking well-sampled ones — the frontier's ranking signal
-    "w_domain_prior" -> ((s, dir) =>
-      UrlOps.domainPriors(
-        docs(s, dir).select(synthUrl.as("url"), TextAnalytics.isQuality(col("text")).as("q")),
-        "url", "q", alpha = 20)),
-    // recrawl consolidation: canonical-url revision stats (fetch count,
-    // distinct content versions, latest-wins id + fingerprint) — one slim
-    // (canon_url, id, fp) exchange, payloads never move
-    "w_url_revisions" -> ((s, dir) =>
-      UrlOps.urlRevisions(
-        docs(s, dir).select(col("doc_id"), synthUrl.as("url"),
-          TextAnalytics.fingerprint(col("text")).as("fp")),
-        "url", "doc_id", "fp")),
-    // change-rate recrawl scheduling (Cho & Garcia-Molina refresh
-    // policy): revisit interval inversely proportional to the observed
-    // per-url change rate, tiered for the frontier — rides the
-    // urlRevisions aggregate, map-only on top
-    "w_recrawl_sched" -> ((s, dir) => {
-      val id = col("doc_id")
-      // fetch history synthesis: every even doc refetched once (url from
-      // the ORIGINAL id), every 4th refetch observing changed content —
-      // so hot (changed), cold-with-evidence (unchanged refetch) and
-      // cold-no-evidence (single fetch) all occur at the gated scale
-      val base = docs(s, dir).select(id, synthUrl.as("url"),
-        TextAnalytics.fingerprint(col("text")).as("fp"))
-      val refetch = docs(s, dir).filter(id % 2 === 0)
-        .select((id + lit(1000000L)).as("doc_id"), synthUrl.as("url"),
-          TextAnalytics.fingerprint(
-            when(id % 4 === 0, concat(col("text"), lit(" updated"))).otherwise(col("text"))).as("fp"))
-      UrlOps.recrawlSchedule(base.unionAll(refetch), "url", "doc_id", "fp")
-    }),
-    // blocklist pruning as a broadcast anti-join (never isin literals):
-    // the corpus side stays map-only
-    "w_blocklist_keep" -> ((s, dir) => {
-      import s.implicits._
-      val blocked = BlockedDomains.toDF("domain")
-      UrlOps.dropBlockedDomains(docs(s, dir).select(col("doc_id"), synthUrl.as("url")), "url", blocked)
-        .select(col("doc_id"), col("domain"))
-    }),
-    // outlink harvesting → weighted registered-domain edge list: map-only
-    // regexp harvest + explode, then a (src, dst) count with map-side
-    // partials — the corpus never shuffles, only domain pairs
-    "w_link_graph" -> ((s, dir) =>
-      graft.web.LinkGraph.domainEdges(
-        docs(s, dir).select(synthUrl.as("url"), outlinkText.as("text")), "url", "text")),
-    // per-domain triangle count + clustering coefficient: the link-farm
-    // density signal, via degree-ordered orientation (wedge join bounded
-    // O(sqrt m) per vertex — hub triangles counted at their low-degree
-    // neighbors)
-    "w_link_triangles" -> ((s, dir) =>
-      graft.web.LinkGraph.triangleStats(
-        graft.web.LinkGraph.domainEdges(
-          docs(s, dir).select(synthUrl.as("url"), outlinkText.as("text")), "url", "text"))),
-    // fixed-iteration integerized PageRank over the harvested graph: five
-    // join rounds over slim (domain, rank) rows; documents appear only in
-    // the one edge-building pass
-    // weightCap = 3 exercises the link-farm clamp; the oracle keeps the
-    // NAIVE (rank * weight) DIV out_w product, so the hash match also
-    // proves the overflow-safe decomposition is semantics-free
-    "w_domain_rank" -> ((s, dir) =>
-      graft.web.LinkGraph.domainRank(
-        graft.web.LinkGraph.domainEdges(
-          docs(s, dir).select(synthUrl.as("url"), outlinkText.as("text")), "url", "text"),
-        iters = 5, weightCap = 3L)),
-    // the convergence-telemetry twin of the same 5-round run: one slim
-    // (domain, score) join + 1-row agg per round emits (iter, l1_delta);
-    // the oracle recomputes every |r_k − r_{k−1}| sum from the unrolled
-    // chain, so the telemetry integers themselves are driver-gated
-    "w_rank_deltas" -> ((s, dir) =>
-      graft.web.LinkGraph.domainRankWithDeltas(
-        graft.web.LinkGraph.domainEdges(
-          docs(s, dir).select(synthUrl.as("url"), outlinkText.as("text")), "url", "text"),
-        iters = 5, weightCap = 3L, stopDelta = None)._2),
-    // HITS hubs & authorities over the same harvested graph: per round,
-    // two slim joins + integer L1 renormalization — aggregators earn hub
-    // without inlinks, cited references earn auth without outlinks (the
-    // signal PageRank's single score conflates). weightCap = 3 as above.
-    // HITS convergence telemetry over the same 3-round run: the oracle
-    // recomputes both sides' per-round L1 sums from the unrolled chain
-    // (round 0 = the uniform init), so the documented jitter-floor
-    // behavior is gated as integers, mirroring w_rank_deltas
-    "w_hits_deltas" -> ((s, dir) =>
-      graft.web.LinkGraph.hitsRankWithDeltas(
-        graft.web.LinkGraph.domainEdges(
-          docs(s, dir).select(synthUrl.as("url"), outlinkText.as("text")), "url", "text"),
-        iters = 3, weightCap = 3L, stopDelta = None)._2),
-    "w_hits" -> ((s, dir) =>
-      graft.web.LinkGraph.hitsRank(
-        graft.web.LinkGraph.domainEdges(
-          docs(s, dir).select(synthUrl.as("url"), outlinkText.as("text")), "url", "text"),
-        iters = 3, weightCap = 3L)),
-    // anchor-text aggregation over REAL synthesized page bytes: sniff-
-    // gated map-only regexp harvest, relative hrefs resolved against the
-    // page host, one slim (target, page_url, anchor) exchange — payloads
-    // never shuffle. Citations injected into the text exercise variable
-    // inlink counts and the mentions > inlinks (self-repeat) case.
-    "w_anchor_text" -> ((s, dir) => {
-      import s.implicits._
-      val pages = docs(s, dir)
-        .select(col("doc_id"), citedText.as("text"), col("lang"))
-        .as[(Long, String, String)]
-        .map { case (id, t, lang) =>
-          PagesGen.row(id, Option(t).getOrElse(""), Option(lang).getOrElse("und")) }
-      graft.web.LinkGraph.anchorStats(pages.toDF())
-    }),
-    // sitemap parse (sitemaps.org): the crawler's owner-declared
-    // discovery input — map-only regex-over-blocks explode, optional
-    // lastmod exercised both ways by the synthesis
-    "w_sitemap" -> ((s, dir) =>
-      graft.web.Sitemap.entries(
-        docs(s, dir).select(col("doc_id"), sitemapXml.as("xml")), "doc_id", "xml")),
-    // sitemapindex nesting (the 50k-url overflow mechanism): every 4th
-    // doc serves an INDEX payload instead of a urlset; discover()
-    // classifies entries as page urls vs child sitemaps to fetch next
-    "w_sitemap_index" -> ((s, dir) => {
-      val id = col("doc_id")
-      val idxXml = concat(lit("<?xml version=\"1.0\"?><sitemapindex>"),
-        lit("<sitemap><loc>https://site"), (id % 13).cast("string"),
-        lit(".com/sitemap-a.xml</loc><lastmod>2024-01-0"), (id % 9 + 1).cast("string"),
-        lit("</lastmod></sitemap>"),
-        when(id % 8 === 0, concat(lit("<sitemap><loc>https://site"), (id % 13).cast("string"),
-          lit(".com/sitemap-b.xml</loc></sitemap>"))).otherwise(lit("")),
-        lit("</sitemapindex>"))
-      val xml = when(id % 4 === 0, idxXml).otherwise(sitemapXml)
-      graft.web.Sitemap.discover(
-        docs(s, dir).select(id, xml.as("xml")), "doc_id", "xml")
-    }),
-    // the crawl-side chain composed end to end: sitemap DISCOVERY →
-    // robots GATE (a $-anchored Disallow /sm2 on .com hosts) → per-host
-    // Crawl-delay directives (.org hosts declare 3 s, the rest take the
-    // 1 s default) → politeness SCHEDULE with per-host slot widths. Every
-    // stage is an already-gated operator; this gate proves they compose.
-    "q_crawl_plan" -> ((s, dir) => {
-      val entries = graft.web.Sitemap.entries(
-        docs(s, dir).select(col("doc_id"), sitemapXml.as("xml")), "doc_id", "xml")
-        .select(col("loc").as("url")).distinct()
-      val hosts = entries.select(UrlOps.host(col("url")).as("host")).distinct()
-      val body = concat(
-        lit("User-agent: graftbot\n"),
-        when(col("host").endsWith(".com"), lit("Disallow: /sm2$\n")).otherwise(lit("")),
-        when(col("host").endsWith(".org"), lit("Crawl-delay: 3\n")).otherwise(lit("")),
-        lit("Disallow: /private\n"))
-      val robots = hosts.withColumn("body", body)
-      val gated = graft.web.RobotsTxt.gate(entries, "url", robots, "host", "body", "graftbot/1.0")
-        .where(col("robots_allowed")).select(col("url"))
-      val delays = graft.web.RobotsTxt.directivesFrame(robots, "host", "body", "graftbot/1.0")
-      graft.web.Frontier.scheduleWithDelays(gated, "url", numWorkers = 8,
-        delays, defaultDelayMs = 1000L)
-    }),
-    // robots.txt gate (RFC 9309): per-host bodies parsed once into a slim
-    // rules relation, urls evaluated map-side after the host join. The
-    // synthesis exercises group selection (an OtherBot disallow-all decoy
-    // that must NOT apply), longest-match with Allow override
-    // (/Docs/Page12 beats /Docs/Page1), the $ end anchor (/Docs/Page4$
-    // blocks Page4 but not Page40–49, cdn hosts only), and absent robots
-    // (.net hosts have none → allowed by default)
-    "w_robots_txt" -> ((s, dir) => {
-      val u = docs(s, dir).select(col("doc_id"), synthUrl.as("url"))
-      val hosts = u.select(UrlOps.host(col("url")).as("host")).distinct()
-        .filter(!col("host").endsWith(".net"))
-      // the synthesis exercises every decision path ON the gated corpus:
-      // the OtherBot decoy (group selection), Allow-beats-shorter-Disallow
-      // (/Docs/Page12 over /Docs/Page1), the `$` end anchor on an ODD page
-      // (/Docs/Page7$ — cdn hosts are odd ids, so it genuinely fires, and
-      // id≡207 (mod 300) carries a fragment the gate must strip before the
-      // anchor can match), path+query matching (/*?id= fires on the %4==2
-      // urls), and a DUPLICATE graftbot group later in the file whose
-      // rules must merge per RFC 9309 §2.2.1
-      val robots = hosts.withColumn("body", concat(
-        lit("User-agent: OtherBot\nDisallow: /\n\n# crawler group\n" +
-          "User-agent: graftbot\nDisallow: /Docs/Page1\nAllow: /Docs/Page12\n"),
-        when(col("host").startsWith("cdn."), lit("Disallow: /Docs/Page7$\n"))
-          .otherwise(lit("")),
-        lit("\n# hand-edited later addition: same agent, separate group\n" +
-          "User-agent: graftbot\nDisallow: /*?id=\n")))
-      graft.web.RobotsTxt.gate(u, "url", robots, "host", "body", "graftbot/1.0")
-    }),
-    // crawl-frontier politeness scheduling: hosts pinned to one worker
-    // (map-side hash), per-host fetch sequence + delay slots from ONE
-    // host-key exchange shared with the window rank
-    "w_frontier" -> ((s, dir) => {
-      val u = docs(s, dir).select(col("doc_id"), synthUrl.as("url"))
-      // doc_id tie-break: the synthetic url space COLLIDES at sf0.1
-      // (ids 3900 apart can synthesize one url), and duplicate urls tie
-      // the md5 sort key — nondeterministic row_number without it
-      graft.web.Frontier.schedule(u, "url", numWorkers = 4, perHostDelayMs = 500L,
-        tieCols = Seq("doc_id"))
-    }),
-    // deflate-compressibility quality signal (rows-only: no deflate in
-    // DuckDB; semantics pinned by EntropySpec — the long-period
-    // repetition gate t_repetition's bigram horizon misses). Every 25th
-    // doc is replaced by repeated spam filler so BOTH branches of the
-    // gate run on the driver corpus, not just in the spec
-    "t_entropy" -> ((s, dir) =>
-      graft.text.Entropy.stats(
-        docs(s, dir).withColumn("text",
-          when(col("doc_id") % 25 === 0,
-            repeat(lit("subscribe now and buy cheap pills "), 20))
-            .otherwise(col("text"))),
-        "doc_id", "text")),
-    // templated-page families via DOM-skeleton fingerprinting: map-only
-    // regexp harvest of the tag sequence (payload never shuffles), one
-    // slim (32-hex fp) group-by — the structure-level dedup signal the
-    // text-level family cannot see
-    "w_template_fp" -> ((s, dir) =>
-      graft.web.Templates.templateGroups(
-        docs(s, dir).select(col("doc_id"), templHtml.as("html")),
-        "doc_id", "html", minPages = 2L)),
-    // cross-domain mirror detection: domains serving the same content
-    // under different hosts — every 7th doc synthesized ALSO under a
-    // 'mirror-' twin host (the full-mirror structure a per-url dedup and
-    // a per-domain cap both miss); pairing is fp-keyed with a boilerplate
-    // hot-key bound, gate = containment of the smaller side ≥ 50 %
-    "w_mirror_pairs" -> ((s, dir) => {
-      def slim(d: DataFrame) = d.select(
-        UrlOps.registeredDomain(UrlOps.host(synthUrl)).as("domain"),
-        TextAnalytics.fingerprint(col("text")).as("fp"))
-      val base = slim(docs(s, dir))
-      val mirrored = slim(docs(s, dir).filter(col("doc_id") % 7 === 0))
-        .withColumn("domain", concat(lit("mirror-"), col("domain")))
-      graft.web.Mirrors.mirrorPairs(base.unionAll(mirrored), "domain", "fp", tauPct = 50)
-    }),
-    // mirror FAMILIES: transitive closure of the pair relation — one
-    // curation decision per family (keep the lexicographic-min member);
-    // min-label propagation over whole-domain pairs, never fingerprints
-    "w_mirror_families" -> ((s, dir) => {
-      // TWO mirror tiers chain a->mirror-a->mirror2-a transitively: the
-      // full clone pairs with both others, the %14 sub-clone only with
-      // its supersets — the family must still unite all three. The
-      // corpus is fingerprinted ONCE (lazy checkpoint); both clone tiers
-      // are filters over that pass, not re-normalizations (the 3×-md5
-      // version benched 8.7 s at sf0.1; this shape shares the scan)
-      val base0 = docs(s, dir).select(col("doc_id"),
-          UrlOps.registeredDomain(UrlOps.host(synthUrl)).as("domain"),
-          TextAnalytics.fingerprint(col("text")).as("fp"))
-        .localCheckpoint(eager = false)
-      val m1 = base0.filter(col("doc_id") % 7 === 0)
-        .withColumn("domain", concat(lit("mirror-"), col("domain")))
-      val m2 = base0.filter(col("doc_id") % 14 === 0)
-        .withColumn("domain", concat(lit("mirror2-"), col("domain")))
-      graft.web.Mirrors.mirrorFamilies(
-        base0.unionAll(m1).unionAll(m2).drop("doc_id"), "domain", "fp", tauPct = 50)
-    }),
-    // writing-system detection over multi-script synthesis: four
-    // replace-and-measure passes + argmax, map-only codegen
-    "t_script" -> ((s, dir) => {
-      val st = multiScriptText
-      docs(s, dir).select(col("doc_id"),
-        TextAnalytics.scriptChars(st, "latin").as("latin_chars"),
-        TextAnalytics.scriptChars(st, "han").as("han_chars"),
-        TextAnalytics.scriptChars(st, "cyrillic").as("cyr_chars"),
-        TextAnalytics.scriptChars(st, "arabic").as("ara_chars"),
-        TextAnalytics.dominantNonLatin(st).as("dominant_nonlatin"))
-    }),
-    // PII scrub: three codegen'd regexp passes + audit counts, map-only
-    "t_redact" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"), piiText.as("pii"))
-        .select(col("doc_id"),
-          Redactor.emailCount(col("pii")).as("n_emails"),
-          Redactor.ipCount(col("pii")).as("n_ips"),
-          Redactor.phoneCount(col("pii")).as("n_phones"),
-          Redactor.redact(col("pii")).as("redacted"))),
-    // token-window packing for a fixed-context trainer: slice/sequence/
-    // array_join collection exprs, zero shuffle
-    "t_chunks" -> ((s, dir) =>
-      Chunker.chunks(docs(s, dir), "doc_id", "text", window = 16, stride = 12)),
-    // eval-set decontamination: benchmark = 28-token excerpts of every
-    // 101st document (benchmarks quote web text); corpus docs sharing any
-    // word-8-gram with an excerpt are flagged with their overlap count
-    "q_decontaminate" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Decontaminate.overlap(d, "doc_id", "text", benchExcerpt(d), "bench_text", 8)
-    }),
-    // span-localized variant: WHERE the eval overlap sits in each doc —
-    // the input to surgical excision instead of whole-doc removal
-    "q_decontaminate_spans" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Decontaminate.overlapSpans(d, "doc_id", "text", benchExcerpt(d), "bench_text", 8)
-    }),
-    // the composed E2E export: clean gates → exact dedup → decontaminate
-    // → redact → chunk, over the PII-augmented corpus so every stage has
-    // real work to do (see pipeline/TrainingExport for the shuffle budget)
-    "q_training_export" -> ((s, dir) => {
-      // the PII synthesis is staged: unstaged, every downstream text
-      // reference (the clean gate alone reads it ~30 ways) re-inlines the
-      // concat/CASE chains and the first pipeline stage blows janino's
-      // 64 KB limit (PlanSpec's fallback-off gate catches it); the
-      // checkpoint also computes the fixture once for both consumers
-      val d = docs(s, dir).select(col("doc_id"), piiText.as("text"))
-        .localCheckpoint(false)
-      graft.pipeline.TrainingExport.export(d, "doc_id", "text", benchExcerpt(d), "bench_text")
-    }),
-    // deterministic balanced shard packing (trainer feed): size-bucket
-    // round-robin; windows partition by (bucket, sub) so no key funnels
-    // the corpus — see pipeline/Sharder for the balance bound
-    "q_shard_pack" -> ((s, dir) => {
-      val weighted = docs(s, dir).select(col("doc_id"),
-        TextAnalytics.tokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.pipeline.Sharder.assignShards(weighted, "doc_id", "n_tokens",
-        numShards = 8, bucketWidth = 64, subGroups = 4)
-    }),
-    // seeded epoch shuffle: the reproducible global training-order
-    // permutation (same seed → byte-identical order; new seed → fresh
-    // epoch permutation) — one shard-key Exchange + in-partition sort,
-    // never a global range sort
-    "q_epoch_shuffle" -> ((s, dir) =>
-      graft.pipeline.Sharder.epochOrder(
-        docs(s, dir).select(col("doc_id")), "doc_id", seed = 7L, numShards = 8)
-        .select(col("doc_id"), col("shard"), col("pos"))),
-    // curriculum schedule: LM-scored quality tiers consumed best-first,
-    // seeded reproducible order within each (tier, shard) — the
-    // curriculum-learning feed; one (tier, shard) exchange
-    "q_curriculum" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val model = LangModel.bigramModel(d.where(col("lang") === "en"), "doc_id", "text", minCount = 2)
-      val scored = LangModel.lmScore(d, model, "doc_id", "text")
-        .select(col("doc_id"), col("avg_ppm"))
-      val tiers = graft.sample.Tiering.assignTiers(scored, "avg_ppm", numTiers = 3)
-        .select(col("doc_id"), col("tier"))
-      graft.pipeline.Sharder.curriculumOrder(tiers, "doc_id", "tier",
-          seed = 7L, numShards = 8)
-        .select(col("doc_id"), col("tier").cast("long").as("tier"),
-          col("shard"), col("pos"))
-    }),
-    // token-budget sequence packing (trainer feed): ONE stream-key
-    // Exchange, prefix-sum + offset windows share its sort, bins from
-    // integer DIV — docs never split, bins within one doc of capacity
-    "q_seq_pack" -> ((s, dir) => {
-      val weighted = docs(s, dir).select(col("doc_id"),
-        TextAnalytics.tokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.pipeline.SeqPacker.packSequences(weighted, "doc_id", "n_tokens",
-        capacity = 256L, streams = 4)
-    }),
-    // GPT-style fixed-block slicing (group_texts): exact 256-token blocks
-    // per stream, documents split across block boundaries — same single
-    // stream-key exchange + prefix-sum window as q_seq_pack, different
-    // trainer-feed contract (zero padding vs whole-doc bins)
-    "q_block_pack" -> ((s, dir) => {
-      val weighted = docs(s, dir).select(col("doc_id"),
-        TextAnalytics.tokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.pipeline.SeqPacker.sliceBlocks(weighted, "doc_id", "n_tokens",
-        blockTokens = 256L, streams = 4)
-    }),
-    // per-registered-domain quota (≤ 5 docs, hash-order subsample): exact
-    // two-phase top-k — sub-stream prefilter bounds the mega-domain hot
-    // key; the one-phase oracle proves the prefilter changes nothing
-    "w_domain_cap" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), synthUrl.as("url"))
-      UrlOps.capPerDomain(d, "url", "doc_id", maxPerDomain = 5, subStreams = 4,
-          domainOut = Some("domain"))
-        .select(col("doc_id"), col("domain"))
-    }),
-    // per-source length distribution (exact quartiles, ×4-integerized so
-    // the interpolated values hash engine-portably)
-    "t_len_quartiles" -> ((s, dir) =>
-      graft.stats.CorpusStats.quartilesX4(docs(s, dir), "source", "n_chars")),
-    // one-row corpus data card: exact doc/token/char totals plus
-    // language/source/distinct-text cardinalities in a single map-side-
-    // partial aggregate (distinct keys are slim: lang, source, 32-hex md5)
-    "q_corpus_card" -> ((s, dir) =>
-      graft.stats.CorpusStats.corpusCard(docs(s, dir), "text", "lang", "source")),
-    // point lookup through the snapshot table's manifest stats + bloom
-    // sidecars: three url-keyed commits, then readPoint — range pruning,
-    // bloom rejection, and the row-level equality all end-to-end; the
-    // oracle replays the lookup as plain SQL over the same synthesis
-    // (sf0.1's colliding urls make multi-row hits real)
-    "q_table_point" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-pt").toString
-      val t = new graft.table.SnapshotTable(s"$root/t", statsCol = Some("url"))
-      val d = docs(s, dir).select(col("doc_id"), synthUrl.as("url"), col("n_chars"))
-      (0 until 3).foreach(i => t.append(d.filter(col("doc_id") % 3 === i), s"c$i"))
-      val probe = d.filter(col("doc_id") === 7).select(col("url")).collect()(0).getString(0)
-      t.readPoint(s, probe).get
-    }),
-    // incrementally-maintained aggregate view: three crawls append to a
-    // snapshot table, the view refreshes after each by reading ONLY the
-    // delta (readAppendsSince) and upserting merged (count, sum) per
-    // group — end state must equal the full group-by (the oracle);
-    // the delta-only/idempotence properties are IncrementalViewSpec-gated
-    "q_incr_view" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-iview").toString
-      val src = new graft.table.SnapshotTable(s"$root/src")
-      val d = docs(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
-      val view = new graft.table.IncrementalView(s"$root/src", s"$root/view", "source", "n_chars")
-      (0 until 3).foreach { i =>
-        src.append(d.filter(col("doc_id") % 3 === i), s"crawl-$i")
-        view.refresh(s)
-      }
-      view.read(s).get
-    }),
-    // Morton/z-order interleave (the 2-D clustering key behind
-    // ZOrder.clusterByZ): pure shift/mask integer arithmetic, map-only;
-    // the locality/skipping claim itself is quantified in ZOrderSpec
-    "q_zorder" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
-        (col("doc_id") % 1024).as("za"), ((col("doc_id") * 37) % 1024).as("zb"))
-      d.select(col("doc_id"), col("za"), col("zb"),
-        graft.table.ZOrder.zValue(col("za"), col("zb"), 10).as("zval"))
-    }),
-    // KMV distinct sketch (custom TypedImperativeAggregate, k=16 minima
-    // of a portable 40-bit md5 hash): per-source distinct-text estimate
-    // with the exact count alongside — O(k) state per group vs exact
-    // distinct's expand + second shuffle; ~25 distinct per source at any
-    // sf, so the ESTIMATOR regime (not the exact-under-k fallback) is
-    // what the oracle replays
-    "q_kmv_distinct" -> ((s, dir) =>
-      graft.stats.CorpusStats.distinctSketch(docs(s, dir), "source", "text", k = 16)),
-    // SpaceSaving heavy hitters over the registered-domain space: k=64 ≥
-    // the 39 distinct domains, so the summary is provably EXACT (err 0,
-    // merge-order-invariant) and the oracle replays it as a plain
-    // count(*). One ObjectHashAggregate with map-side ≤k-entry partials;
-    // the ESTIMATOR regime (k < distinct, where only the guarantee
-    // count−err ≤ true ≤ count holds) is spec-gated in CorpusOpsSpec.
-    "q_heavy_domains" -> ((s, dir) => {
-      val d = docs(s, dir).select(
-        UrlOps.registeredDomain(UrlOps.host(synthUrl)).as("domain"))
-      graft.stats.CorpusStats.heavyHitters(d, Seq.empty, "domain", lit(1L), k = 64)
-        .select(explode(col("hh")).as("e"))
-        .select(col("e.key").as("domain"), col("e.count").as("cnt"),
-          col("e.err").as("err"))
-        .orderBy(col("cnt").desc, col("domain")).limit(10)
-    }),
-    // per-source length quartiles from the bottom-k-by-hash SAMPLE sketch
-    // (the bounded-state twin of t_len_quartiles; k=16 < group sizes, so
-    // the ESTIMATOR regime is what the oracle replays here — the exact
-    // regime is spec-gated)
-    "q_quantile_sample" -> ((s, dir) =>
-      graft.stats.CorpusStats.quantileSketch(
-        docs(s, dir), "source", "doc_id", "n_chars", k = 16)),
-    // ---- event-stream operators (crawl-log shape) ----
-    // gap-based sessionization over the events table: one shuffle on the
-    // entity key, two in-partition window passes sharing it
-    "e_sessionize" -> ((s, dir) =>
-      graft.events.EventOps.sessionize(s.read.parquet(s"$dir/events.parquet"),
-        "user_id", "ts", "event_id", gapMicros = SessionGapUs)),
-    // funnel: earliest in-order view → click → purchase walk per user;
-    // slim per-step aggregates chained on one reused user-key
-    // partitioning — never a per-user history sort
-    // the event_id % 7 sparsifier thins each user's history so stalled
-    // walks actually occur (full histories complete trivially): depths
-    // 1/2/3 all populated at the gated scale
-    "e_funnel" -> ((s, dir) =>
-      graft.events.EventOps.funnel(
-        s.read.parquet(s"$dir/events.parquet").filter(col("event_id") % 7 === 0),
-        "user_id", "event_type", "ts", Seq("view", "click", "purchase"))),
-    // event-type transitions: the order-1 Markov matrix per entity
-    // sequence — one entity-key exchange + a metadata-sized pair rollup
-    "e_transitions" -> ((s, dir) =>
-      graft.events.EventOps.transitions(s.read.parquet(s"$dir/events.parquet"),
-        "user_id", "event_type", "ts", "event_id")),
-    // redirect-chain resolution by POINTER JUMPING: R slim self-joins
-    // follow 2^R hops (6 rounds = 64); synthetic chains of 7 with two
-    // planted 2-cycles — loops come back resolved=false, never hang
-    "w_redirects" -> ((s, dir) => {
-      val u = docs(s, dir).select(col("doc_id").as("id"),
-        concat(lit("https://r"), (col("doc_id") % 13).cast("string"),
-          lit(".example/p"), col("doc_id").cast("string")).as("url"))
-      val fwd = u.as("a").join(u.as("b"), col("b.id") === col("a.id") + 1)
-        .filter(col("a.id") % 7 =!= 6)
-        .select(col("a.url").as("src"), col("b.url").as("dst"))
-      val back = u.as("a").join(u.as("b"), col("b.id") === col("a.id") - 1)
-        .filter(col("a.id") % 7 === 6 && col("a.id") % 41 === 0)
-        .select(col("a.url").as("src"), col("b.url").as("dst"))
-      graft.web.Redirects.resolve(fwd.unionAll(back), "src", "dst", rounds = 6)
-    }),
-    // cohort retention: first-seen-day cohorts × activity-day offsets —
-    // one entity-key exchange, in-partition (user, cohort, offset) dedup
-    // (group key ⊇ the partition key), then a metadata-sized cell agg
-    "e_retention" -> ((s, dir) =>
-      graft.events.EventOps.retention(s.read.parquet(s"$dir/events.parquet"),
-        "user_id", "ts", periodMicros = 86400000000L)),
-    // as-of pick: latest event per entity before the cutoff — the recency
-    // dedup a re-crawl pipeline applies per url (hash agg with map-side
-    // partial, deliberately not a window rank; see events/EventOps)
-    "e_latest_asof" -> ((s, dir) =>
-      graft.events.EventOps.latestAsOf(s.read.parquet(s"$dir/events.parquet"),
-        "user_id", "ts", "event_id", cutoffMicros = AsOfCutoffUs, payloadCols = Seq("event_type"))),
-    // as-of JOIN (click → latest prior view per user): union + window —
-    // ONE key shuffle over |L|+|R| rows, never the quadratic inequality
-    // join; left-outer (unmatched clicks keep NULLs). DuckDB's native
-    // ASOF LEFT JOIN is the oracle.
-    "e_asof_join" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), unix_micros(col("ts").cast("timestamp")).as("ts_us"),
-          col("user_id"), col("event_type"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts_us"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts_us"),
-          col("event_id").as("view_id"), col("ts_us").as("view_ts_us"))
-      graft.events.EventOps.asofJoin(clicks, views, "user_id", "ts_us",
-        Seq("view_id", "view_ts_us"))
-    }),
-    // interval-overlap (range) JOIN: user sessions × synthetic outage
-    // windows, via the bucketed equi-join with canonical-bucket dedup —
-    // never the quadratic inequality BNLJ. Overlap duration in exact µs.
-    "e_range_join" -> ((s, dir) => {
-      val sessions = graft.events.EventOps.sessionize(
-          s.read.parquet(s"$dir/events.parquet"),
-          "user_id", "ts", "event_id", gapMicros = SessionGapUs)
-        .select(col("user_id"), col("session_id"), col("start_us"), col("end_us"))
-      val windows = s.range(RangeNumWindows.toLong).select(
-        col("id").as("window_id"),
-        (lit(RangeEpoch0Us) + col("id") * RangeSpacingUs).as("w_start_us"),
-        (lit(RangeEpoch0Us) + col("id") * RangeSpacingUs +
-          (lit(2L) + col("id") % 4) * RangeHourUs).as("w_end_us"))
-      graft.events.EventOps.rangeJoin(sessions, windows,
-          "start_us", "end_us", "w_start_us", "w_end_us", RangeBucketUs)
-        .select(col("user_id"), col("session_id"), col("window_id"),
-          (least(col("end_us"), col("w_end_us")) -
-            greatest(col("start_us"), col("w_start_us"))).as("overlap_us"))
-    }),
-    // ---- deduplication ----
-    // passage-level boilerplate mass: word-8-grams shared by ≥ 2 distinct
-    // documents (cookie banners / footers document-level dedup misses);
-    // one explode into slim (id, md5) rows, df agg, join-back, doc agg
-    "d_freq_grams" -> ((s, dir) =>
-      Dedup.frequentGramStats(docs(s, dir), "doc_id", "text", 8, 2, 50)),
-    // winnowing (MOSS) fingerprint selection: ~2/(w+1) of the gram
-    // stream, with the shared-passage guarantee — map-only nested HOFs,
-    // one explode to slim (id, pos, fp) rows
-    "d_winnow_fp" -> ((s, dir) =>
-      graft.dedup.Winnow.winnowFingerprints(docs(s, dir), "doc_id", "text", k = 5, w = 4)),
-    // the pairing consumer: docs sharing ≥ 3 selected fingerprints —
-    // the copy-localization join at the winnowed row budget. The
-    // corpus-wide gram-hash SELECTION pass runs ONCE and persists as the
-    // slim (id, pos, fp) relation (the BM25 scan/index twin pattern):
-    // pairing then joins the stored selection — join cost only, no
-    // second full-corpus md5 pass. Same oracle as the inline form.
-    "d_winnow_pairs" -> ((s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-winnow-fp").toString
-      graft.dedup.Winnow.winnowFingerprints(docs(s, dir), "doc_id", "text", k = 5, w = 4)
-        .write.mode("overwrite").parquet(path)
-      graft.dedup.Winnow.sharedPassagePairs(
-        s.read.parquet(path), "doc_id", minShared = 3L, maxFpDocs = 50)
-    }),
-    // CCNet-style line-level boilerplate removal: slim (id, line_md5)
-    // document-frequency catalog (bounded, broadcast as ONE array row),
-    // then a map-only order-preserving cleanse — corpus text never
-    // shuffles. Input lines synthesized by [[multilineText]].
-    "d_drop_freq_lines" -> ((s, dir) =>
-      graft.dedup.LineDedup.dropFrequentLines(
-        docs(s, dir).withColumn("text", multilineText), "doc_id", "text", minDf = 30L)),
-    // cross-document paragraph dedup, first occurrence wins (RefinedWeb
-    // rule): slim (fp, id, pos) reduce, per-doc drop arrays, map-only
-    // positional cleanse — the exact complement of the frequency-
-    // threshold catalog above
-    "d_drop_dup_paras" -> ((s, dir) =>
-      graft.dedup.LineDedup.dropDupParagraphs(
-        docs(s, dir).withColumn("text", multilineText), "doc_id", "text")),
-    // exact duplicated-substring spans (Lee et al. 2021 ExactSubstr rule,
-    // first occurrence wins): slim (fp, id, pos) 8-gram reduce, ONE
-    // fp-keyed exchange, gaps-and-islands merge over only the DUPLICATED
-    // positions. Input enriched by [[substrText]] so cross-doc AND
-    // within-doc duplicated passages both fire.
-    "d_substring_spans" -> ((s, dir) =>
-      graft.dedup.SubstringDedup.duplicatedSpans(
-        docs(s, dir).withColumn("text", substrText), "doc_id", "text", k = 8)),
-    // in-place span removal: per-doc bounded span arrays LEFT-join the
-    // corpus (doc-keyed, AQE-broadcast when small), map-only positional
-    // token filter — document text moves at most once
-    "d_drop_substrings" -> ((s, dir) =>
-      graft.dedup.SubstringDedup.dropDuplicatedSpans(
-        docs(s, dir).withColumn("text", substrText), "doc_id", "text", k = 8)),
-    // WARC container round trip: documents framed into per-shard
-    // .warc.gz archives (one gzip member per record, ISO 28500 framing)
-    // and exploded back — url, timestamp, content-type, and every payload
-    // byte (md5-gated) must survive the container. ONE shard-keyed
-    // exchange to assemble; parse is map-only.
-    "q_warc_roundtrip" -> ((s, dir) => {
-      val base = docs(s, dir).select(
-        concat(lit("doc://"), col("doc_id").cast("string")).as("url"),
-        (lit(1700000000000L) + col("doc_id") * 1000L).as("ts_ms"),
-        lit("text/plain").as("ct"),
-        col("text").cast("binary").as("payload"))
-      val archives = graft.warc.WarcShards.toArchives(
-        base, "url", "ts_ms", "ct", "payload", shards = 8, gzip = true)
-      graft.warc.WarcShards.parse(archives, "warc")
-        .select(col("url"), col("warc_ts_ms"), col("content_type"),
-          col("content_length"), md5(col("payload")).as("payload_md5"))
-    }),
-    // CDX index over assembled .warc.gz archives: the index is built in
-    // the SAME serialization pass as the blobs (offsets can never drift),
-    // then flattened map-only into (surt, url, ts_ms, digest) rows. The
-    // gate proves framing + indexing lose nothing: every synthesized
-    // messy url (mixed case, ports, fragments) must surface exactly once
-    // with its SURT key and payload md5 — the oracle recomputes all three
-    // straight from the documents table, never touching a WARC byte.
-    "w_cdx_index" -> ((s, dir) => {
-      val base = docs(s, dir).select(
-        synthUrl.as("url"),
-        (lit(1700000000000L) + col("doc_id") * 1000L).as("ts_ms"),
-        lit("text/html").as("ct"),
-        col("text").cast("binary").as("payload"))
-      val archives = graft.warc.WarcShards.toArchivesIndexed(
-        base, "url", "ts_ms", "ct", "payload", shards = 8, gzip = true)
-      graft.warc.WarcShards.cdxIndex(archives)
-        .select(col("surt"), col("url"), col("ts_ms"), col("digest"))
-    }),
-    // CDX point fetch: probe rows (digest first hex in 0–3, ~1/4 of the
-    // corpus) are answered by slicing ONLY their (offset, length) spans
-    // out of the archive blobs — Warc.readRecordAt parses one gzip member
-    // per pick, the ranged-GET read path of a 100 TB archive store. The
-    // archive table is localCheckpoint'd once (it is a committed table in
-    // production, read by both the indexer and the fetcher); picks
-    // broadcast, archives never shuffle. The oracle selects the same
-    // subset straight from documents: url, timestamp, and payload md5
-    // must survive assembly → index → random access.
-    "q_warc_fetch" -> ((s, dir) => {
-      val base = docs(s, dir).select(
-        synthUrl.as("url"),
-        (lit(1700000000000L) + col("doc_id") * 1000L).as("ts_ms"),
-        lit("text/html").as("ct"),
-        col("text").cast("binary").as("payload"))
-      val archives = graft.warc.WarcShards.toArchivesIndexed(
-        base, "url", "ts_ms", "ct", "payload", shards = 8, gzip = true)
-        .localCheckpoint()
-      val picks = graft.warc.WarcShards.cdxIndex(archives)
-        .where(substring(col("digest"), 1, 1).isin("0", "1", "2", "3"))
-        .select(col("shard"), col("offset"), col("length"))
-      graft.warc.WarcShards.fetchBySpans(archives.drop("idx"), picks)
-        .select(col("url"), col("warc_ts_ms"),
-          md5(col("payload")).as("payload_md5"))
-    }),
-    "d_exact_groups" -> ((s, dir) =>
-      Dedup.exactGroups(docs(s, dir), "doc_id", "text")),
-    // asymmetric containment (quote detection): every %5==0 document
-    // gains a synthetic QUOTE twin (its first 12 tokens, id +100000) in
-    // the same %250 family — containment must flag quote⊂original at
-    // ~10^6 ppm where Jaccard stays small; unrelated same-family pairs
-    // exercise the sub-threshold prune
-    "d_containment" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val quotes = d.where(col("doc_id") % 5 === 0).select(
-        (col("doc_id") + 100000L).as("doc_id"),
-        array_join(slice(split(trim(col("text")), "\\s+"), 1, 12), " ").as("text"))
-      val all = d.union(quotes).withColumn("fam", pmod(col("doc_id"), lit(250L)))
-      Dedup.containmentWithinGroups(all, "doc_id", "text", "fam",
-        n = 3, minPpm = 500000L)
-    }),
-    // incremental (delta) dedup: the new-crawl batch (doc_id % 10 ∈ {8,9})
-    // against the fingerprint index of the committed corpus (% 10 < 8) —
-    // the at-scale shape where the corpus is never re-deduplicated, only
-    // the delta anti-joins a slim key index. Deterministic duplicate texts
-    // (mirrored in the oracle) make BOTH drop arms fire: % 7 == 0 docs
-    // share one boilerplate across index and batch (seen-in-index drop);
-    // batch-only % 3 == 0 docs share another (within-batch keep-min drop).
-    "d_delta_new" -> ((s, dir) => {
-      val d = docs(s, dir).withColumn("text", deltaText)
-      val index = d.filter(col("doc_id") % 10 < 8)
-        .select(TextAnalytics.fingerprint(col("text")).as("fp"))
-      Dedup.dropSeenDocuments(
-          d.filter(col("doc_id") % 10 >= 8), "doc_id",
-          TextAnalytics.fingerprint(col("text")), index, "fp")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-    "d_minhash_sig" -> ((s, dir) =>
-      Dedup.minhashSignatures(docs(s, dir), "doc_id", "text", 8)
-        .withColumnRenamed("id", "doc_id")),
-    // content-defined chunking: native O(n) rolling-hash cuts
-    // (graft_cdc_cuts), row-local explode — the insertion-robust passage
-    // partition; only slim (id, idx, start, len, md5) rows leave the stage
-    "d_cdc_chunks" -> ((s, dir) =>
-      graft.dedup.CdcDedup.chunks(docs(s, dir), "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")),
-    // chunks shared across documents: one chunk-hash aggregate — the
-    // cross-crawl shared-passage catalog fixed-offset dedup misses
-    "d_cdc_shared" -> ((s, dir) =>
-      graft.dedup.CdcDedup.sharedChunks(
-        graft.dedup.CdcDedup.chunks(docs(s, dir), "doc_id", "text"))),
-    // cross-version chunk delta: the delta-encoding ratio between two
-    // crawls — %3 docs get a PREFIX edit, the case CDC keeps near-full
-    // reuse on where fixed-offset chunking reports ~0
-    "d_cdc_delta" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val v2 = d.select(col("doc_id"),
-        when(col("doc_id") % 3 === 0, concat(lit("UPDATE "), col("text")))
-          .otherwise(col("text")).as("text"))
-      graft.dedup.CdcDedup.versionDelta(
-          d.select(col("doc_id"), col("text")), v2, "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")
-    }),
-    // MinHash Jaccard ESTIMATOR on the banded candidates: matches·10^6
-    // DIV k from the signatures already in hand — no second text pass
-    // (the exact verify re-shingles both sides of every pair)
-    "d_minhash_est" -> ((s, dir) =>
-      Dedup.minhashEstimates(docs(s, dir), "doc_id", "text", 8, 2)),
-    "d_lsh_pairs" -> ((s, dir) =>
-      Dedup.lshCandidatePairs(docs(s, dir), "doc_id", "text", 8, 2)),
-    "d_jaccard_pairs" -> ((s, dir) =>
-      Dedup.jaccardWithinGroups(docs(s, dir), "doc_id", "text", "source").filter(col("inter") > 0)),
-    "d_simhash_sig" -> ((s, dir) => {
-      val d = docs(s, dir)
-      d.select(col("doc_id"), Dedup.simhash64Native(d, "text").as("simhash"))
-    }),
-    // D5 pair stage (the 100-TB shape: banded chunk equi-join → distinct →
-    // bit_count verify). The sf corpus has no exact duplicates, so the
-    // input is the corpus UNIONed with an identical-text copy (ids offset
-    // by 10^6): 500 hamming-0 pairs exist by construction, plus any
-    // organic ones — deterministic rows for the driver's gate; bit-level
-    // semantics are proven by brute-force parity in DedupSpec. xxhash64
-    // keeps this oracle-free (rows+schema check only).
-    "d_simhash_pairs" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val copies = d.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      Dedup.simhashNearDupPairs(d.union(copies), "doc_id", "text", 3)
-    }),
-    // D3 → D4 chain: LSH candidates verified with exact shingle Jaccard —
-    // the near-dup plan you actually run at corpus scale
-    "d_lsh_jaccard" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val cand = Dedup.lshCandidatePairs(d, "doc_id", "text", 8, 2)
-      Dedup.jaccardForPairs(d, cand, "doc_id", "text")
-    }),
-    // D3→D4→survivor chain as ONE operator: the "give me the deduped
-    // corpus" call a pipeline user actually makes (LSH candidates → exact
-    // Jaccard ≥ 0.5 → greedy keep-min-id → anti-join)
-    "d_drop_neardup" -> ((s, dir) =>
-      Dedup.dropNearDuplicates(docs(s, dir).select(col("doc_id"), col("text")), "doc_id", "text")
-        .select(col("doc_id"))),
-    // same chain with the connected-components survivor policy (one
-    // min-id survivor per duplicate CLUSTER, computed by min-label
-    // propagation); oracle = recursive-CTE reachability over the same
-    // verified pair set
-    "d_drop_neardup_cc" -> ((s, dir) =>
-      Dedup.dropNearDuplicatesCC(docs(s, dir).select(col("doc_id"), col("text")), "doc_id", "text")
-        .select(col("doc_id"))),
-    // quality-ranked survivor: same clusters as the CC variant, but each
-    // keeps its LONGEST member (token count; ties → min id) — the "keep
-    // the best copy, not the first-crawled copy" election; two slim
-    // (label, id, score) aggregates on top of the label fixpoint
-    "d_drop_neardup_best" -> ((s, dir) =>
-      Dedup.dropNearDuplicatesBest(docs(s, dir).select(col("doc_id"), col("text")),
-          "doc_id", "text", TextAnalytics.tokenCount(col("text")))
-        .select(col("doc_id"))),
-    // ---- similarity search ----
-    "s_dot_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 10), 5)
-        .select(col("qid"), col("vid"), col("score").cast("long").as("score"), col("rn").cast("long").as("rn"))
-    }),
-    // quantized cosine: every arithmetic step is a single IEEE rounding on
-    // exactly-representable integers, so the DOUBLE score — and its rank
-    // order — is bit-identical in DuckDB; output quantized to a long so
-    // the driver's value hash sees integers only
-    "s_cosine_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      val cq = Similarity.cosineQ(e) _
-      Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 10), 5, cq)
-        .select(col("qid"), col("vid"),
-          floor(col("score") * lit(1e9)).cast("long").as("score_q"), col("rn").cast("long").as("rn"))
-    }),
-    "s_ann_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      // signature width derived from the corpus count (parquet footer
-      // metadata — no scan), NOT hardcoded: at 10^9+ vectors a fixed
-      // 8-plane signature is 256 buckets per table — mega-hot join keys.
-      // The oracle recomputes the same integer heuristic from count(*).
-      val planes = Similarity.planesFor(e.count())
-      Similarity.annTopK(e, e.filter(col("vec_id") < 10), 5,
-        numPlanes = planes, probeHamming = 2, numTables = 4)
-        .select(col("qid"), col("vid"),
-          floor(col("score") * lit(1e9)).cast("long").as("score_q"), col("rn").cast("long").as("rn"))
-    }),
-    // IVF variant of the same ANN op: coarse-quantizer cells instead of
-    // hyperplane buckets — cells derived √n from the footer count, ONE
-    // Lloyd refinement round (integer per-cell means, slim triples —
-    // proving the "refinement is the same shapes" claim value-exactly),
-    // probe the 4 best cells per query, exact re-rank inside them
-    "s_ivf_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), 5,
-        numCells = Similarity.cellsFor(e.count()), nProbe = 4, lloydRounds = 1)
-        .select(col("qid"), col("vid"),
-          floor(col("score") * lit(1e9)).cast("long").as("score_q"), col("rn").cast("long").as("rn"))
-    }),
-    // product quantization (Jégou et al.): m=16 subspaces × ks=64 integer
-    // codewords (seed + one Lloyd round; the config that holds recall on
-    // this near-uniform corpus — finer subspaces beat more codewords),
-    // ADC scoring = 16 LUT lookups per vector over the broadcast
-    // per-query tables — codes never shuffle, and the encoded corpus is
-    // bytes-per-vector, the memory-resident scan PQ exists for
-    "s_pq_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.pqTopK(e, e.filter(col("vec_id") < 10), 5, m = 16, ks = 64)
-        .select(col("qid"), col("vid"), col("score"), col("rn").cast("long").as("rn"))
-    }),
-    // IVF-PQ: the composition billion-scale indexes ship — coarse cells
-    // prune candidates, PQ ADC ranks the survivors from bytes-per-vector
-    // RESIDUAL codes (y − centroid(cell(y)), the Jégou §V/faiss IVFADC
-    // design) plus the probe's exact coarse dot; embeddings never enter
-    // the probe
-    "s_ivfpq_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.ivfPqTopK(e, e.filter(col("vec_id") < 10), 5,
-        numCells = Similarity.cellsFor(e.count()), nProbe = 4, m = 16, ks = 64)
-        .select(col("qid"), col("vid"), col("score"), col("rn").cast("long").as("rn"))
-    }),
-    // the production-recall config: ADC shortlist (nProbe=8, 50 per
-    // query) + EXACT integer rerank — the faiss IndexRefineFlat pattern;
-    // holds recall@5 ≈ 0.98 at sf0.1 where every plain quantized config
-    // stays ≤ 0.84 (measured per-run by Bench next to the flat-PQ number
-    // so the quantization/rerank trade is visible)
-    "s_ivfpq_rerank" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.ivfPqRerankTopK(e, e.filter(col("vec_id") < 10), 5,
-        numCells = Similarity.cellsFor(e.count()), nProbe = 8, m = 16, ks = 64,
-        shortlist = 50)
-        .select(col("qid"), col("vid"), col("score"), col("rn").cast("long").as("rn"))
-    }),
-    "s_embed_neardup" -> ((s, dir) =>
-      // vec_id cap bounds the exact self-join at bench scale; the sf0.01
-      // correctness table has 500 vectors, all under the cap
-      Similarity.nearDupPairs(embs(s, dir).filter(col("vec_id") < 1000), 400000L)),
-    // the scale path for the same op: multi-table banded LSH candidates +
-    // exact verify (slim id pairs shuffle, embeddings move once)
-    "s_embed_neardup_lsh" -> ((s, dir) =>
-      Similarity.nearDupPairsLsh(embs(s, dir).filter(col("vec_id") < 1000), 400000L)),
-    // embedding-level dedup with the CC survivor policy: the exact pair
-    // set (capped baseline) feeds the same min-label propagation the
-    // document path uses — one survivor per near-duplicate CLUSTER
-    // SemDeDup (Abbas et al. 2023): near-dup pairs scoped WITHIN coarse
-    // cells — O(n·√n) instead of the all-pairs scan; one survivor per
-    // component; cross-cell pairs missed by the published design
-    "s_semdedup" -> ((s, dir) => {
-      val e = embs(s, dir).filter(col("vec_id") < 1000)
-      Similarity.semDedup(e, numCells = Similarity.cellsFor(e.count()),
-        minQDot = 400000L)
-    }),
-    // reciprocity: fraction of a domain's outlink targets linking back —
-    // the link-exchange signal one hop before triangles (2-cycles)
-    "w_link_recip" -> ((s, dir) =>
-      graft.web.LinkGraph.reciprocity(
-        graft.web.LinkGraph.domainEdges(
-          docs(s, dir).select(synthUrl.as("url"), outlinkText.as("text")), "url", "text"))),
-    "s_embed_drop_cc" -> ((s, dir) => {
-      val e = embs(s, dir).filter(col("vec_id") < 1000)
-      val pairs = Similarity.nearDupPairs(e, 400000L).select(col("id1"), col("id2"))
-      val drops = Dedup.connectedComponents(pairs)
-        .filter(col("id") =!= col("label")).select(col("id").as("vec_id"))
-      e.join(drops, Seq("vec_id"), "left_anti").select(col("vec_id"))
-    }),
-    // margin-based bitext mining (Artetxe & Schwenk 2019): translation
-    // candidates by cosine RELATIVE to each side's kNN neighborhood, not
-    // an absolute threshold. Two-language split synthesized by vec_id
-    // parity; exact all-pairs scoring is the capped verification baseline
-    "s_bitext_mine" -> ((s, dir) => {
-      val e = embs(s, dir).filter(col("vec_id") < 1000)
-      Similarity.bitextMine(
-        e.filter(col("vec_id") % 2 === 0), e.filter(col("vec_id") % 2 === 1),
-        4, 1000000L)
-        .select(col("sid").as("src_id"), col("tid").as("tgt_id"),
-          col("score_q"), col("margin_ppm"), col("rn"))
-    }),
-    // the scale path: candidates from the multi-table LSH bucket
-    // equi-join — BOTH sides corpus-sized, neither broadcast; uncapped
-    "s_bitext_mine_lsh" -> ((s, dir) => {
-      val e = embs(s, dir)
-      val planes = Similarity.planesFor(e.count())
-      Similarity.bitextMineLsh(
-        e.filter(col("vec_id") % 2 === 0), e.filter(col("vec_id") % 2 === 1),
-        4, 1000000L, numPlanes = planes, probeHamming = 1, numTables = 4)
-        .select(col("sid").as("src_id"), col("tid").as("tgt_id"),
-          col("score_q"), col("margin_ppm"), col("rn"))
-    }),
-    // ---- multimodal (stub decode; real plumbing) ----
-    "m_media_meta" -> ((s, dir) =>
-      MediaKernel.decodeAll(mediaRows(s, dir))(s)
-        .select(col("url").cast("long").as("doc_id"), col("kind"), col("size_bytes"),
-          col("width"), col("height"), col("channels"), col("duration_ms"),
-          col("content_md5"), col("status"))),
-    // M2: digest-derived unit-norm feature vector; components quantized to
-    // longs (floor of the FLOAT value × 10^6) so the driver hashes integers
-    "m_features" -> ((s, dir) => {
-      import s.implicits._
-      MediaKernel.featuresAll(mediaRows(s, dir), 16)(s)
-        .map { mf =>
-          val q = mf.feature.map(f => math.floor(f.toDouble * 1e6).toLong)
-          (mf.url.toLong, mf.kind, q(0), q(8), q(15), q.sum)
-        }
-        .toDF("doc_id", "kind", "f0_q", "f8_q", "f15_q", "fsum_q")
-    }),
-    // batched inference (stub model, real batching plumbing): one
-    // vectorized call per in-partition batch over a reused buffer; the
-    // batch bookkeeping is projected away because scores are proven
-    // batch-size-invariant (MediaSpec) — batching is execution, not
-    // semantics
-    "m_batch_score" -> ((s, dir) => {
-      import s.implicits._
-      MediaKernel.batchScoreAll(mediaRows(s, dir), 16, 32)(s)
-        .map(b => (b.url.toLong, b.kind, b.score_q))
-        .toDF("doc_id", "kind", "score_q")
-    }),
-    // M4: aspect-preserving integer resize of the decoded dimensions
-    "m_resize" -> ((s, dir) => {
-      import s.implicits._
-      MediaKernel.decodeAll(mediaRows(s, dir))(s)
-        .map { m =>
-          val (w, h) = MediaKernel.resizeDims(m, 256)
-          (m.url.toLong, m.width, m.height, w, h)
-        }
-        .toDF("doc_id", "width", "height", "out_w", "out_h")
-    }),
-    // M3: frame fan-out (typed flatMap). Frame identity goes through
-    // md5(lower(hex(bytes))) — byte-exact and engine-portable (DuckDB 1.0
-    // cannot slice BLOBs, but hex strings slice at 2 chars/byte)
-    "m_frames" -> ((s, dir) =>
-      MediaKernel.framesAll(mediaRows(s, dir), 4)(s)
-        .select(col("url").cast("long").as("doc_id"), col("frame_idx").cast("long").as("frame_idx"),
-          length(col("frame")).cast("long").as("frame_bytes"),
-          md5(lower(hex(col("frame")))).as("frame_hex_md5")))
-  )
+  /** Every gated query, family by family. */
+  val gated: Seq[Gated] = unique(
+    ExtractQueries.all ++ PipelineQueries.all ++ TextQueries.all ++ WebQueries.all ++
+      DedupQueries.all ++ SimilarityQueries.all ++ EventQueries.all ++ MediaQueries.all)
 
-  private def mediaRows(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[MediaKernel.MediaRow] = {
-    import s.implicits._
-    docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, t) =>
-        val kind = (id % 3) match { case 0 => "image"; case 1 => "audio"; case _ => "video" }
-        MediaKernel.MediaRow(id.toString, kind, t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
+  /** `gs`, if no two of its queries share a name: a duplicate would
+    * silently shadow the other in `queries` and `oracleSql`. */
+  private[graft] def unique(gs: Seq[Gated]): Seq[Gated] = {
+    val dups = gs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate gated query names: ${dups.toSeq.sorted.mkString(", ")}")
+    gs
   }
 
-  // ---------------------------------------------------------------- oracle
+  val queries: Map[String, (SparkSession, String) => DataFrame] = gated.map(g => g.name -> g.run).toMap
 
-  private val tok = "regexp_split_to_array(trim(text), '\\s+')"
-
-  /** Shared oracle for `t_bm25_topk` AND `t_bm25_indexed` — the index is a
-    * storage layout, not a semantics change, so both paths must reproduce
-    * this exact result. Same fixed-point formula as [[graft.text.Retrieval]]
-    * but the NAIVE `(idf * ratio) // 1e6` product (the hash match proves
-    * the Spark side's overflow decomposition semantics-free).
-    */
-  private val bm25OracleSql: String = {
-    val termsList = Bm25Terms.map(t => s"'$t'").mkString(", ")
-    s"""WITH t AS (SELECT doc_id,
-       |  CASE WHEN length(trim(text)) = 0 THEN []
-       |       ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END AS l
-       |FROM documents),
-       |base AS (SELECT doc_id, l, CAST(len(l) AS BIGINT) AS dl FROM t),
-       |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(dl) AS BIGINT) // CAST(count(*) AS BIGINT) AS avgdl FROM base),
-       |tf AS (SELECT doc_id, dl, token AS term, CAST(count(*) AS BIGINT) AS tf
-       |       FROM (SELECT doc_id, dl, unnest(l) AS token FROM base)
-       |       WHERE token IN ($termsList) GROUP BY 1, 2, 3),
-       |dfx AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-       |sc AS (SELECT tf.doc_id, tf.tf,
-       |    ((s.n_docs - dfx.df) * 1000000) // dfx.df AS idf_x1m,
-       |    250000 + (750000 * tf.dl) // s.avgdl AS norm_x1m
-       |  FROM tf JOIN dfx USING (term) CROSS JOIN stats s),
-       |sc2 AS (SELECT doc_id,
-       |    (idf_x1m * ((tf * 2200000000000) //
-       |      (tf * 1000000 + (1200000 * norm_x1m) // 1000000))) // 1000000 AS score_x1m
-       |  FROM sc)
-       |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms_matched,
-       |  CAST(sum(score_x1m) AS BIGINT) AS score_x1m
-       |FROM sc2 GROUP BY 1 ORDER BY score_x1m DESC, doc_id LIMIT $Bm25K""".stripMargin
-  }
-
-  /** SQL twin of [[TextAnalytics.fingerprint]] over the `text` column,
-    * shared by the fingerprint and incremental-dedup oracles.
-    */
-  private val fpSql = "md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))"
-
-  /** Shared CTE chain for the CDC oracles: per-character code points,
-    * rolling-hash cut positions (w=16, divisor=64, the gated config),
-    * chunk bounds with the end sentinel, exploded (doc, chunk) rows
-    * `cdcf(doc_id, gi, st, en, cs)` — the SQL twin of
-    * [[graft.functions.CdcCuts]] + [[graft.dedup.CdcDedup.chunks]].
-    */
-  private def cdcChunkCteFor(p: String, textExpr: String): String =
-    s"""${p}c AS (SELECT doc_id, $textExpr AS text FROM documents WHERE length($textExpr) > 0),
-       |${p}c2 AS (SELECT doc_id, text, list_transform(string_split(text, ''), x -> CAST(unicode(x) AS BIGINT)) AS cs FROM ${p}c),
-       |${p}h AS (SELECT doc_id, text, cs, len(cs) AS n,
-       |  list_filter(generate_series(16, len(cs)), i ->
-       |    list_reduce(cs[i-15:i], (h, x) -> (h * 257 + x) % 1000000007) % 64 = 0) AS cuts FROM ${p}c2),
-       |${p}b AS (SELECT doc_id, text, n,
-       |  list_concat(list_concat([CAST(0 AS BIGINT)], cuts),
-       |    CASE WHEN len(cuts) = 0 OR cuts[-1] <> n THEN [n] ELSE [] END) AS bounds FROM ${p}h),
-       |${p}e AS (SELECT doc_id, text, bounds, unnest(generate_series(1, len(bounds) - 1)) AS gi FROM ${p}b),
-       |${p}f AS (SELECT doc_id, text, gi, bounds[gi] AS st, bounds[gi + 1] AS en FROM ${p}e)""".stripMargin
-
-  private val cdcChunkCte = cdcChunkCteFor("cdc", "text")
-
-  /** Shared CTE chain: the synthetic messy url (twin of [[synthUrl]]) and
-    * its canonical decomposition (twin of [[UrlOps.canonicalize]]). The
-    * final stage `p5` exposes doc_id, url, text, scheme, host, path, q2
-    * (cleaned query) and domain.
-    */
-  private val urlCte =
-    """u AS (SELECT doc_id, text,
-      |  (CASE WHEN doc_id % 7 = 0 THEN 'HTTPS' WHEN doc_id % 2 = 0 THEN 'https' ELSE 'http' END) ||
-      |  '://' || (CASE WHEN doc_id % 2 = 0 THEN 'WWW.' ELSE 'cdn.' END) ||
-      |  'Site' || CAST(doc_id % 13 AS VARCHAR) ||
-      |  (CASE WHEN doc_id % 3 = 0 THEN '.COM' WHEN doc_id % 3 = 1 THEN '.ORG' ELSE '.NET' END) ||
-      |  (CASE WHEN doc_id % 5 = 0 THEN (CASE WHEN doc_id % 7 = 0 OR doc_id % 2 = 0 THEN ':443' ELSE ':80' END) ELSE '' END) ||
-      |  '/Docs/Page' || CAST(doc_id % 50 AS VARCHAR) ||
-      |  (CASE doc_id % 4 WHEN 0 THEN '?a=1&utm_source=feed&b=2' WHEN 1 THEN '?utm_campaign=x'
-      |                   WHEN 2 THEN '?id=' || CAST(doc_id AS VARCHAR) ELSE '' END) ||
-      |  (CASE WHEN doc_id % 3 = 0 THEN '#Section-2' ELSE '' END) AS url
-      |FROM documents),
-      |p1 AS (SELECT doc_id, text, url, regexp_replace(url, '#.*$', '') AS nf FROM u),
-      |p2 AS (SELECT doc_id, text, url,
-      |  lower(split_part(nf, '://', 1)) AS scheme,
-      |  CASE WHEN instr(nf, '://') = 0 THEN nf ELSE substr(nf, instr(nf, '://') + 3) END AS rest FROM p1),
-      |p3 AS (SELECT *, split_part(split_part(rest, '/', 1), '?', 1) AS hostport,
-      |  substr(rest, length(split_part(split_part(rest, '/', 1), '?', 1)) + 1) AS pathq FROM p2),
-      |p4 AS (SELECT *,
-      |  CASE WHEN scheme = 'https' THEN regexp_replace(lower(hostport), ':443$', '')
-      |       WHEN scheme = 'http' THEN regexp_replace(lower(hostport), ':80$', '')
-      |       ELSE lower(hostport) END AS host,
-      |  split_part(pathq, '?', 1) AS path,
-      |  CASE WHEN contains(pathq, '?') THEN substr(pathq, length(split_part(pathq, '?', 1)) + 2) ELSE '' END AS q
-      |FROM p3),
-      |p5 AS (SELECT *,
-      |  regexp_replace(regexp_replace('&' || q || '&', '&(utm_[^&]*|gclid=[^&]*|fbclid=[^&]*)', '', 'g'), '^&+|&+$', '', 'g') AS q2,
-      |  regexp_extract(regexp_replace(host, ':[0-9]+$', ''), '([^.]+\.[^.]+)$', 1) AS domain FROM p4)""".stripMargin
-
-  /** LM-fluency CTE chain (twin of [[LangModel.bigramModel]] +
-    * [[LangModel.lmScore]]): ends in
-    * `sc(doc_id, n_bigrams, seen_bigrams, sum_ppm, avg_ppm)` — one row
-    * per document. Shared by `t_lm_score` and the tier oracles so the
-    * tier twins provably cut the SAME score distribution.
-    */
-  private val lmScoreCte =
-    """t AS (SELECT doc_id, lang,
-      |  CASE WHEN length(trim(text)) = 0 THEN []
-      |       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS l
-      |FROM documents),
-      |b AS (SELECT doc_id, lang, z[1] AS w1, z[2] AS w2
-      |  FROM (SELECT doc_id, lang, unnest(list_zip(l[1:len(l)-1], l[2:len(l)])) AS z
-      |        FROM t WHERE len(l) >= 2)),
-      |c12 AS (SELECT w1, w2, count(*) AS c12 FROM b WHERE lang = 'en' GROUP BY 1, 2),
-      |c1 AS (SELECT w1, sum(c12) AS c1 FROM c12 GROUP BY 1),
-      |m AS (SELECT c12.w1, c12.w2, (c12.c12 * 1000000) // c1.c1 AS p_ppm
-      |  FROM c12 JOIN c1 USING (w1) WHERE c12.c12 >= 2),
-      |s AS (SELECT b.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-      |  CAST(count(m.p_ppm) AS BIGINT) AS seen_bigrams,
-      |  CAST(coalesce(sum(m.p_ppm), 0) AS BIGINT) AS sum_ppm
-      |  FROM b LEFT JOIN m ON b.w1 = m.w1 AND b.w2 = m.w2 GROUP BY 1),
-      |sc AS (SELECT d.doc_id,
-      |  CAST(coalesce(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-      |  CAST(coalesce(s.seen_bigrams, 0) AS BIGINT) AS seen_bigrams,
-      |  CAST(coalesce(s.sum_ppm, 0) AS BIGINT) AS sum_ppm,
-      |  CAST(coalesce(s.sum_ppm, 0) // greatest(coalesce(s.n_bigrams, 0), 1) AS BIGINT) AS avg_ppm
-      |FROM documents d LEFT JOIN s USING (doc_id))""".stripMargin
-
-  /** The synthetic-outlink text expression (twin of [[outlinkText]]).
-    * Single line for the same stripMargin reason as [[piiSqlExpr]].
-    */
-  private val outlinkSqlExpr: String = {
-    def link(j: Int) =
-      s"' https://site' || CAST((doc_id * 3 + ${j * 5 + 1}) % 13 AS VARCHAR) || " +
-        s"(CASE WHEN (doc_id + $j) % 3 = 0 THEN '.com' WHEN (doc_id + $j) % 3 = 1 THEN '.org' ELSE '.net' END) || '/p$j'"
-    s"text || ${link(0)} || (CASE WHEN doc_id % 3 >= 1 THEN ${link(1)} ELSE '' END)" +
-      s" || (CASE WHEN doc_id % 3 >= 2 THEN ${link(2)} ELSE '' END)"
-  }
-
-  /** Shared CTE chain for the link-graph oracles: outlink-augmented text
-    * (`lt`), harvested urls (`hv`, twin of [[graft.web.LinkGraph.harvestUrls]]),
-    * destination registered domains (`dp` — strips fragment/scheme/port like
-    * [[UrlOps.host]] + [[UrlOps.registeredDomain]]; stripping ALL ports is
-    * equivalent to the scheme-conditional strip because registeredDomain
-    * strips any remaining port), and the weighted `edges` list.
-    * Assumes nothing; starts its own chain from [[urlCte]]'s `p5`.
-    */
-  private val linkEdgesCte =
-    s"""$urlCte,
-       |lt AS (SELECT domain AS src, $outlinkSqlExpr AS ltext FROM p5),
-       |hv AS (SELECT src, unnest(regexp_extract_all(ltext, '${graft.web.LinkGraph.UrlPattern}')) AS ourl FROM lt),
-       |nf AS (SELECT src, regexp_replace(ourl, '#.*$$', '') AS u2 FROM hv),
-       |hp AS (SELECT src, split_part(split_part(CASE WHEN instr(u2, '://') = 0 THEN u2 ELSE substr(u2, instr(u2, '://') + 3) END, '/', 1), '?', 1) AS hostport FROM nf),
-       |dp AS (SELECT src, regexp_extract(regexp_replace(lower(hostport), ':[0-9]+$$', ''), '([^.]+\\.[^.]+)$$', 1) AS dst FROM hp),
-       |edges AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS weight FROM dp GROUP BY 1, 2)""".stripMargin
-
-  /** Unrolled fixed-iteration PageRank (twin of
-    * [[graft.web.LinkGraph.domainRank]]): chained CTEs r0..rN, all integer
-    * arithmetic (`//` in DuckDB = `DIV` in Spark for the non-negative
-    * values here). Each iteration carries the DANGLING-MASS term: the
-    * sink slice's total rank (NOT EXISTS mirrors Spark's left_anti null
-    * semantics) divided by the node count, added to every node's received
-    * mass before damping.
-    */
-  private def domainRankSql(iters: Int): String =
-    domainRankChain(iters) + s"\nSELECT domain, rank_mass FROM r$iters"
-
-  /** Convergence-telemetry twin ([[graft.web.LinkGraph.domainRankWithDeltas]]):
-    * the SAME unrolled chain, then one |r_k − r_{k−1}| L1 sum per round —
-    * so the driver gate proves the telemetry integers, not just the
-    * final vector.
-    */
-  private def domainRankDeltasSql(iters: Int): String =
-    domainRankChain(iters) + "\n" + (1 to iters).map { k =>
-      s"""SELECT CAST($k AS BIGINT) AS iter,
-         |  CAST(sum(abs(a.rank_mass - b.rank_mass)) AS BIGINT) AS l1_delta
-         |  FROM r$k a JOIN r${k - 1} b ON b.domain = a.domain""".stripMargin
-    }.mkString(" UNION ALL ")
-
-  private def domainRankChain(iters: Int): String = {
-    val head =
-      s"""WITH $linkEdgesCte,
-         |capped AS (SELECT src, dst, CAST(least(weight, 3) AS BIGINT) AS weight FROM edges),
-         |nodes AS (SELECT DISTINCT domain FROM (SELECT src AS domain FROM capped UNION ALL SELECT dst AS domain FROM capped) t),
-         |pr AS (SELECT CAST(${graft.web.LinkGraph.RankScale} // count(*) AS BIGINT) AS init, count(*) AS n FROM nodes),
-         |ow AS (SELECT src, CAST(sum(weight) AS BIGINT) AS out_w FROM capped GROUP BY 1),
-         |e2 AS (SELECT e.src, e.dst, e.weight, o.out_w FROM capped e JOIN ow o ON e.src = o.src),
-         |r0 AS (SELECT domain, (SELECT init FROM pr) AS rank_mass FROM nodes)""".stripMargin
-    val iterCtes = (1 to iters).map { k =>
-      s""",
-         |s$k AS (SELECT CAST(COALESCE(sum(r.rank_mass), 0) // (SELECT n FROM pr) AS BIGINT) AS share
-         |  FROM r${k - 1} r WHERE NOT EXISTS (SELECT 1 FROM capped c2 WHERE c2.src = r.domain)),
-         |r$k AS (SELECT n.domain, CAST((15 * (SELECT init FROM pr)) // 100 + (85 * (COALESCE(c.s, 0) + (SELECT share FROM s$k))) // 100 AS BIGINT) AS rank_mass
-         |  FROM nodes n LEFT JOIN (SELECT e2.dst AS domain, CAST(sum((r.rank_mass * e2.weight) // e2.out_w) AS BIGINT) AS s
-         |    FROM e2 JOIN r${k - 1} r ON r.domain = e2.src GROUP BY 1) c ON n.domain = c.domain)""".stripMargin
-    }.mkString
-    head + iterCtes
-  }
-
-  /** Unrolled fixed-iteration HITS (twin of
-    * [[graft.web.LinkGraph.hitsRank]]): chained CTEs a1/h1..aN/hN, all
-    * integer (`//` == `DIV` on the non-negative values here). Each round
-    * renormalizes by `max(total DIV HitsScale, 1)` exactly as the Spark
-    * side does, so the hash match proves the integer normalization
-    * semantics, not just the fixpoint direction.
-    */
-  private def hitsSql(iters: Int): String =
-    hitsChain(iters) +
-      s"\nSELECT a.domain, a.auth, h.hub FROM a$iters a JOIN h$iters h ON h.domain = a.domain"
-
-  /** HITS convergence-telemetry twin ([[graft.web.LinkGraph.hitsRankWithDeltas]]):
-    * the SAME unrolled chain, then per-round L1 sums for both sides
-    * (round 0 = the uniform init both vectors start from) — the jitter-
-    * floor behavior the spec documents becomes driver-gated integers.
-    */
-  private def hitsDeltasSql(iters: Int): String =
-    hitsChain(iters) + "\n" + (1 to iters).map { k =>
-      s"""SELECT CAST($k AS BIGINT) AS iter,
-         |  (SELECT CAST(sum(abs(x.auth - y.auth)) AS BIGINT)
-         |     FROM a$k x JOIN a${k - 1} y ON y.domain = x.domain) AS l1_delta_auth,
-         |  (SELECT CAST(sum(abs(x.hub - y.hub)) AS BIGINT)
-         |     FROM h$k x JOIN h${k - 1} y ON y.domain = x.domain) AS l1_delta_hub""".stripMargin
-    }.mkString(" UNION ALL ")
-
-  private def hitsChain(iters: Int): String = {
-    val sc = graft.web.LinkGraph.HitsScale
-    val head =
-      s"""WITH $linkEdgesCte,
-         |capped AS (SELECT src, dst, CAST(least(weight, 3) AS BIGINT) AS weight FROM edges),
-         |nodes AS (SELECT DISTINCT domain FROM (SELECT src AS domain FROM capped UNION ALL SELECT dst AS domain FROM capped) t),
-         |h0 AS (SELECT domain, CAST($sc AS BIGINT) AS hub FROM nodes),
-         |a0 AS (SELECT domain, CAST($sc AS BIGINT) AS auth FROM nodes)""".stripMargin
-    val iterCtes = (1 to iters).map { k =>
-      s""",
-         |ar$k AS (SELECT e.dst AS domain, CAST(sum(h.hub * e.weight) AS BIGINT) AS raw
-         |  FROM capped e JOIN h${k - 1} h ON h.domain = e.src GROUP BY 1),
-         |da$k AS (SELECT greatest(sum(raw) // $sc, 1) AS d FROM ar$k),
-         |a$k AS (SELECT n.domain, CAST(COALESCE(ar.raw, 0) // (SELECT d FROM da$k) AS BIGINT) AS auth
-         |  FROM nodes n LEFT JOIN ar$k ar ON ar.domain = n.domain),
-         |hr$k AS (SELECT e.src AS domain, CAST(sum(a.auth * e.weight) AS BIGINT) AS raw
-         |  FROM capped e JOIN a$k a ON a.domain = e.dst GROUP BY 1),
-         |dh$k AS (SELECT greatest(sum(raw) // $sc, 1) AS d FROM hr$k),
-         |h$k AS (SELECT n.domain, CAST(COALESCE(hr.raw, 0) // (SELECT d FROM dh$k) AS BIGINT) AS hub
-         |  FROM nodes n LEFT JOIN hr$k hr ON hr.domain = n.domain)""".stripMargin
-    }.mkString
-    head + iterCtes
-  }
-
-  /** Space-joined word-8-gram over a token-array column `ws` at position
-    * `i` — the SQL twin of [[Dedup.shingles]] at n=8, shared by every
-    * passage-level oracle (decontamination, frequent grams, export).
-    */
-  private val gram8 =
-    "ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4]||' '||ws[i+5]||' '||ws[i+6]||' '||ws[i+7]"
-
-  /** The PII-augmented text expression (twin of [[piiText]]), shared by the
-    * redaction and export oracles.
-    */
-  // single line: this value is interpolated into stripMargin oracle
-  // strings, where a continuation line starting with `||` would lose its
-  // first `|` to the OUTER stripMargin and become bitwise-or
-  private val piiSqlExpr =
-    "text || (CASE WHEN doc_id % 4 = 0 THEN ' Contact user' || CAST(doc_id AS VARCHAR) || '@Mail' || CAST(doc_id % 10 AS VARCHAR) || '.example.com now.' ELSE '' END)" +
-      " || (CASE WHEN doc_id % 6 = 0 THEN ' Server at 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.' || CAST(doc_id % 100 AS VARCHAR) || ' up.' ELSE '' END)" +
-      " || (CASE WHEN doc_id % 9 = 0 THEN ' Call +1555' || CAST(1000000 + doc_id % 1000000 AS VARCHAR) || '.' ELSE '' END)"
-
-  /** Redaction chain over a source expression (twin of
-    * [[graft.text.Redactor.redact]]).
-    */
-  private def redactSql(src: String): String =
-    s"""regexp_replace(regexp_replace(regexp_replace($src,
-       |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-       |    '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}', '<IP>', 'g'),
-       |    '\\+[0-9]{7,15}', '<PHONE>', 'g')""".stripMargin
-
-  /** Quality predicate columns over `text` (twin of `t_quality`), reused by
-    * the domain-stats oracle.
-    */
-  private val qualityPredSql =
-    s"""(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END) >= 5
-       |  AND (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) * 100 <= length(text) * 20
-       |  AND (length(text) - length(regexp_replace(text, '[A-Z]', '', 'g'))) * 100 <= length(text) * 30
-       |  AND length(text) <= (CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END) * 20""".stripMargin
-
-  /** Shared CTE: word-3-gram shingles per doc (1-indexed, space-joined) —
-    * the SQL twin of [[Dedup.shingles]].
-    */
-  private val shingleCte =
-    s"""w AS (SELECT doc_id, source, $tok AS ws FROM documents),
-       |sh AS (SELECT doc_id, source,
-       |  unnest(list_transform(generate_series(1, len(ws) - 2), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-       |FROM w)""".stripMargin
-
-  private val minhashSelect =
-    (0 until 8).map(h => s"min(md5('$h:' || s)) AS mh$h").mkString(", ")
-
-  /** Shared CTE chain: MinHash bands → candidate pairs → exact shingle
-    * Jaccard per candidate (`jac(id1, id2, inter, uni)`) — the SQL twin of
-    * `lshCandidatePairs` → `jaccardForPairs`; used by the `d_lsh_jaccard`
-    * and `d_drop_neardup` oracles.
-    */
-  private lazy val lshJaccardChain =
-    s"""$shingleCte,
-       |sig AS (SELECT doc_id, $minhashSelect FROM sh GROUP BY doc_id),
-       |bands AS (
-       |  SELECT doc_id, 0 AS band, mh0 || '|' || mh1 AS bv FROM sig UNION ALL
-       |  SELECT doc_id, 1, mh2 || '|' || mh3 FROM sig UNION ALL
-       |  SELECT doc_id, 2, mh4 || '|' || mh5 FROM sig UNION ALL
-       |  SELECT doc_id, 3, mh6 || '|' || mh7 FROM sig),
-       |cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-       |         FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id),
-       |ds AS (SELECT DISTINCT doc_id, s FROM sh),
-       |sizes AS (SELECT doc_id, count(*) AS sz FROM ds GROUP BY 1),
-       |ints AS (SELECT c.id1, c.id2, count(*) AS i
-       |         FROM cand c JOIN ds a ON a.doc_id = c.id1 JOIN ds b ON b.doc_id = c.id2 AND a.s = b.s
-       |         GROUP BY 1, 2),
-       |jac AS (SELECT c.id1, c.id2, CAST(coalesce(i.i, 0) AS BIGINT) AS inter,
-       |               CAST(sa.sz + sb.sz - coalesce(i.i, 0) AS BIGINT) AS uni
-       |        FROM cand c JOIN sizes sa ON c.id1 = sa.doc_id JOIN sizes sb ON c.id2 = sb.doc_id
-       |        LEFT JOIN ints i ON c.id1 = i.id1 AND c.id2 = i.id2)""".stripMargin
-
-  private def hexInt(from1: Int, len: Int): String =
-    s"CAST(('0x' || substr(md5(text), $from1, $len)) AS BIGINT)"
-
-  /** SQL twin of the native `graft_qdot` (scale 1000, 64-dim). */
-  private def qdotSql(a: String, b: String): String =
-    s"""list_sum(list_transform(generate_series(1, 64), i ->
-       |    CAST(floor(CAST($a[i] AS DOUBLE) * 1000) AS BIGINT) *
-       |    CAST(floor(CAST($b[i] AS DOUBLE) * 1000) AS BIGINT)))""".stripMargin
-
-  /** SQL twin of [[Similarity.cosineQ]] — bit-identical DOUBLE (every step
-    * one IEEE rounding on exact integers; qdot products < 2^52).
-    */
-  private def cosQSql(a: String, b: String): String =
-    s"CAST(${qdotSql(a, b)} AS DOUBLE) / sqrt(CAST(${qdotSql(a, a)} * ${qdotSql(b, b)} AS DOUBLE))"
-
-  /** SQL twin of the native `graft_lshsig(e, planes, offset)`; both
-    * `planesExpr` and `offsetExpr` may be arbitrary SQL (multi-table
-    * banding uses `t * planes`; the ANN oracle derives planes from
-    * count(*) exactly like [[Similarity.planesFor]]).
-    */
-  private def lshSigSql(e: String, planesExpr: String, offsetExpr: String): String =
-    s"""list_sum(list_transform(generate_series(0, ($planesExpr) - 1), p ->
-       |  CASE WHEN list_sum(list_transform(generate_series(1, 64), j ->
-       |    CAST(floor(CAST($e[j] AS DOUBLE) * 1000) AS BIGINT) *
-       |    (((CAST(($offsetExpr) + p AS BIGINT) * 1315423911 + CAST(j - 1 AS BIGINT) * 2654435761 + 97531) % 1000003) - 500001)))
-       |  > 0 THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END))""".stripMargin
-
-  /** SQL twin of [[Similarity.planesFor]] (integer ceil-divide + smallest
-    * p with 2^p ≥ ratio, clamped to [4, 20]) over `embeddings`' count.
-    */
-  private val planesForSql: String =
-    """pl AS (
-      |  SELECT least(20, greatest(4,
-      |    (SELECT min(p) FROM (SELECT unnest(generate_series(1, 20)) AS p)
-      |     WHERE (CAST(1 AS BIGINT) << p) >= rc))) AS p
-      |  FROM (SELECT greatest(2, (count(*) + 9999) // 10000) AS rc FROM embeddings))""".stripMargin
-
-  /** Parameterized SQL twin of [[Similarity.ivfPqTopK]]: the s_ivf_topk
-    * coarse chain (no Lloyd) feeding the PQ seed/Lloyd/assignment chain —
-    * over RESIDUALS `fq[i] − centroid[i]` when `residual` (the published
-    * IVFADC design; the ADC score then adds the probe's exact coarse dot
-    * `cs`), over raw quantized vectors otherwise. One template serves
-    * every gated (m, ks, nProbe) config — identical integers step for
-    * step with the Spark path.
-    */
-  private def ivfPqSql(m: Int, ks: Int, nProbe: Int, residual: Boolean,
-                       k: Int = 5): String = {
-    val d = 64 / m
-    val rv =
-      if (residual)
-        s"""cq AS (SELECT ccid, list_transform(generate_series(1, 64), i ->
-           |  CAST(floor(CAST(cce[i] AS DOUBLE) * 1000) AS BIGINT)) AS cv FROM cent),
-           |rv AS (SELECT fq.vid, list_transform(generate_series(1, 64), i -> fv[i] - cv[i]) AS rq
-           |  FROM fq JOIN cellasn ON cellasn.avid = fq.vid JOIN cq ON cq.ccid = cellasn.cell)""".stripMargin
-      else "rv AS (SELECT vid, fv AS rq FROM fq)"
-    val scoreExpr =
-      if (residual) "CAST(qp.cs + sum(l.pdot) AS BIGINT)"
-      else "CAST(sum(l.pdot) AS BIGINT)"
-    s"""WITH cl AS (
-       |  SELECT least(65536, greatest(4,
-       |    CASE WHEN (c0+1)*(c0+1) <= n THEN c0+1 WHEN c0*c0 > n THEN c0-1 ELSE c0 END)) AS c
-       |  FROM (SELECT count(*) AS n, CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) AS c0 FROM embeddings)),
-       |cent AS (SELECT vec_id AS ccid, embedding AS cce FROM embeddings, cl
-       |         QUALIFY row_number() OVER (ORDER BY vec_id) <= c),
-       |v AS (SELECT vec_id AS vid, embedding AS ve FROM embeddings),
-       |vsc AS (SELECT vid, ccid, ${qdotSql("ve", "cce")} AS cs FROM v, cent),
-       |cellasn AS (SELECT avid, ccid AS cell FROM (
-       |  SELECT vid AS avid, ccid, row_number() OVER (PARTITION BY vid ORDER BY cs DESC, ccid) AS rn FROM vsc) WHERE rn = 1),
-       |fq AS (SELECT vid, list_transform(generate_series(1, 64), i ->
-       |  CAST(floor(CAST(ve[i] AS DOUBLE) * 1000) AS BIGINT)) AS fv FROM v),
-       |$rv,
-       |ss AS (SELECT unnest(generate_series(0, ${m - 1})) AS s),
-       |vs AS (SELECT vid, ss.s, list_transform(generate_series(1, $d), i -> rq[ss.s * $d + i]) AS vq FROM rv, ss),
-       |seeds AS (SELECT vid, rq FROM rv QUALIFY row_number() OVER (ORDER BY vid) <= $ks),
-       |sd AS (SELECT row_number() OVER (ORDER BY vid) - 1 AS cid, rq AS e FROM seeds),
-       |cb0 AS (SELECT ss.s, sd.cid, list_transform(generate_series(1, $d), i -> e[ss.s * $d + i]) AS ce FROM sd, ss),
-       |d0 AS (SELECT vid, vs.s, cid,
-       |  list_sum(list_transform(generate_series(1, $d), i -> (vq[i] - ce[i]) * (vq[i] - ce[i]))) AS dist
-       |  FROM vs JOIN cb0 ON cb0.s = vs.s),
-       |a0 AS (SELECT vid, s, cid FROM (SELECT vid, s, cid,
-       |  row_number() OVER (PARTITION BY vid, s ORDER BY dist, cid) AS rn FROM d0) WHERE rn = 1),
-       |pm AS (SELECT vs.s, a0.cid, g.i AS dim,
-       |  CAST((sum(vq[g.i]) + count(*) * 1048576) // count(*) - 1048576 AS BIGINT) AS q
-       |  FROM vs JOIN a0 ON a0.vid = vs.vid AND a0.s = vs.s,
-       |       (SELECT unnest(generate_series(1, $d)) AS i) g
-       |  GROUP BY vs.s, a0.cid, g.i),
-       |cb AS (SELECT s, cid, list(q ORDER BY dim) AS ce FROM pm GROUP BY s, cid),
-       |d1 AS (SELECT vid, vs.s, cid,
-       |  list_sum(list_transform(generate_series(1, $d), i -> (vq[i] - ce[i]) * (vq[i] - ce[i]))) AS dist
-       |  FROM vs JOIN cb ON cb.s = vs.s),
-       |pqasn AS (SELECT vid, s, cid FROM (SELECT vid, s, cid,
-       |  row_number() OVER (PARTITION BY vid, s ORDER BY dist, cid) AS rn FROM d1) WHERE rn = 1),
-       |q0 AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
-       |qs AS (SELECT qid, ss.s, list_transform(generate_series(1, $d), i ->
-       |  CAST(floor(CAST(qe[ss.s * $d + i] AS DOUBLE) * 1000) AS BIGINT)) AS qq FROM q0, ss),
-       |lut AS (SELECT qid, cb.s, cb.cid,
-       |  CAST(list_sum(list_transform(generate_series(1, $d), i -> qq[i] * ce[i])) AS BIGINT) AS pdot
-       |  FROM qs JOIN cb ON cb.s = qs.s),
-       |qsc AS (SELECT qid, ccid, ${qdotSql("qe", "cce")} AS cs FROM q0, cent),
-       |qp AS (SELECT qid, ccid AS cell, cs FROM (
-       |  SELECT qid, ccid, cs, row_number() OVER (PARTITION BY qid ORDER BY cs DESC, ccid) AS rn FROM qsc) WHERE rn <= $nProbe),
-       |sc AS (SELECT qp.qid, ca.avid AS vid, $scoreExpr AS score
-       |  FROM qp JOIN cellasn ca ON ca.cell = qp.cell
-       |  JOIN pqasn p ON p.vid = ca.avid
-       |  JOIN lut l ON l.qid = qp.qid AND l.s = p.s AND l.cid = p.cid
-       |  WHERE qp.qid <> ca.avid GROUP BY qp.qid, ca.avid, qp.cs)
-       |SELECT qid, vid, score, rn FROM (SELECT qid, vid, score,
-       |  row_number() OVER (PARTITION BY qid ORDER BY score DESC, vid) AS rn FROM sc)
-       |WHERE rn <= $k""".stripMargin
-  }
-
-  /** Top-k window wrapper shared by the similarity oracles. */
-  private def topkSql(scoredCte: String): String =
-    s"""$scoredCte
-       |SELECT qid, vid, CAST(floor(score * 1000000000.0) AS BIGINT) AS score_q, rn FROM (
-       |  SELECT qid, vid, score,
-       |         row_number() OVER (PARTITION BY qid ORDER BY score DESC, vid) AS rn
-       |  FROM s) WHERE rn <= 5""".stripMargin
-
-  /** Shared margin tail for the bitext oracles: forward/backward kNN
-    * windows over the candidate CTE `sc(sid, tid, sq)`, neighborhood
-    * sum+count aggregates, and the exact-rational margin_ppm — the SQL
-    * twin of `Similarity.marginPairs` line by line.
-    */
-  private def bitextMarginSql(scoredCte: String, k: Int, minMarginPpm: Long): String =
-    s"""$scoredCte,
-       |r AS (SELECT sid, tid, sq,
-       |  row_number() OVER (PARTITION BY sid ORDER BY sq DESC, tid) AS frn,
-       |  row_number() OVER (PARTITION BY tid ORDER BY sq DESC, sid) AS brn FROM sc),
-       |f AS (SELECT sid, sum(sq) AS fsum, count(*) AS fcnt FROM r WHERE frn <= $k GROUP BY sid),
-       |b AS (SELECT tid, sum(sq) AS bsum, count(*) AS bcnt FROM r WHERE brn <= $k GROUP BY tid),
-       |mg AS (SELECT sid, tid, sq, frn,
-       |  CAST((sq * 2000000 * fcnt * bcnt) // (fsum * bcnt + bsum * fcnt) AS BIGINT) AS margin_ppm
-       |  FROM r JOIN f USING (sid) JOIN b USING (tid)
-       |  WHERE frn <= $k AND sq > 0 AND fsum > 0 AND bsum > 0)
-       |SELECT sid AS src_id, tid AS tgt_id, sq AS score_q, margin_ppm,
-       |  CAST(frn AS BIGINT) AS rn
-       |FROM mg WHERE margin_ppm >= $minMarginPpm""".stripMargin
-
-  /** Shared winnowing CTE chain (k=5, w=4): ends in `m(doc_id, pos, fp)`
-    * with one row per window — the SQL twin of `Winnow.winnowFingerprints`
-    * before its distinct.
-    */
-  private val winnowFpSql: String =
-    """WITH t AS (SELECT doc_id,
-      |  regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-      |FROM documents),
-      |g AS (SELECT doc_id, CASE WHEN len(toks) >= 5 THEN
-      |    list_transform(generate_series(0, len(toks) - 5), i ->
-      |      ('0x' || substr(md5(array_to_string(toks[i+1:i+5], ' ')), 1, 10))::BIGINT)
-      |  ELSE [] END AS grams FROM t),
-      |w AS (SELECT doc_id, grams, len(grams) AS ng FROM g),
-      |wd AS (SELECT doc_id, grams, unnest(generate_series(0, ng - 4)) AS i FROM w WHERE ng >= 4),
-      |win AS (SELECT doc_id, i, grams[i+1:i+4] AS wn FROM wd),
-      |m AS (SELECT doc_id, i,
-      |  list_min(wn) AS fp,
-      |  i + (5 - list_position(list_reverse(wn), list_min(wn))) - 1 AS pos FROM win)""".stripMargin
-
-  private def markerMassSql(markers: Seq[String]): String =
-    markers.map(m => s"(length(p) - length(replace(p, ' $m ', '')))").mkString(" + ")
-
-  def oracleSql: Map[String, String] = Map(
-    "q_sniff_route" ->
-      """SELECT CASE WHEN doc_id % 53 = 0 THEN 'unknown'
-        |            WHEN doc_id % 41 = 0 THEN 'pdf'
-        |            WHEN doc_id % 3 = 0 THEN 'pdf'
-        |            ELSE 'html' END AS doctype,
-        |       count(*) AS n
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q_status_counts" -> statusCountsSql,
-    // the WARC-framed path must land on the identical status profile
-    "q_warc_extract" -> statusCountsSql,
-    "p6_layout_zone" ->
-      """WITH c AS (SELECT doc_id, text,
-        |  CAST(doc_id % 500 AS BIGINT) AS x0,
-        |  CAST((doc_id * 7) % 700 AS BIGINT) AS y0,
-        |  CAST(doc_id % 500 + 40 + n_chars % 60 AS BIGINT) AS x1,
-        |  CAST((doc_id * 7) % 700 + 12 AS BIGINT) AS y1
-        |FROM documents),
-        |z AS (SELECT doc_id, text, x0, y0, x1, y1,
-        |  (x0 + x1) / 2.0 AS xc, (y0 + y1) / 2.0 AS yc FROM c),
-        |zz AS (SELECT doc_id, text, x0, x1, y0,
-        |  CASE WHEN xc < 612.0/3 THEN 'LEFT' WHEN xc < 612.0/3*2 THEN 'CENTER' ELSE 'RIGHT' END AS hz,
-        |  CASE WHEN yc < 792.0/3 THEN 'TOP' WHEN yc < 792.0/3*2 THEN 'MIDDLE' ELSE 'BOTTOM' END AS vz
-        |FROM z)
-        |SELECT doc_id,
-        |  CASE WHEN vz = 'MIDDLE' THEN hz ELSE vz || '-' || hz END AS zone,
-        |  '[' || CASE WHEN vz = 'MIDDLE' THEN hz ELSE vz || '-' || hz END ||
-        |  '] [x:' || x0 || '-' || x1 || ', y:' || y0 || '] ' || substr(text, 1, 20) AS layout_line
-        |FROM zz""".stripMargin,
-    // warc_ts = 1700000000 s + doc_id s (PagesGen.BaseEpochMs); Spark's
-    // 10-minute tumbling windows align to the epoch → start = ts - ts%600
-    "q_stream_window" ->
-      """SELECT CAST((1700000000 + doc_id) - (1700000000 + doc_id) % 600 AS BIGINT) AS window_start_s,
-        |       lang, count(*) AS n_pages
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-    "q_dup_counts" ->
-      """SELECT md5(text) AS content_fp,
-        |       'doc://' || CAST(min(doc_id) AS VARCHAR) AS first_url,
-        |       count(*) AS n_seen
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q_bucket_join" ->
-      """SELECT d.doc_id, d.lang, d.n_chars, CAST(e.label AS BIGINT) AS label
-        |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id""".stripMargin,
-    "q_table_upsert" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 1 END AS BIGINT) AS gen
-        |FROM documents WHERE doc_id % 5 <> 0""".stripMargin,
-    // diff twin: replay the three commits' semantics directly — shifted
-    // %7 keys are new, %5 keys vanish (even when also upserted), %3
-    // survivors changed gen 1 → 2; everything else is unchanged and absent
-    "q_table_diff" ->
-      """SELECT doc_id + 1000000 AS doc_id, 'added' AS change
-        |FROM documents WHERE doc_id % 7 = 0
-        |UNION ALL
-        |SELECT doc_id, 'deleted' FROM documents WHERE doc_id % 5 = 0
-        |UNION ALL
-        |SELECT doc_id, 'updated' FROM documents
-        |WHERE doc_id % 3 = 0 AND doc_id % 5 <> 0""".stripMargin,
-    "q_table_evolve" ->
-      """SELECT doc_id, lang, CAST(NULL AS BIGINT) AS quality FROM documents
-        |UNION ALL
-        |SELECT doc_id + 1000000, lang, CAST(n_chars % 100 AS BIGINT) AS quality
-        |FROM documents WHERE doc_id % 3 = 0""".stripMargin,
-    "q_table_appends" ->
-      """SELECT doc_id, lang, CAST(2 AS BIGINT) AS gen FROM documents WHERE doc_id % 3 = 0
-        |UNION ALL
-        |SELECT doc_id, lang, CAST(3 AS BIGINT) AS gen FROM documents WHERE doc_id % 5 = 0""".stripMargin,
-    "p1_content_hash" -> "SELECT doc_id, sha256(text) AS h FROM documents",
-    "p3_cache_key" ->
-      s"SELECT doc_id, 'extract:' || lang || ':' || sha256(text) || ':$schemaHashHex' AS cache_key FROM documents",
-    "t_token_count" ->
-      s"SELECT doc_id, CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END AS BIGINT) AS n_tokens FROM documents",
-    "t_token_bpe" ->
-      s"""SELECT doc_id,
-         |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END AS BIGINT) AS n_ws,
-         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]{1,3}|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_bpe
-         |FROM documents""".stripMargin,
-    // fertility twin: same per-doc counts, lang rollup, positive DIV
-    "t_fertility" ->
-      s"""WITH a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END) AS BIGINT) AS ws_tokens,
-         |  CAST(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]{1,3}|[^A-Za-z0-9\\s]'))) AS BIGINT) AS bpe_tokens
-         |FROM documents GROUP BY 1)
-         |SELECT lang, n_docs, ws_tokens, bpe_tokens,
-         |  CAST(CAST(bpe_tokens AS HUGEINT) * 1000000 // greatest(ws_tokens, 1) AS BIGINT) AS fertility_ppm
-         |FROM a""".stripMargin,
-    // digest twin: same (id, fingerprint) key, same 40-bit hash, XOR
-    "q_corpus_digest" ->
-      s"""WITH f AS (SELECT CAST(doc_id AS VARCHAR) || ':' || $fpSql AS key, $fpSql AS fp
-         |  FROM documents),
-         |h AS (SELECT ('0x' || substr(md5(key), 1, 10))::BIGINT AS hv, fp FROM f)
-         |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(count(DISTINCT fp) AS BIGINT) AS n_distinct_fp,
-         |  CAST(bit_xor(hv) AS BIGINT) AS digest40
-         |FROM h""".stripMargin,
-    "t_bpe_pairs" ->
-      """WITH t AS (SELECT unnest(regexp_extract_all(text, '[A-Za-z]+|[0-9]{1,3}|[^A-Za-z0-9\s]')) AS token FROM documents),
-        |v AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM t WHERE len(token) >= 2 GROUP BY token),
-        |p AS (SELECT substr(token, CAST(i AS INT), 2) AS pair, cnt
-        |      FROM (SELECT token, cnt, unnest(generate_series(1, len(token) - 1)) AS i FROM v))
-        |SELECT pair, CAST(sum(cnt) AS BIGINT) AS n FROM p
-        |GROUP BY pair ORDER BY n DESC, pair LIMIT 50""".stripMargin,
-    "t_nfc" ->
-      s"""WITH r AS (SELECT doc_id, text || $denormSuffixSql AS raw
-         |FROM documents)
-         |SELECT doc_id, nfc_normalize(raw) AS nfc_text,
-         |  raw <> nfc_normalize(raw) AS changed,
-         |  CAST(len(raw) AS BIGINT) AS n_before,
-         |  CAST(len(nfc_normalize(raw)) AS BIGINT) AS n_after
-         |FROM r""".stripMargin,
-    // mojibake twin: the oracle never corrupts anything — it md5s the
-    // clean text directly, so the Spark corrupt→repair round trip must
-    // be a true inverse (and the repairer a no-op on clean text)
-    "t_mojibake" ->
-      """WITH t AS (SELECT doc_id,
-        |  text || ' ' || substr('中文漢字中文漢字中文漢字', 1, (doc_id % 4) * 4)
-        |       || substr('приветпривет', 1, (doc_id % 3) * 6)
-        |       || substr('مرحبامرحبا', 1, (doc_id % 2) * 5) AS st
-        |FROM documents)
-        |SELECT doc_id, md5(st) AS roundtrip_md5, md5(st) AS noop_md5,
-        |  (doc_id % 12 <> 0) AS corrupted
-        |FROM t""".stripMargin,
-    // closed-form twin of the robotsHtml synthesis: %7 docs carry
-    // noindex,nofollow (name-first attr order), %11 docs nofollow only
-    // (content-first order); the Spark side must parse both spellings
-    "w_robots_gate" ->
-      """SELECT doc_id, (doc_id % 7 = 0) AS noindex,
-        |  (doc_id % 7 = 0 OR doc_id % 11 = 0) AS nofollow
-        |FROM documents""".stripMargin,
-    // charset twin: the oracle rebuilds the SAME html string and md5s it
-    // directly — the Spark side must reach that md5 THROUGH bytes
-    // (encode → prescan sniff → routed decode)
-    "q_charset_decode" ->
-      """WITH h AS (SELECT doc_id,
-        |  '<html><head>' ||
-        |  (CASE WHEN doc_id % 4 = 0 THEN '<meta charset="UTF-8">'
-        |        WHEN doc_id % 4 = 1 THEN '<meta http-equiv="Content-Type" content="text/html; charset=ISO-8859-1">'
-        |        WHEN doc_id % 4 = 2 THEN ''
-        |        ELSE '<meta charset="Shift_JIS">' END) ||
-        |  '</head><body>' ||
-        |  (CASE WHEN doc_id % 4 = 1 THEN text || ' café résumé ±½'
-        |        WHEN doc_id % 4 = 3 THEN text
-        |        ELSE text || ' 中文 – fancy' END) ||
-        |  '</body></html>' AS html
-        |FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 4 = 0 THEN 'utf-8'
-        |       WHEN doc_id % 4 = 1 THEN 'iso-8859-1'
-        |       WHEN doc_id % 4 = 2 THEN ''
-        |       ELSE 'shift_jis' END AS charset,
-        |  (doc_id % 4 <> 3) AS known,
-        |  md5(html) AS text_md5,
-        |  md5(html) AS want_md5
-        |FROM h""".stripMargin,
-    // directives twin: expected delays/sitemaps recomputed from the host
-    // predicates the synthesis used — the Spark side must actually parse
-    // group selection, duplicate-group max-merge, and global sitemaps
-    "w_robots_directives" ->
-      s"""WITH $urlCte,
-         |h AS (SELECT DISTINCT host FROM p5)
-         |SELECT host,
-         |  CAST(CASE WHEN host LIKE 'cdn.%' AND host LIKE '%.org' THEN 4000
-         |            WHEN host LIKE 'cdn.%' THEN 1500
-         |            WHEN host LIKE '%.org' THEN 4000
-         |            ELSE 2000 END AS BIGINT) AS crawl_delay_ms,
-         |  CASE WHEN host LIKE '%.org'
-         |       THEN 'https://' || host || '/sitemap.xml,https://' || host || '/s2.xml'
-         |       ELSE 'https://' || host || '/sitemap.xml' END AS sitemaps
-         |FROM h""".stripMargin,
-    // metadata twin: expected values recomputed from the metaHtml moduli
-    // (never from the html), so the Spark side must genuinely parse
-    "w_meta_extract" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 5 = 4 THEN ''
-        |       ELSE 'Doc ' || CAST(doc_id % 100 AS VARCHAR) || ' & co' END AS title,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'Summary ' || CAST(doc_id % 17 AS VARCHAR) || ' & more'
-        |       WHEN doc_id % 3 = 1 THEN 'Alt summary ' || CAST(doc_id % 17 AS VARCHAR)
-        |       ELSE '' END AS description,
-        |  CASE WHEN doc_id % 4 = 0 THEN 'OG ' || CAST(doc_id % 13 AS VARCHAR) ELSE '' END AS og_title,
-        |  CASE WHEN doc_id % 2 = 0
-        |       THEN 'https://site' || CAST(doc_id % 13 AS VARCHAR) || '.com/c' || CAST(doc_id % 50 AS VARCHAR)
-        |       ELSE 'https://alt' || CAST(doc_id % 13 AS VARCHAR) || '.org/c' END AS canonical,
-        |  CASE WHEN doc_id % 6 = 0 THEN 'utf-8'
-        |       WHEN doc_id % 6 = 3 THEN 'iso-8859-1'
-        |       ELSE '' END AS charset
-        |FROM documents""".stripMargin,
-    "t_stopword" -> {
-      val stopRe = "\\b(?:" + graft.text.TextAnalytics.EnStopwords.mkString("|") + ")\\b"
-      s"""SELECT doc_id,
-         |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END AS BIGINT) AS n_tokens,
-         |  CAST(len(regexp_extract_all(lower(text), '$stopRe')) AS BIGINT) AS stop_tokens,
-         |  (len(regexp_extract_all(lower(text), '$stopRe')) >= 2) AS has_min_stop
-         |FROM documents""".stripMargin
-    },
-    "q_clean_corpus" -> {
-      val stopRe = "\\b(?:" + graft.text.TextAnalytics.EnStopwords.mkString("|") + ")\\b"
-      val masses = TextAnalytics.LangMarkers
-        .map { case (lang, ms) => s"CAST(${markerMassSql(ms)} AS BIGINT) AS m_$lang" }
-        .mkString(",\n  ")
-      val gm = "greatest(m_en, m_es, m_de, m_fr)"
-      s"""WITH n AS (SELECT doc_id, text,
-         |  ' ' || regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') || ' ' AS p FROM documents),
-         |m AS (SELECT doc_id, text, $masses FROM n),
-         |l AS (SELECT doc_id, text,
-         |  CASE WHEN $gm > 0 THEN
-         |    CASE WHEN m_en = $gm THEN 'en' WHEN m_es = $gm THEN 'es'
-         |         WHEN m_de = $gm THEN 'de' ELSE 'fr' END
-         |  ELSE 'und' END AS lg FROM m),
-         |q AS (SELECT doc_id, text, lg,
-         |  CASE WHEN length(trim(text)) = 0 THEN [] ELSE regexp_split_to_array(trim(text), '\\s+') END AS tk
-         |FROM l),
-         |f AS (SELECT doc_id, text FROM q WHERE
-         |  (CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(tk) END) >= 5
-         |  AND (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) * 100 <= length(text) * 20
-         |  AND (length(text) - length(regexp_replace(text, '[A-Z]', '', 'g'))) * 100 <= length(text) * 30
-         |  AND length(text) <= (CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(tk) END) * 20
-         |  AND lg <> 'und'
-         |  AND (lg <> 'en' OR len(regexp_extract_all(lower(text), '$stopRe')) >= 2)
-         |  AND NOT ((len(tk) - len(list_distinct(tk))) * 100 > len(tk) * 75))
-         |SELECT min(doc_id) AS doc_id FROM f
-         |GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))""".stripMargin
-    },
-    "w_url_canon" ->
-      s"""WITH $urlCte
-         |SELECT doc_id, url,
-         |  scheme || '://' || host || path || (CASE WHEN q2 = '' THEN '' ELSE '?' || q2 END) AS canon_url,
-         |  host, domain
-         |FROM p5""".stripMargin,
-    // robots twin: the fixed rule template replayed as closed-form CASE
-    // sitemap twin: same block-explode via the 1-indexed generate_series
-    // convention; entries without a <loc> drop per the protocol
-    "w_sitemap" ->
-      s"""WITH x AS (SELECT doc_id, $sitemapSqlExpr AS xml FROM documents),
-         |a AS (SELECT doc_id, regexp_extract_all(xml, '(?s)<url>(.*?)</url>', 1) AS bs FROM x),
-         |e AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, bs[i] AS b
-         |  FROM (SELECT doc_id, bs, unnest(generate_series(1, len(bs))) AS i FROM a))
-         |SELECT doc_id, pos,
-         |  regexp_extract(b, '<loc>([^<]*)</loc>', 1) AS loc,
-         |  regexp_extract(b, '<lastmod>([^<]*)</lastmod>', 1) AS lastmod
-         |FROM e WHERE regexp_extract(b, '<loc>([^<]*)</loc>', 1) <> ''""".stripMargin,
-    // index twin: same payload branch, both block parses unioned with
-    // their kinds
-    "w_sitemap_index" ->
-      s"""WITH x AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 4 = 0 THEN
-         |    '<?xml version="1.0"?><sitemapindex>' ||
-         |    '<sitemap><loc>https://site' || CAST(doc_id % 13 AS VARCHAR) ||
-         |    '.com/sitemap-a.xml</loc><lastmod>2024-01-0' || CAST(doc_id % 9 + 1 AS VARCHAR) ||
-         |    '</lastmod></sitemap>' ||
-         |    (CASE WHEN doc_id % 8 = 0 THEN
-         |      '<sitemap><loc>https://site' || CAST(doc_id % 13 AS VARCHAR) ||
-         |      '.com/sitemap-b.xml</loc></sitemap>' ELSE '' END) ||
-         |    '</sitemapindex>'
-         |  ELSE $sitemapSqlExpr END AS xml FROM documents),
-         |u AS (SELECT doc_id, 'url' AS kind, regexp_extract_all(xml, '(?s)<url>(.*?)</url>', 1) AS bs FROM x
-         |      UNION ALL
-         |      SELECT doc_id, 'sitemap' AS kind, regexp_extract_all(xml, '(?s)<sitemap>(.*?)</sitemap>', 1) AS bs FROM x),
-         |e AS (SELECT doc_id, kind, CAST(i - 1 AS BIGINT) AS pos, bs[i] AS b
-         |  FROM (SELECT doc_id, kind, bs, unnest(generate_series(1, len(bs))) AS i FROM u))
-         |SELECT doc_id, kind, pos,
-         |  regexp_extract(b, '<loc>([^<]*)</loc>', 1) AS loc,
-         |  regexp_extract(b, '<lastmod>([^<]*)</lastmod>', 1) AS lastmod
-         |FROM e WHERE regexp_extract(b, '<loc>([^<]*)</loc>', 1) <> ''""".stripMargin,
-    // logic over the url CTE's host + PATH+QUERY (pathq, fragment already
-    // stripped). Decision order mirrors longest-match: Allow /Docs/Page12
-    // (12) ties-or-beats every Disallow it can co-match with, the
-    // anchored /Docs/Page7$ requires pathq EXACTLY (a query breaks it),
-    // and the merged duplicate group's /*?id= fires on any ?id= query
-    "w_robots_txt" ->
-      s"""WITH $urlCte
-         |SELECT host, doc_id, url,
-         |  NOT (host NOT LIKE '%.net'
-         |    AND NOT pathq LIKE '/Docs/Page12%'
-         |    AND ((host LIKE 'cdn.%' AND pathq = '/Docs/Page7')
-         |      OR pathq LIKE '/Docs/Page1%'
-         |      OR pathq LIKE '%?id=%')
-         |  ) AS robots_allowed
-         |FROM p5""".stripMargin,
-    // frontier twin: same disjoint md5 windows (1–8 worker, 9–24 order)
-    // crawl-plan twin: locs re-derived from the sitemap moduli, the
-    // $-anchored .com /sm2 block and the .org 3 s delay applied by
-    // predicate, then the same worker/order hash windows as w_frontier
-    "q_crawl_plan" ->
-      s"""WITH x AS (SELECT doc_id, $sitemapSqlExpr AS xml FROM documents),
-         |a AS (SELECT doc_id, regexp_extract_all(xml, '(?s)<url>(.*?)</url>', 1) AS bs FROM x),
-         |e AS (SELECT bs[i] AS b
-         |  FROM (SELECT bs, unnest(generate_series(1, len(bs))) AS i FROM a)),
-         |u AS (SELECT DISTINCT regexp_extract(b, '<loc>([^<]*)</loc>', 1) AS url
-         |  FROM e WHERE regexp_extract(b, '<loc>([^<]*)</loc>', 1) <> ''),
-         |h AS (SELECT url, split_part(split_part(url, '://', 2), '/', 1) AS host FROM u),
-         |g AS (SELECT url, host FROM h
-         |  WHERE NOT (host LIKE '%.com' AND url LIKE '%/sm2')),
-         |sch AS (SELECT url, host,
-         |  ('0x' || substr(md5(host), 1, 8))::BIGINT % 8 AS worker,
-         |  CAST(row_number() OVER (PARTITION BY host
-         |    ORDER BY substr(md5(url), 9, 16), url) - 1 AS BIGINT) AS seq_in_host
-         |FROM g)
-         |SELECT host, url, CAST(worker AS BIGINT) AS worker, seq_in_host,
-         |  seq_in_host * (CASE WHEN host LIKE '%.org' THEN 3000 ELSE 1000 END) AS fetch_offset_ms
-         |FROM sch""".stripMargin,
-    "w_frontier" ->
-      s"""WITH $urlCte,
-         |sch AS (SELECT doc_id, url, host,
-         |  ('0x' || substr(md5(host), 1, 8))::BIGINT % 4 AS worker,
-         |  CAST(row_number() OVER (PARTITION BY host
-         |    ORDER BY substr(md5(url), 9, 16), url, doc_id) - 1 AS BIGINT) AS seq_in_host
-         |FROM p5)
-         |SELECT doc_id, url, host, CAST(worker AS BIGINT) AS worker, seq_in_host,
-         |  seq_in_host * 500 AS fetch_offset_ms FROM sch""".stripMargin,
-    "w_domain_stats" ->
-      s"""WITH $urlCte
-         |SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(count(DISTINCT host) AS BIGINT) AS n_hosts,
-         |  CAST(count(*) FILTER (WHERE $qualityPredSql) AS BIGINT) AS n_quality
-         |FROM p5 GROUP BY 1""".stripMargin,
-    // url-features twin: same fragment strip, authority split, and
-    // path/query cuts; %11 root-url override replayed with a CASE
-    "w_url_features" ->
-      s"""WITH $urlCte,
-         |uu AS (SELECT doc_id, CASE WHEN doc_id % 11 = 0
-         |  THEN 'https://root' || CAST(doc_id % 5 AS VARCHAR) || '.com/' ELSE url END AS u2 FROM u),
-         |nf AS (SELECT doc_id, regexp_replace(u2, '#.*$$', '') AS nfu FROM uu),
-         |r AS (SELECT doc_id, CASE WHEN instr(nfu, '://') = 0 THEN nfu
-         |  ELSE substr(nfu, instr(nfu, '://') + 3) END AS rest FROM nf),
-         |pq AS (SELECT doc_id, regexp_replace(rest, '^[^/?]*', '') AS pathq FROM r),
-         |f AS (SELECT doc_id, split_part(pathq, '?', 1) AS path,
-         |  CASE WHEN instr(pathq, '?') = 0 THEN ''
-         |       ELSE substr(pathq, instr(pathq, '?') + 1) END AS q FROM pq)
-         |SELECT doc_id,
-         |  CAST(len(list_filter(string_split(path, '/'), x -> x <> '')) AS BIGINT) AS path_depth,
-         |  CAST(CASE WHEN q = '' THEN 0 ELSE len(string_split(q, '&')) END AS BIGINT) AS n_params,
-         |  (len(list_filter(string_split(path, '/'), x -> x <> '')) = 0) AS is_root
-         |FROM f""".stripMargin,
-    // gini twin: same counts-of-counts closed form, HUGEINT for the
-    // 10^26-scale numerator, same non-negative floor division
-    "w_domain_gini" ->
-      s"""WITH $urlCte,
-         |counts AS (SELECT domain, count(*) AS cnt FROM p5 GROUP BY 1),
-         |cc AS (SELECT cnt, count(*) AS m FROM counts GROUP BY 1),
-         |w AS (SELECT cnt, m, COALESCE(sum(m) OVER (ORDER BY cnt
-         |       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS a FROM cc),
-         |t AS (SELECT
-         |  -- m·a and the m·(m+1)/2 tie term widened BEFORE the products
-         |  -- (BIGINT m*(m+1) wraps past m ≈ 3e9; Spark mirrors with the
-         |  -- even-half split in DECIMAL(38,0))
-         |  CAST(sum(CAST(cnt AS HUGEINT) * (CAST(m AS HUGEINT) * a +
-         |    (CASE WHEN m % 2 = 0 THEN m // 2 ELSE m END) *
-         |    CAST(CASE WHEN m % 2 = 0 THEN m + 1 ELSE (m + 1) // 2 END AS HUGEINT))) AS HUGEINT) AS sumic,
-         |  CAST(sum(m) AS HUGEINT) AS n,
-         |  CAST(sum(CAST(cnt AS HUGEINT) * m) AS HUGEINT) AS s,
-         |  CAST(max(cnt) AS HUGEINT) AS mx FROM w)
-         |SELECT CAST(n AS BIGINT) AS n_keys, CAST(s AS BIGINT) AS n_docs,
-         |  CAST(((2 * sumic - (n + 1) * s) * 1000000) // (n * s) AS BIGINT) AS gini_ppm,
-         |  CAST((mx * 1000000) // s AS BIGINT) AS top_share_ppm
-         |FROM t""".stripMargin,
-    // prior twin: same per-domain counts, same one-row global rate, same
-    // positive integer DIV smoothing
-    "w_domain_prior" ->
-      s"""WITH $urlCte,
-         |ds AS (SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(count(*) FILTER (WHERE $qualityPredSql) AS BIGINT) AS n_quality
-         |FROM p5 GROUP BY 1),
-         |g AS (SELECT CAST(sum(n_quality) * 1000000 // sum(n_docs) AS BIGINT) AS global_ppm FROM ds)
-         |SELECT domain, n_docs, n_quality, global_ppm,
-         |  CAST((n_quality * 1000000 + 20 * global_ppm) // (n_docs + 20) AS BIGINT) AS prior_ppm
-         |FROM ds, g""".stripMargin,
-    // revision twin: same canonical assembly as w_url_canon, same
-    // normalized-md5 fingerprint as t_fingerprint; latest-wins = max_by
-    // on the unique doc_id (fetch order)
-    "w_url_revisions" ->
-      s"""WITH $urlCte,
-         |c AS (SELECT doc_id,
-         |  scheme || '://' || host || path || (CASE WHEN q2 = '' THEN '' ELSE '?' || q2 END) AS canon_url,
-         |  $fpSql AS fp FROM p5)
-         |SELECT canon_url, CAST(count(*) AS BIGINT) AS n_fetches,
-         |  CAST(count(DISTINCT fp) AS BIGINT) AS n_versions,
-         |  CAST(max(doc_id) AS BIGINT) AS latest_id,
-         |  max_by(fp, doc_id) AS latest_fp
-         |FROM c GROUP BY 1""".stripMargin,
-    // recrawl twin: same canonical/fingerprint aggregate, same DIV
-    // arithmetic and clamps
-    "w_recrawl_sched" ->
-      s"""WITH $urlCte,
-         |c0 AS (SELECT doc_id,
-         |  scheme || '://' || host || path || (CASE WHEN q2 = '' THEN '' ELSE '?' || q2 END) AS canon_url,
-         |  text FROM p5),
-         |c AS (SELECT doc_id, canon_url, $fpSql AS fp FROM c0
-         |      UNION ALL
-         |      SELECT doc_id + 1000000 AS doc_id, canon_url,
-         |        md5(regexp_replace(lower(trim(
-         |          CASE WHEN doc_id % 4 = 0 THEN text || ' updated' ELSE text END)), '\\s+', ' ', 'g')) AS fp
-         |      FROM c0 WHERE doc_id % 2 = 0),
-         |r AS (SELECT canon_url, CAST(count(*) AS BIGINT) AS n_fetches,
-         |  CAST(count(DISTINCT fp) AS BIGINT) AS n_versions FROM c GROUP BY 1),
-         |s AS (SELECT canon_url, n_fetches, n_versions,
-         |  CAST((n_versions - 1) * 1000000 // greatest(n_fetches - 1, 1) AS BIGINT) AS change_ppm FROM r)
-         |SELECT canon_url, n_fetches, n_versions, change_ppm,
-         |  CASE WHEN change_ppm >= 500000 THEN 'hot'
-         |       WHEN change_ppm >= 100000 THEN 'warm' ELSE 'cold' END AS tier,
-         |  CAST(least(720, greatest(6, 6 * 1000000 // greatest(change_ppm, 1))) AS BIGINT) AS interval_h
-         |FROM s""".stripMargin,
-    "w_blocklist_keep" ->
-      s"""WITH $urlCte
-         |SELECT doc_id, domain FROM p5
-         |WHERE domain NOT IN (${BlockedDomains.map(d => s"'$d'").mkString(", ")})""".stripMargin,
-    "w_link_graph" ->
-      s"""WITH $linkEdgesCte
-         |SELECT src, dst, weight FROM edges""".stripMargin,
-    "w_domain_rank" -> domainRankSql(5),
-    "w_rank_deltas" -> domainRankDeltasSql(5),
-    "w_hits" -> hitsSql(3),
-    "w_hits_deltas" -> hitsDeltasSql(3),
-    // reciprocity twin: distinct non-loop pairs left-joined to their own
-    // reversal, per-source rollup
-    "w_link_recip" ->
-      s"""WITH $linkEdgesCte,
-         |e AS (SELECT DISTINCT src, dst FROM edges WHERE src <> dst),
-         |j AS (SELECT e.src, e.dst, (r.src IS NOT NULL) AS has_back
-         |      FROM e LEFT JOIN e r ON r.src = e.dst AND r.dst = e.src)
-         |SELECT src AS domain, CAST(count(*) AS BIGINT) AS n_out,
-         |  CAST(count(*) FILTER (WHERE has_back) AS BIGINT) AS n_recip,
-         |  CAST(count(*) FILTER (WHERE has_back) * 1000000 // count(*) AS BIGINT) AS recip_ppm
-         |FROM j GROUP BY 1""".stripMargin,
-    // triangle twin: canonical name-ordered triple join over the
-    // undirected simple edge set (orientation is an enumeration detail —
-    // per-domain counts are orientation-free)
-    "w_link_triangles" ->
-      s"""WITH $linkEdgesCte,
-         |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |        FROM edges WHERE src <> dst),
-         |deg AS (SELECT v, CAST(count(*) AS BIGINT) AS degree FROM (
-         |        SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und) GROUP BY 1),
-         |tri AS (SELECT e1.a AS u, e1.b AS x, e2.b AS y
-         |        FROM und e1 JOIN und e2 ON e2.a = e1.b
-         |        JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |pd AS (SELECT v, CAST(count(*) AS BIGINT) AS n_triangles FROM (
-         |        SELECT u AS v FROM tri UNION ALL SELECT x AS v FROM tri
-         |        UNION ALL SELECT y AS v FROM tri) GROUP BY 1)
-         |SELECT deg.v AS domain, degree,
-         |  CAST(coalesce(pd.n_triangles, 0) AS BIGINT) AS n_triangles,
-         |  CAST(CASE WHEN degree >= 2
-         |       THEN 2 * coalesce(pd.n_triangles, 0) * 1000000 // (degree * (degree - 1))
-         |       ELSE 0 END AS BIGINT) AS clustering_ppm
-         |FROM deg LEFT JOIN pd ON pd.v = deg.v""".stripMargin,
-    // anchor harvest reconstructed from the page generator's math: every
-    // sniffed-html document carries the 11 constant boilerplate anchors
-    // (resolved against the synth.example host); citation anchors follow
-    // the [[citedText]] moduli, with %10 documents mentioning their
-    // target twice (mentions > inlinks) and giant (%97) pages replicating
-    // their body — and its citations — ×25
-    "w_anchor_text" ->
-      """WITH h AS (SELECT doc_id FROM documents
-        |  WHERE doc_id % 3 <> 0 AND doc_id % 41 <> 0 AND doc_id % 53 <> 0),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM h),
-        |boiler(path, a) AS (VALUES ('/', 'home'), ('/news', 'news'),
-        |  ('/about', 'about'), ('/contact', 'contact'), ('/promo', 'promo'),
-        |  ('/deal', 'deal'), ('/sale', 'sale'), ('/r1', 'rel 1'),
-        |  ('/r2', 'rel 2'), ('/terms', 'terms'), ('/privacy', 'privacy')),
-        |b AS (SELECT 'https://synth.example' || path AS target, n AS inlinks,
-        |  n AS mentions, a AS anchor FROM boiler, tot),
-        |c AS (SELECT 'https://cite.example/p' || CAST(doc_id % 17 AS VARCHAR) AS target,
-        |  CAST(count(*) AS BIGINT) AS inlinks,
-        |  CAST(sum((CASE WHEN doc_id % 97 = 0 THEN 25 ELSE 1 END)
-        |         * (CASE WHEN doc_id % 10 = 0 THEN 2 ELSE 1 END)) AS BIGINT) AS mentions,
-        |  min('cite p' || CAST(doc_id % 17 AS VARCHAR)) AS anchor
-        |  FROM h WHERE doc_id % 5 = 0 GROUP BY doc_id % 17)
-        |SELECT * FROM b UNION ALL SELECT * FROM c""".stripMargin,
-    "w_domain_cap" ->
-      s"""WITH $urlCte,
-         |r AS (SELECT doc_id, domain,
-         |  row_number() OVER (PARTITION BY domain ORDER BY md5(CAST(doc_id AS VARCHAR))) AS rn
-         |FROM p5)
-         |SELECT doc_id, domain FROM r WHERE rn <= 5""".stripMargin,
-    "q_seq_pack" ->
-      s"""WITH t AS (SELECT doc_id,
-         |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END AS BIGINT) AS n_tokens
-         |FROM documents),
-         |s AS (SELECT doc_id, n_tokens, CAST(doc_id % 4 AS BIGINT) AS stream,
-         |  COALESCE(SUM(n_tokens) OVER (PARTITION BY doc_id % 4
-         |    ORDER BY md5(CAST(doc_id AS VARCHAR))
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM t)
-         |SELECT doc_id, n_tokens, stream,
-         |  CAST(cum // 256 AS BIGINT) AS seq_no,
-         |  CAST(cum % 256 AS BIGINT) AS seq_offset FROM s""".stripMargin,
-    // block-slicing twin: same stream/prefix-sum CTE, block ids from the
-    // inclusive token span [cum, cum + n_tokens - 1]; zero-weight docs
-    // occupy no block
-    "q_block_pack" ->
-      s"""WITH t AS (SELECT doc_id,
-         |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END AS BIGINT) AS n_tokens
-         |FROM documents),
-         |s AS (SELECT doc_id, n_tokens, CAST(doc_id % 4 AS BIGINT) AS stream,
-         |  COALESCE(SUM(n_tokens) OVER (PARTITION BY doc_id % 4
-         |    ORDER BY md5(CAST(doc_id AS VARCHAR))
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM t)
-         |SELECT doc_id, n_tokens, stream, CAST(cum AS BIGINT) AS start_off,
-         |  CAST(cum // 256 AS BIGINT) AS block_first,
-         |  CAST(CASE WHEN n_tokens > 0 THEN (cum + n_tokens - 1) // 256
-         |            ELSE cum // 256 END AS BIGINT) AS block_last,
-         |  CAST(CASE WHEN n_tokens > 0
-         |            THEN (cum + n_tokens - 1) // 256 - cum // 256 + 1
-         |            ELSE 0 END AS BIGINT) AS n_blocks
-         |FROM s""".stripMargin,
-    "t_script" ->
-      """WITH t AS (SELECT doc_id,
-        |  text || ' ' || substr('中文漢字中文漢字中文漢字', 1, (doc_id % 4) * 4)
-        |       || substr('приветпривет', 1, (doc_id % 3) * 6)
-        |       || substr('مرحبامرحبا', 1, (doc_id % 2) * 5) AS st
-        |FROM documents),
-        |c AS (SELECT doc_id,
-        |  CAST(length(st) - length(regexp_replace(st, '[A-Za-z]', '', 'g')) AS BIGINT) AS latin_chars,
-        |  CAST(length(st) - length(regexp_replace(st, '[\x{4e00}-\x{9fff}]', '', 'g')) AS BIGINT) AS han_chars,
-        |  CAST(length(st) - length(regexp_replace(st, '[\x{0400}-\x{04ff}]', '', 'g')) AS BIGINT) AS cyr_chars,
-        |  CAST(length(st) - length(regexp_replace(st, '[\x{0600}-\x{06ff}]', '', 'g')) AS BIGINT) AS ara_chars
-        |FROM t)
-        |SELECT doc_id, latin_chars, han_chars, cyr_chars, ara_chars,
-        |  CASE WHEN greatest(han_chars, cyr_chars, ara_chars) = 0 THEN 'none'
-        |       WHEN han_chars = greatest(han_chars, cyr_chars, ara_chars) THEN 'han'
-        |       WHEN cyr_chars = greatest(han_chars, cyr_chars, ara_chars) THEN 'cyrillic'
-        |       ELSE 'arabic' END AS dominant_nonlatin
-        |FROM c""".stripMargin,
-    "t_redact" ->
-      s"""WITH t AS (SELECT doc_id, $piiSqlExpr AS pii
-         |FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(pii, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-         |  CAST(len(regexp_extract_all(regexp_replace(pii, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'), '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}')) AS BIGINT) AS n_ips,
-         |  CAST(len(regexp_extract_all(regexp_replace(regexp_replace(pii, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'), '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}', '<IP>', 'g'), '\\+[0-9]{7,15}')) AS BIGINT) AS n_phones,
-         |  ${redactSql("pii")} AS redacted
-         |FROM t""".stripMargin,
-    "t_chunks" ->
-      s"""WITH t AS (SELECT doc_id, $tok AS tk FROM documents WHERE length(trim(text)) > 0),
-         |n AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t),
-         |c AS (SELECT doc_id, tk, n,
-         |  CASE WHEN n <= 16 THEN 1 ELSE 1 + (n - 16 + 11) // 12 END AS nc FROM n),
-         |e AS (SELECT doc_id, tk, n, unnest(generate_series(0, nc - 1)) AS i FROM c)
-         |SELECT doc_id, CAST(i AS BIGINT) AS chunk_id,
-         |  CAST(least(16, n - i*12) AS BIGINT) AS n_chunk_tokens,
-         |  array_to_string(tk[i*12 + 1 : i*12 + 16], ' ') AS chunk_text
-         |FROM e""".stripMargin,
-    "q_decontaminate" ->
-      s"""WITH w AS (SELECT doc_id, $tok AS ws FROM documents),
-         |bw AS (SELECT doc_id, ws[6:33] AS ws FROM w WHERE doc_id % 101 = 0 AND len(ws) >= 33),
-         |bench AS (SELECT DISTINCT md5(
-         |  $gram8) AS gh
-         |  FROM (SELECT ws, unnest(generate_series(1, len(ws) - 7)) AS i FROM bw)),
-         |corpus AS (SELECT DISTINCT doc_id, md5(
-         |  $gram8) AS gh
-         |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 7)) AS i FROM w))
-         |SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_overlap
-         |FROM corpus c JOIN bench b USING (gh) GROUP BY 1""".stripMargin,
-    // span twin: positions ride the gram stream (no distinct — within-doc
-    // repeats are separate hits), same envelope arithmetic
-    "q_decontaminate_spans" ->
-      s"""WITH w AS (SELECT doc_id, $tok AS ws FROM documents),
-         |bw AS (SELECT doc_id, ws[6:33] AS ws FROM w WHERE doc_id % 101 = 0 AND len(ws) >= 33),
-         |bench AS (SELECT DISTINCT md5(
-         |  $gram8) AS gh
-         |  FROM (SELECT ws, unnest(generate_series(1, len(ws) - 7)) AS i FROM bw)),
-         |corpus AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, md5(
-         |  $gram8) AS gh
-         |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 7)) AS i FROM w))
-         |SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_hits,
-         |  min(pos) AS first_gram, max(pos) AS last_gram,
-         |  max(pos) - min(pos) + 8 AS span_tokens
-         |FROM corpus c JOIN bench b USING (gh) GROUP BY 1""".stripMargin,
-    "q_training_export" -> {
-      val stopRe = "\\b(?:" + graft.text.TextAnalytics.EnStopwords.mkString("|") + ")\\b"
-      val masses = TextAnalytics.LangMarkers
-        .map { case (lang, ms) => s"CAST(${markerMassSql(ms)} AS BIGINT) AS m_$lang" }
-        .mkString(",\n  ")
-      val gm = "greatest(m_en, m_es, m_de, m_fr)"
-      s"""WITH d0 AS (SELECT doc_id, $piiSqlExpr AS text
-         |FROM documents),
-         |n AS (SELECT doc_id, text, ' ' || regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') || ' ' AS p FROM d0),
-         |m AS (SELECT doc_id, text, $masses FROM n),
-         |l AS (SELECT doc_id, text,
-         |  CASE WHEN $gm > 0 THEN
-         |    CASE WHEN m_en = $gm THEN 'en' WHEN m_es = $gm THEN 'es'
-         |         WHEN m_de = $gm THEN 'de' ELSE 'fr' END
-         |  ELSE 'und' END AS lg FROM m),
-         |q AS (SELECT doc_id, text, lg,
-         |  CASE WHEN length(trim(text)) = 0 THEN [] ELSE regexp_split_to_array(trim(text), '\\s+') END AS tk FROM l),
-         |f AS (SELECT doc_id, text FROM q WHERE
-         |  $qualityPredSql
-         |  AND lg <> 'und'
-         |  AND (lg <> 'en' OR len(regexp_extract_all(lower(text), '$stopRe')) >= 2)
-         |  AND NOT ((len(tk) - len(list_distinct(tk))) * 100 > len(tk) * 75)),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM f
-         |  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))),
-         |fk AS (SELECT f.doc_id, f.text FROM f JOIN keep USING (doc_id)),
-         |w2 AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM d0),
-         |bw AS (SELECT ws[6:33] AS ws FROM w2 WHERE doc_id % 101 = 0 AND len(ws) >= 33),
-         |bench AS (SELECT DISTINCT md5(
-         |  $gram8) AS gh
-         |  FROM (SELECT ws, unnest(generate_series(1, len(ws) - 7)) AS i FROM bw)),
-         |cg AS (SELECT DISTINCT doc_id, md5(
-         |  $gram8) AS gh
-         |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 7)) AS i
-         |        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM fk))),
-         |bad AS (SELECT DISTINCT c.doc_id FROM cg c JOIN bench b USING (gh)),
-         |fd AS (SELECT fk.doc_id, fk.text FROM fk LEFT JOIN bad ON fk.doc_id = bad.doc_id WHERE bad.doc_id IS NULL),
-         |red AS (SELECT doc_id, ${redactSql("text")} AS rtext FROM fd),
-         |t AS (SELECT doc_id, regexp_split_to_array(trim(rtext), '\\s+') AS tk FROM red WHERE length(trim(rtext)) > 0),
-         |nn AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t),
-         |cc AS (SELECT doc_id, tk, n, CASE WHEN n <= 16 THEN 1 ELSE 1 + (n - 16 + 11) // 12 END AS nc FROM nn),
-         |e AS (SELECT doc_id, tk, n, unnest(generate_series(0, nc - 1)) AS i FROM cc)
-         |SELECT doc_id, CAST(i AS BIGINT) AS chunk_id,
-         |  CAST(least(16, n - i*12) AS BIGINT) AS n_chunk_tokens,
-         |  array_to_string(tk[i*12 + 1 : i*12 + 16], ' ') AS chunk_text
-         |FROM e""".stripMargin
-    },
-    "q_shard_pack" ->
-      s"""WITH t AS (SELECT doc_id,
-         |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END AS BIGINT) AS n_tokens
-         |FROM documents),
-         |b AS (SELECT doc_id, n_tokens,
-         |  CAST(floor(n_tokens / 64.0) AS BIGINT) AS bucket, doc_id % 4 AS sub FROM t),
-         |r AS (SELECT doc_id, n_tokens, bucket,
-         |  (bucket * 31 + sub) % 8 AS phase,
-         |  row_number() OVER (PARTITION BY bucket, sub
-         |                     ORDER BY md5(CAST(doc_id AS VARCHAR))) AS rn FROM b)
-         |SELECT doc_id, n_tokens, bucket, CAST((rn - 1 + phase) % 8 AS BIGINT) AS shard FROM r""".stripMargin,
-    // epoch-shuffle twin: same seeded md5 order key, same leading-32-bit
-    // shard window, same dense within-shard row_number
-    // curriculum twin: the tier chain (integer tier index), then the
-    // epoch-shuffle md5 key with positions within (tier, shard)
-    "q_curriculum" ->
-      s"""WITH $lmScoreCte,
-         |h AS (SELECT avg_ppm AS s, count(*) AS c FROM sc GROUP BY 1),
-         |cm AS (SELECT s, sum(c) OVER (ORDER BY s) AS cum, sum(c) OVER () AS n FROM h),
-         |bnd AS (SELECT min(CASE WHEN cum * 3 >= n THEN s END) AS b1,
-         |               min(CASE WHEN cum * 3 >= n * 2 THEN s END) AS b2 FROM cm),
-         |ctier AS (SELECT sc.doc_id,
-         |  CAST((CASE WHEN sc.avg_ppm > bnd.b1 THEN 1 ELSE 0 END) +
-         |       (CASE WHEN sc.avg_ppm > bnd.b2 THEN 1 ELSE 0 END) AS BIGINT) AS tier
-         |  FROM sc, bnd),
-         |ckey AS (SELECT doc_id, tier, md5('7:' || CAST(doc_id AS VARCHAR)) AS okey FROM ctier),
-         |csh AS (SELECT doc_id, tier, okey,
-         |  CAST(('0x' || substr(okey, 1, 8))::BIGINT % 8 AS BIGINT) AS shard FROM ckey)
-         |SELECT doc_id, tier, shard,
-         |  CAST(row_number() OVER (PARTITION BY tier, shard ORDER BY okey, doc_id) - 1 AS BIGINT) AS pos
-         |FROM csh""".stripMargin,
-    "q_epoch_shuffle" ->
-      """WITH k AS (SELECT doc_id, md5('7:' || CAST(doc_id AS VARCHAR)) AS okey FROM documents),
-        |s AS (SELECT doc_id, okey,
-        |  CAST(('0x' || substr(okey, 1, 8))::BIGINT % 8 AS BIGINT) AS shard FROM k)
-        |SELECT doc_id, shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY okey, doc_id) - 1 AS BIGINT) AS pos
-        |FROM s""".stripMargin,
-    "t_len_quartiles" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(min(n_chars) AS BIGINT) AS v_min,
-        |  CAST(quantile_cont(n_chars, 0.25) * 4 AS BIGINT) AS p25_x4,
-        |  CAST(quantile_cont(n_chars, 0.5) * 4 AS BIGINT) AS p50_x4,
-        |  CAST(quantile_cont(n_chars, 0.75) * 4 AS BIGINT) AS p75_x4,
-        |  CAST(max(n_chars) AS BIGINT) AS v_max
-        |FROM documents GROUP BY 1""".stripMargin,
-    // point-lookup twin: the equality select the table serves through
-    // manifest range stats + bloom sidecars
-    "q_table_point" ->
-      s"""WITH $urlCte
-         |SELECT doc_id, url, n_chars FROM u JOIN documents USING (doc_id)
-         |WHERE url = (SELECT url FROM u WHERE doc_id = 7)""".stripMargin,
-    // incremental-view twin: the end state of delta-merge maintenance
-    // must equal one full group-by over everything ever appended
-    "q_incr_view" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_value
-        |FROM documents GROUP BY 1""".stripMargin,
-    // Morton twin: the bit interleave unrolled as a 10-term shift/mask sum
-    "q_zorder" -> {
-      val terms = (0 until 10).map(i =>
-        s"(((za >> $i) & 1) * ${1L << (2 * i)} + ((zb >> $i) & 1) * ${1L << (2 * i + 1)})")
-        .mkString(" + ")
-      s"""WITH t AS (SELECT doc_id, doc_id % 1024 AS za, (doc_id * 37) % 1024 AS zb
-         |  FROM documents)
-         |SELECT doc_id, CAST(za AS BIGINT) AS za, CAST(zb AS BIGINT) AS zb,
-         |  CAST($terms AS BIGINT) AS zval FROM t""".stripMargin
-    },
-    // KMV twin: the k-min set replayed via DISTINCT + row_number rank;
-    // same integer estimator ((k-1) * 2^40) // kth
-    "q_kmv_distinct" ->
-      """WITH h AS (SELECT source, text,
-        |  ('0x' || substr(md5(text), 1, 10))::BIGINT AS hv FROM documents),
-        |g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT text) AS BIGINT) AS n_distinct_exact FROM h GROUP BY 1),
-        |d AS (SELECT DISTINCT source, hv FROM h),
-        |r AS (SELECT source, hv, row_number() OVER (PARTITION BY source ORDER BY hv) AS rn FROM d),
-        |kk AS (SELECT source, CAST(count(*) AS BIGINT) AS n_kept,
-        |  CAST(max(hv) AS BIGINT) AS kth_min FROM r WHERE rn <= 16 GROUP BY 1)
-        |SELECT g.source, g.n_rows, g.n_distinct_exact, kk.n_kept, kk.kth_min,
-        |  CAST(CASE WHEN kk.n_kept < 16 THEN kk.n_kept
-        |       ELSE (15 * 1099511627776) // greatest(kth_min, 1) END AS BIGINT) AS est_distinct
-        |FROM g JOIN kk USING (source)""".stripMargin,
-    // phrase twin: every posting of a phrase term votes for its would-be
-    // occurrence start; starts with all slots matched count as
-    // occurrences. Shared verbatim by the scan and index paths.
-    "t_phrase" ->
-      """WITH w AS (SELECT doc_id,
-        |  CASE WHEN length(trim(text)) = 0 THEN []
-        |       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS ws
-        |FROM documents),
-        |p AS (SELECT doc_id, i - 1 AS pos, ws[i] AS term
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i FROM w)),
-        |ph(j, term) AS (VALUES (0, 'the'), (1, 'group')),
-        |c AS (SELECT p.doc_id, p.pos - ph.j AS start FROM p JOIN ph USING (term)),
-        |h AS (SELECT doc_id, start, count(*) AS hits FROM c GROUP BY 1, 2)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_occ,
-        |  CAST(min(start) AS BIGINT) AS first_pos
-        |FROM h WHERE hits = 2 AND start >= 0 GROUP BY 1""".stripMargin,
-    "t_phrase_indexed" ->
-      """WITH w AS (SELECT doc_id,
-        |  CASE WHEN length(trim(text)) = 0 THEN []
-        |       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS ws
-        |FROM documents),
-        |p AS (SELECT doc_id, i - 1 AS pos, ws[i] AS term
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i FROM w)),
-        |ph(j, term) AS (VALUES (0, 'the'), (1, 'group')),
-        |c AS (SELECT p.doc_id, p.pos - ph.j AS start FROM p JOIN ph USING (term)),
-        |h AS (SELECT doc_id, start, count(*) AS hits FROM c GROUP BY 1, 2)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_occ,
-        |  CAST(min(start) AS BIGINT) AS first_pos
-        |FROM h WHERE hits = 2 AND start >= 0 GROUP BY 1""".stripMargin,
-    // heavy-hitter twin: in the exact regime the SpaceSaving summary IS
-    // the group-by count (err 0), same (cnt desc, domain) top-10 cut
-    "q_heavy_domains" ->
-      s"""WITH $urlCte
-         |SELECT domain, CAST(count(*) AS BIGINT) AS cnt, CAST(0 AS BIGINT) AS err
-         |FROM p5 GROUP BY 1 ORDER BY cnt DESC, domain LIMIT 10""".stripMargin,
-    // quantile-sketch twin: bottom-16 by (id-hash, value) via row_number,
-    // then the same ×4 quarter-fraction interpolation over the sorted
-    // sample list
-    "q_quantile_sample" -> {
-      def qx4(p: Int): String =
-        s"4 * s[((ns - 1) * $p) // 4 + 1] + " +
-          s"(s[((ns - 1) * $p) // 4 + (CASE WHEN ((ns - 1) * $p) % 4 > 0 THEN 2 ELSE 1 END)] - " +
-          s"s[((ns - 1) * $p) // 4 + 1]) * (((ns - 1) * $p) % 4)"
-      s"""WITH h AS (SELECT source, CAST(n_chars AS BIGINT) AS v,
-         |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 10))::BIGINT AS hk FROM documents),
-         |g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_rows FROM h GROUP BY 1),
-         |d AS (SELECT DISTINCT source, hk, v FROM h),
-         |r AS (SELECT source, v, row_number() OVER (PARTITION BY source ORDER BY hk, v) AS rn FROM d),
-         |a AS (SELECT source, list(v ORDER BY v) AS s, CAST(count(*) AS BIGINT) AS ns
-         |  FROM r WHERE rn <= 16 GROUP BY 1)
-         |SELECT g.source, g.n_rows, a.ns AS n_sample,
-         |  CAST(s[1] AS BIGINT) AS s_min,
-         |  CAST(${qx4(1)} AS BIGINT) AS p25_x4,
-         |  CAST(${qx4(2)} AS BIGINT) AS p50_x4,
-         |  CAST(${qx4(3)} AS BIGINT) AS p75_x4,
-         |  CAST(s[ns] AS BIGINT) AS s_max
-         |FROM g JOIN a USING (source)""".stripMargin
-    },
-    "q_corpus_card" ->
-      s"""SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END) AS BIGINT) AS n_tokens,
-         |  CAST(sum(length(text)) AS BIGINT) AS n_chars,
-         |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-         |  CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-         |  CAST(count(DISTINCT $fpSql) AS BIGINT) AS n_distinct_texts
-         |FROM documents""".stripMargin,
-    "e_sessionize" ->
-      s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-         |l AS (SELECT user_id, ts_us, event_id,
-         |  CASE WHEN lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) IS NULL
-         |         OR ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) > $SessionGapUs
-         |       THEN 1 ELSE 0 END AS is_new FROM e),
-         |s AS (SELECT user_id, ts_us,
-         |  CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-         |       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM l)
-         |SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
-         |  min(ts_us) AS start_us, max(ts_us) AS end_us
-         |FROM s GROUP BY 1, 2""".stripMargin,
-    // funnel twin: same greedy min-after chain, left joins preserving
-    // stalled walks, depth from reached steps
-    "e_funnel" ->
-      """WITH ev AS (SELECT * FROM events WHERE event_id % 7 = 0),
-        |s0 AS (SELECT user_id, min(ts) AS ts_0 FROM ev WHERE event_type = 'view' GROUP BY 1),
-        |s1 AS (SELECT e.user_id, min(e.ts) AS ts_1 FROM ev e JOIN s0 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.ts >= s0.ts_0 GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS ts_2 FROM ev e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts >= s1.ts_1 GROUP BY 1)
-        |SELECT s0.user_id, s0.ts_0 AS ts_view, s1.ts_1 AS ts_click, s2.ts_2 AS ts_purchase,
-        |  CAST(1 + (CASE WHEN s1.ts_1 IS NOT NULL THEN 1 ELSE 0 END)
-        |         + (CASE WHEN s2.ts_2 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS depth
-        |FROM s0 LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)""".stripMargin,
-    // transitions twin: same (ts, id)-ordered lead, same pair rollup
-    "e_transitions" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |l AS (SELECT event_type AS from_type,
-        |  lead(event_type) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS to_type FROM e)
-        |SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-        |FROM l WHERE to_type IS NOT NULL GROUP BY 1, 2""".stripMargin,
-    // redirects twin: same synthesized edges; bounded recursive walk to
-    // 64 hops, last row per src, terminal = no outgoing edge
-    "w_redirects" ->
-      """WITH RECURSIVE uu AS (SELECT doc_id AS id,
-        |  'https://r' || CAST(doc_id % 13 AS VARCHAR) || '.example/p' || CAST(doc_id AS VARCHAR) AS url
-        |  FROM documents),
-        |eb AS (SELECT a.url AS src, b.url AS dst FROM uu a JOIN uu b ON b.id = a.id + 1
-        |       WHERE a.id % 7 <> 6
-        |       UNION ALL
-        |       SELECT a.url AS src, b.url AS dst FROM uu a JOIN uu b ON b.id = a.id - 1
-        |       WHERE a.id % 7 = 6 AND a.id % 41 = 0),
-        |e AS (SELECT DISTINCT src, dst FROM eb),
-        |walk(src, cur, hops) AS (
-        |  SELECT src, dst, CAST(1 AS BIGINT) FROM e
-        |  UNION ALL
-        |  SELECT w.src, e2.dst, w.hops + 1 FROM walk w JOIN e e2 ON e2.src = w.cur
-        |  WHERE w.hops < 64),
-        |lst AS (SELECT src, max(hops) AS hops FROM walk GROUP BY src),
-        |fin AS (SELECT w.src, w.cur AS final, w.hops FROM walk w
-        |        JOIN lst l ON l.src = w.src AND l.hops = w.hops)
-        |SELECT src, final, hops,
-        |  NOT EXISTS (SELECT 1 FROM e e3 WHERE e3.src = fin.final) AS resolved
-        |FROM fin""".stripMargin,
-    // retention twin: same day-index DIV, same first-seen window, same
-    // offset-0 cohort size via first_value over the cell relation
-    "e_retention" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS p FROM events),
-        |f AS (SELECT user_id, p, min(p) OVER (PARTITION BY user_id) AS cohort FROM e),
-        |u AS (SELECT DISTINCT user_id, cohort, p - cohort AS offset_p FROM f),
-        |c AS (SELECT cohort AS cohort_p, offset_p,
-        |      CAST(count(*) AS BIGINT) AS n_active FROM u GROUP BY 1, 2)
-        |SELECT cohort_p, offset_p, n_active,
-        |  first_value(n_active) OVER (PARTITION BY cohort_p ORDER BY offset_p) AS cohort_size,
-        |  CAST(n_active * 1000000 // first_value(n_active)
-        |       OVER (PARTITION BY cohort_p ORDER BY offset_p) AS BIGINT) AS retention_ppm
-        |FROM c""".stripMargin,
-    "e_latest_asof" ->
-      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type
-         |  FROM events WHERE epoch_us(ts) <= $AsOfCutoffUs),
-         |r AS (SELECT user_id, ts_us, event_id, event_type,
-         |  row_number() OVER (PARTITION BY user_id ORDER BY ts_us DESC, event_id DESC) AS rn FROM e)
-         |SELECT user_id, ts_us, event_id, event_type FROM r WHERE rn = 1""".stripMargin,
-    // DuckDB's native ASOF LEFT JOIN (greatest right ts <= left ts,
-    // inclusive) is the exact semantics the union+window formulation
-    // implements — the strongest possible oracle for this operator
-    // the oracle keeps the NAIVE inequality join — proving the bucketed
-    // equi-join + canonical-bucket dedup formulation semantics-free
-    "e_range_join" ->
-      s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-         |l AS (SELECT user_id, ts_us, event_id,
-         |  CASE WHEN lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) IS NULL
-         |         OR ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) > $SessionGapUs
-         |       THEN 1 ELSE 0 END AS is_new FROM e),
-         |s AS (SELECT user_id, ts_us,
-         |  CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-         |       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM l),
-         |sess AS (SELECT user_id, session_id, min(ts_us) AS start_us, max(ts_us) AS end_us
-         |         FROM s GROUP BY 1, 2),
-         |w AS (SELECT CAST(x AS BIGINT) AS window_id,
-         |  $RangeEpoch0Us + x * $RangeSpacingUs AS w_start_us,
-         |  $RangeEpoch0Us + x * $RangeSpacingUs + (2 + x % 4) * $RangeHourUs AS w_end_us
-         |  FROM generate_series(0, ${RangeNumWindows - 1}) AS t(x))
-         |SELECT sess.user_id, sess.session_id, w.window_id,
-         |  least(sess.end_us, w.w_end_us) - greatest(sess.start_us, w.w_start_us) AS overlap_us
-         |FROM sess JOIN w ON sess.start_us <= w.w_end_us AND w.w_start_us <= sess.end_us""".stripMargin,
-    "e_asof_join" ->
-      """WITH e AS (SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type FROM events),
-        |l AS (SELECT event_id, user_id, ts_us FROM e WHERE event_type = 'click'),
-        |r AS (SELECT user_id, ts_us, event_id AS view_id, ts_us AS view_ts_us
-        |      FROM e WHERE event_type = 'view')
-        |SELECT l.event_id, l.user_id, l.ts_us, r.view_id, r.view_ts_us
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts_us >= r.ts_us""".stripMargin,
-    // keyphrase twin: same case-folded terms, same integer surrogate,
-    // same (score DESC, term) per-doc cut
-    "t_keyphrases" ->
-      """WITH t AS (SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM t GROUP BY 1, 2),
-        |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-        |  CAST(tf.tf * 1000000 // dfq.df AS BIGINT) AS score_ppm
-        |  FROM tf JOIN dfq USING (term))
-        |SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tf, df, score_ppm FROM (
-        |  SELECT doc_id, term, tf, df, score_ppm,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY score_ppm DESC, term) AS rank
-        |  FROM sc) WHERE rank <= 3""".stripMargin,
-    // OOV twin: same case-folded tokens, same (tf DESC, token) top-K cut,
-    // left-join null-probe instead of the broadcast literal
-    "t_oov_rate" ->
-      """WITH t AS (SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |v AS (SELECT token FROM (
-        |  SELECT token, count(*) AS tf FROM t GROUP BY 1
-        |  ORDER BY tf DESC, token LIMIT 16) q),
-        |c AS (SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |      CAST(count(*) FILTER (WHERE v.token IS NULL) AS BIGINT) AS n_oov
-        |      FROM t LEFT JOIN v ON v.token = t.token GROUP BY 1)
-        |SELECT d.doc_id AS doc_id, CAST(COALESCE(c.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |  CAST(COALESCE(c.n_oov, 0) AS BIGINT) AS n_oov,
-        |  CAST(CASE WHEN COALESCE(c.n_tokens, 0) = 0 THEN 0
-        |       ELSE c.n_oov * 1000000 // c.n_tokens END AS BIGINT) AS oov_ppm
-        |FROM documents d LEFT JOIN c ON c.doc_id = d.doc_id""".stripMargin,
-    "t_vocab_topk" ->
-      """WITH t AS (SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
-        |  FROM documents WHERE length(trim(text)) > 0)
-        |SELECT token, CAST(count(*) AS BIGINT) AS tf, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |FROM t GROUP BY 1 ORDER BY tf DESC, token LIMIT 50""".stripMargin,
-    // BM25 twin: same fixed-point integer formula (k1=1.2, b=0.75,
-    // rational rarity idf), but the NAIVE (idf * ratio) // 1e6 product —
-    // the hash match proves the Spark side's quotient/remainder
-    // decomposition semantics-free (cf. w_domain_rank). The indexed
-    // variant must return the identical result, so it shares this oracle.
-    "t_bm25_indexed" -> bm25OracleSql,
-    "t_bm25_topk" -> bm25OracleSql,
-    "w_template_fp" ->
-      s"""WITH h AS (SELECT doc_id, $templHtmlSql AS html FROM documents),
-         |f AS (SELECT doc_id,
-         |  md5(array_to_string(regexp_extract_all(lower(html), '<([a-z][a-z0-9]*)', 1), ',')) AS template_fp,
-         |  CAST(len(regexp_extract_all(lower(html), '<([a-z][a-z0-9]*)', 1)) AS BIGINT) AS n_tags
-         |FROM h)
-         |SELECT template_fp, CAST(count(*) AS BIGINT) AS n_pages,
-         |  min(doc_id) AS rep_id, max(n_tags) AS n_tags
-         |FROM f GROUP BY 1 HAVING count(*) >= 2""".stripMargin,
-    // mirror twin: same urlCte domain, same normalized-md5 fingerprint,
-    // same UNION-ALL mirror synthesis, same hot-key bound and
-    // cross-multiplied containment gate
-    "w_mirror_pairs" ->
-      s"""WITH $urlCte,
-         |mb AS (SELECT domain, $fpSql AS fp FROM p5
-         |       UNION ALL
-         |       SELECT 'mirror-' || domain AS domain, $fpSql AS fp FROM p5 WHERE doc_id % 7 = 0),
-         |c AS (SELECT DISTINCT domain, fp FROM mb),
-         |ok AS (SELECT fp FROM c GROUP BY fp HAVING count(*) >= 2 AND count(*) <= 10),
-         |sl AS (SELECT c.domain, c.fp FROM c JOIN ok USING (fp)),
-         |sz AS (SELECT domain, count(*) AS n_fp FROM c GROUP BY domain),
-         |p AS (SELECT a.domain AS d1, b.domain AS d2, CAST(count(*) AS BIGINT) AS shared
-         |      FROM sl a JOIN sl b ON a.fp = b.fp AND a.domain < b.domain GROUP BY 1, 2)
-         |SELECT d1, d2, shared, CAST(z1.n_fp AS BIGINT) AS n1, CAST(z2.n_fp AS BIGINT) AS n2
-         |FROM p JOIN sz z1 ON p.d1 = z1.domain JOIN sz z2 ON p.d2 = z2.domain
-         |WHERE shared * 100 >= least(z1.n_fp, z2.n_fp) * 50""".stripMargin,
-    // family twin: same pair chain over the three-tier synthesis, then
-    // undirected reachability; family = min reached domain (string min)
-    "w_mirror_families" ->
-      s"""WITH RECURSIVE $urlCte,
-         |mb AS (SELECT domain, $fpSql AS fp FROM p5
-         |       UNION ALL
-         |       SELECT 'mirror-' || domain AS domain, $fpSql AS fp FROM p5 WHERE doc_id % 7 = 0
-         |       UNION ALL
-         |       SELECT 'mirror2-' || domain AS domain, $fpSql AS fp FROM p5 WHERE doc_id % 14 = 0),
-         |c AS (SELECT DISTINCT domain, fp FROM mb),
-         |ok AS (SELECT fp FROM c GROUP BY fp HAVING count(*) >= 2 AND count(*) <= 10),
-         |sl AS (SELECT c.domain, c.fp FROM c JOIN ok USING (fp)),
-         |sz AS (SELECT domain, count(*) AS n_fp FROM c GROUP BY domain),
-         |p AS (SELECT a.domain AS d1, b.domain AS d2, CAST(count(*) AS BIGINT) AS shared
-         |      FROM sl a JOIN sl b ON a.fp = b.fp AND a.domain < b.domain GROUP BY 1, 2),
-         |vp AS (SELECT d1, d2 FROM p JOIN sz z1 ON p.d1 = z1.domain
-         |       JOIN sz z2 ON p.d2 = z2.domain
-         |       WHERE shared * 100 >= least(z1.n_fp, z2.n_fp) * 50),
-         |e AS (SELECT d1 AS src, d2 AS dst FROM vp UNION SELECT d2 AS src, d1 AS dst FROM vp),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
-         |lab AS (SELECT id AS domain, min(r) AS family FROM reach GROUP BY 1),
-         |fs AS (SELECT family, CAST(count(*) AS BIGINT) AS n_members FROM lab GROUP BY 1)
-         |SELECT lab.domain AS domain, lab.family AS family, fs.n_members,
-         |  (lab.domain = lab.family) AS is_canonical
-         |FROM lab JOIN fs USING (family)""".stripMargin,
-    "t_repetition" ->
-      s"""WITH t AS (SELECT doc_id,
-         |  CASE WHEN length(trim(text)) = 0 THEN [] ELSE regexp_split_to_array(trim(text), '\\s+') END AS l
-         |FROM documents),
-         |base AS (SELECT doc_id, CAST(len(l) AS BIGINT) AS n_tokens,
-         |  CAST(len(list_distinct(l)) AS BIGINT) AS n_distinct, l FROM t),
-         |bg AS (SELECT doc_id, unnest(list_zip(l[1:len(l)-1], l[2:len(l)])) AS z
-         |  FROM base WHERE n_tokens >= 2),
-         |cnt AS (SELECT doc_id, z[1] AS w1, z[2] AS w2, count(*) AS c FROM bg GROUP BY 1, 2, 3),
-         |top AS (SELECT doc_id, max(c) AS top_bigram_n FROM cnt GROUP BY 1)
-         |SELECT b.doc_id, b.n_tokens, b.n_distinct,
-         |  b.n_tokens - b.n_distinct AS dup_tokens,
-         |  CAST(coalesce(t2.top_bigram_n, 0) AS BIGINT) AS top_bigram_n,
-         |  ((b.n_tokens - b.n_distinct) * 100 > b.n_tokens * 75
-         |   OR coalesce(t2.top_bigram_n, 0) * 100 > greatest(b.n_tokens - 1, 1) * 20) AS is_repetitive
-         |FROM base b LEFT JOIN top t2 USING (doc_id)""".stripMargin,
-    // LM fluency twin: same lowercased-token bigrams, same en-slice
-    // training, integer `//` division end to end (= Spark DIV)
-    "t_lm_score" ->
-      s"""WITH $lmScoreCte
-        |SELECT doc_id, n_bigrams, seen_bigrams, sum_ppm, avg_ppm FROM sc""".stripMargin,
-    // stupid-backoff twin: the same three pruned count-ratio tables
-    // (contexts summed before pruning), the same ×4 DIV 10 / ×16 DIV 100
-    // integer backoff weights, hit levels classified per position
-    "t_lm_backoff" ->
-      """WITH t AS (SELECT doc_id, lang,
-        |  CASE WHEN length(trim(text)) = 0 THEN []
-        |       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS l
-        |FROM documents),
-        |g AS (SELECT doc_id, z[1] AS w1, z[2] AS w2, z[3] AS w3
-        |  FROM (SELECT doc_id, unnest(list_zip(l[1:len(l)-2], l[2:len(l)-1], l[3:len(l)])) AS z
-        |        FROM t WHERE len(l) >= 3)),
-        |gt AS (SELECT g.* FROM g JOIN t USING (doc_id) WHERE t.lang = 'en'),
-        |c123 AS (SELECT w1, w2, w3, count(*) AS c FROM gt GROUP BY 1, 2, 3),
-        |c12 AS (SELECT w1, w2, sum(c) AS cc FROM c123 GROUP BY 1, 2),
-        |m3 AS (SELECT c123.w1, c123.w2, c123.w3, (c * 1000000) // cc AS p3
-        |  FROM c123 JOIN c12 USING (w1, w2) WHERE c >= 2),
-        |b AS (SELECT doc_id, z[1] AS v1, z[2] AS v2
-        |  FROM (SELECT doc_id, unnest(list_zip(l[1:len(l)-1], l[2:len(l)])) AS z
-        |        FROM t WHERE len(l) >= 2)),
-        |bt AS (SELECT b.* FROM b JOIN t USING (doc_id) WHERE t.lang = 'en'),
-        |c23 AS (SELECT v1, v2, count(*) AS c FROM bt GROUP BY 1, 2),
-        |c2 AS (SELECT v1, sum(c) AS cc FROM c23 GROUP BY 1),
-        |m2 AS (SELECT c23.v1, c23.v2, (c * 1000000) // cc AS p2
-        |  FROM c23 JOIN c2 USING (v1) WHERE c >= 2),
-        |u AS (SELECT doc_id, unnest(l) AS w FROM t),
-        |ut AS (SELECT u.* FROM u JOIN t USING (doc_id) WHERE t.lang = 'en'),
-        |cu AS (SELECT w, count(*) AS c FROM ut GROUP BY 1),
-        |nn AS (SELECT sum(c) AS n FROM cu),
-        |m1 AS (SELECT w, (c * 1000000) // n AS p1 FROM cu, nn WHERE c >= 2),
-        |sc AS (SELECT g.doc_id, m3.p3, m2.p2, m1.p1,
-        |  COALESCE(m3.p3, (4 * m2.p2) // 10, (16 * m1.p1) // 100, 0) AS s
-        |  FROM g LEFT JOIN m3 ON g.w1 = m3.w1 AND g.w2 = m3.w2 AND g.w3 = m3.w3
-        |         LEFT JOIN m2 ON g.w2 = m2.v1 AND g.w3 = m2.v2
-        |         LEFT JOIN m1 ON g.w3 = m1.w),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-        |  CAST(count(p3) AS BIGINT) AS tri_hits,
-        |  CAST(sum(CASE WHEN p3 IS NULL AND p2 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS bi_hits,
-        |  CAST(sum(CASE WHEN p3 IS NULL AND p2 IS NULL AND p1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS uni_hits,
-        |  CAST(sum(s) AS BIGINT) AS sum_ppm FROM sc GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(a.n_trigrams, 0) AS BIGINT) AS n_trigrams,
-        |  CAST(coalesce(a.tri_hits, 0) AS BIGINT) AS tri_hits,
-        |  CAST(coalesce(a.bi_hits, 0) AS BIGINT) AS bi_hits,
-        |  CAST(coalesce(a.uni_hits, 0) AS BIGINT) AS uni_hits,
-        |  CAST(coalesce(a.sum_ppm, 0) AS BIGINT) AS sum_ppm,
-        |  CAST(coalesce(a.sum_ppm, 0) // greatest(coalesce(a.n_trigrams, 0), 1) AS BIGINT) AS avg_ppm
-        |FROM documents d LEFT JOIN agg a USING (doc_id)""".stripMargin,
-    // CCNet-style tier twin: exact discrete tertiles of avg_ppm via the
-    // same histogram-cumulative product comparison (cum·3 >= k·n) as
-    // Tiering.tierBoundaries — no division anywhere, ties land low
-    "t_quality_tiers" ->
-      s"""WITH $lmScoreCte,
-        |h AS (SELECT avg_ppm AS s, count(*) AS c FROM sc GROUP BY 1),
-        |cm AS (SELECT s, sum(c) OVER (ORDER BY s) AS cum, sum(c) OVER () AS n FROM h),
-        |bnd AS (SELECT min(CASE WHEN cum * 3 >= n THEN s END) AS b1,
-        |               min(CASE WHEN cum * 3 >= n * 2 THEN s END) AS b2 FROM cm)
-        |SELECT sc.doc_id, sc.avg_ppm,
-        |  CASE WHEN sc.avg_ppm > bnd.b2 THEN 'head'
-        |       WHEN sc.avg_ppm > bnd.b1 THEN 'middle' ELSE 'tail' END AS tier
-        |FROM sc, bnd""".stripMargin,
-    // tier mixture card: docs + whitespace tokens per tier — the number a
-    // training recipe actually consumes ("how many head tokens do I have")
-    "q_tier_mix" ->
-      s"""WITH $lmScoreCte,
-        |h AS (SELECT avg_ppm AS s, count(*) AS c FROM sc GROUP BY 1),
-        |cm AS (SELECT s, sum(c) OVER (ORDER BY s) AS cum, sum(c) OVER () AS n FROM h),
-        |bnd AS (SELECT min(CASE WHEN cum * 3 >= n THEN s END) AS b1,
-        |               min(CASE WHEN cum * 3 >= n * 2 THEN s END) AS b2 FROM cm),
-        |tk AS (SELECT doc_id, CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |  ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_tokens FROM documents)
-        |SELECT CASE WHEN sc.avg_ppm > bnd.b2 THEN 'head'
-        |            WHEN sc.avg_ppm > bnd.b1 THEN 'middle' ELSE 'tail' END AS tier,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(tk.n_tokens) AS BIGINT) AS n_tokens
-        |FROM sc JOIN tk USING (doc_id), bnd GROUP BY 1""".stripMargin,
-    "q_sample_dsir" ->
-      """WITH w AS (SELECT doc_id, lang, regexp_split_to_array(trim(text), '\s+') AS ws FROM documents),
-        |g AS (SELECT doc_id, lang,
-        |  ('0x' || substr(md5(ws[i] || ' ' || ws[i+1]), 1, 8))::BIGINT % 512 AS bucket
-        |  FROM (SELECT doc_id, lang, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM w)),
-        |raw AS (SELECT bucket, CAST(count(*) AS BIGINT) AS cr FROM g GROUP BY 1),
-        |tgt AS (SELECT bucket, CAST(count(*) AS BIGINT) AS ct FROM g WHERE lang = 'en' GROUP BY 1),
-        |tot AS (SELECT CAST((SELECT sum(cr) FROM raw) AS BIGINT) AS sr,
-        |  CAST((SELECT coalesce(sum(ct), 0) FROM tgt) AS BIGINT) AS st),
-        |wt AS (SELECT r.bucket,
-        |  ((((coalesce(t.ct, 0) + 1) * 1000000) // (tot.st + 512)) * 1000000)
-        |    // greatest(((r.cr + 1) * 1000000) // (tot.sr + 512), 1) AS w_ppm
-        |  FROM raw r LEFT JOIN tgt t USING (bucket) CROSS JOIN tot),
-        |s AS (SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |  CAST(sum(wt.w_ppm) AS BIGINT) AS sum_w
-        |  FROM g JOIN wt USING (bucket) GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(s.n_grams, 0) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(s.sum_w, 0) AS BIGINT) AS sum_w,
-        |  CAST(coalesce(s.sum_w, 0) // greatest(coalesce(s.n_grams, 0), 1) AS BIGINT) AS avg_w
-        |FROM documents d LEFT JOIN s USING (doc_id)""".stripMargin,
-    // tier-sample twin: the tier CASE composes with the stratified
-    // sampler's md5-bucket window under per-tier rates
-    "q_tier_sample" ->
-      s"""WITH $lmScoreCte,
-        |h AS (SELECT avg_ppm AS s, count(*) AS c FROM sc GROUP BY 1),
-        |cm AS (SELECT s, sum(c) OVER (ORDER BY s) AS cum, sum(c) OVER () AS n FROM h),
-        |bnd AS (SELECT min(CASE WHEN cum * 3 >= n THEN s END) AS b1,
-        |               min(CASE WHEN cum * 3 >= n * 2 THEN s END) AS b2 FROM cm),
-        |a AS (SELECT sc.doc_id, sc.avg_ppm,
-        |  CASE WHEN sc.avg_ppm > bnd.b2 THEN 'head'
-        |       WHEN sc.avg_ppm > bnd.b1 THEN 'middle' ELSE 'tail' END AS tier
-        |FROM sc, bnd)
-        |SELECT doc_id, avg_ppm, tier FROM a
-        |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 <
-        |  CASE tier WHEN 'head' THEN 10000 WHEN 'middle' THEN 5000 ELSE 1000 END""".stripMargin,
-    // domain-keyed holdout twin: same messy-url synthesis + canonical
-    // host/domain extraction as the w_* oracles, same md5-bucket window
-    // as the stratified sampler (chars 1-8 of md5 of the KEY)
-    "q_split_holdout" ->
-      s"""WITH $urlCte
-         |SELECT doc_id, domain,
-         |  CASE WHEN ('0x' || substr(md5(domain), 1, 8))::BIGINT % 10000 < 1000
-         |       THEN 'val' ELSE 'train' END AS split
-         |FROM p5""".stripMargin,
-    // temperature twin: the same integer pipeline — corrected isqrt,
-    // T = (Σn · 9000) // 10000, k = (T·s) // S, rate = min(10000,
-    // k·10000 // n) — then the shared md5 bucket decision
-    "q_sample_temperature" ->
-      """WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY 1),
-        |r0 AS (SELECT lang, n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS s0 FROM c),
-        |r1 AS (SELECT lang, n, CASE WHEN (s0 + 1) * (s0 + 1) <= n THEN s0 + 1 ELSE s0 END AS s1 FROM r0),
-        |r AS (SELECT lang, n, CASE WHEN s1 * s1 > n THEN s1 - 1 ELSE s1 END AS s FROM r1),
-        |t AS (SELECT SUM(s) AS tot, SUM(n) AS total FROM r),
-        |rates AS (SELECT lang,
-        |  CAST(LEAST(10000, (((((total * 9000) // 10000) * s) // tot) * 10000) // n) AS BIGINT) AS rate_bp
-        |  FROM r, t)
-        |SELECT d.doc_id, d.lang, rates.rate_bp
-        |FROM documents d JOIN rates USING (lang)
-        |WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 < rate_bp""".stripMargin,
-    "q_sample_stratified" ->
-      """WITH rates AS (SELECT DISTINCT source, lang,
-        |  CASE WHEN lang = 'en' THEN 7000 ELSE 3000 END AS rate_bp FROM documents)
-        |SELECT d.doc_id, d.source, d.lang,
-        |  ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 AS bucket_bp
-        |FROM documents d JOIN rates r USING (source, lang)
-        |WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 < r.rate_bp""".stripMargin,
-    "q_sample_budget" ->
-      s"""WITH t AS (SELECT doc_id, source,
-         |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END AS BIGINT) AS n_tokens
-         |FROM documents),
-         |b AS (SELECT DISTINCT source,
-         |  CAST(CASE WHEN length(source) = 4 THEN 601 ELSE 350 END AS BIGINT) AS budget FROM documents),
-         |s AS (SELECT t.doc_id, t.source, t.n_tokens, b.budget,
-         |  ('0x' || substr(md5(CAST(t.doc_id AS VARCHAR)), 9, 8))::BIGINT % 4 AS sub,
-         |  COALESCE(SUM(t.n_tokens) OVER (
-         |    PARTITION BY t.source, ('0x' || substr(md5(CAST(t.doc_id AS VARCHAR)), 9, 8))::BIGINT % 4
-         |    ORDER BY md5(CAST(t.doc_id AS VARCHAR))
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-         |FROM t JOIN b USING (source))
-         |SELECT doc_id, source, n_tokens FROM s
-         |WHERE cum < budget // 4 + CASE WHEN sub < budget % 4 THEN 1 ELSE 0 END""".stripMargin,
-    "q_sample_epochs" ->
-      """WITH b AS (SELECT DISTINCT source,
-        |  CAST(CASE WHEN length(source) = 4 THEN 25000 ELSE 5000 END AS BIGINT) AS epochs_bp
-        |FROM documents),
-        |s AS (SELECT d.doc_id, d.source,
-        |  b.epochs_bp // 10000 + CASE WHEN
-        |    ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 17, 8))::BIGINT % 10000 < b.epochs_bp % 10000
-        |  THEN 1 ELSE 0 END AS n_copies
-        |FROM documents d JOIN b USING (source))
-        |SELECT s.doc_id, s.source, u.copy
-        |FROM s, LATERAL UNNEST(generate_series(0, CAST(s.n_copies - 1 AS BIGINT))) AS u(copy)""".stripMargin,
-    "t_fingerprint" ->
-      s"SELECT doc_id, $fpSql AS fp FROM documents",
-    // Gopher twin: same enriched text, same cross-multiplied thresholds;
-    // note regexp_replace needs the 'g' flag in DuckDB (Spark replaces
-    // all matches by default) and '...'-replace is literal on both
-    // invisible/bidi twin: same chr()-synthesized pollution, same RE2
-    // character classes, same strip-then-fingerprint comparison
-    "t_strip_invisible" ->
-      """WITH a AS (SELECT doc_id, text,
-        |  substr(text, 1, 10) ||
-        |  CASE WHEN doc_id % 5 = 0 THEN chr(8203) ELSE '' END ||
-        |  substr(text, 11) ||
-        |  CASE WHEN doc_id % 11 = 0 THEN ' ' || chr(8238) || 'desrever' || chr(8236) ELSE '' END ||
-        |  CASE WHEN doc_id % 7 = 0 THEN chr(173) || chr(65279) ELSE '' END AS t
-        |FROM documents),
-        |m AS (SELECT doc_id, text, t,
-        |  CAST(length(t) - length(regexp_replace(t, '[\x{200B}\x{200C}\x{200D}\x{2060}\x{00AD}\x{FEFF}]', '', 'g')) AS BIGINT) AS n_invisible,
-        |  CAST(length(t) - length(regexp_replace(t, '[\x{202A}-\x{202E}\x{2066}-\x{2069}]', '', 'g')) AS BIGINT) AS n_bidi,
-        |  regexp_replace(regexp_replace(t, '[\x{200B}\x{200C}\x{200D}\x{2060}\x{00AD}\x{FEFF}]', '', 'g'),
-        |                 '[\x{202A}-\x{202E}\x{2066}-\x{2069}]', '', 'g') AS clean
-        |FROM a)
-        |SELECT doc_id, n_invisible, n_bidi, n_bidi > 0 AS suspicious,
-        |  md5(regexp_replace(lower(trim(clean)), '\s+', ' ', 'g')) AS clean_fp,
-        |  md5(regexp_replace(lower(trim(clean)), '\s+', ' ', 'g')) =
-        |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS restored
-        |FROM m""".stripMargin,
-    // C4 twin: same synthesized page, same list_filter line rules, same
-    // terminal-mark sentence proxy and padded badword containment
-    "t_c4_clean" ->
-      """WITH a AS (SELECT doc_id, text ||
-        |  chr(10) || 'The quick study of ' || substr(text, 1, 20) || ' now concludes properly.' ||
-        |  chr(10) || 'Short line.' ||
-        |  chr(10) || 'Is this layout really working fine today?' ||
-        |  chr(10) || 'No terminal punctuation here at all' ||
-        |  chr(10) || 'The javascript menu needs to be enabled fully.' ||
-        |  CASE WHEN doc_id % 3 = 0 THEN chr(10) || 'An extra closing sentence appears right here!' ELSE '' END ||
-        |  CASE WHEN doc_id % 31 = 0 THEN chr(10) || 'the casino bonus spins are waiting now.' ELSE '' END ||
-        |  CASE WHEN doc_id % 37 = 0 THEN chr(10) || 'lorem ipsum dolor sit amet sample.' ELSE '' END ||
-        |  CASE WHEN doc_id % 41 = 0 THEN chr(10) || 'this page contains { a brace clearly.' ELSE '' END AS t
-        |FROM documents),
-        |l AS (SELECT doc_id, t, string_split(t, chr(10)) AS ls FROM a),
-        |k AS (SELECT doc_id, t, len(ls) AS n_lines, list_filter(ls, x ->
-        |    length(trim(x)) > 0 AND regexp_matches(trim(x), '[.!?"]$')
-        |    AND len(regexp_split_to_array(trim(x), '\s+')) >= 5
-        |    AND NOT contains(lower(x), 'javascript')) AS kept FROM l),
-        |c AS (SELECT doc_id, t, n_lines, len(kept) AS n_kept,
-        |    array_to_string(kept, chr(10)) AS cleaned FROM k),
-        |m AS (SELECT doc_id, n_lines, n_kept, cleaned,
-        |    CAST(length(cleaned) - length(regexp_replace(cleaned, '[.!?]', '', 'g')) AS BIGINT) AS n_sentences,
-        |    contains(' ' || regexp_replace(lower(t), '\s+', ' ', 'g') || ' ', ' casino ') AS has_badword,
-        |    contains(lower(t), 'lorem ipsum') AS has_lorem,
-        |    contains(t, '{') AS has_curly
-        |FROM c)
-        |SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines, CAST(n_kept AS BIGINT) AS n_kept,
-        |  n_sentences, has_badword,
-        |  (n_sentences >= 3 AND NOT has_badword AND NOT has_lorem AND NOT has_curly) AS keep,
-        |  md5(cleaned) AS cleaned_fp
-        |FROM m""".stripMargin,
-    "t_gopher" ->
-      s"""WITH g AS (SELECT doc_id, concat_ws(chr(10), ${multilineSql("text")},
-         |    CASE WHEN doc_id % 3 = 0 THEN '- bullet one' END,
-         |    CASE WHEN doc_id % 3 = 0 THEN '* bullet two' END,
-         |    CASE WHEN doc_id % 6 = 0 THEN 'to be continued...' END,
-         |    CASE WHEN doc_id % 11 = 0 THEN '# # # # # # # # # #' END) AS gt
-         |  FROM documents),
-         |m AS (SELECT doc_id,
-         |  CAST(CASE WHEN length(trim(gt)) = 0 THEN 0
-         |       ELSE len(regexp_split_to_array(trim(gt), '\\s+')) END AS BIGINT) AS n_words,
-         |  CAST(length(regexp_replace(gt, '\\s', '', 'g')) AS BIGINT) AS token_chars,
-         |  CAST(len(string_split(gt, chr(10))) AS BIGINT) AS n_lines,
-         |  CAST(len(regexp_extract_all(gt, '(?m)^(- |\\* )')) AS BIGINT) AS bullet_lines,
-         |  CAST(len(regexp_extract_all(gt, '(?m)\\.\\.\\.$$')) AS BIGINT) AS ellipsis_lines,
-         |  CAST((length(gt) - length(regexp_replace(gt, '#', '', 'g')))
-         |    + (length(gt) - length(replace(gt, '...', ''))) // 3 AS BIGINT) AS symbols,
-         |  CAST(len(regexp_extract_all(gt, '[^\\s]*[A-Za-z][^\\s]*')) AS BIGINT) AS alpha_words
-         |FROM g)
-         |SELECT doc_id, n_words, token_chars, n_lines, bullet_lines, ellipsis_lines,
-         |  symbols, alpha_words,
-         |  (n_words >= 10 AND n_words <= 100000
-         |   AND token_chars >= n_words * 3 AND token_chars <= n_words * 10
-         |   AND symbols * 10 <= n_words
-         |   AND bullet_lines * 10 <= n_lines * 9
-         |   AND ellipsis_lines * 10 <= n_lines * 3
-         |   AND alpha_words * 10 >= n_words * 8) AS gopher_ok
-         |FROM m""".stripMargin,
-    // naive-Bayes twin: same md5 bucket hash as the DSIR oracle, unigram
-    // UNION ALL bigram feature stream, smoothed posterior in integer ppm
-    "t_quality_nb" ->
-      s"""WITH w AS (SELECT doc_id, (lang = 'en') AS y, $tok AS ws FROM documents),
-         |feat AS (
-         |  SELECT doc_id, y, unnest(ws) AS gm FROM w
-         |  UNION ALL
-         |  SELECT doc_id, y, unnest(list_transform(generate_series(1, len(ws) - 1),
-         |    i -> ws[i] || ' ' || ws[i+1])) AS gm FROM w),
-         |b AS (SELECT doc_id, y,
-         |  ('0x' || substr(md5(gm), 1, 8))::BIGINT % 64 AS bucket FROM feat),
-         |cnt AS (SELECT bucket,
-         |  CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS cp,
-         |  CAST(sum(CASE WHEN y THEN 0 ELSE 1 END) AS BIGINT) AS cn FROM b GROUP BY 1),
-         |wt AS (SELECT bucket, ((cp + 1) * 1000000) // (cp + cn + 2) AS w_ppm FROM cnt),
-         |sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-         |  CAST(sum(w_ppm) AS BIGINT) AS score
-         |  FROM b JOIN wt USING (bucket) GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(sc.n_feats, 0) AS BIGINT) AS n_feats,
-         |  CAST(coalesce(sc.score, 0) AS BIGINT) AS score,
-         |  CAST(coalesce(sc.score, 0) // greatest(coalesce(sc.n_feats, 0), 1) AS BIGINT) AS post_ppm,
-         |  (coalesce(sc.score, 0) * 2 >= coalesce(sc.n_feats, 0) * 1000000) AS keep
-         |FROM documents d LEFT JOIN sc USING (doc_id)""".stripMargin,
-    "t_quality" ->
-      s"""SELECT doc_id,
-         |  CAST(length(text) AS BIGINT) AS chars,
-         |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($tok) END AS BIGINT) AS n_tokens,
-         |  CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS BIGINT) AS punct_chars,
-         |  CAST(length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS BIGINT) AS upper_chars,
-         |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS digit_chars,
-         |  (n_tokens >= 5 AND punct_chars * 100 <= chars * 20
-         |   AND upper_chars * 100 <= chars * 30 AND chars <= n_tokens * 20) AS is_quality
-         |FROM documents""".stripMargin,
-    // per-paragraph twin: same split, same padded marker-mass argmax per
-    // paragraph, same precedence/tie rules
-    "t_para_lang" -> {
-      val masses = TextAnalytics.LangMarkers
-        .map { case (lang, ms) => s"CAST(${markerMassSql(ms)} AS BIGINT) AS m_$lang" }
-        .mkString(",\n  ")
-      val gm = "greatest(m_en, m_es, m_de, m_fr)"
-      s"""WITH lt AS (SELECT doc_id, concat_ws(chr(10),
-         |  text,
-         |  CASE WHEN doc_id % 3 = 0 THEN 'el la los es dias de sol' END,
-         |  CASE WHEN doc_id % 2 = 0 THEN 'der die und das haus am see' END,
-         |  CASE WHEN doc_id % 4 = 1 THEN 'le les des et la rue' END,
-         |  CASE WHEN doc_id % 5 = 0 THEN '12345 67890 !!!' END) AS t FROM documents),
-         |w AS (SELECT doc_id, string_split(t, chr(10)) AS ps FROM lt),
-         |px AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, ps[i] AS para
-         |  FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i FROM w)),
-         |n AS (SELECT doc_id, pos, para,
-         |  ' ' || regexp_replace(lower(trim(para)), '\\s+', ' ', 'g') || ' ' AS p FROM px),
-         |m AS (SELECT doc_id, pos, para,
-         |  $masses
-         |FROM n)
-         |SELECT doc_id, pos,
-         |  CAST(CASE WHEN length(trim(para)) = 0 THEN 0
-         |       ELSE len(regexp_split_to_array(trim(para), '\\s+')) END AS BIGINT) AS n_tokens,
-         |  CASE WHEN $gm > 0 THEN
-         |    CASE WHEN m_en = $gm THEN 'en' WHEN m_es = $gm THEN 'es'
-         |         WHEN m_de = $gm THEN 'de' ELSE 'fr' END
-         |  ELSE 'und' END AS para_lang
-         |FROM m""".stripMargin
-    },
-    "t_lang_id" -> {
-      val masses = TextAnalytics.LangMarkers
-        .map { case (lang, ms) => s"CAST(${markerMassSql(ms)} AS BIGINT) AS m_$lang" }
-        .mkString(",\n  ")
-      val gm = "greatest(m_en, m_es, m_de, m_fr)"
-      s"""WITH n AS (SELECT doc_id, ' ' || regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') || ' ' AS p FROM documents),
-         |m AS (SELECT doc_id,
-         |  $masses
-         |FROM n)
-         |SELECT doc_id, m_en, m_es, m_de, m_fr,
-         |  CASE WHEN $gm > 0 THEN
-         |    CASE WHEN m_en = $gm THEN 'en' WHEN m_es = $gm THEN 'es'
-         |         WHEN m_de = $gm THEN 'de' ELSE 'fr' END
-         |  ELSE 'und' END AS lang_guess
-         |FROM m""".stripMargin
-    },
-    "d_exact_groups" ->
-      "SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS dup_count FROM documents GROUP BY 1",
-    "d_delta_new" ->
-      s"""WITH dt AS (SELECT doc_id, source, n_chars,
-         |  CASE WHEN doc_id % 7 = 0 THEN 'Subscribe to our newsletter. (c) 2024 Synth Crawl Portal.'
-         |       WHEN doc_id % 10 >= 8 AND doc_id % 3 = 0 THEN 'Flash sale! Everything must go.'
-         |       ELSE text END AS text FROM documents),
-         |f AS (SELECT doc_id, source, n_chars, $fpSql AS fp FROM dt),
-         |idx AS (SELECT DISTINCT fp FROM f WHERE doc_id % 10 < 8),
-         |b AS (SELECT * FROM f WHERE doc_id % 10 >= 8),
-         |fst AS (SELECT fp, min(doc_id) AS doc_id FROM b GROUP BY 1)
-         |SELECT b.doc_id, b.source, b.n_chars FROM b
-         |JOIN fst ON b.doc_id = fst.doc_id
-         |WHERE NOT EXISTS (SELECT 1 FROM idx WHERE idx.fp = b.fp)""".stripMargin,
-    // document-frequency catalog (distinct docs per line hash, threshold,
-    // deterministic cap) then an order-preserving list_filter cleanse —
-    // the SQL twin of LineDedup's broadcast-catalog map-only design
-    "d_drop_freq_lines" ->
-      s"""WITH lt AS (SELECT doc_id, ${multilineSql("text")} AS t
-         |  FROM documents),
-         |$lineCleanseCtes
-         |$lineCleanseSelect""".stripMargin,
-    // paragraph-dedup twin: row_number over (doc_id, pos) picks the same
-    // first occurrence as Spark's lexicographic struct-min; 0-based
-    // positions; string_agg ORDER BY pos rebuilds the kept text
-    "d_drop_dup_paras" ->
-      s"""WITH lt AS (SELECT doc_id, ${multilineSql("text")} AS t
-         |  FROM documents),
-         |w AS (SELECT doc_id, string_split(t, chr(10)) AS ps FROM lt),
-         |px AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, ps[i] AS para
-         |  FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i FROM w)),
-         |o AS (SELECT doc_id, pos, md5(para) AS fp FROM px),
-         |f AS (SELECT fp, doc_id AS fd, pos AS fpos FROM (
-         |  SELECT fp, doc_id, pos,
-         |    row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) AS rn FROM o)
-         |  WHERE rn = 1),
-         |dr AS (SELECT o.doc_id, o.pos FROM o JOIN f USING (fp)
-         |  WHERE NOT (o.doc_id = f.fd AND o.pos = f.fpos)),
-         |k AS (SELECT px.doc_id, px.pos, px.para FROM px
-         |  LEFT JOIN dr ON px.doc_id = dr.doc_id AND px.pos = dr.pos
-         |  WHERE dr.pos IS NULL),
-         |c AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-         |  string_agg(para, chr(10) ORDER BY pos) AS clean_text FROM k GROUP BY 1)
-         |SELECT w.doc_id,
-         |  CAST(len(w.ps) AS BIGINT) AS n_paras,
-         |  CAST(coalesce(c.n_kept, 0) AS BIGINT) AS n_kept,
-         |  coalesce(c.clean_text, '') AS clean_text
-         |FROM w LEFT JOIN c USING (doc_id)""".stripMargin,
-    // WARC round-trip twin: what goes into the container must come out —
-    // the oracle recomputes every gated field from the source rows
-    // directly (md5 of the UTF-8 payload, byte length, synthesized url
-    // and epoch), so any framing bug surfaces as a value mismatch
-    "q_warc_roundtrip" ->
-      """SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS url,
-        |  CAST(1700000000000 + doc_id * 1000 AS BIGINT) AS warc_ts_ms,
-        |  'text/plain' AS content_type,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS content_length,
-        |  md5(text) AS payload_md5
-        |FROM documents""".stripMargin,
-    // CDX twin: surt key (reversed host labels + ')' + path?query, '/'
-    // when the url has neither) and payload digest recomputed from the
-    // documents table — the Spark side must surface identical rows out
-    // of the assembled archives' write-time index
-    "w_cdx_index" ->
-      s"""WITH $urlCte
-         |SELECT array_to_string(list_reverse(string_split(host, '.')), ',')
-         |    || ')' || (CASE WHEN pathq = '' THEN '/' ELSE pathq END) AS surt,
-         |  url,
-         |  CAST(1700000000000 + doc_id * 1000 AS BIGINT) AS ts_ms,
-         |  md5(text) AS digest
-         |FROM p5""".stripMargin,
-    // CDX point-fetch twin: the same digest-prefix subset selected
-    // straight from documents; the Spark side must reproduce it through
-    // assembly -> index -> per-span random access
-    "q_warc_fetch" ->
-      s"""WITH $urlCte
-         |SELECT url,
-         |  CAST(1700000000000 + doc_id * 1000 AS BIGINT) AS warc_ts_ms,
-         |  md5(text) AS payload_md5
-         |FROM p5 WHERE substr(md5(text), 1, 1) IN ('0', '1', '2', '3')""".stripMargin,
-    // ExactSubstr twin: row_number over (doc_id, pos) picks the same first
-    // occurrence as Spark's struct-min; islands via pos - row_number;
-    // spans close at max(pos) + k - 1 with k = 8
-    "d_substring_spans" ->
-      s"""WITH st AS (SELECT doc_id, $substrSqlExpr AS text FROM documents),
-         |w AS (SELECT doc_id, $tok AS ws FROM st),
-         |g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, md5($gram8) AS fp
-         |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 7)) AS i FROM w)),
-         |f AS (SELECT fp, doc_id AS fd, pos AS fpos FROM (
-         |  SELECT fp, doc_id, pos,
-         |    row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) AS rn FROM g)
-         |  WHERE rn = 1),
-         |dp AS (SELECT g.doc_id, g.pos FROM g JOIN f USING (fp)
-         |  WHERE NOT (g.doc_id = f.fd AND g.pos = f.fpos)),
-         |isl AS (SELECT doc_id, pos,
-         |  pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM dp)
-         |SELECT doc_id, min(pos) AS span_start, max(pos) + 7 AS span_end,
-         |  max(pos) + 7 - min(pos) + 1 AS span_tokens,
-         |  CAST(count(*) AS BIGINT) AS n_dup_grams
-         |FROM isl GROUP BY doc_id, grp""".stripMargin,
-    // span-removal twin: covered token positions unnest from the
-    // duplicated starts (pos .. pos + 7), kept tokens re-agg in order
-    "d_drop_substrings" ->
-      s"""WITH st AS (SELECT doc_id, $substrSqlExpr AS text FROM documents),
-         |w AS (SELECT doc_id, $tok AS ws FROM st),
-         |g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, md5($gram8) AS fp
-         |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 7)) AS i FROM w)),
-         |f AS (SELECT fp, doc_id AS fd, pos AS fpos FROM (
-         |  SELECT fp, doc_id, pos,
-         |    row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) AS rn FROM g)
-         |  WHERE rn = 1),
-         |dp AS (SELECT g.doc_id, g.pos FROM g JOIN f USING (fp)
-         |  WHERE NOT (g.doc_id = f.fd AND g.pos = f.fpos)),
-         |cov AS (SELECT DISTINCT doc_id, CAST(j AS BIGINT) AS tp
-         |  FROM (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS j FROM dp)),
-         |px AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS tp, ws[i] AS tokn
-         |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i FROM w)),
-         |k AS (SELECT px.doc_id, px.tp, px.tokn FROM px LEFT JOIN cov
-         |  ON px.doc_id = cov.doc_id AND px.tp = cov.tp WHERE cov.tp IS NULL),
-         |c AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-         |  string_agg(tokn, ' ' ORDER BY tp) AS clean_text FROM k GROUP BY 1)
-         |SELECT w.doc_id, CAST(len(w.ws) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(c.n_kept, 0) AS BIGINT) AS n_kept,
-         |  coalesce(c.clean_text, '') AS clean_text
-         |FROM w LEFT JOIN c USING (doc_id)""".stripMargin,
-    // the composed web-ingest chain: robots opt-out gate → NFC
-    // normalization → corpus line cleanse, in crawl order (the catalog is
-    // computed over the POST-gate, POST-normalization corpus — exactly
-    // what the Spark composition does)
-    "q_web_ingest" ->
-      s"""WITH keep AS (SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 0),
-         |lt AS (SELECT doc_id,
-         |  nfc_normalize(${multilineSql(s"text || $denormSuffixSql")}) AS t FROM keep),
-         |$lineCleanseCtes
-         |$lineCleanseSelect""".stripMargin,
-    "d_freq_grams" ->
-      s"""WITH w AS (SELECT doc_id, $tok AS ws FROM documents),
-         |g AS (SELECT DISTINCT doc_id, md5(
-         |  $gram8) AS gh
-         |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 7)) AS i FROM w)),
-         |fr AS (SELECT gh FROM g GROUP BY gh HAVING count(*) >= 2),
-         |fd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_frequent FROM g JOIN fr USING (gh) GROUP BY 1),
-         |ng AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM g GROUP BY 1)
-         |SELECT ng.doc_id, ng.n_grams,
-         |  CAST(coalesce(fd.n_frequent, 0) AS BIGINT) AS n_frequent,
-         |  (coalesce(fd.n_frequent, 0) * 100 > ng.n_grams * 50) AS is_boilerplate
-         |FROM ng LEFT JOIN fd ON ng.doc_id = fd.doc_id""".stripMargin,
-    // winnowing twins: same token normalization, same 40-bit md5-window
-    // gram hash, same rightmost-min selection via the reversed slice
-    "d_winnow_fp" -> (winnowFpSql + """
-        |SELECT DISTINCT doc_id, CAST(pos AS BIGINT) AS pos, fp FROM m""".stripMargin),
-    "d_winnow_pairs" -> (winnowFpSql + """,
-        |fps AS (SELECT DISTINCT doc_id AS id, fp FROM m),
-        |ok AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) >= 2 AND count(*) <= 50),
-        |sl AS (SELECT id, fp FROM fps JOIN ok USING (fp))
-        |SELECT a.id AS id1, b.id AS id2, CAST(count(*) AS BIGINT) AS shared
-        |FROM sl a JOIN sl b ON a.fp = b.fp AND a.id < b.id
-        |GROUP BY 1, 2 HAVING count(*) >= 3""".stripMargin),
-    "d_minhash_sig" ->
-      s"""WITH $shingleCte
-         |SELECT doc_id, $minhashSelect FROM sh GROUP BY doc_id""".stripMargin,
-    "d_lsh_pairs" ->
-      s"""WITH $shingleCte,
-         |sig AS (SELECT doc_id, $minhashSelect FROM sh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, mh0 || '|' || mh1 AS bv FROM sig UNION ALL
-         |  SELECT doc_id, 1, mh2 || '|' || mh3 FROM sig UNION ALL
-         |  SELECT doc_id, 2, mh4 || '|' || mh5 FROM sig UNION ALL
-         |  SELECT doc_id, 3, mh6 || '|' || mh7 FROM sig)
-         |SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-         |FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id""".stripMargin,
-    "d_lsh_jaccard" ->
-      s"""WITH $lshJaccardChain
-         |SELECT id1, id2, inter, uni FROM jac""".stripMargin,
-    // CDC twin: per-character code points, the same polynomial rolling
-    // hash replayed per window via list_reduce (fold seeded by the first
-    // element == fold from 0), same sentinel bound, md5 per slice
-    "d_cdc_chunks" ->
-      s"""WITH $cdcChunkCte
-         |SELECT doc_id, CAST(gi - 1 AS BIGINT) AS chunk_idx,
-         |  CAST(st + 1 AS BIGINT) AS start_cp, CAST(en - st AS BIGINT) AS len_cp,
-         |  md5(substring(text, CAST(st + 1 AS INTEGER), CAST(en - st AS INTEGER))) AS chunk_md5
-         |FROM cdcf""".stripMargin,
-    "d_cdc_shared" ->
-      s"""WITH $cdcChunkCte,
-         |ch AS (SELECT doc_id, md5(substring(text, CAST(st + 1 AS INTEGER), CAST(en - st AS INTEGER))) AS chunk_md5 FROM cdcf)
-         |SELECT chunk_md5, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-         |  CAST(count(*) AS BIGINT) AS n_occurrences
-         |FROM ch GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2""".stripMargin,
-    // delta twin: both versions' chunk chains, per-doc v1 hash set via
-    // DISTINCT, left-join null marks the new chunks
-    "d_cdc_delta" ->
-      s"""WITH ${cdcChunkCteFor("xa", "text")},
-         |${cdcChunkCteFor("xb", "CASE WHEN doc_id % 3 = 0 THEN 'UPDATE ' || text ELSE text END")},
-         |o AS (SELECT DISTINCT doc_id,
-         |  md5(substring(text, CAST(st + 1 AS INTEGER), CAST(en - st AS INTEGER))) AS h FROM xaf),
-         |nw AS (SELECT doc_id,
-         |  md5(substring(text, CAST(st + 1 AS INTEGER), CAST(en - st AS INTEGER))) AS h,
-         |  en - st AS l FROM xbf),
-         |j AS (SELECT nw.doc_id, nw.l, (o.h IS NULL) AS isnew
-         |      FROM nw LEFT JOIN o ON o.doc_id = nw.doc_id AND o.h = nw.h)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-         |  CAST(count(*) FILTER (WHERE isnew) AS BIGINT) AS n_new,
-         |  CAST(sum(l) AS BIGINT) AS cp_total,
-         |  CAST(COALESCE(sum(l) FILTER (WHERE isnew), 0) AS BIGINT) AS cp_new,
-         |  CAST((sum(l) - COALESCE(sum(l) FILTER (WHERE isnew), 0)) * 1000000 // sum(l) AS BIGINT) AS reuse_ppm
-         |FROM j GROUP BY 1""".stripMargin,
-    // estimator twin: same signatures and banding, component-match sum
-    "d_minhash_est" -> {
-      val m = (0 until 8)
-        .map(h => s"(CASE WHEN sa.mh$h = sb.mh$h THEN 1 ELSE 0 END)").mkString(" + ")
-      s"""WITH $shingleCte,
-         |sig AS (SELECT doc_id, $minhashSelect FROM sh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, mh0 || '|' || mh1 AS bv FROM sig UNION ALL
-         |  SELECT doc_id, 1, mh2 || '|' || mh3 FROM sig UNION ALL
-         |  SELECT doc_id, 2, mh4 || '|' || mh5 FROM sig UNION ALL
-         |  SELECT doc_id, 3, mh6 || '|' || mh7 FROM sig),
-         |cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id)
-         |SELECT id1, id2, CAST($m AS BIGINT) AS matches,
-         |  CAST(($m) * 1000000 // 8 AS BIGINT) AS est_ppm
-         |FROM cand JOIN sig sa ON sa.doc_id = cand.id1 JOIN sig sb ON sb.doc_id = cand.id2""".stripMargin
-    },
-    "d_drop_neardup" ->
-      s"""WITH $lshJaccardChain,
-         |drops AS (SELECT DISTINCT id2 FROM jac WHERE inter * 100 >= uni * 50)
-         |SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT id2 FROM drops)""".stripMargin,
-    // undirected reachability from each node; min reached id = component
-    // label (the SQL twin of min-label propagation's fixpoint)
-    "d_drop_neardup_cc" ->
-      s"""WITH RECURSIVE $lshJaccardChain,
-         |vp AS (SELECT id1, id2 FROM jac WHERE inter * 100 >= uni * 50),
-         |e AS (SELECT id1 AS src, id2 AS dst FROM vp UNION SELECT id2 AS src, id1 AS dst FROM vp),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
-         |lab AS (SELECT id, min(r) AS label FROM reach GROUP BY id)
-         |SELECT doc_id FROM documents
-         |WHERE doc_id NOT IN (SELECT id FROM lab WHERE id <> label)""".stripMargin,
-    // best-survivor twin: same reachability labels, then max token count
-    // per cluster with min-id tie-break — two scalar steps, exactly the
-    // Spark side's two slim aggregates
-    "d_drop_neardup_best" ->
-      s"""WITH RECURSIVE $lshJaccardChain,
-         |vp AS (SELECT id1, id2 FROM jac WHERE inter * 100 >= uni * 50),
-         |e AS (SELECT id1 AS src, id2 AS dst FROM vp UNION SELECT id2 AS src, id1 AS dst FROM vp),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
-         |lab AS (SELECT id, min(r) AS label FROM reach GROUP BY id),
-         |sc AS (SELECT l.id, l.label,
-         |  CAST(CASE WHEN length(trim(d.text)) = 0 THEN 0 ELSE len($tok) END AS BIGINT) AS score
-         |  FROM lab l JOIN documents d ON d.doc_id = l.id),
-         |mx AS (SELECT label, max(score) AS m FROM sc GROUP BY 1),
-         |keepers AS (SELECT sc.label, min(sc.id) AS keep_id
-         |  FROM sc JOIN mx ON mx.label = sc.label AND sc.score = mx.m GROUP BY 1),
-         |drops AS (SELECT sc.id FROM sc JOIN keepers k ON k.label = sc.label
-         |  WHERE sc.id <> k.keep_id)
-         |SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT id FROM drops)""".stripMargin,
-    "d_jaccard_pairs" ->
-      s"""WITH $shingleCte,
-         |ds AS (SELECT DISTINCT doc_id, source, s FROM sh),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM ds GROUP BY 1),
-         |pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS inter
-         |          FROM ds a JOIN ds b ON a.source = b.source AND a.s = b.s AND a.doc_id < b.doc_id
-         |          GROUP BY 1, 2)
-         |SELECT id1, id2, CAST(inter AS BIGINT) AS inter,
-         |       CAST(sa.sz + sb.sz - inter AS BIGINT) AS uni
-         |FROM pairs JOIN sizes sa ON id1 = sa.doc_id JOIN sizes sb ON id2 = sb.doc_id""".stripMargin,
-    // containment twin: same shingle explode over the original ∪ quote
-    // union, Broder containment inter/min(sz) in ppm, threshold at 50%
-    "d_containment" ->
-      s"""WITH base AS (SELECT doc_id, text FROM documents),
-         |qq AS (SELECT doc_id + 100000 AS doc_id,
-         |  array_to_string((CASE WHEN length(trim(text)) = 0 THEN []
-         |    ELSE regexp_split_to_array(trim(text), '\\s+') END)[1:12], ' ') AS text
-         |  FROM base WHERE doc_id % 5 = 0),
-         |a AS (SELECT * FROM base UNION ALL SELECT * FROM qq),
-         |w AS (SELECT doc_id, doc_id % 250 AS fam,
-         |  CASE WHEN length(trim(text)) = 0 THEN []
-         |       ELSE regexp_split_to_array(trim(text), '\\s+') END AS ws FROM a),
-         |sh0 AS (SELECT doc_id, fam,
-         |  unnest(list_transform(generate_series(1, len(ws) - 2),
-         |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s FROM w),
-         |sh AS (SELECT DISTINCT doc_id, fam, s FROM sh0),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-         |pairs AS (SELECT x.doc_id AS id1, y.doc_id AS id2, count(*) AS inter
-         |          FROM sh x JOIN sh y ON x.fam = y.fam AND x.s = y.s AND x.doc_id < y.doc_id
-         |          GROUP BY 1, 2)
-         |SELECT id1, id2, CAST(inter AS BIGINT) AS inter,
-         |  CAST(sa.sz AS BIGINT) AS sz1, CAST(sb.sz AS BIGINT) AS sz2,
-         |  CAST((inter * 1000000) // least(sa.sz, sb.sz) AS BIGINT) AS cont_ppm
-         |FROM pairs JOIN sizes sa ON id1 = sa.doc_id JOIN sizes sb ON id2 = sb.doc_id
-         |WHERE (inter * 1000000) // least(sa.sz, sb.sz) >= 500000""".stripMargin,
-    "s_dot_topk" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
-        |v AS (SELECT vec_id AS vid, embedding AS ve FROM embeddings),
-        |s AS (SELECT qid, vid,
-        |  CAST(list_sum(list_transform(generate_series(1, 64), i ->
-        |    CAST(floor(CAST(qe[i] AS DOUBLE) * 1000) AS BIGINT) *
-        |    CAST(floor(CAST(ve[i] AS DOUBLE) * 1000) AS BIGINT))) AS BIGINT) AS score
-        |  FROM q, v WHERE qid <> vid)
-        |SELECT qid, vid, score, rn FROM (
-        |  SELECT qid, vid, score,
-        |         row_number() OVER (PARTITION BY qid ORDER BY score DESC, vid) AS rn
-        |  FROM s) WHERE rn <= 5""".stripMargin,
-    "s_embed_neardup" ->
-      """WITH v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 1000),
-        |scored AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |    CAST(list_sum(list_transform(generate_series(1, 64), i ->
-        |      CAST(floor(CAST(a.embedding[i] AS DOUBLE) * 1000) AS BIGINT) *
-        |      CAST(floor(CAST(b.embedding[i] AS DOUBLE) * 1000) AS BIGINT))) AS BIGINT) AS qdot
-        |  FROM v a JOIN v b ON a.vec_id < b.vec_id)
-        |SELECT id1, id2, qdot FROM scored WHERE qdot >= 400000""".stripMargin,
-    "s_cosine_topk" -> topkSql(
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
-         |v AS (SELECT vec_id AS vid, embedding AS ve FROM embeddings),
-         |s AS (SELECT qid, vid, ${cosQSql("qe", "ve")} AS score FROM q, v WHERE qid <> vid)""".stripMargin),
-    // planes come from the same integer planesFor heuristic the Spark
-    // path uses (derived from count(*)); probe masks (Hamming ≤ 2) are
-    // generated in SQL over the derived width
-    "s_ann_topk" -> topkSql(
-      s"""WITH $planesForSql,
-         |tt AS (SELECT unnest(generate_series(0, 3)) AS t),
-         |bits AS (SELECT unnest(generate_series(0, pl.p - 1)) AS i FROM pl),
-         |mm AS (SELECT CAST(0 AS BIGINT) AS m
-         |       UNION ALL SELECT (CAST(1 AS BIGINT) << i) FROM bits
-         |       UNION ALL SELECT (CAST(1 AS BIGINT) << a.i) | (CAST(1 AS BIGINT) << b.i)
-         |                 FROM bits a, bits b WHERE a.i < b.i),
-         |q0 AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
-         |qs AS (SELECT qid, qe, tt.t AS tbl, ${lshSigSql("qe", "pl.p", "tt.t * pl.p")} AS sig FROM q0, tt, pl),
-         |q AS (SELECT qid, qe, tbl, xor(sig, m) AS sig FROM qs, mm),
-         |v0 AS (SELECT vec_id AS vid, embedding AS ve FROM embeddings),
-         |v AS (SELECT vid, ve, tt.t AS tbl, ${lshSigSql("ve", "pl.p", "tt.t * pl.p")} AS sig FROM v0, tt, pl),
-         |s AS (SELECT qid, vid, max(${cosQSql("qe", "ve")}) AS score
-         |      FROM q JOIN v USING (tbl, sig) WHERE qid <> vid GROUP BY qid, vid)""".stripMargin),
-    // same recursive-CTE reachability as d_drop_neardup_cc, over the
-    // exact embedding pair set
-    // SemDeDup twin: the no-Lloyd coarse assignment scopes the pair
-    // join to cells; the reach/label tail is the usual CC oracle
-    "s_semdedup" ->
-      s"""WITH RECURSIVE v AS (SELECT vec_id AS vid, embedding AS ve FROM embeddings WHERE vec_id < 1000),
-         |cl AS (
-         |  SELECT least(65536, greatest(4,
-         |    CASE WHEN (c0+1)*(c0+1) <= n THEN c0+1 WHEN c0*c0 > n THEN c0-1 ELSE c0 END)) AS c
-         |  FROM (SELECT count(*) AS n, CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) AS c0 FROM v)),
-         |cent AS (SELECT vid AS cid, ve AS ce FROM v, cl
-         |         QUALIFY row_number() OVER (ORDER BY vid) <= c),
-         |vsc AS (SELECT vid, cid, ${qdotSql("ve", "ce")} AS cs FROM v, cent),
-         |asn AS (SELECT avid, cid AS cell FROM (
-         |  SELECT vid AS avid, cid, row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn FROM vsc) WHERE rn = 1),
-         |vp AS (SELECT a.avid AS id1, b.avid AS id2
-         |  FROM asn a JOIN asn b ON a.cell = b.cell AND a.avid < b.avid
-         |  JOIN v va ON va.vid = a.avid JOIN v vb ON vb.vid = b.avid
-         |  WHERE ${qdotSql("va.ve", "vb.ve")} >= 400000),
-         |e AS (SELECT id1 AS src, id2 AS dst FROM vp UNION SELECT id2 AS src, id1 AS dst FROM vp),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
-         |lab AS (SELECT id, min(r) AS label FROM reach GROUP BY id)
-         |SELECT vid AS vec_id FROM v
-         |WHERE vid NOT IN (SELECT id FROM lab WHERE id <> label)""".stripMargin,
-    "s_embed_drop_cc" ->
-      s"""WITH RECURSIVE v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 1000),
-         |vp AS (
-         |  SELECT a.vec_id AS id1, b.vec_id AS id2
-         |  FROM v a JOIN v b ON a.vec_id < b.vec_id
-         |  WHERE ${qdotSql("a.embedding", "b.embedding")} >= 400000),
-         |e AS (SELECT id1 AS src, id2 AS dst FROM vp UNION SELECT id2 AS src, id1 AS dst FROM vp),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM e
-         |  UNION
-         |  SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
-         |lab AS (SELECT id, min(r) AS label FROM reach GROUP BY id)
-         |SELECT vec_id FROM v
-         |WHERE vec_id NOT IN (SELECT id FROM lab WHERE id <> label)""".stripMargin,
-    // bitext margin twins: same quantized-cosine longs, same windowed
-    // neighborhood sums, same exact-rational ppm division (// == div on
-    // the positive-guarded operands)
-    "s_bitext_mine" -> bitextMarginSql(
-      s"""WITH sx AS (SELECT vec_id AS sid, embedding AS se FROM embeddings WHERE vec_id % 2 = 0 AND vec_id < 1000),
-         |tx AS (SELECT vec_id AS tid, embedding AS te FROM embeddings WHERE vec_id % 2 = 1 AND vec_id < 1000),
-         |sc AS (SELECT sid, tid, CAST(floor(${cosQSql("se", "te")} * 1000000000.0) AS BIGINT) AS sq FROM sx, tx)""".stripMargin,
-      4, 1000000L),
-    // LSH twin: planes from the shared planesFor heuristic; Hamming-≤1
-    // probe masks on the src side; per-pair max across tables = the
-    // identical score (grouping is the cross-table dedup)
-    "s_bitext_mine_lsh" -> bitextMarginSql(
-      s"""WITH $planesForSql,
-         |tt AS (SELECT unnest(generate_series(0, 3)) AS t),
-         |bits AS (SELECT unnest(generate_series(0, pl.p - 1)) AS i FROM pl),
-         |mm AS (SELECT CAST(0 AS BIGINT) AS m UNION ALL SELECT (CAST(1 AS BIGINT) << i) FROM bits),
-         |s0 AS (SELECT vec_id AS sid, embedding AS se FROM embeddings WHERE vec_id % 2 = 0),
-         |ss AS (SELECT sid, se, tt.t AS tbl, xor(${lshSigSql("se", "pl.p", "tt.t * pl.p")}, m) AS sig FROM s0, tt, pl, mm),
-         |t0 AS (SELECT vec_id AS tid, embedding AS te FROM embeddings WHERE vec_id % 2 = 1),
-         |tv AS (SELECT tid, te, tt.t AS tbl, ${lshSigSql("te", "pl.p", "tt.t * pl.p")} AS sig FROM t0, tt, pl),
-         |sc AS (SELECT sid, tid, max(CAST(floor(${cosQSql("se", "te")} * 1000000000.0) AS BIGINT)) AS sq
-         |       FROM ss JOIN tv USING (tbl, sig) GROUP BY sid, tid)""".stripMargin,
-      4, 1000000L),
-    // cells = exact integer √count (double sqrt + ±1 integer fix-up,
-    // clamped [4, 65536]) — the SQL twin of Similarity.cellsFor;
-    // assignment/probe ranking and scoring mirror the Spark path step by
-    // step in integer space
-    "s_ivf_topk" -> topkSql(
-      s"""WITH cl AS (
-         |  SELECT least(65536, greatest(4,
-         |    CASE WHEN (c0+1)*(c0+1) <= n THEN c0+1 WHEN c0*c0 > n THEN c0-1 ELSE c0 END)) AS c
-         |  FROM (SELECT count(*) AS n, CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) AS c0 FROM embeddings)),
-         |cent AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings, cl
-         |         QUALIFY row_number() OVER (ORDER BY vec_id) <= c),
-         |v AS (SELECT vec_id AS vid, embedding AS ve FROM embeddings),
-         |vsc AS (SELECT vid, cid, ${qdotSql("ve", "ce")} AS cs FROM v, cent),
-         |asn0 AS (SELECT avid, cid AS cell FROM (
-         |  SELECT vid AS avid, cid, row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn FROM vsc) WHERE rn = 1),
-         |-- one Lloyd round: per-cell integer mean of the quantized
-         |-- components (bias-shifted so // == DIV on negative sums),
-         |-- pivoted back to small-integer float centroids
-         |cm AS (SELECT cell, g.i AS dim,
-         |    CAST((sum(CAST(floor(CAST(ve[g.i] AS DOUBLE) * 1000) AS BIGINT)) + count(*) * 1048576) // count(*) - 1048576 AS BIGINT) AS mq
-         |  FROM asn0 JOIN v ON asn0.avid = v.vid, (SELECT unnest(generate_series(1, 64)) AS i) g
-         |  GROUP BY cell, g.i),
-         |cent2 AS (SELECT cell AS cid, list_transform(list(mq ORDER BY dim), x -> CAST(x AS FLOAT)) AS ce FROM cm GROUP BY cell),
-         |vsc2 AS (SELECT vid, cid, ${qdotSql("ve", "ce")} AS cs FROM v, cent2),
-         |asn AS (SELECT avid, cid AS cell FROM (
-         |  SELECT vid AS avid, cid, row_number() OVER (PARTITION BY vid ORDER BY cs DESC, cid) AS rn FROM vsc2) WHERE rn = 1),
-         |q0 AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
-         |qsc AS (SELECT qid, qe, cid, ${qdotSql("qe", "ce")} AS cs FROM q0, cent2),
-         |qp AS (SELECT qid, qe, cid AS cell FROM (
-         |  SELECT qid, qe, cid, row_number() OVER (PARTITION BY qid ORDER BY cs DESC, cid) AS rn FROM qsc) WHERE rn <= 4),
-         |s AS (SELECT qid, vid, ${cosQSql("qe", "ve")} AS score
-         |      FROM qp JOIN asn ON qp.cell = asn.cell JOIN v ON asn.avid = v.vid WHERE qid <> vid)""".stripMargin),
-    // IVF-PQ twin: the s_ivf_topk coarse chain (no Lloyd) feeding the
-    // PQ codebook/LUT chain over RESIDUALS, ADC sum + exact coarse dot —
-    // one template ([[ivfPqSql]]) serves both gated configs
-    "s_ivfpq_topk" -> ivfPqSql(m = 16, ks = 64, nProbe = 4, residual = true),
-    // refine-stage twin: the same template shortlists 50 per query
-    // (nested CTE), then the exact integer rerank — faiss RefineFlat
-    "s_ivfpq_rerank" ->
-      s"""WITH base AS (${ivfPqSql(m = 16, ks = 64, nProbe = 8, residual = true, k = 50)}),
-         |e AS (SELECT vec_id AS vid, embedding AS ve FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
-         |rr AS (SELECT base.qid, base.vid, CAST(${qdotSql("qe", "ve")} AS BIGINT) AS score
-         |       FROM base JOIN e ON e.vid = base.vid JOIN q ON q.qid = base.qid)
-         |SELECT qid, vid, score, rn FROM (SELECT qid, vid, score,
-         |  row_number() OVER (PARTITION BY qid ORDER BY score DESC, vid) AS rn FROM rr)
-         |WHERE rn <= 5""".stripMargin,
-    // PQ twin: same seed/Lloyd/assignment chain per subspace (integer L2,
-    // min-cid ties), LUT join + sum instead of the broadcast map probe —
-    // different shape, identical integers
-    "s_pq_topk" ->
-      """WITH seeds AS (SELECT vec_id, embedding FROM embeddings
-        |  QUALIFY row_number() OVER (ORDER BY vec_id) <= 64),
-        |sd AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS e FROM seeds),
-        |ss AS (SELECT unnest(generate_series(0, 15)) AS s),
-        |cb0 AS (SELECT ss.s, sd.cid, list_transform(generate_series(1, 4), i ->
-        |  CAST(floor(CAST(e[ss.s * 4 + i] AS DOUBLE) * 1000) AS BIGINT)) AS ce FROM sd, ss),
-        |v AS (SELECT vec_id AS vid, embedding AS ve FROM embeddings),
-        |vs AS (SELECT vid, ss.s, list_transform(generate_series(1, 4), i ->
-        |  CAST(floor(CAST(ve[ss.s * 4 + i] AS DOUBLE) * 1000) AS BIGINT)) AS vq FROM v, ss),
-        |d0 AS (SELECT vid, vs.s, cid,
-        |  list_sum(list_transform(generate_series(1, 4), i -> (vq[i] - ce[i]) * (vq[i] - ce[i]))) AS dist
-        |  FROM vs JOIN cb0 ON cb0.s = vs.s),
-        |a0 AS (SELECT vid, s, cid FROM (SELECT vid, s, cid,
-        |  row_number() OVER (PARTITION BY vid, s ORDER BY dist, cid) AS rn FROM d0) WHERE rn = 1),
-        |pm AS (SELECT vs.s, a0.cid, g.i AS dim,
-        |  CAST((sum(vq[g.i]) + count(*) * 1048576) // count(*) - 1048576 AS BIGINT) AS q
-        |  FROM vs JOIN a0 ON a0.vid = vs.vid AND a0.s = vs.s,
-        |       (SELECT unnest(generate_series(1, 4)) AS i) g
-        |  GROUP BY vs.s, a0.cid, g.i),
-        |cb AS (SELECT s, cid, list(q ORDER BY dim) AS ce FROM pm GROUP BY s, cid),
-        |d1 AS (SELECT vid, vs.s, cid,
-        |  list_sum(list_transform(generate_series(1, 4), i -> (vq[i] - ce[i]) * (vq[i] - ce[i]))) AS dist
-        |  FROM vs JOIN cb ON cb.s = vs.s),
-        |asn AS (SELECT vid, s, cid FROM (SELECT vid, s, cid,
-        |  row_number() OVER (PARTITION BY vid, s ORDER BY dist, cid) AS rn FROM d1) WHERE rn = 1),
-        |q0 AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
-        |qs AS (SELECT qid, ss.s, list_transform(generate_series(1, 4), i ->
-        |  CAST(floor(CAST(qe[ss.s * 4 + i] AS DOUBLE) * 1000) AS BIGINT)) AS qq FROM q0, ss),
-        |lut AS (SELECT qid, cb.s, cb.cid,
-        |  CAST(list_sum(list_transform(generate_series(1, 4), i -> qq[i] * ce[i])) AS BIGINT) AS pdot
-        |  FROM qs JOIN cb ON cb.s = qs.s),
-        |sc AS (SELECT lut.qid, asn.vid, CAST(sum(pdot) AS BIGINT) AS score
-        |  FROM asn JOIN lut ON lut.s = asn.s AND lut.cid = asn.cid
-        |  WHERE lut.qid <> asn.vid GROUP BY 1, 2)
-        |SELECT qid, vid, score, rn FROM (SELECT qid, vid, score,
-        |  row_number() OVER (PARTITION BY qid ORDER BY score DESC, vid) AS rn FROM sc)
-        |WHERE rn <= 5""".stripMargin,
-    "s_embed_neardup_lsh" ->
-      s"""WITH v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 1000),
-         |bands AS (SELECT vec_id, tt.t AS t, ${lshSigSql("embedding", "4", "tt.t * 4")} AS sig
-         |          FROM v, (SELECT unnest(generate_series(0, 11)) AS t) tt),
-         |cand AS (SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-         |         FROM bands a JOIN bands b ON a.t = b.t AND a.sig = b.sig AND a.vec_id < b.vec_id),
-         |scored AS (SELECT id1, id2, CAST(${qdotSql("va.embedding", "vb.embedding")} AS BIGINT) AS qdot
-         |           FROM cand JOIN v va ON id1 = va.vec_id JOIN v vb ON id2 = vb.vec_id)
-         |SELECT id1, id2, qdot FROM scored WHERE qdot >= 400000""".stripMargin,
-    "m_features" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |  list_transform(generate_series(0, 15), i ->
-        |    2 * CAST(('0x' || substr(sha256(text), 2 * i + 1, 2)) AS BIGINT) - 255) AS d2
-        |FROM documents),
-        |n AS (SELECT doc_id, kind, d2,
-        |  sqrt(CAST(list_sum(list_transform(d2, v -> v * v)) AS DOUBLE)) AS nrm FROM d),
-        |q AS (SELECT doc_id, kind,
-        |  list_transform(d2, v -> CAST(floor(CAST(CAST(v / nrm AS FLOAT) AS DOUBLE) * 1000000.0) AS BIGINT)) AS fq
-        |FROM n)
-        |SELECT doc_id, kind, fq[1] AS f0_q, fq[9] AS f8_q, fq[16] AS f15_q,
-        |       CAST(list_sum(fq) AS BIGINT) AS fsum_q
-        |FROM q""".stripMargin,
-    // batched-inference twin: same quantized features as m_features, then
-    // the stub model's integer weighted sum — the weight formula is
-    // MediaKernel.scoreWeight verbatim
-    "m_batch_score" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |  list_transform(generate_series(0, 15), i ->
-        |    2 * CAST(('0x' || substr(sha256(text), 2 * i + 1, 2)) AS BIGINT) - 255) AS d2
-        |FROM documents),
-        |n AS (SELECT doc_id, kind, d2,
-        |  sqrt(CAST(list_sum(list_transform(d2, v -> v * v)) AS DOUBLE)) AS nrm FROM d),
-        |q AS (SELECT doc_id, kind,
-        |  list_transform(d2, v -> CAST(floor(CAST(CAST(v / nrm AS FLOAT) AS DOUBLE) * 1000000.0) AS BIGINT)) AS fq
-        |FROM n)
-        |SELECT doc_id, kind,
-        |  CAST(list_sum(list_transform(generate_series(0, 15), i ->
-        |    fq[i + 1] * (((i * 2654435761 + 97531) % 2003) - 1001))) AS BIGINT) AS score_q
-        |FROM q""".stripMargin,
-    "m_resize" -> {
-      val w = s"CASE WHEN octet_length(encode(text)) = 0 THEN -1 WHEN doc_id % 3 = 1 THEN -1 ELSE 320 + ${hexInt(1, 6)} % 1024 END"
-      val h = s"CASE WHEN octet_length(encode(text)) = 0 THEN -1 WHEN doc_id % 3 = 1 THEN -1 ELSE 240 + ${hexInt(7, 6)} % 768 END"
-      s"""WITH m AS (SELECT doc_id, CAST($w AS BIGINT) AS width, CAST($h AS BIGINT) AS height FROM documents)
-         |SELECT doc_id, width, height,
-         |  CAST(CASE WHEN width <= 0 OR height <= 0 THEN width
-         |            WHEN width <= 256 AND height <= 256 THEN width
-         |            WHEN width >= height THEN 256
-         |            ELSE greatest(1, width * 256 // height) END AS BIGINT) AS out_w,
-         |  CAST(CASE WHEN width <= 0 OR height <= 0 THEN height
-         |            WHEN width <= 256 AND height <= 256 THEN height
-         |            WHEN width >= height THEN greatest(1, height * 256 // width)
-         |            ELSE 256 END AS BIGINT) AS out_h
-         |FROM m""".stripMargin
-    },
-    "m_frames" ->
-      """WITH b AS (SELECT doc_id, lower(hex(encode(text))) AS hx,
-        |                  CAST(octet_length(encode(text)) AS BIGINT) AS len FROM documents),
-        |p AS (SELECT doc_id, hx, len, greatest(1, len // 4) AS step,
-        |             unnest(generate_series(0, least(4, len) - 1)) AS i FROM b)
-        |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
-        |       CAST(least(len, i * step + step) - i * step AS BIGINT) AS frame_bytes,
-        |       md5(substr(hx, CAST(2 * i * step + 1 AS BIGINT),
-        |                  CAST(2 * (least(len, i * step + step) - i * step) AS BIGINT))) AS frame_hex_md5
-        |FROM p""".stripMargin,
-    // size_bytes is the UTF-8 BYTE length (octet_length over encoded text,
-    // not character length), and empty payloads mirror decodeMeta's error
-    // row (-1 dims, status='error') — the gate stays valid on non-ASCII or
-    // empty-text corpora, not just the current ASCII fixture set
-    "m_media_meta" ->
-      s"""WITH b AS (SELECT doc_id, text, CAST(octet_length(encode(text)) AS BIGINT) AS nb FROM documents)
-         |SELECT doc_id,
-         |  CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-         |  nb AS size_bytes,
-         |  CAST(CASE WHEN nb = 0 THEN -1 WHEN doc_id % 3 = 1 THEN -1 ELSE 320 + ${hexInt(1, 6)} % 1024 END AS BIGINT) AS width,
-         |  CAST(CASE WHEN nb = 0 THEN -1 WHEN doc_id % 3 = 1 THEN -1 ELSE 240 + ${hexInt(7, 6)} % 768 END AS BIGINT) AS height,
-         |  CAST(CASE WHEN nb = 0 THEN -1 WHEN doc_id % 3 = 1 THEN 1 + ${hexInt(13, 2)} % 2 ELSE 3 END AS BIGINT) AS channels,
-         |  CAST(CASE WHEN nb = 0 THEN -1 WHEN doc_id % 3 = 0 THEN -1 ELSE 1000 + ${hexInt(15, 6)} % 600000 END AS BIGINT) AS duration_ms,
-         |  md5(text) AS content_md5,
-         |  CASE WHEN nb = 0 THEN 'error' ELSE 'ok' END AS status
-         |FROM b""".stripMargin
-  )
+  val oracleSql: Map[String, String] = gated.flatMap(g => g.oracle.map(g.name -> _)).toMap
 }

@@ -47,9 +47,7 @@ object ExtractJob {
 
   final case class JobStats(version: Int, rowsIn: Long, rowsOk: Long, rowsError: Long)
 
-  // results carry url min/max file statistics in the manifest so point/
-  // range lookups on a url-clustered table skip whole data dirs
-  def resultsTable(root: String) = new SnapshotTable(s"$root/results", statsCol = Some("url"))
+  def resultsTable(root: String) = new SnapshotTable(s"$root/results")
   def metricsTable(root: String) = new SnapshotTable(s"$root/metrics")
 
   /** Committed-key-set size above which the resume filter switches from a
@@ -69,19 +67,23 @@ object ExtractJob {
     * the manifest, no scan needed):
     *
     *  - small committed set: plain left anti-join on the projected `url`
-    *    column; AQE turns it into a broadcast join, so the pages scan
-    *    never shuffles (and column pruning keeps the wide `html` column
-    *    out of the committed side entirely);
-    *  - huge committed set (resuming a 10^12-row run): a sort-merge
-    *    anti-join would shuffle every page INCLUDING its payload. Instead,
-    *    build a bloom filter over committed urls (driver-aggregated once,
-    *    broadcast): pages the filter rejects are DEFINITELY uncommitted —
-    *    kept with no shuffle at all; pages the filter accepts (true hits +
-    *    false positives) go through the exact anti-join. False positives
-    *    come back from the join if genuinely pending — never dropped, so
-    *    the per-row invariant holds. The win is proportional to the share
-    *    of NEW pages in the input; already-committed pages still pay the
-    *    join (but were never going to be extracted).
+    *    column (column pruning keeps the wide `html` column out of the
+    *    committed side). While the committed url column fits Spark's
+    *    broadcast threshold (`spark.sql.autoBroadcastJoinThreshold`, 10 MB
+    *    by default), AQE makes it a broadcast join and the pages scan does
+    *    not shuffle. Past that threshold, still far below
+    *    [[BloomThreshold]] rows, the plan is a `SortMergeJoin LeftAnti`
+    *    whose exchange hash-partitions the pages by url and so shuffles
+    *    `[url, html]`: every pending page's payload moves before the kernel;
+    *  - huge committed set (resuming a 10^12-row run): build a bloom filter
+    *    over committed urls (aggregated from a full scan of them on every
+    *    call, then broadcast): pages the filter rejects are DEFINITELY
+    *    uncommitted, kept with no shuffle at all; pages the filter accepts
+    *    (true hits + false positives) go through the exact anti-join, and
+    *    so take the same payload-carrying exchange. False positives come
+    *    back from the join if genuinely pending — never dropped, so the
+    *    per-row invariant holds. The win is proportional to the share of
+    *    NEW pages in the input.
     */
   def pending(
       spark: SparkSession,

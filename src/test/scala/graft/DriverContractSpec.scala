@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Safety net for the grading-driver contract: `entry` smoke, every query
-  * executable, oracle keys consistent. A query that throws or an oracle
-  * entry without a query would silently zero part of the correctness gate.
+  * executable, failures reported with their cause. A query that throws
+  * would silently zero part of the correctness gate.
   */
 class DriverContractSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -14,10 +14,10 @@ class DriverContractSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracleSql key has a matching queries entry") {
-    val qk = SparkEntry.queries.keySet
-    val ok = SparkEntry.oracleSql.keySet
-    assert(ok.subsetOf(qk), s"orphan oracle entries: ${ok.diff(qk)}")
+  test("a failed query's verify line names the exception class and its cause chain") {
+    val e = new RuntimeException("job aborted", new IllegalStateException("bad row", new ArithmeticException("/ by zero")))
+    assert(Verify.causeChain(e) == "java.lang.RuntimeException: job aborted <- caused by " +
+      "java.lang.IllegalStateException: bad row <- caused by java.lang.ArithmeticException: / by zero")
   }
 
   test("every query executes at sf0.001; oracle-paired ones return rows") {
@@ -26,10 +26,10 @@ class DriverContractSpec extends AnyFunSuite {
     // bench stride (doc_id % 101), leaving a legitimately empty overlap
     val mayBeEmpty = Set("d_lsh_pairs", "d_jaccard_pairs", "d_lsh_jaccard",
       "s_embed_neardup_lsh", "q_decontaminate")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val rows = fn(spark, sfDir).collect()
-      if (SparkEntry.oracleSql.contains(name) && !mayBeEmpty.contains(name))
-        assert(rows.nonEmpty, s"$name returned no rows")
+    SparkEntry.gated.foreach { g =>
+      val rows = g.run(spark, sfDir).collect()
+      if (g.oracle.isDefined && !mayBeEmpty.contains(g.name))
+        assert(rows.nonEmpty, s"${g.name} returned no rows")
     }
   }
 }

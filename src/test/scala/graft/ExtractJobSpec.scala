@@ -314,7 +314,7 @@ class ExtractJobSpec extends AnyFunSuite {
     val streamRoot = Files.createTempDirectory("graft-jobs-stream").toString
     val epochJobs = jobsDuring(StreamingExtract.start(spark, inputDir, streamRoot).awaitTermination())
     assert(ExtractJob.resultsTable(streamRoot).latest().get.commitIds.size == 1, "one epoch")
-    assert((runJobs, defaultJobs, epochJobs) == ((6, 4, 4)),
+    assert((runJobs, defaultJobs, epochJobs) == ((4, 2, 2)),
       "Spark jobs per fresh range-layout run, fresh default run and streaming epoch")
   }
 
