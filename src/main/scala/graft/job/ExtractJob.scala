@@ -35,15 +35,17 @@ import org.apache.spark.util.AccumulatorV2
   *     document in flight per task at a time (streaming iterator, no
   *     materialized partition lists → bounded memory at any document size).
   *  4. results, then per-partition lineage/metrics, are published as TWO
-  *     atomic snapshot commits under one commit id, one per table — a
-  *     killed run resumes from the last committed results snapshot without
-  *     reprocessing (north_rule), and a kill between the two publishes is
-  *     repaired before the next run or epoch processes anything
-  *     ([[backfillMetrics]]).
+  *     atomic snapshot commits under one commit id, one per table. The
+  *     results are a Spark write; the lineage rows are already on the
+  *     driver, which writes them as one parquet file, with no Spark job.
+  *     A killed run resumes from the last committed results snapshot
+  *     without reprocessing (north_rule), and a kill between the two
+  *     publishes is repaired before the next run or epoch processes
+  *     anything ([[backfillMetrics]]).
   */
 object ExtractJob {
 
-  val GiantPayloadBytes: Long = 1 << 20 // 1 MiB: size class boundary for salting
+  val GiantPayloadBytes: Long = 1 << 20 // 1 MiB: the range layout's size class boundary
 
   final case class JobStats(version: Int, rowsIn: Long, rowsOk: Long, rowsError: Long)
 
@@ -185,17 +187,12 @@ object ExtractJob {
       commitId: String
   ): Dataset[ExtractResult] = stamped(pages, rules, commitId, None)
 
-  /** A committed metrics row: one extraction task's lineage totals. */
-  final case class MetricsRow(commit_id: String, partition_id: Int, rows_in: Long,
-                              rows_ok: Long, rows_error: Long, bytes_in: Long,
-                              kernel_us: Long, min_url: String, max_url: String)
-
   /** Driver-side lineage of one kernel pass, keyed by partition id. A merge
     * REPLACES the entry for its key, so a re-run task (stage retry,
     * speculation) cannot double-count.
     */
-  private final class LineageAccumulator extends AccumulatorV2[MetricsRow, Map[Int, MetricsRow]] {
-    private var byPartition = Map.empty[Int, MetricsRow]
+  private final class LineageAccumulator extends AccumulatorV2[PartitionMetrics, Map[Int, PartitionMetrics]] {
+    private var byPartition = Map.empty[Int, PartitionMetrics]
     override def isZero: Boolean = byPartition.isEmpty
     override def copy(): LineageAccumulator = {
       val a = new LineageAccumulator
@@ -203,10 +200,10 @@ object ExtractJob {
       a
     }
     override def reset(): Unit = byPartition = Map.empty
-    override def add(m: MetricsRow): Unit = byPartition += m.partition_id -> m
-    override def merge(other: AccumulatorV2[MetricsRow, Map[Int, MetricsRow]]): Unit =
+    override def add(m: PartitionMetrics): Unit = byPartition += m.partition_id -> m
+    override def merge(other: AccumulatorV2[PartitionMetrics, Map[Int, PartitionMetrics]]): Unit =
       byPartition ++= other.value
-    override def value: Map[Int, MetricsRow] = byPartition
+    override def value: Map[Int, PartitionMetrics] = byPartition
   }
 
   /** [[extractAll]]'s pass; with `lineage`, each non-empty task also adds
@@ -232,7 +229,7 @@ object ExtractJob {
       var rows, ok, error, bytesIn, kernelNs = 0L
       var minUrl, maxUrl: UTF8String = null
       for (acc <- lineage) TaskContext.get().addTaskCompletionListener[Unit] { _ =>
-        if (rows > 0) acc.add(MetricsRow(commitId, pid, rows, ok, error, bytesIn,
+        if (rows > 0) acc.add(PartitionMetrics(commitId, pid, rows, ok, error, bytesIn,
           (kernelNs.toDouble / 1000).toLong, Option(minUrl).map(_.toString).orNull,
           Option(maxUrl).map(_.toString).orNull))
       }
@@ -283,21 +280,21 @@ object ExtractJob {
   }
 
   /** The commit step batch runs and streaming epochs share: kernel →
-    * results commit → metrics commit. The metrics rows come from the
-    * kernel pass itself (each task's totals, gathered while the results
-    * are written — one kernel pass, no read-back of the results) and are
-    * written as one file; they equal what [[commitMetrics]] derives from
-    * the committed rows. Returns the results version and the increment's
-    * totals.
+    * results commit → metrics commit, one Spark job (the results write).
+    * The metrics rows come from the kernel pass itself (each task's
+    * totals, gathered while the results are written — one kernel pass, no
+    * read-back of the results), and the driver writes them as one parquet
+    * file, with no Spark job, even when there are none; they equal what
+    * [[commitMetrics]] derives from the committed rows. Returns the results
+    * version and the increment's totals.
     */
   def commit(todo: Dataset[PageRow], tableRoot: String, rules: Seq[FieldRule], commitId: String): JobStats = {
     val spark = todo.sparkSession
-    import spark.implicits._
     val lineage = new LineageAccumulator
     spark.sparkContext.register(lineage)
     val version = resultsTable(tableRoot).append(stamped(todo, rules, commitId, Some(lineage)).toDF(), commitId)
     val rows = lineage.value.values.toVector.sortBy(_.partition_id)
-    metricsTable(tableRoot).append(rows.toDF().coalesce(1), commitId)
+    metricsTable(tableRoot).append(spark, rows, commitId)
     JobStats(version, rows.map(_.rows_in).sum, rows.map(_.rows_ok).sum, rows.map(_.rows_error).sum)
   }
 

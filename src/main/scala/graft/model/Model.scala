@@ -100,11 +100,11 @@ final case class ExtractResult(
 
 /** Per-partition lineage/metrics row, written alongside results on every
   * snapshot commit (north_rule: "per-partition lineage + metrics").
-  * Aggregated from the per-row lineage columns of the committed results
-  * increment — `partition_id` is the extraction task's id, `bytes_in` the
-  * real payload bytes, `kernel_us` the cumulative kernel wall time in
-  * microseconds (µs, not ms: small partitions finish in sub-ms and must
-  * not round to zero).
+  * Each extraction task's totals, equal to the aggregate of the per-row
+  * lineage columns of the committed results increment — `partition_id`
+  * is the extraction task's id, `bytes_in` the real payload bytes,
+  * `kernel_us` the cumulative kernel wall time in microseconds (µs, not
+  * ms: small partitions finish in sub-ms and must not round to zero).
   */
 final case class PartitionMetrics(
     commit_id: String,

@@ -4,13 +4,19 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.util.Base64
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StringType, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Iceberg-style committed-snapshot table on a plain filesystem.
   *
@@ -510,12 +516,14 @@ final class SnapshotTable(
   private def sweep(referenced: Set[String], eligible: Path => Boolean): Int = {
     val doomed = (list(dataDir) ++ list(delDir))
       .filter(d => Files.isDirectory(d) && !referenced.contains(d.toString) && eligible(d))
-    doomed.foreach { d =>
-      val st = Files.walk(d)
-      try st.sorted(java.util.Comparator.reverseOrder[Path]()).iterator().asScala.foreach(Files.delete)
-      finally st.close()
-    }
+    doomed.foreach(deleteTree)
     doomed.size
+  }
+
+  private def deleteTree(d: Path): Unit = {
+    val st = Files.walk(d)
+    try st.sorted(java.util.Comparator.reverseOrder[Path]()).iterator().asScala.foreach(Files.delete)
+    finally st.close()
   }
 
   /** Write `df` into `dir` and return its entry at sequence `seq` plus its
@@ -557,6 +565,40 @@ final class SnapshotTable(
       try bloom.writeTo(out) finally out.close()
     }
     (Entry(dir, seq, stats.map(_._1), stats.map(_._2), rows), schema)
+  }
+
+  /** Write `rows`, whose fields follow `schema`, into `dir` as ONE snappy
+    * parquet file from the driver, with no Spark job, and return its entry
+    * at sequence 0 plus its written schema, as [[writeDir]] does. The file
+    * carries the parquet types Spark's own writer derives from the same
+    * nullable schema, so an unpinned read returns the recorded schema.
+    * Flat string/int/long fields only, and no stats: a lineage increment
+    * of a few rows, not a second general writer.
+    */
+  private def writeRows(rows: Seq[Product], schema: StructType, dir: String): (Entry, StructType) = {
+    require(schema.fields.forall(f => Set[DataType](StringType, IntegerType, LongType)(f.dataType)),
+      s"driver-written rows hold flat string/int/long fields only: ${schema.simpleString}")
+    require(statsCol.forall(c => !schema.fieldNames.contains(c)),
+      s"driver-written rows record no stats, but '${statsCol.get}' is stat-tracked")
+    val written = nullable(schema).asInstanceOf[StructType]
+    val out = Paths.get(dir)
+    if (Files.exists(out)) deleteTree(out) // overwrite, as writeDir's write does
+    Files.createDirectories(out)
+    val msg = new SparkToParquetSchemaConverter().convert(written)
+    val groups = new SimpleGroupFactory(msg)
+    val w = ExampleParquetWriter.builder(new LocalOutputFile(out.resolve("part-00000.snappy.parquet")))
+      .withType(msg).withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      r.productIterator.zipWithIndex.foreach {
+        case (null, _) =>
+        case (v: String, i) => g.add(i, v)
+        case (v: Int, i) => g.add(i, v)
+        case (v: Long, i) => g.add(i, v)
+      }
+      w.write(g)
+    } finally w.close()
+    (Entry(dir, 0, None, None, rows.size.toLong), written)
   }
 
   /** `t` with every field, array element and map value nullable — the
@@ -638,7 +680,14 @@ final class SnapshotTable(
     * manifest move publishes everything at once.
     */
   def append(df: DataFrame, commitId: String): Int =
-    publish(df, commitId, deleteKeyCols = Nil)
+    publish(df.sparkSession, commitId, deleteKeyCols = Nil)(writeDir(df, _, 0))
+
+  /** Append rows already on the driver as a new commit: the same publish
+    * as [[append]], with the data dir written by [[writeRows]] instead of a
+    * Spark job. `T`'s fields must be flat strings, ints or longs.
+    */
+  def append[T <: Product : TypeTag](spark: SparkSession, rows: Seq[T], commitId: String): Int =
+    publish(spark, commitId, deleteKeyCols = Nil)(writeRows(rows, Encoders.product[T].schema, _))
 
   /** Upsert: append `df` AND delete every earlier row sharing its
     * `keyCols` — the re-crawl semantics of a url-keyed pages table (same
@@ -649,7 +698,7 @@ final class SnapshotTable(
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     require(keyCols.forall(df.columns.contains),
       s"key columns ${keyCols.mkString(",")} must exist in the frame")
-    publish(df, commitId, keyCols)
+    publish(df.sparkSession, commitId, keyCols)(writeDir(df, _, 0))
   }
 
   /** ROLLBACK (Iceberg `rollback_to_snapshot` analog): publish a NEW
@@ -740,12 +789,16 @@ final class SnapshotTable(
       throw new IllegalStateException(s"$what lost the manifest CAS $MaxCommitAttempts times — " +
         "writer contention is pathological; retry with backoff at the caller"))
 
-  private def publish(df: DataFrame, commitId: String, deleteKeyCols: Seq[String]): Int = {
-    val spark = df.sparkSession
+  /** The commit step of [[append]] and [[upsert]]: `write` fills the
+    * commit's data dir and returns its entry and schema, then the CAS loop
+    * publishes it.
+    */
+  private def publish(spark: SparkSession, commitId: String, deleteKeyCols: Seq[String])(
+      write: String => (Entry, StructType)): Int = {
     // the data dir is commit-private (keyed by commitId) and written ONCE;
     // only the snapshot derivation below re-runs when the CAS loses
     val outDir = dataDir.resolve(commitId).toString
-    val (entry, written) = writeDir(df, outDir, 0)
+    val (entry, written) = write(outDir)
     commitLoop(s"commit '$commitId'") { prev =>
       // re-derived per attempt against the winner's snapshot — including
       // re-merging the schema (a conflicting type change surfaces as

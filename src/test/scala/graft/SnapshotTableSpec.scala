@@ -8,7 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
+object SnapshotTableSpec {
+  final case class Lineage(id: String, part: Int, bytes: Long)
+  final case class Scored(id: String, score: Double)
+}
+
 class SnapshotTableSpec extends AnyFunSuite {
+  import SnapshotTableSpec._
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -510,6 +516,40 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(checkedDirs.count(_.contains("/compacted-")) == 2 && checkedDirs.exists(_.endsWith("/c6")))
     val nested = t.latest().get.schema.get
     assert(Seq("items", "blob", "ts").forall(nested.fieldNames.contains), nested.treeString)
+  }
+
+  test("driver-written rows publish what a Spark append of the same rows publishes") {
+    val batches = Seq(
+      Seq(Lineage("a", 0, 1L << 40), Lineage(null, 1, 2L)),
+      Seq.empty[Lineage],
+      Seq(Lineage("\uD834\uDD1E", -3, -1L)))
+    val (sparkRoot, driverRoot) = (tmp(), tmp())
+    val viaSpark = new SnapshotTable(sparkRoot, compactFanIn = 2)
+    val viaDriver = new SnapshotTable(driverRoot, compactFanIn = 2)
+    for ((rs, i) <- batches.zipWithIndex) {
+      viaSpark.append(rs.toDF().coalesce(1), s"c$i")
+      viaDriver.append(spark, rs, s"c$i")
+      val dir = s"$driverRoot/data/c$i"
+      val files = Files.list(java.nio.file.Paths.get(dir))
+      try assert(files.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")) == 1, dir)
+      finally files.close()
+      // unpinned: the footer alone yields the recorded schema and the rows
+      assert(spark.read.parquet(dir).schema == viaDriver.latest().get.schema.get, dir)
+      assert(spark.read.parquet(dir).as[Lineage].collect().toSeq == rs, dir)
+    }
+    def manifests(root: String): Vector[String] = new SnapshotTable(root).versions().map { v =>
+      new String(Files.readAllBytes(java.nio.file.Paths.get(root, "_snapshots", f"v$v%08d.manifest")), "UTF-8")
+        .replace(root, "<root>")
+    }
+    assert(manifests(driverRoot) == manifests(sparkRoot))
+    assert(viaDriver.latest().get.dataDirs.exists(_.contains("/compacted-")), "driver-written dirs compact")
+    assert(viaDriver.read(spark).get.as[Lineage].collect().toSet == batches.flatten.toSet)
+
+    val noScores = intercept[IllegalArgumentException](new SnapshotTable(tmp()).append(spark, Seq(Scored("a", 1.0)), "c1"))
+    assert(noScores.getMessage.contains("string/int/long"), noScores.getMessage)
+    val noStats = intercept[IllegalArgumentException](
+      new SnapshotTable(tmp(), statsCol = Some("id")).append(spark, batches.head, "c1"))
+    assert(noStats.getMessage.contains("'id'"), noStats.getMessage)
   }
 
   test("a malformed manifest line fails loudly, naming the file") {
