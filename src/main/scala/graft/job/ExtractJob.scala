@@ -49,7 +49,14 @@ object ExtractJob {
 
   final case class JobStats(version: Int, rowsIn: Long, rowsOk: Long, rowsError: Long)
 
-  def resultsTable(root: String) = new SnapshotTable(s"$root/results")
+  /** The results columns whose values barely repeat, so a parquet
+    * dictionary for them is built only to be dropped: the results table
+    * writes them PLAIN (see [[SnapshotTable]]), which is what parquet-mr
+    * writes for them anyway.
+    */
+  val PlainResultCols: Set[String] = Set("url", "extracted_text", "pdf_hash", "cache_key", "kernel_ns")
+
+  def resultsTable(root: String) = new SnapshotTable(s"$root/results", plainCols = PlainResultCols)
   def metricsTable(root: String) = new SnapshotTable(s"$root/metrics")
 
   /** Committed-key-set size above which the resume filter switches from a

@@ -12,6 +12,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
 import scala.annotation.tailrec
@@ -94,12 +95,19 @@ import scala.reflect.runtime.universe.TypeTag
   *    written before a column existed read null for it without any
   *    footer-merging pass, and [[readAt]] returns each version under the
   *    schema it was published with. Compaction materializes evolution —
-  *    merged dirs physically carry every column.
+  *    merged dirs physically carry every column;
+  *  - PLAIN COLUMNS: every Spark write of a data dir (append, upsert,
+  *    compaction) builds no parquet dictionary for the columns in
+  *    `plainCols`. For a column whose values barely repeat, parquet-mr
+  *    builds the dictionary and then drops it when the first page shows it
+  *    does not pay (the chunk is written PLAIN anyway), so naming such a
+  *    column saves the hashing and leaves the written bytes as they were.
   */
 final class SnapshotTable(
     val root: String,
     val compactFanIn: Int = 8,
-    val statsCol: Option[String] = None) {
+    val statsCol: Option[String] = None,
+    val plainCols: Set[String] = Set.empty) {
   private val dataDir: Path = Paths.get(root, "data")
   private val delDir: Path = Paths.get(root, "deletes")
   private val snapDir: Path = Paths.get(root, "_snapshots")
@@ -295,15 +303,19 @@ final class SnapshotTable(
     latest().filter(_.deletes.isEmpty).map(_.entries.map(_.rows).sum)
 
   /** Entries of the latest snapshot whose `[statMin, statMax]` could hold a
-    * `statsCol` value in `[lo, hi]` (inclusive, string order), plus the
-    * total — the data-skipping decision, exposed so callers and tests can
-    * observe pruning. Entries without stats always survive.
+    * `statsCol` value in `[lo, hi]` (inclusive, UTF-8 byte order — the
+    * order the stats were taken in and the row-level predicate compares
+    * in; `String`'s UTF-16 order differs past U+FFFF), plus the total — the
+    * data-skipping decision, exposed so callers and tests can observe
+    * pruning. Entries without stats always survive.
     */
   def pruneRange(lo: String, hi: String): (Vector[Entry], Int) = {
     val s = latest().map(_.entries).getOrElse(Vector.empty)
+    def utf8(v: String) = UTF8String.fromString(v)
+    val (l, h) = (utf8(lo), utf8(hi))
     val kept = s.filter { e =>
       (e.statMin, e.statMax) match {
-        case (Some(mn), Some(mx)) => !(mx < lo || mn > hi)
+        case (Some(mn), Some(mx)) => !(utf8(mx).binaryCompare(l) < 0 || utf8(mn).binaryCompare(h) > 0)
         case _ => true
       }
     }
@@ -533,8 +545,9 @@ final class SnapshotTable(
     * the manifest stores strings and string order would mis-prune
     * numbers), and the schema is `df`'s with every level made nullable,
     * which is what a footer read of the dir returns. Spark's min()/max()
-    * compare in UTF8String binary order, which is what pruneRange's
-    * string comparisons assume for ASCII-clustered keys.
+    * compare in UTF8String binary order, which is the order pruneRange
+    * compares them in. The columns in `plainCols` are written with no
+    * dictionary (parquet-mr's per-column `parquet.enable.dictionary#<col>`).
     *
     * When stats are recorded, a BLOOM SIDECAR is also written into the dir
     * (`_graft.bloom` — underscore-prefixed, so every parquet listing
@@ -553,7 +566,8 @@ final class SnapshotTable(
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("rows"),
         statCol.toSeq.flatMap(c => Seq(min(col(c)).as("min"), max(col(c)).as("max"))): _*)
-      .write.mode("overwrite").parquet(dir)
+      .write.options(plainCols.map(c => s"parquet.enable.dictionary#$c" -> "false").toMap)
+      .mode("overwrite").parquet(dir)
     val r = obs.get
     val rows = r("rows").asInstanceOf[Long]
     val stats = r.get("min").collect { case mn: String => (mn, r("max").asInstanceOf[String]) }
@@ -572,14 +586,15 @@ final class SnapshotTable(
     * at sequence 0 plus its written schema, as [[writeDir]] does. The file
     * carries the parquet types Spark's own writer derives from the same
     * nullable schema, so an unpinned read returns the recorded schema.
-    * Flat string/int/long fields only, and no stats: a lineage increment
-    * of a few rows, not a second general writer.
+    * Flat string/int/long fields only, no stats and no plain columns: a
+    * lineage increment of a few rows, not a second general writer.
     */
   private def writeRows(rows: Seq[Product], schema: StructType, dir: String): (Entry, StructType) = {
     require(schema.fields.forall(f => Set[DataType](StringType, IntegerType, LongType)(f.dataType)),
       s"driver-written rows hold flat string/int/long fields only: ${schema.simpleString}")
     require(statsCol.forall(c => !schema.fieldNames.contains(c)),
       s"driver-written rows record no stats, but '${statsCol.get}' is stat-tracked")
+    require(plainCols.isEmpty, s"driver-written rows take parquet-mr's defaults, but ${plainCols.mkString(",")} are plain")
     val written = nullable(schema).asInstanceOf[StructType]
     val out = Paths.get(dir)
     if (Files.exists(out)) deleteTree(out) // overwrite, as writeDir's write does

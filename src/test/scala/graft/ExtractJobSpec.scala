@@ -201,6 +201,38 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(lastGiantIdx <= firstSmallOnlyIdx)
   }
 
+  test("the results table writes its plain columns with no dictionary, in the bytes a default Spark write produces") {
+    val root = Files.createTempDirectory("graft-plain").toString
+    ExtractJob.run(spark, PagesGen.pages(spark, "perfbench/data", replicate = 2), root, commitId = "c1")
+    // the committed rows in two files, each holding over 1 MiB of text
+    val rows = ExtractJob.resultsTable(root).read(spark).get.coalesce(2)
+    ExtractJob.resultsTable(s"$root/copy").append(rows, "c1")
+    rows.write.parquet(s"$root/default")
+    def files(dir: String): Map[String, java.nio.file.Path] = {
+      val st = Files.list(Paths.get(dir))
+      try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(p => p.getFileName.toString.take("part-00000".length) -> p).toMap
+      finally st.close()
+    }
+    val (viaTable, viaDefault) = (files(s"$root/copy/results/data/c1"), files(s"$root/default"))
+    assert(viaTable.size == 2 && viaTable.keySet == viaDefault.keySet)
+    val conf = spark.sparkContext.hadoopConfiguration
+    viaTable.foreach { case (part, p) =>
+      val textBytes = spark.read.parquet(p.toString).agg(sum(octet_length(col("extracted_text")))).head().getLong(0)
+      assert(textBytes >= (1L << 20), s"$part holds $textBytes bytes of text")
+      assert(java.util.Arrays.equals(Files.readAllBytes(p), Files.readAllBytes(viaDefault(part))),
+        s"$part differs from the default write")
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), conf))
+      val chunks = try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toVector finally reader.close()
+      def dictionary(c: String): Boolean = chunks.filter(_.getPath.toDotString == c).exists { m =>
+        m.hasDictionaryPage || m.getEncodings.asScala.exists(_.usesDictionary)
+      }
+      ExtractJob.PlainResultCols.foreach(c => assert(!dictionary(c), s"$part: $c carries a dictionary"))
+      assert(dictionary("status"), s"$part: a low-cardinality column keeps its dictionary")
+    }
+  }
+
   test("determinism: extracted_text per url is byte-identical across parallelism levels") {
     import spark.implicits._
     val pages = PagesGen.pages(spark, sfDir).limit(200)

@@ -136,9 +136,19 @@ class LayoutSpec extends AnyFunSuite {
   private def gridRow(y: Double, cols: Seq[Double]): Seq[graft.model.Word] =
     cols.zipWithIndex.map { case (x, i) => w(s"c$i", x, y, x + 30, y + 10) }
 
+  /** The detector's flag for `words`' clustered lines, checked against the
+    * Set-based oracle it was rewritten from.
+    */
+  private def detect(words: Seq[graft.model.Word]): Boolean = {
+    val groups = LineClusterer.clusterGroups(words)
+    val flag = TableDetector.detect(groups)
+    assert(flag == KernelOracles.detectTables(groups), "the rewrite must flag what the oracle flags")
+    flag
+  }
+
   test("table detection: 3 rows sharing 3 aligned columns → true") {
     val words = (0 until 3).flatMap(r => gridRow(100 + r * 20, Seq(72.0, 200.0, 340.0)))
-    assert(TableDetector.detect(LineClusterer.clusterGroups(words)))
+    assert(detect(words))
   }
 
   test("table detection: flowing ragged text → false") {
@@ -148,7 +158,7 @@ class LayoutSpec extends AnyFunSuite {
       Seq(w("lorem", 72 + jitter, 100 + r * 20, 120 + jitter, 110 + r * 20),
         w("ipsum", 130 + jitter * 1.3, 100 + r * 20, 180 + jitter * 1.3, 110 + r * 20))
     }
-    assert(!TableDetector.detect(LineClusterer.clusterGroups(words)))
+    assert(!detect(words))
   }
 
   test("table detection: single aligned column (left margin) is not a table") {
@@ -156,15 +166,15 @@ class LayoutSpec extends AnyFunSuite {
       Seq(w("start", 72, 100 + r * 20, 120, 110 + r * 20),
         w("rest", 130 + r * 11.0, 100 + r * 20, 180 + r * 11.0, 110 + r * 20))
     }
-    assert(!TableDetector.detect(LineClusterer.clusterGroups(words)))
+    assert(!detect(words))
   }
 
   test("table detection: interrupted streaks don't count; resumed grid does") {
     val grid = (0 until 2).flatMap(r => gridRow(100 + r * 20, Seq(72.0, 200.0)))
     val breaker = Seq(w("prose", 95, 150, 150, 160))
     val grid2 = (0 until 2).flatMap(r => gridRow(180 + r * 20, Seq(72.0, 200.0)))
-    assert(!TableDetector.detect(LineClusterer.clusterGroups(grid ++ breaker ++ grid2)))
+    assert(!detect(grid ++ breaker ++ grid2))
     val grid3 = (0 until 3).flatMap(r => gridRow(300 + r * 20, Seq(72.0, 200.0)))
-    assert(TableDetector.detect(LineClusterer.clusterGroups(grid ++ breaker ++ grid3)))
+    assert(detect(grid ++ breaker ++ grid3))
   }
 }

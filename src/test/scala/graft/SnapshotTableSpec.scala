@@ -156,6 +156,39 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.readRange(spark, "q/", "q/~").isEmpty)
   }
 
+  test("range and point pruning compare in the UTF-8 byte order the stats are taken in") {
+    val t = new SnapshotTable(tmp(), statsCol = Some("url"))
+    // U+FF21 sorts before U+1D11E in UTF-8 bytes and after it in UTF-16
+    t.append(Seq(("\uFF21", 1), ("\uD834\uDD1E", 1)).toDF("url", "gen"), "c1")
+    val e = t.latest().get.entries.head
+    assert(e.statMin.contains("\uFF21") && e.statMax.contains("\uD834\uDD1E"))
+    assert(t.readRange(spark, "\uFF21", "\uFF21").map(_.count()).contains(1L))
+    assert(t.readPoint(spark, "\uFF21").map(_.count()).contains(1L))
+  }
+
+  test("readRange and readPoint return what a full-scan filter returns, over keys across the UTF-16/UTF-8 order split") {
+    val rnd = new scala.util.Random(37)
+    val alphabet = Vector("a", "z", "~", "\u00E9", "\u4E2D", "\uFF21", "\uD834\uDD1E")
+    def key(): String = Seq.fill(1 + rnd.nextInt(3))(alphabet(rnd.nextInt(alphabet.size))).mkString
+    val t = new SnapshotTable(tmp(), statsCol = Some("url"))
+    (1 to 6).foreach(c => t.append(Seq.fill(4)((key(), c)).toDF("url", "gen"), s"c$c"))
+    t.append(Seq(("\uFF21", 7), ("\uD834\uDD1E", 7)).toDF("url", "gen"), "c7")
+    val full = t.read(spark).get
+    def rows(df: Option[org.apache.spark.sql.DataFrame]): Vector[(String, Int)] =
+      df.fold(Vector.empty[(String, Int)])(_.as[(String, Int)].collect().toVector.sorted)
+    val ranges = ("\uFF21", "\uFF21") +: Seq.fill(15) {
+      val (a, b) = (key(), key())
+      if (org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(b)) <= 0) (a, b) else (b, a)
+    }
+    ranges.foreach { case (lo, hi) =>
+      assert(rows(t.readRange(spark, lo, hi)) == rows(Some(full.where(col("url").between(lo, hi)))), s"[$lo, $hi]")
+    }
+    ("\uFF21" +: "\uD834\uDD1E" +: Seq.fill(10)(key())).foreach { v =>
+      assert(rows(t.readPoint(spark, v)) == rows(Some(full.where(col("url") === v))), v)
+    }
+  }
+
   test("data skipping is safe: statless dirs are never pruned") {
     val t = new SnapshotTable(tmp(), statsCol = Some("url"))
     // a dir written without the stats column records no bounds
@@ -550,6 +583,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     val noStats = intercept[IllegalArgumentException](
       new SnapshotTable(tmp(), statsCol = Some("id")).append(spark, batches.head, "c1"))
     assert(noStats.getMessage.contains("'id'"), noStats.getMessage)
+    val noPlain = intercept[IllegalArgumentException](
+      new SnapshotTable(tmp(), plainCols = Set("id")).append(spark, batches.head, "c1"))
+    assert(noPlain.getMessage.contains("id are plain"), noPlain.getMessage)
   }
 
   test("a malformed manifest line fails loudly, naming the file") {
