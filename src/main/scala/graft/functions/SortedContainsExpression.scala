@@ -38,7 +38,7 @@ object SortedContains {
       val mid = (lo + hi) >>> 1
       val e = arr.getUTF8String(mid)
       // null elements sort first (sort_array convention): treat as smaller
-      val c = if (e == null) -1 else e.compareTo(key)
+      val c = if (e == null) -1 else e.binaryCompare(key)
       if (c == 0) return true
       else if (c < 0) lo = mid + 1
       else hi = mid - 1
@@ -51,7 +51,7 @@ object SortedContains {
     */
   def sorted(vocab: Seq[String]): Array[String] =
     vocab.toArray.sortWith((a, b) =>
-      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0)
 }
 
 /** `graft_sorted_contains(array<string> sorted, string) -> boolean` — see

@@ -251,8 +251,8 @@ object ExtractJob {
         kernelNs += out.kernel_ns
         if (lineage.isDefined && out.url != null) {
           val u = UTF8String.fromString(out.url)
-          if (minUrl == null || u.compareTo(minUrl) < 0) minUrl = u
-          if (maxUrl == null || u.compareTo(maxUrl) > 0) maxUrl = u
+          if (minUrl == null || u.binaryCompare(minUrl) < 0) minUrl = u
+          if (maxUrl == null || u.binaryCompare(maxUrl) > 0) maxUrl = u
         }
         out
       }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.job.{ExtractJob, ExtractKernel}
 import graft.model.{FieldRule, PageRow}
+import graft.table.LocalFs
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -35,6 +36,9 @@ final case class DupState(firstUrl: String, firstTsMs: Long, n: Long)
 object StreamingExtract {
 
   val PageSchema: StructType = Encoders.product[PageRow].schema
+
+  /** The Hadoop key naming the FileContext implementation of `file:`. */
+  private val FileContextImplKey = "fs.AbstractFileSystem.file.impl"
 
   /** Streaming content-level dedup: drop pages whose payload fingerprint
     * was already seen within the event-time watermark — a re-crawl of the
@@ -110,6 +114,17 @@ object StreamingExtract {
   /** Start continuous extraction from parquet files arriving in `inputDir`.
     * `Trigger.AvailableNow` drains what exists and stops (test/batch-catchup
     * mode); pass `ProcessingTime` for a long-running tail.
+    *
+    * Local I/O: the table's writes route themselves through
+    * [[graft.table.LocalFs]] (see [[graft.table.SnapshotTable]]). The
+    * checkpoint's metadata logs (`sources/0`, `offsets`, `commits`) write
+    * through a FileContext built from the session's Hadoop conf, with no
+    * per-query hook, so this sets ONE session key when it is unset:
+    * `fs.AbstractFileSystem.file.impl` → [[graft.table.LocalFs.Context]].
+    * Without it each log write forks 2 `chmod` and 8 `readlink` processes
+    * (no Hadoop native library), about 30 per epoch. The same files, modes
+    * and `.crc` sidecars are written; other FileContext users of the session
+    * get the same in-process calls.
     */
   def start(
       spark: SparkSession,
@@ -122,6 +137,8 @@ object StreamingExtract {
       contentDedupWatermark: String = null // non-null: dedup identical payloads within this horizon
   ): StreamingQuery = {
     val checkpoint = Option(checkpointDir).getOrElse(s"$tableRoot/_stream_checkpoint")
+    if (spark.conf.getOption(FileContextImplKey).isEmpty)
+      spark.conf.set(FileContextImplKey, classOf[LocalFs.Context].getName)
     import spark.implicits._
     val reader = spark.readStream.schema(PageSchema)
     val raw =

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.util.Base64
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -101,7 +102,18 @@ import scala.reflect.runtime.universe.TypeTag
   *    `plainCols`. For a column whose values barely repeat, parquet-mr
   *    builds the dictionary and then drops it when the first page shows it
   *    does not pay (the chunk is written PLAIN anyway), so naming such a
-  *    column saves the hashing and leaves the written bytes as they were.
+  *    column saves the hashing and leaves the written bytes as they were;
+  *  - LOCAL I/O IN-PROCESS: every Spark write of this table (data dirs,
+  *    delete dirs, [[writeUncommitted]]) carries `LocalIo`, two write
+  *    options that Spark copies into that write job's Hadoop conf, which
+  *    its tasks receive too: `fs.file.impl` names [[LocalFs]], and
+  *    `fs.file.impl.disable.cache` keeps the session's cached stock `file:`
+  *    instance from winning. Without Hadoop's native library the stock
+  *    local filesystem forks a `chmod` per `mkdirs` and `create` (about 12
+  *    per commit, 2.4–4.1 ms each); [[LocalFs]] sets the same modes
+  *    through NIO. Files, bytes, modes and `.crc` sidecars are unchanged,
+  *    and no other write in the session is affected. Manifests, sidecars
+  *    and driver-written rows go through java.nio directly.
   */
 final class SnapshotTable(
     val root: String,
@@ -564,10 +576,9 @@ final class SnapshotTable(
   private def writeDir(df: DataFrame, dir: String, seq: Int): (Entry, StructType) = {
     val statCol = statsCol.filter(c => df.schema.fields.exists(f => f.name == c && f.dataType == StringType))
     val obs = Observation()
-    df.observe(obs, count(lit(1)).as("rows"),
-        statCol.toSeq.flatMap(c => Seq(min(col(c)).as("min"), max(col(c)).as("max"))): _*)
-      .write.options(plainCols.map(c => s"parquet.enable.dictionary#$c" -> "false").toMap)
-      .mode("overwrite").parquet(dir)
+    val observed = df.observe(obs, count(lit(1)).as("rows"),
+      statCol.toSeq.flatMap(c => Seq(min(col(c)).as("min"), max(col(c)).as("max"))): _*)
+    overwrite(observed, dir, plainCols.map(c => s"parquet.enable.dictionary#$c" -> "false").toMap)
     val r = obs.get
     val rows = r("rows").asInstanceOf[Long]
     val stats = r.get("min").collect { case mn: String => (mn, r("max").asInstanceOf[String]) }
@@ -580,6 +591,20 @@ final class SnapshotTable(
     }
     (Entry(dir, seq, stats.map(_._1), stats.map(_._2), rows), schema)
   }
+
+  /** Overwrite `dir` with `df` as parquet, adding `options` to the write:
+    * every Spark write of this table goes through here, so each carries
+    * `LocalIo` (see LOCAL I/O IN-PROCESS above).
+    */
+  private def overwrite(df: DataFrame, dir: String, options: Map[String, String] = Map.empty): Unit =
+    df.write.options(LocalIo ++ options).mode("overwrite").parquet(dir)
+
+  /** The write options that route a Spark write's local Hadoop I/O
+    * through [[LocalFs]].
+    */
+  private val LocalIo = Map(
+    "fs.file.impl" -> classOf[LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   /** Write `rows`, whose fields follow `schema`, into `dir` as ONE snappy
     * parquet file from the driver, with no Spark job, and return its entry
@@ -601,7 +626,10 @@ final class SnapshotTable(
     Files.createDirectories(out)
     val msg = new SparkToParquetSchemaConverter().convert(written)
     val groups = new SimpleGroupFactory(msg)
+    // an empty Hadoop conf: ExampleParquetWriter's default conf parses core-default.xml
+    // (about 12 ms per commit), and no key in it changes the written bytes
     val w = ExampleParquetWriter.builder(new LocalOutputFile(out.resolve("part-00000.snappy.parquet")))
+      .withConf(new Configuration(false))
       .withType(msg).withCompressionCodec(CompressionCodecName.SNAPPY).build()
     try rows.foreach { r =>
       val g = groups.newGroup()
@@ -751,7 +779,7 @@ final class SnapshotTable(
     */
   def deleteKeys(keys: DataFrame, commitId: String): Int = {
     val dd = delDir.resolve(commitId).toString
-    keys.dropDuplicates().write.mode("overwrite").parquet(dd)
+    overwrite(keys.dropDuplicates(), dd)
     commitLoop(s"delete commit '$commitId'") { prev =>
       // delete-only: row count and schema unchanged
       val p = prev.getOrElse(Empty)
@@ -826,8 +854,7 @@ final class SnapshotTable(
         if (deleteKeyCols.isEmpty || p.entries.isEmpty) p.deletes
         else {
           val dd = delDir.resolve(commitId).toString
-          spark.read.parquet(outDir).select(deleteKeyCols.map(col): _*)
-            .dropDuplicates().write.mode("overwrite").parquet(dd)
+          overwrite(spark.read.parquet(outDir).select(deleteKeyCols.map(col): _*).dropDuplicates(), dd)
           p.deletes :+ Del(dd, v)
         }
       // unified schema: the just-written dir's schema merged into the
@@ -914,7 +941,7 @@ final class SnapshotTable(
     */
   def writeUncommitted(df: DataFrame, commitId: String): String = {
     val outDir = dataDir.resolve(commitId).toString
-    df.write.mode("overwrite").parquet(outDir)
+    overwrite(df, outDir)
     outDir
   }
 }

@@ -374,6 +374,34 @@ class ExtractJobSpec extends AnyFunSuite {
       "Spark jobs per fresh range-layout run, fresh default run and streaming epoch")
   }
 
+  test("the UTF-8 order call sites run with Spark's testing flag set") {
+    import spark.implicits._
+    // Spark's UTF8String.compareTo throws while spark.testing is set; the
+    // lineage min/max and the sorted-vocabulary probe compare in byte order
+    val prior = Option(System.getProperty("spark.testing"))
+    System.setProperty("spark.testing", "true")
+    try {
+      val root = Files.createTempDirectory("graft-testing-flag").toString
+      val base = PagesGen.pages(spark, sfDir).limit(20).collect().toVector
+      val hi = "https://zz.example/\uD834\uDD1E"
+      val pages = (base.drop(2) ++ Vector(base(0).copy(url = "https://zz.example/\uFF21"),
+        base(1).copy(url = hi))).toDS()
+      ExtractJob.run(spark, pages, root, numPartitions = 1, commitId = "c1")
+      val c1 = metricsRows(spark, root, "c1")
+      assert(c1.size == 1 && c1.head(8) == hi, s"UTF-8 byte order max: $c1")
+
+      val vocab = graft.functions.SortedContains.sorted(Seq("b", "\uD834\uDD1E", "a", "\uFF21"))
+      assert(vocab.toSeq == Seq("a", "b", "\uFF21", "\uD834\uDD1E"))
+      val hits = Seq("a", "\uD834\uDD1E", "c").toDF("t")
+        .select(call_function("graft_sorted_contains", lit(vocab), col("t")))
+        .as[Boolean].collect().toSeq
+      assert(hits == Seq(true, true, false))
+    } finally prior match {
+      case Some(v) => System.setProperty("spark.testing", v)
+      case None => System.clearProperty("spark.testing")
+    }
+  }
+
   test("a run killed between the results and metrics publishes is backfilled before the rerun") {
     val root = Files.createTempDirectory("graft-hole").toString
     val pages = PagesGen.pages(spark, sfDir).limit(40)

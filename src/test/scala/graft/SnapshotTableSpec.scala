@@ -1,8 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.table.SnapshotTable
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -586,6 +591,25 @@ class SnapshotTableSpec extends AnyFunSuite {
     val noPlain = intercept[IllegalArgumentException](
       new SnapshotTable(tmp(), plainCols = Set("id")).append(spark, batches.head, "c1"))
     assert(noPlain.getMessage.contains("id are plain"), noPlain.getMessage)
+  }
+
+  test("driver-written rows' file is byte-identical to what a default-conf ExampleParquetWriter writes") {
+    val rs = Seq(Lineage("a", 0, 1L << 40), Lineage(null, 1, 2L), Lineage("\uD834\uDD1E", -3, -1L))
+    val t = new SnapshotTable(tmp())
+    t.append(spark, rs, "c0")
+    val msg = new SparkToParquetSchemaConverter().convert(t.latest().get.schema.get)
+    val ref = Paths.get(tmp(), "ref.parquet")
+    val w = ExampleParquetWriter.builder(new LocalOutputFile(ref))
+      .withType(msg).withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try rs.foreach { r =>
+      val g = new SimpleGroupFactory(msg).newGroup()
+      if (r.id != null) g.add(0, r.id)
+      g.add(1, r.part)
+      g.add(2, r.bytes)
+      w.write(g)
+    } finally w.close()
+    val written = Files.readAllBytes(Paths.get(t.root, "data", "c0", "part-00000.snappy.parquet"))
+    assert(written.toSeq == Files.readAllBytes(ref).toSeq)
   }
 
   test("a malformed manifest line fails loudly, naming the file") {
