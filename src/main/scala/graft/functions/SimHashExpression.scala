@@ -102,24 +102,6 @@ object GraftFunctions {
     LshSigExpression(children.head, children(1), children(2))
   }
 
-  /** Spark's own codegen'd bloom-membership expression, surfaced under a
-    * registered name (upstream keeps `BloomFilterMightContain` off the
-    * public registry — it is normally only planted by the runtime-filter
-    * rule). Args: (serialized `util.sketch.BloomFilter` binary literal,
-    * xxhash64 value). Used by the resume bloom regime
-    * ([[graft.job.ExtractJob.pending]]) so the pre-filter runs inside
-    * whole-stage codegen on the columnar scan instead of deserializing
-    * every PageRow into a Scala lambda.
-    */
-  val MightContainName = "graft_might_contain"
-  private val mightContainInfo = new ExpressionInfo(
-    classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName, MightContainName)
-
-  val mightContainBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 2, s"$MightContainName takes exactly 2 arguments, got ${children.length}")
-    org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(children.head, children(1))
-  }
-
   val NfcName = "graft_nfc"
   private val nfcInfo = new ExpressionInfo(classOf[NfcExpression].getName, NfcName)
 
@@ -238,7 +220,6 @@ object GraftFunctions {
     reg.registerFunction(FunctionIdentifier(SimHashName), simhashInfo, simhashBuilder)
     reg.registerFunction(FunctionIdentifier(QDotName), qdotInfo, qdotBuilder)
     reg.registerFunction(FunctionIdentifier(LshSigName), lshsigInfo, lshsigBuilder)
-    reg.registerFunction(FunctionIdentifier(MightContainName), mightContainInfo, mightContainBuilder)
     reg.registerFunction(FunctionIdentifier(NfcName), nfcInfo, nfcBuilder)
     reg.registerFunction(FunctionIdentifier(TextStatsName), textStatsInfo, textStatsBuilder)
     reg.registerFunction(FunctionIdentifier(LangSignalsName), langSignalsInfo, langSignalsBuilder)
@@ -276,12 +257,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         GraftFunctions.lshsigBuilder))
     // same surface as the imperative register() path — a session configured
     // via spark.sql.extensions must not see a subset of the functions
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.MightContainName),
-        new ExpressionInfo(
-          classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-          GraftFunctions.MightContainName),
-        GraftFunctions.mightContainBuilder))
     ext.injectFunction(
       (FunctionIdentifier(GraftFunctions.NfcName),
         new ExpressionInfo(classOf[NfcExpression].getName, GraftFunctions.NfcName),

@@ -18,19 +18,20 @@ import org.apache.spark.util.AccumulatorV2
   *  1. resume anti-join: pages whose `url` is already in the committed
   *     results snapshot are skipped (the durable analog of the reference's
   *     Redis cache-hit short-circuit, `/root/reference/src/core/pipeline.py:51-57`).
-  *     The key scan projects ONLY `url` — column pruning keeps the multi-TB
-  *     `html` column out of the join.
-  *  2. no payload exchange: the kernel runs in the pending rows' own
-  *     partitions — the source's scan splits, or the resume anti-join's
-  *     output. Spark sizes scan splits by bytes, not rows, so a split
-  *     holding giant payloads holds fewer rows, and the kernel's cost
-  *     follows payload bytes. The kernel pass is the only pass that reads
-  *     a payload. A source planned into fewer partitions than task slots
-  *     (one file or row group, the one partition a global `limit` leaves)
-  *     would leave slots idle, so [[run]] gives it
-  *     [[partitionForExtraction]]'s range layout over the slots instead,
-  *     at the price of one sampling pass and one shuffle of every payload;
-  *     a caller can ask for that layout with `numPartitions > 0`.
+  *     The committed side projects ONLY `url` — column pruning keeps the
+  *     multi-TB `html` column out of it. Below Spark's broadcast threshold
+  *     the join is a broadcast join; above it, a sort-merge join that
+  *     shuffles the pages (see [[pending]]).
+  *  2. no payload exchange of its own: the kernel runs in the pending
+  *     rows' partitions — the source's scan splits, or the sort-merge
+  *     anti-join's output. Spark sizes scan splits by bytes, not rows, so
+  *     a split holding giant payloads holds fewer rows, and the kernel's
+  *     cost follows payload bytes. The kernel pass is the only pass that
+  *     reads a payload. A source planned into fewer partitions than task
+  *     slots (one file or row group, the one partition a global `limit`
+  *     leaves) would leave slots idle, so [[run]] gives it
+  *     [[partitionForExtraction]]'s layout over the slots instead, at the
+  *     price of one sampling pass and one shuffle of every payload.
   *  3. the kernel runs in `mapPartitions` — embarrassingly parallel, one
   *     document in flight per task at a time (streaming iterator, no
   *     materialized partition lists → bounded memory at any document size).
@@ -45,8 +46,6 @@ import org.apache.spark.util.AccumulatorV2
   */
 object ExtractJob {
 
-  val GiantPayloadBytes: Long = 1 << 20 // 1 MiB: the range layout's size class boundary
-
   final case class JobStats(version: Int, rowsIn: Long, rowsOk: Long, rowsError: Long)
 
   /** The results columns whose values barely repeat, so a parquet
@@ -59,128 +58,34 @@ object ExtractJob {
   def resultsTable(root: String) = new SnapshotTable(s"$root/results", plainCols = PlainResultCols)
   def metricsTable(root: String) = new SnapshotTable(s"$root/metrics")
 
-  /** Committed-key-set size above which the resume filter switches from a
-    * plain anti-join to a bloom-filter pre-pass (see [[pending]]).
+  /** Pending = pages minus committed urls: a left anti-join on the
+    * committed snapshot's `url` column alone (column pruning keeps the
+    * wide columns out of the committed side). While that column fits
+    * Spark's broadcast threshold (`spark.sql.autoBroadcastJoinThreshold`,
+    * 10 MB by default), AQE makes it a broadcast join and the pages keep
+    * their partitions, with no shuffle. Past the threshold the plan is a
+    * `SortMergeJoin LeftAnti` whose exchange hash-partitions the pages by
+    * url, and so shuffles `[url, html]`: every pending page's payload
+    * moves before the kernel.
     */
-  val BloomThreshold: Long = 10L * 1000 * 1000
-
-  /** The live resume-filter broadcast per table root (see [[pending]]):
-    * replaced-and-destroyed each time a new filter is built for the root.
-    */
-  private val lastBloomBroadcast =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.broadcast.Broadcast[Array[Byte]]]()
-
-  /** Pending = pages minus committed urls.
-    *
-    * Two regimes, chosen from the snapshot's row count (free — it is in
-    * the manifest, no scan needed):
-    *
-    *  - small committed set: plain left anti-join on the projected `url`
-    *    column (column pruning keeps the wide `html` column out of the
-    *    committed side). While the committed url column fits Spark's
-    *    broadcast threshold (`spark.sql.autoBroadcastJoinThreshold`, 10 MB
-    *    by default), AQE makes it a broadcast join and the pages scan does
-    *    not shuffle. Past that threshold, still far below
-    *    [[BloomThreshold]] rows, the plan is a `SortMergeJoin LeftAnti`
-    *    whose exchange hash-partitions the pages by url and so shuffles
-    *    `[url, html]`: every pending page's payload moves before the kernel;
-    *  - huge committed set (resuming a 10^12-row run): build a bloom filter
-    *    over committed urls (aggregated from a full scan of them on every
-    *    call, then broadcast): pages the filter rejects are DEFINITELY
-    *    uncommitted, kept with no shuffle at all; pages the filter accepts
-    *    (true hits + false positives) go through the exact anti-join, and
-    *    so take the same payload-carrying exchange. False positives come
-    *    back from the join if genuinely pending — never dropped, so the
-    *    per-row invariant holds. The win is proportional to the share of
-    *    NEW pages in the input.
-    */
-  def pending(
-      spark: SparkSession,
-      pages: Dataset[PageRow],
-      tableRoot: String,
-      bloomThreshold: Long = BloomThreshold
-  ): Dataset[PageRow] = {
+  def pending(spark: SparkSession, pages: Dataset[PageRow], tableRoot: String): Dataset[PageRow] = {
     import spark.implicits._
-    val rt = resultsTable(tableRoot)
-    rt.latest() match {
+    resultsTable(tableRoot).read(spark) match {
       case None => pages
-      case Some(snap) =>
-        val committed = rt.read(spark).get.select($"url")
-        if (snap.rowCount <= bloomThreshold) {
-          pages.join(committed, Seq("url"), "left_anti").as[PageRow]
-        } else {
-          // cap the filter at 8e9 bits (~1 GB; well under the Long-indexed
-          // BitArray ceiling) — an uncapped build at 10^10+ keys would
-          // exceed BloomFilter's allocatable size and OOM/throw. Past the
-          // cap the fpp degrades gracefully: false positives only route
-          // more rows through the exact anti-join (slower, never wrong).
-          //
-          // The membership test is a codegen'd COLUMN predicate over
-          // xxhash64(url), evaluated on the columnar scan — no per-row
-          // PageRow deserialization into a Scala lambda on either branch.
-          // The filter bytes travel as a BROADCAST, not a plan literal: a
-          // lit(bytes) at this cap is a ~1 GB binary in the expression
-          // tree, rendered as 2×-size hex by any plan stringification
-          // (explain, UI SQL tab) — a driver OOM in exactly the regime
-          // this path exists for. The broadcast ships once per executor
-          // and deserializes once per executor (BloomBroadcastCache).
-          // The filter is built over xxhash64(url) LONGS so build
-          // (putLong) and probe (mightContainLong) share one hash domain;
-          // a 64-bit url-hash collision only adds a false positive.
-          //
-          // Cost note: the two branches each evaluate the source (scan ×2)
-          // — the deliberate trade: a columnar re-scan is far cheaper than
-          // shuffling every page INCLUDING payloads through a sort-merge
-          // anti-join, and the committed rows that do reach the exact join
-          // were never going to be extracted. A single-scan design would
-          // need a custom routing exchange (one operator, two shuffle
-          // destinations) — not expressible with built-ins and not worth
-          // the surface; at 10^12 rows the scan is pruned to survive this.
-          val n = math.max(snap.rowCount, 1L)
-          val numBits = math.min(n * 10L, 8L * 1000 * 1000 * 1000)
-          val bf = committed.select(xxhash64($"url").as("h")).stat.bloomFilter("h", n, numBits)
-          val baos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(baos)
-          val bfB = spark.sparkContext.broadcast(baos.toByteArray)
-          // one live filter broadcast per table root: a streaming resume
-          // rebuilds the filter every epoch, and without this the previous
-          // epochs' (up to ~1 GB) broadcasts pile up on the driver and
-          // executors for the stream's lifetime. Contract: a pending() plan
-          // must execute before the NEXT pending() call on the same root
-          // (true for batch runs and foreachBatch epochs, which serialize).
-          Option(lastBloomBroadcast.put(tableRoot, bfB)).foreach(_.destroy())
-          val probeName =
-            graft.functions.BloomBroadcastMightContain.registerProbe(spark, bfB, tableRoot)
-          val might = call_function(probeName, xxhash64($"url"))
-          val definitelyNew = pages.where(!might)
-          val maybeCommitted = pages.where(might)
-          definitelyNew.union(maybeCommitted.join(committed, Seq("url"), "left_anti").as[PageRow])
-        }
+      case Some(committed) => pages.join(committed.select($"url"), Seq("url"), "left_anti").as[PageRow]
     }
   }
 
-  /** The range layout [[run]] uses for a source planned into fewer
-    * partitions than task slots, or when asked for `numPartitions > 0`:
-    * range-partition on (sizeClass, xxhash64(url)), giants (payload
-    * ≥ [[GiantPayloadBytes]], sizeClass 0) first. It costs a sampling
-    * pass over every payload for the range bounds and a shuffle of every
-    * payload. The range partitioner allocates partitions by ROW count, so
-    * at `numPartitions` = cores the giant class shares partition 0 with
-    * ~N/parts small rows: it is not isolated, only launched first. (The
-    * ~7-8 s giants-last tail once measured came from Bench's `PagesGen`
-    * pre-partitioning with its own `doc_id % 97` giant class; the 1 MiB
-    * class never fires on the synthetic corpus, whose giants are ~25× a
-    * normal doc.)
+  /** The layout [[run]] gives a source planned into fewer partitions than
+    * task slots: `numPartitions` ranges of xxhash64(url). It costs a
+    * sampling pass over the pages for the range bounds and a shuffle of
+    * every payload. The range partitioner splits by row count, and a
+    * url's hash says nothing of its payload's size, so large payloads
+    * spread over the partitions like any other row.
     */
   def partitionForExtraction(pages: Dataset[PageRow], numPartitions: Int): Dataset[PageRow] = {
     import pages.sparkSession.implicits._
-    pages
-      .repartitionByRange(
-        numPartitions,
-        when(length($"html") >= GiantPayloadBytes, lit(0)).otherwise(lit(1)),
-        xxhash64($"url")
-      )
-      .as[PageRow]
+    pages.repartitionByRange(numPartitions, xxhash64($"url")).as[PageRow]
   }
 
   /** The distributed kernel pass (no commit). ONE kernel execution per
@@ -324,12 +229,11 @@ object ExtractJob {
   /** Full resumable run: lineage backfill → anti-join → kernel → results
     * and metrics commits. The kernel runs in the pending rows' own
     * partitions (header item 2) when the source is planned into at least
-    * as many partitions as there are task slots; otherwise, or when
-    * `numPartitions > 0`, they are range-partitioned first
-    * ([[partitionForExtraction]]) into `numPartitions`, or the slots. The
-    * count is the source's, not the pending rows': the resume filter keeps
-    * the source's partitions (a broadcast anti-join, the bloom pre-pass),
-    * and only running its exchanges would tell the pending plan's.
+    * as many partitions as there are task slots; otherwise the pending
+    * rows are laid out over the slots first ([[partitionForExtraction]]).
+    * The count is the source's, not the pending rows': a broadcast
+    * anti-join keeps the source's partitions, and only running a
+    * sort-merge join's exchange would tell the pending plan's.
     * Returns stats of THIS run's increment (0 rows if everything was already
     * committed — the no-reprocessing guarantee).
     */
@@ -338,16 +242,12 @@ object ExtractJob {
       pages: Dataset[PageRow],
       tableRoot: String,
       rules: Seq[FieldRule] = ExtractKernel.DefaultRules,
-      numPartitions: Int = 0,
       commitId: String = s"c${System.currentTimeMillis()}"
   ): JobStats = {
     backfillMetrics(spark, tableRoot)
     val pend = pending(spark, pages, tableRoot)
     val slots = spark.sparkContext.defaultParallelism
-    val todo =
-      if (numPartitions > 0 || plannedPartitions(pages) < slots)
-        partitionForExtraction(pend, if (numPartitions > 0) numPartitions else slots)
-      else pend
+    val todo = if (plannedPartitions(pages) < slots) partitionForExtraction(pend, slots) else pend
     commit(todo, tableRoot, rules, commitId)
   }
 

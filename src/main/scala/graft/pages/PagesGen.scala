@@ -108,8 +108,7 @@ $body
     * row-local (no shuffle); payload bytes are built inside executors.
     *
     * With `numPartitions > 0` the SLIM projection (doc_id, text, lang) is
-    * range-partitioned BEFORE payload synthesis, on a composite key of the
-    * shape `ExtractJob.partitionForExtraction`'s range layout uses —
+    * range-partitioned BEFORE payload synthesis, on the composite key
     * (giant-doc class `doc_id % 97`, xxhash64(url)) — so (a) the shuffle
     * moves kilobytes of text, never the synthesized binary payloads, and
     * (b) the job can extract in these partitions as they are, with no
@@ -152,7 +151,7 @@ $body
         // url + giant-class are pure functions of (doc_id, lang) — compute
         // the range key pre-shuffle, drop it after. Giants sort FIRST
         // (class 0): heavy partitions launch before the small-row waves
-        // (LPT scheduling, as in ExtractJob.partitionForExtraction).
+        // (LPT scheduling).
         val urlCol = format_string("https://synth.example/%s/doc%08d", col("lang"), col("doc_id"))
         val giant = when(col("doc_id") % 97 === 0, lit(0)).otherwise(lit(1))
         slim.repartitionByRange(numPartitions, giant, xxhash64(urlCol))

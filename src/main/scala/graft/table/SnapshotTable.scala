@@ -570,8 +570,7 @@ final class SnapshotTable(
     * sidecars, never the manifest, and so does this: the manifest stays
     * slim). It is filled by one scan of the written stats column, sized by
     * the observed count and capped at [[BloomCapItems]] — past it fpp
-    * degrades instead of the sidecar growing unbounded, same discipline as
-    * the resume bloom's numBits cap.
+    * degrades instead of the sidecar growing unbounded.
     */
   private def writeDir(df: DataFrame, dir: String, seq: Int): (Entry, StructType) = {
     val statCol = statsCol.filter(c => df.schema.fields.exists(f => f.name == c && f.dataType == StringType))

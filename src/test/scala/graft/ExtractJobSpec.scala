@@ -9,7 +9,8 @@ import graft.model.{ExtractResult, PageRow}
 import graft.pages.PagesGen
 import graft.streaming.StreamingExtract
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -72,6 +73,13 @@ class ExtractJobSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** A commit of `pages`' pending rows laid out in `n` partitions, for
+    * specs that pin the partition count (`run` picks its own layout).
+    */
+  private def commitIn(n: Int, pages: Dataset[PageRow], root: String, commitId: String): ExtractJob.JobStats =
+    ExtractJob.commit(ExtractJob.partitionForExtraction(ExtractJob.pending(spark, pages, root), n), root,
+      ExtractKernel.DefaultRules, commitId)
+
   test("end-to-end: pages → extraction → committed results, errors isolated") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-e2e").toString
@@ -82,7 +90,7 @@ class ExtractJobSpec extends AnyFunSuite {
       .reduce(_ + _)
 
     val invocationsBefore = ExtractKernel.invocations.sum()
-    val stats = ExtractJob.run(spark, pages, root, numPartitions = 4, commitId = "c1")
+    val stats = ExtractJob.run(spark, pages, root, commitId = "c1")
     // the metrics pass must NOT re-run the kernel: exactly one execution
     // per row across the whole run (extract + commit + metrics)
     assert(ExtractKernel.invocations.sum() - invocationsBefore == nPages)
@@ -117,9 +125,9 @@ class ExtractJobSpec extends AnyFunSuite {
   test("resume: second run over same input commits 0 new rows (no reprocessing)") {
     val root = Files.createTempDirectory("graft-resume").toString
     val pages = PagesGen.pages(spark, sfDir).limit(100)
-    val first = ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "c1")
+    val first = ExtractJob.run(spark, pages, root, commitId = "c1")
     assert(first.rowsIn == 100)
-    val second = ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "c2")
+    val second = ExtractJob.run(spark, pages, root, commitId = "c2")
     assert(second.rowsIn == 0)
     assert(ExtractJob.resultsTable(root).read(spark).get.count() == 100)
   }
@@ -130,7 +138,7 @@ class ExtractJobSpec extends AnyFunSuite {
     val pages = PagesGen.pages(spark, sfDir).limit(60)
     val firstHalf = pages.filter(p => p.url.hashCode % 2 == 0)
     // committed half
-    ExtractJob.run(spark, firstHalf, root, numPartitions = 2, commitId = "good")
+    ExtractJob.run(spark, firstHalf, root, commitId = "good")
     val committedN = ExtractJob.resultsTable(root).read(spark).get.count()
     // simulate crash: data written for the rest, manifest never published
     val rest = ExtractJob.pending(spark, pages, root)
@@ -138,67 +146,68 @@ class ExtractJobSpec extends AnyFunSuite {
     ExtractJob.resultsTable(root).writeUncommitted(res.toDF(), "crashed")
     assert(ExtractJob.resultsTable(root).read(spark).get.count() == committedN) // invisible
     // rerun: processes exactly the uncommitted remainder
-    val stats = ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "retry")
+    val stats = ExtractJob.run(spark, pages, root, commitId = "retry")
     assert(stats.rowsIn == 60 - committedN)
     val fin = ExtractJob.resultsTable(root).read(spark).get
     assert(fin.count() == 60)
     assert(fin.groupBy($"url").count().filter($"count" > 1).count() == 0)
   }
 
-  test("bloom resume path: huge-committed-set regime yields the exact same pending set") {
+  test("resume above the broadcast threshold: a sort-merge anti-join, the exact pending set, each url committed once") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-bloom").toString
+    val root = Files.createTempDirectory("graft-smj").toString
     val pages = PagesGen.pages(spark, sfDir).limit(120)
-    val firstHalf = pages.filter(p => p.url.hashCode % 2 == 0)
-    ExtractJob.run(spark, firstHalf, root, numPartitions = 2, commitId = "c1")
-    val viaAntiJoin = ExtractJob.pending(spark, pages, root)
-      .select($"url").as[String].collect().sorted.toVector
-    // threshold 0 forces the bloom pre-filter + exact-join-on-maybe regime
-    val viaBloom = ExtractJob.pending(spark, pages, root, bloomThreshold = 0L)
-      .select($"url").as[String].collect().sorted.toVector
-    assert(viaBloom == viaAntiJoin)
-    assert(viaBloom.nonEmpty && viaBloom.size < 120)
-    // end-to-end through the bloom path: nothing lost, nothing duplicated
-    val stats = ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "c2")
-    assert(stats.rowsIn == viaBloom.size)
-    assert(ExtractJob.resultsTable(root).read(spark).get.count() == 120)
+    val all = pages.select($"url").as[String].collect().toSet
+    ExtractJob.run(spark, pages.filter(p => p.url.hashCode % 2 == 0), root, commitId = "c1")
+    val committed = ExtractJob.resultsTable(root).read(spark).get.select($"url").as[String].collect().toSet
+    assert(all.size == 120 && committed.nonEmpty && committed.size < 120)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val pend = ExtractJob.pending(spark, pages, root).select($"url")
+      val urls = pend.as[String].collect().toVector
+      val plan = pend.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+        case p => p.toString
+      }
+      assert(plan.contains("SortMergeJoin") && plan.contains("LeftAnti") && !plan.contains("BroadcastHashJoin"),
+        s"expected a sort-merge anti-join, got:\n$plan")
+      assert(urls.size == urls.toSet.size && urls.toSet == all -- committed)
+      val stats = ExtractJob.run(spark, pages, root, commitId = "c2")
+      assert(stats.rowsIn == urls.size)
+      val fin = ExtractJob.resultsTable(root).read(spark).get.select($"url").as[String].collect().toVector
+      assert(fin.size == 120 && fin.toSet == all, "every url committed exactly once")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  test("salting: giant-payload rows are range-isolated from small-row partitions") {
+  test("two pending plans built on one committed root run in reverse order and agree") {
     import spark.implicits._
-    val pages = PagesGen.pages(spark, sfDir) // doc_id % 97 == 0 → ~25× payload
-    val parted = ExtractJob.partitionForExtraction(pages, 8)
-    val dist = parted.mapPartitions { it =>
-      var small = 0L; var giant = 0L
-      it.foreach(p => if (p.html.length >= 10000) giant += 1 else small += 1)
-      Iterator.single((small, giant))
-    }.collect()
-    val giantParts = dist.filter(_._2 > 0)
-    assert(giantParts.nonEmpty)
-    // every giant row lives in the FIRST range partitions, before all
-    // small rows (sizeClass 0 leads the range key → heavy partitions
-    // launch first, LPT scheduling) — here giants are < 1 MiB so the
-    // 1 MiB class boundary keeps them with small rows; verify the
-    // mechanism directly with a lowered boundary via the raw expression:
-    val lowered = pages
-      .repartitionByRange(8,
-        org.apache.spark.sql.functions.when(
-          org.apache.spark.sql.functions.length($"html") >= 10000,
-          org.apache.spark.sql.functions.lit(0)
-        ).otherwise(org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.xxhash64($"url"))
-      .as[PageRow]
-    val dist2 = lowered.mapPartitions { it =>
-      var small = 0L; var giant = 0L
-      it.foreach(p => if (p.html.length >= 10000) giant += 1 else small += 1)
-      Iterator.single((small, giant))
-    }.collect()
-    val mixed = dist2.count(d => d._1 > 0 && d._2 > 0)
-    assert(mixed <= 1) // at most the single boundary partition mixes classes
-    // giants strictly precede small-only partitions (heavy-first order)
-    val lastGiantIdx = dist2.zipWithIndex.filter(_._1._2 > 0).map(_._2).max
-    val firstSmallOnlyIdx = dist2.zipWithIndex.filter(d => d._1._1 > 0 && d._1._2 == 0).map(_._2).min
-    assert(lastGiantIdx <= firstSmallOnlyIdx)
+    val root = Files.createTempDirectory("graft-interleaved").toString
+    val pages = PagesGen.pages(spark, sfDir).limit(120)
+    ExtractJob.run(spark, pages.filter(p => p.url.hashCode % 2 == 0), root, commitId = "c1")
+    val first = ExtractJob.pending(spark, pages, root)
+    val second = ExtractJob.pending(spark, pages, root)
+    val fromSecond = second.select($"url").as[String].collect().sorted.toVector
+    val fromFirst = first.select($"url").as[String].collect().sorted.toVector
+    assert(fromFirst == fromSecond)
+    assert(fromFirst.nonEmpty && fromFirst.size < 120)
+  }
+
+  test("the layout for a one-partition source spreads payloads of 1 MiB and more over its partitions") {
+    import spark.implicits._
+    val giant = 1 << 20
+    // 40 giants among 400 small pages, all in one partition
+    val src = spark.range(0, 440, 1, 1).as[Long].map { i =>
+      val html = if (i % 11 == 0) Array.fill[Byte](giant)('x') else "<p>small</p>".getBytes("UTF-8")
+      PageRow(f"https://giants.example/$i%04d", new java.sql.Timestamp(0L), html, "", "en")
+    }
+    assert(ExtractJob.plannedPartitions(src) == 1)
+    val giants = ExtractJob.partitionForExtraction(src, 4)
+      .mapPartitions(it => Iterator.single(it.count(_.html.length >= giant)))
+      .collect().toVector
+    assert(giants.size == 4 && giants.sum == 40)
+    assert(giants.max <= 20, s"giants per partition: $giants")
   }
 
   test("the results table writes its plain columns with no dictionary, in the bytes a default Spark write produces") {
@@ -259,7 +268,7 @@ class ExtractJobSpec extends AnyFunSuite {
     val inv0 = ExtractKernel.invocations.sum()
     val stats = ExtractJob.run(spark, pages, root, commitId = "c1")
     assert(ExtractKernel.invocations.sum() - inv0 == 100, "one kernel pass")
-    ExtractJob.run(spark, pages, ranged, numPartitions = 4, commitId = "c1")
+    ExtractJob.run(spark, pages.coalesce(1), ranged, commitId = "c1")
     def committed(r: String) = ExtractJob.resultsTable(r).read(spark).get.as[ExtractResult].collect()
       .map(_.copy(partition_id = -1, kernel_ns = 0L)).sortBy(_.url).toVector
     assert(committed(root) == committed(ranged))
@@ -305,13 +314,13 @@ class ExtractJobSpec extends AnyFunSuite {
     val pages = (base.drop(2) ++ Vector(base(0).copy(url = "https://zz.example/\uFF21"),
       base(1).copy(url = hi))).toDS()
     val inv0 = ExtractKernel.invocations.sum()
-    val batch = ExtractJob.run(spark, pages, root, numPartitions = 1, commitId = "c1")
+    val batch = commitIn(1, pages, root, "c1")
     assert(ExtractKernel.invocations.sum() - inv0 == 60, "one kernel pass, nothing re-run")
     // empty payloads only: every partition is all-error
     val empties = (0 until 12).map(i =>
       PageRow(s"https://empty.example/$i", base(0).warc_ts, Array.emptyByteArray, "", "en")).toDS()
-    val allError = ExtractJob.run(spark, empties, root, numPartitions = 3, commitId = "c2")
-    val rerun = ExtractJob.run(spark, pages, root, numPartitions = 3, commitId = "c3")
+    val allError = commitIn(3, empties, root, "c2")
+    val rerun = commitIn(3, pages, root, "c3")
     assert(rerun.rowsIn == 0)
 
     for ((cid, stats) <- Seq("c1" -> batch, "c2" -> allError, "c3" -> rerun)) {
@@ -340,7 +349,7 @@ class ExtractJobSpec extends AnyFunSuite {
     val pages = PagesGen.pages(spark, sfDir).limit(90).collect().toSeq
     val cids = (0 until 9).map(i => s"c$i")
     for ((cid, i) <- cids.zipWithIndex)
-      ExtractJob.run(spark, pages.slice(10 * i, 10 * i + 10).toDS(), root, numPartitions = 2, commitId = cid)
+      commitIn(2, pages.slice(10 * i, 10 * i + 10).toDS(), root, cid)
     val m = ExtractJob.metricsTable(root).latest().get
     assert(m.commitIds == cids)
     assert(m.dataDirs.count(_.contains("/metrics/data/compacted-1-")) == 1 && m.dataDirs.size == 2,
@@ -362,7 +371,7 @@ class ExtractJobSpec extends AnyFunSuite {
     import spark.implicits._
     val pages = PagesGen.pages(spark, sfDir).limit(100).collect().toSeq
     val root = Files.createTempDirectory("graft-jobs").toString
-    val runJobs = jobsDuring(ExtractJob.run(spark, pages.toDS(), root, numPartitions = 4, commitId = "c1"))
+    val runJobs = jobsDuring(ExtractJob.run(spark, pages.toDS().coalesce(1), root, commitId = "c1"))
     val defaultRoot = Files.createTempDirectory("graft-jobs-default").toString
     val defaultJobs = jobsDuring(ExtractJob.run(spark, pages.toDS(), defaultRoot, commitId = "c1"))
     val inputDir = Files.createTempDirectory("graft-jobs-in").toString
@@ -386,7 +395,7 @@ class ExtractJobSpec extends AnyFunSuite {
       val hi = "https://zz.example/\uD834\uDD1E"
       val pages = (base.drop(2) ++ Vector(base(0).copy(url = "https://zz.example/\uFF21"),
         base(1).copy(url = hi))).toDS()
-      ExtractJob.run(spark, pages, root, numPartitions = 1, commitId = "c1")
+      commitIn(1, pages, root, "c1")
       val c1 = metricsRows(spark, root, "c1")
       assert(c1.size == 1 && c1.head(8) == hi, s"UTF-8 byte order max: $c1")
 
@@ -408,10 +417,10 @@ class ExtractJobSpec extends AnyFunSuite {
     // a file where the metrics table lives: its publish fails after the
     // results publish succeeded
     val blocker = Files.createFile(Paths.get(root, "metrics"))
-    intercept[Exception](ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "c1"))
+    intercept[Exception](ExtractJob.run(spark, pages, root, commitId = "c1"))
     assert(ExtractJob.resultsTable(root).hasCommit("c1"))
     Files.delete(blocker)
-    assert(ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "c2").rowsIn == 0)
+    assert(ExtractJob.run(spark, pages, root, commitId = "c2").rowsIn == 0)
     assert(ExtractJob.metricsTable(root).hasCommit("c1"), "c1's metrics backfilled")
     val c1 = metricsRows(spark, root, "c1")
     assert(c1.map(_(2).asInstanceOf[Long]).sum == 40L)

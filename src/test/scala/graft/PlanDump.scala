@@ -35,7 +35,7 @@ object PlanDump {
     // 1. resume anti-join (after a first commit)
     val root = Files.createTempDirectory("graft-plandump").toString
     val pages = PagesGen.pages(spark, sfDir).limit(100)
-    ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "c1")
+    ExtractJob.run(spark, pages, root, commitId = "c1")
     section(
       "Resume anti-join (pending pages)",
       "The committed key set is broadcast (AQE): the pages side never shuffles, and only `url` is read from the committed snapshot (column pruning).",
@@ -311,12 +311,6 @@ object PlanDump {
         "Both scans report `Bucketed: true` and feed the SortMergeJoin directly — NO Exchange anywhere in the plan. This is the write-once / join-many shape for recurring 100-TB joins (pages × embeddings, pages × dedup verdicts): the shuffle is paid once at write time via `bucketBy`, and every later join consumes the bucketing as its required distribution. Bucket counts come from `Bucketing.bucketsFor` (power-of-two, ~512 MB/bucket) so both tables of a recurring join agree.",
         graft.table.Bucketing.cojoin(spark, "plandump_docs_bkt", "plandump_embs_bkt", "doc_id", "vec_id"))
     }
-
-    // bloom regime needs a committed snapshot bigger than the (test) threshold
-    section(
-      "Resume bloom regime (pending, bloomThreshold = 0)",
-      "The committed url set is distilled into a bloom filter shipped as a BROADCAST (the plan carries only `bloomBroadcast` — a handle, never the filter bytes; a lit() literal at the 8e9-bit cap would be a ~1 GB hex blob in exactly this plan text). The codegen'd `graft_bloom_might_contain` probes `xxhash64(url)` on the columnar scan: rows the filter rejects are provably uncommitted and skip the anti-join shuffle entirely; only `might contain` rows pay the exact join. No typed lambdas, no row deserialization on either branch.",
-      ExtractJob.pending(spark, pages, root, bloomThreshold = 0L).select($"url"))
 
     section(
       "Quality tiering (tier assignment over a score column)",

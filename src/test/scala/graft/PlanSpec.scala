@@ -35,7 +35,7 @@ class PlanSpec extends AnyFunSuite {
   test("resume anti-join broadcasts the committed key set (no pages shuffle)") {
     val root = Files.createTempDirectory("graft-plan").toString
     val pages = PagesGen.pages(spark, sfDir).limit(100)
-    ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "c1")
+    ExtractJob.run(spark, pages, root, commitId = "c1")
     import spark.implicits._
     val pend = ExtractJob.pending(spark, pages, root).select($"url")
     val plan = finalPlan(pend)
@@ -349,32 +349,6 @@ class PlanSpec extends AnyFunSuite {
       s"exactly the prefilter and final-rank shuffles:\n$plan")
     assert(!plan.contains("Exchange SinglePartition") && !plan.contains("rangepartitioning"),
       s"no global funnel:\n$plan")
-  }
-
-  test("bloom resume regime: membership test is a codegen'd column predicate, not a typed lambda") {
-    val root = Files.createTempDirectory("graft-plan-bloom").toString
-    val pages = PagesGen.pages(spark, sfDir).limit(100)
-    ExtractJob.run(spark, pages, root, numPartitions = 2, commitId = "c1")
-    import spark.implicits._
-    // threshold 0 forces the bloom pre-filter + exact-join-on-maybe regime
-    val pend = ExtractJob.pending(spark, pages, root, bloomThreshold = 0L).select($"url")
-    val plan = finalPlan(pend)
-    // both branches carry the bloom test as a RELATIONAL Filter (codegen)
-    assert(plan.contains("Filter NOT graft_bloom_might_contain"),
-      s"definitely-new branch predicate:\n$plan")
-    assert(plan.split("graft_bloom_might_contain").length >= 3,
-      s"maybe branch must also probe the bloom:\n$plan")
-    // the filter must travel as a broadcast handle, never a plan binary
-    // literal (a ~1 GB literal at the numBits cap, 2× that when explain
-    // renders it as hex) — the plan string staying small IS the property
-    assert(plan.length < 100000, s"plan string carries the filter bytes? length=${plan.length}")
-    // the old implementation evaluated the membership test in typed Scala
-    // lambdas, adding a DeserializeToObject→Filter→Serialize round-trip
-    // PER BRANCH on top of the source. The only object-domain op allowed
-    // here is the synthesized test source itself (PagesGen's typed map),
-    // which AQE de-duplicates via ReusedExchange — so at most ONE.
-    assert(plan.split("DeserializeToObject").length - 1 <= 1,
-      s"bloom branches must not add object-domain round-trips:\n$plan")
   }
 
   test("line dedup: catalog broadcasts as one row; cleanse is map-only (no corpus text shuffle)") {

@@ -118,7 +118,7 @@ class SimHashExpressionSpec extends AnyFunSuite {
       .getOrElse(fail("SparkSessionExtensions.registerFunctions not found"))
     registerFns.invoke(ext, reg)
     Seq(GraftFunctions.SimHashName, GraftFunctions.QDotName, GraftFunctions.LshSigName,
-      GraftFunctions.MightContainName, GraftFunctions.NfcName, GraftFunctions.KmvName)
+      GraftFunctions.NfcName, GraftFunctions.KmvName)
       .foreach(f => assert(
         reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(f)),
         s"extensions path must expose $f — same surface as register()"))
