@@ -102,7 +102,7 @@ case class CdcCutsExpression(first: Expression, second: Expression, third: Expre
     }
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_cdc_cuts"
+  override def prettyName: String = GraftFunctions.CdcCutsName
 
   override protected def nullSafeEval(s: Any, w: Any, d: Any): Any =
     CdcCuts.compute(s.asInstanceOf[UTF8String],

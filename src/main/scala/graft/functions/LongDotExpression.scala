@@ -51,7 +51,7 @@ case class LongDotExpression(left: Expression, right: Expression)
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_ldot"
+  override def prettyName: String = GraftFunctions.LDotName
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     LDot.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

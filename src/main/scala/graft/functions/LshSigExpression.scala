@@ -104,7 +104,7 @@ case class LshSigExpression(first: Expression, second: Expression, third: Expres
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true // null element → NULL
-  override def prettyName: String = "graft_lshsig"
+  override def prettyName: String = GraftFunctions.LshSigName
 
   override protected def nullSafeEval(e: Any, planes: Any, offset: Any): Any =
     LshSig.compute(e.asInstanceOf[ArrayData], planes.asInstanceOf[Int], offset.asInstanceOf[Int])

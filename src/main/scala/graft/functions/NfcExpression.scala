@@ -50,7 +50,7 @@ case class NfcExpression(child: Expression) extends UnaryExpression {
   }
 
   override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nfc"
+  override def prettyName: String = GraftFunctions.NfcName
 
   override protected def nullSafeEval(s: Any): Any =
     Nfc.compute(s.asInstanceOf[UTF8String])

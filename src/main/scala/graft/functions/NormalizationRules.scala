@@ -22,8 +22,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * trim(BOTH 'y' FROM s))` is idempotent only per-charset and is left
   * alone).
   *
-  * Registered on BOTH function surfaces (same discipline as the function
-  * builders): `spark.sql.extensions` via
+  * Registered on BOTH function surfaces: `spark.sql.extensions` via
   * [[GraftExtensions]]`.injectOptimizerRule`, and the imperative
   * [[GraftFunctions.register]] via `spark.experimental.extraOptimizations`.
   * Expressions are rewritten bottom-up, so arbitrarily long chains

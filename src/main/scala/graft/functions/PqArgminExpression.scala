@@ -79,7 +79,7 @@ case class PqArgminExpression(first: Expression, second: Expression, third: Expr
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_pq_argmin"
+  override def prettyName: String = GraftFunctions.PqArgminName
 
   override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
     PqArgmin.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -59,7 +56,7 @@ case class SimHash64Expression(child: Expression)
       s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
+  override def prettyName: String = GraftFunctions.SimHashName
 
   override protected def nullSafeEval(input: Any): Any =
     SimHash.compute(input.asInstanceOf[UTF8String])
@@ -69,244 +66,6 @@ case class SimHash64Expression(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Function registration: imperatively on any existing session (used by the
-  * driver-contract queries, which receive a session we didn't build), or
-  * declaratively via `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
-  */
-object GraftFunctions {
-  val SimHashName = "graft_simhash64"
-  val QDotName = "graft_qdot"
-  val LshSigName = "graft_lshsig"
-
-  private val simhashInfo = new ExpressionInfo(classOf[SimHash64Expression].getName, SimHashName)
-  private val qdotInfo = new ExpressionInfo(classOf[QuantizedDotExpression].getName, QDotName)
-  private val lshsigInfo = new ExpressionInfo(classOf[LshSigExpression].getName, LshSigName)
-
-  /** Shared by the imperative and spark.sql.extensions paths — both must
-    * reject wrong arity at analysis time, not silently drop arguments.
-    */
-  val simhashBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 1, s"$SimHashName takes exactly 1 argument, got ${children.length}")
-    SimHash64Expression(children.head)
-  }
-
-  val qdotBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 2, s"$QDotName takes exactly 2 arguments, got ${children.length}")
-    QuantizedDotExpression(children.head, children(1))
-  }
-
-  val lshsigBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 3, s"$LshSigName takes exactly 3 arguments, got ${children.length}")
-    LshSigExpression(children.head, children(1), children(2))
-  }
-
-  val NfcName = "graft_nfc"
-  private val nfcInfo = new ExpressionInfo(classOf[NfcExpression].getName, NfcName)
-
-  val nfcBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 1, s"$NfcName takes exactly 1 argument, got ${children.length}")
-    NfcExpression(children.head)
-  }
-
-  /** KMV distinct-sketch aggregate (the analyzer wraps the returned
-    * AggregateFunction into an AggregateExpression, same as built-in
-    * aggregates). Second argument must be a foldable int — the sketch
-    * width is a plan-time parameter, not a per-row value.
-    */
-  val TextStatsName = "graft_text_stats"
-  private val textStatsInfo = new ExpressionInfo(classOf[TextStatsExpression].getName, TextStatsName)
-
-  val textStatsBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 1, s"$TextStatsName takes exactly 1 argument, got ${children.length}")
-    TextStatsExpression(children.head)
-  }
-
-  val LangSignalsName = "graft_lang_signals"
-  private val langSignalsInfo = new ExpressionInfo(classOf[LangSignalsExpression].getName, LangSignalsName)
-
-  val langSignalsBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 1, s"$LangSignalsName takes exactly 1 argument, got ${children.length}")
-    LangSignalsExpression(children.head)
-  }
-
-  val KmvName = "graft_kmv_mink"
-  private val kmvInfo = new ExpressionInfo(classOf[KmvMinK].getName, KmvName)
-
-  val kmvBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 2, s"$KmvName takes exactly 2 arguments, got ${children.length}")
-    require(children(1).foldable, s"$KmvName k must be a literal")
-    val k = children(1).eval().asInstanceOf[Number].intValue()
-    KmvMinK(children.head, k)
-  }
-
-  val BottomKName = "graft_bottomk_sample"
-  private val bottomkInfo = new ExpressionInfo(classOf[BottomKSample].getName, BottomKName)
-
-  val bottomkBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 3, s"$BottomKName takes exactly 3 arguments, got ${children.length}")
-    require(children(2).foldable, s"$BottomKName k must be a literal")
-    val k = children(2).eval().asInstanceOf[Number].intValue()
-    BottomKSample(children.head, children(1), k)
-  }
-
-  val FixMojibakeName = "graft_fix_mojibake"
-  private val fixMojibakeInfo =
-    new ExpressionInfo(classOf[FixMojibakeExpression].getName, FixMojibakeName)
-  val fixMojibakeBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 1,
-      s"$FixMojibakeName takes exactly 1 argument, got ${children.length}")
-    FixMojibakeExpression(children.head)
-  }
-
-  val MojibakeName = "graft_mojibake"
-  private val mojibakeInfo =
-    new ExpressionInfo(classOf[CorruptMojibakeExpression].getName, MojibakeName)
-  val mojibakeBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 1,
-      s"$MojibakeName takes exactly 1 argument, got ${children.length}")
-    CorruptMojibakeExpression(children.head)
-  }
-
-  val LDotName = "graft_ldot"
-  private val ldotInfo = new ExpressionInfo(classOf[LongDotExpression].getName, LDotName)
-
-  val ldotBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 2, s"$LDotName takes exactly 2 arguments, got ${children.length}")
-    LongDotExpression(children.head, children(1))
-  }
-
-  val CdcCutsName = "graft_cdc_cuts"
-  private val cdcCutsInfo = new ExpressionInfo(classOf[CdcCutsExpression].getName, CdcCutsName)
-
-  val cdcCutsBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 3, s"$CdcCutsName takes exactly 3 arguments, got ${children.length}")
-    CdcCutsExpression(children.head, children(1), children(2))
-  }
-
-  val PqArgminName = "graft_pq_argmin"
-  private val pqArgminInfo =
-    new ExpressionInfo(classOf[PqArgminExpression].getName, PqArgminName)
-
-  val pqArgminBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 3,
-      s"$PqArgminName takes exactly 3 arguments, got ${children.length}")
-    PqArgminExpression(children.head, children(1), children(2))
-  }
-
-  val SortedContainsName = "graft_sorted_contains"
-  private val sortedContainsInfo =
-    new ExpressionInfo(classOf[SortedContainsExpression].getName, SortedContainsName)
-
-  val sortedContainsBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 2,
-      s"$SortedContainsName takes exactly 2 arguments, got ${children.length}")
-    SortedContainsExpression(children.head, children(1))
-  }
-
-  val HeavyName = "graft_heavy_topk"
-  private val heavyInfo = new ExpressionInfo(classOf[SpaceSavingTopK].getName, HeavyName)
-
-  val heavyBuilder: Seq[Expression] => Expression = { children =>
-    require(children.length == 3, s"$HeavyName takes exactly 3 arguments, got ${children.length}")
-    require(children(2).foldable, s"$HeavyName k must be a literal")
-    val k = children(2).eval().asInstanceOf[Number].intValue()
-    SpaceSavingTopK(children.head, children(1), k)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(FunctionIdentifier(SimHashName), simhashInfo, simhashBuilder)
-    reg.registerFunction(FunctionIdentifier(QDotName), qdotInfo, qdotBuilder)
-    reg.registerFunction(FunctionIdentifier(LshSigName), lshsigInfo, lshsigBuilder)
-    reg.registerFunction(FunctionIdentifier(NfcName), nfcInfo, nfcBuilder)
-    reg.registerFunction(FunctionIdentifier(TextStatsName), textStatsInfo, textStatsBuilder)
-    reg.registerFunction(FunctionIdentifier(LangSignalsName), langSignalsInfo, langSignalsBuilder)
-    reg.registerFunction(FunctionIdentifier(KmvName), kmvInfo, kmvBuilder)
-    reg.registerFunction(FunctionIdentifier(BottomKName), bottomkInfo, bottomkBuilder)
-    reg.registerFunction(FunctionIdentifier(HeavyName), heavyInfo, heavyBuilder)
-    reg.registerFunction(FunctionIdentifier(CdcCutsName), cdcCutsInfo, cdcCutsBuilder)
-    reg.registerFunction(FunctionIdentifier(LDotName), ldotInfo, ldotBuilder)
-    reg.registerFunction(FunctionIdentifier(SortedContainsName), sortedContainsInfo, sortedContainsBuilder)
-    reg.registerFunction(FunctionIdentifier(PqArgminName), pqArgminInfo, pqArgminBuilder)
-    reg.registerFunction(FunctionIdentifier(FixMojibakeName), fixMojibakeInfo, fixMojibakeBuilder)
-    reg.registerFunction(FunctionIdentifier(MojibakeName), mojibakeInfo, mojibakeBuilder)
-    // optimizer surface parity with GraftExtensions (idempotent: guard
-    // against repeated register() calls appending duplicates)
-    if (!spark.experimental.extraOptimizations.contains(CollapseIdempotentNormalization))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ CollapseIdempotentNormalization
-  }
-}
-
-/** `SparkSessionExtensions` injector (spark.sql.extensions). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.SimHashName),
-        new ExpressionInfo(classOf[SimHash64Expression].getName, GraftFunctions.SimHashName),
-        GraftFunctions.simhashBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.QDotName),
-        new ExpressionInfo(classOf[QuantizedDotExpression].getName, GraftFunctions.QDotName),
-        GraftFunctions.qdotBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.LshSigName),
-        new ExpressionInfo(classOf[LshSigExpression].getName, GraftFunctions.LshSigName),
-        GraftFunctions.lshsigBuilder))
-    // same surface as the imperative register() path — a session configured
-    // via spark.sql.extensions must not see a subset of the functions
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.NfcName),
-        new ExpressionInfo(classOf[NfcExpression].getName, GraftFunctions.NfcName),
-        GraftFunctions.nfcBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.TextStatsName),
-        new ExpressionInfo(classOf[TextStatsExpression].getName, GraftFunctions.TextStatsName),
-        GraftFunctions.textStatsBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.LangSignalsName),
-        new ExpressionInfo(classOf[LangSignalsExpression].getName, GraftFunctions.LangSignalsName),
-        GraftFunctions.langSignalsBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.KmvName),
-        new ExpressionInfo(classOf[KmvMinK].getName, GraftFunctions.KmvName),
-        GraftFunctions.kmvBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.BottomKName),
-        new ExpressionInfo(classOf[BottomKSample].getName, GraftFunctions.BottomKName),
-        GraftFunctions.bottomkBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.HeavyName),
-        new ExpressionInfo(classOf[SpaceSavingTopK].getName, GraftFunctions.HeavyName),
-        GraftFunctions.heavyBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.FixMojibakeName),
-        new ExpressionInfo(classOf[FixMojibakeExpression].getName, GraftFunctions.FixMojibakeName),
-        GraftFunctions.fixMojibakeBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.MojibakeName),
-        new ExpressionInfo(classOf[CorruptMojibakeExpression].getName, GraftFunctions.MojibakeName),
-        GraftFunctions.mojibakeBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.CdcCutsName),
-        new ExpressionInfo(classOf[CdcCutsExpression].getName, GraftFunctions.CdcCutsName),
-        GraftFunctions.cdcCutsBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.LDotName),
-        new ExpressionInfo(classOf[LongDotExpression].getName, GraftFunctions.LDotName),
-        GraftFunctions.ldotBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.SortedContainsName),
-        new ExpressionInfo(classOf[SortedContainsExpression].getName, GraftFunctions.SortedContainsName),
-        GraftFunctions.sortedContainsBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier(GraftFunctions.PqArgminName),
-        new ExpressionInfo(classOf[PqArgminExpression].getName, GraftFunctions.PqArgminName),
-        GraftFunctions.pqArgminBuilder))
-    ext.injectOptimizerRule(_ => CollapseIdempotentNormalization)
-  }
 }
 
 /** Quantized dot product kernel: Σ floor(a_i·scale)·floor(b_i·scale) in
@@ -360,7 +119,7 @@ case class QuantizedDotExpression(left: Expression, right: Expression)
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true // null elements / length mismatch → NULL
-  override def prettyName: String = "graft_qdot"
+  override def prettyName: String = GraftFunctions.QDotName
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     QDot.compute(

@@ -70,7 +70,7 @@ case class SortedContainsExpression(left: Expression, right: Expression)
     }
 
   override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_sorted_contains"
+  override def prettyName: String = GraftFunctions.SortedContainsName
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     SortedContains.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[UTF8String])

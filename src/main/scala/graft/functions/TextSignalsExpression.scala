@@ -247,7 +247,7 @@ case class TextStatsExpression(child: Expression) extends UnaryExpression {
       s"$prettyName requires a string argument, got ${other.simpleString(10)}")
   }
   override def dataType: DataType = TextStatsExpression.Schema
-  override def prettyName: String = "graft_text_stats"
+  override def prettyName: String = GraftFunctions.TextStatsName
   override protected def nullSafeEval(s: Any): Any =
     TextSignals.stats(s.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -277,7 +277,7 @@ case class LangSignalsExpression(child: Expression) extends UnaryExpression {
       s"$prettyName requires a string argument, got ${other.simpleString(10)}")
   }
   override def dataType: DataType = LangSignalsExpression.Schema
-  override def prettyName: String = "graft_lang_signals"
+  override def prettyName: String = GraftFunctions.LangSignalsName
   override protected def nullSafeEval(s: Any): Any =
     TextSignals.lang(s.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.functions.GraftFunctions
 import graft.job.{ExtractJob, ExtractKernel}
 import graft.model.{ExtractResult, PageRow}
 import graft.pages.PagesGen
@@ -401,8 +402,9 @@ class ExtractJobSpec extends AnyFunSuite {
 
       val vocab = graft.functions.SortedContains.sorted(Seq("b", "\uD834\uDD1E", "a", "\uFF21"))
       assert(vocab.toSeq == Seq("a", "b", "\uFF21", "\uD834\uDD1E"))
+      GraftFunctions.register(spark)
       val hits = Seq("a", "\uD834\uDD1E", "c").toDF("t")
-        .select(call_function("graft_sorted_contains", lit(vocab), col("t")))
+        .select(call_function(GraftFunctions.SortedContainsName, lit(vocab), col("t")))
         .as[Boolean].collect().toSeq
       assert(hits == Seq(true, true, false))
     } finally prior match {

@@ -2,6 +2,9 @@ package graft
 
 import graft.dedup.Dedup
 import graft.functions.{CollapseIdempotentNormalization, GraftExtensions, GraftFunctions, SimHash}
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -106,26 +109,73 @@ class SimHashExpressionSpec extends AnyFunSuite {
     assert(java.lang.Long.bitCount(a ^ b) < java.lang.Long.bitCount(a ^ c))
   }
 
+  /** Every graft function with the argument count its builder requires. */
+  private val arities: Map[String, Int] = {
+    import GraftFunctions._
+    Map(SimHashName -> 1, QDotName -> 2, LshSigName -> 3, NfcName -> 1, TextStatsName -> 1,
+      LangSignalsName -> 1, KmvName -> 2, BottomKName -> 3, HeavyName -> 3, CdcCutsName -> 3,
+      LDotName -> 2, SortedContainsName -> 2, PqArgminName -> 3, FixMojibakeName -> 1,
+      MojibakeName -> 1)
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+
+  private def graftNames(reg: FunctionRegistry): Set[String] =
+    reg.listFunction().map(_.funcName).filter(_.startsWith("graft_")).toSet
+
   test("spark.sql.extensions injector: full function surface AND the optimizer rule") {
+    val names = GraftFunctions.All.map(_._1.funcName)
+    assert(names.distinct == names, "one entry per function")
+    assert(names.toSet == arities.keySet)
     // a second in-JVM session cannot apply static confs (spark.sql.extensions
     // is static and the SparkContext is shared across the suite), so the
     // injector object is exercised directly; its private[sql] accessors are
     // public in bytecode, reachable via reflection
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    val reg = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.clone()
+    val reg = FunctionRegistry.builtin.clone()
     val registerFns = ext.getClass.getMethods.find(_.getName == "registerFunctions")
       .getOrElse(fail("SparkSessionExtensions.registerFunctions not found"))
     registerFns.invoke(ext, reg)
-    Seq(GraftFunctions.SimHashName, GraftFunctions.QDotName, GraftFunctions.LshSigName,
-      GraftFunctions.NfcName, GraftFunctions.KmvName)
-      .foreach(f => assert(
-        reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(f)),
-        s"extensions path must expose $f — same surface as register()"))
+    assert(graftNames(reg) == names.toSet, "extensions path")
     val buildRules = ext.getClass.getMethods.find(_.getName == "buildOptimizerRules")
       .getOrElse(fail("SparkSessionExtensions.buildOptimizerRules not found"))
-    val rules = buildRules.invoke(ext, SparkTestBase.spark).asInstanceOf[Seq[_]]
-    assert(rules.contains(CollapseIdempotentNormalization),
-      "extensions path must inject the idempotent-normalization rule")
+    val rules = buildRules.invoke(ext, spark).asInstanceOf[Seq[_]]
+    assert(rules == Seq(CollapseIdempotentNormalization), "extensions path optimizer rules")
+
+    GraftFunctions.register(spark)
+    GraftFunctions.register(spark)
+    assert(graftNames(spark.sessionState.functionRegistry) == names.toSet, "register() path")
+    assert(spark.experimental.extraOptimizations.count(_ == CollapseIdempotentNormalization) == 1,
+      "register() installs the optimizer rule once")
+
+    GraftFunctions.All.foreach { case (id, info, build) =>
+      val built = build(Seq.fill(arities(id.funcName))(Literal(1)))
+      assert(built.prettyName == id.funcName)
+      assert(info.getName == id.funcName && info.getClassName == built.getClass.getName)
+    }
+  }
+
+  test("every function rejects one argument too many at analysis, naming its arity") {
+    GraftFunctions.register(spark)
+    arities.foreach { case (name, n) =>
+      val err = intercept[Exception] {
+        spark.sql(s"SELECT $name(${Seq.fill(n + 1)("1").mkString(", ")})").collect()
+      }
+      val want = s"$name takes exactly $n argument${if (n == 1) "" else "s"}, got ${n + 1}"
+      assert(messages(err).exists(_.contains(want)), s"want '$want', got ${messages(err)}")
+    }
+  }
+
+  test("the sketch aggregates reject a column as k") {
+    GraftFunctions.register(spark)
+    val df = spark.range(3).toDF("id")
+    Seq(s"${GraftFunctions.KmvName}(id, id)", s"${GraftFunctions.BottomKName}(id, id, id)",
+      s"${GraftFunctions.HeavyName}(cast(id AS string), id, id)").foreach { call =>
+      val err = intercept[Exception](df.selectExpr(call).collect())
+      val want = s"${call.takeWhile(_ != '(')} k must be a literal"
+      assert(messages(err).exists(_.contains(want)), s"want '$want', got ${messages(err)}")
+    }
   }
 }
